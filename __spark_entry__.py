@@ -45,9 +45,10 @@ def _kg_doc_results(spark, sf_dir):
     from cbor_ld_spark.sources import corpus_from_documents
 
     return (
-        # doc-level flags only: skip triple expansion + the seven array
-        # columns through Arrow and the provenance join (guide §2.3
-        # "shuffle fewer bytes"; result is identical)
+        # doc-level flags only: skip the seven triple array columns
+        # through Arrow and the provenance join (guide §2.3 "shuffle
+        # fewer bytes"); the kernel still expands every document, so
+        # ``ok`` and the result are identical
         process_corpus(corpus_from_documents(spark, sf_dir),
                        emit_triples=False)
         .groupBy("ok", "error_kind")
@@ -273,8 +274,9 @@ def _kg_compression_stats(spark, sf_dir):
     from cbor_ld_spark.operators import process_corpus
     from cbor_ld_spark.sources import corpus_from_documents
 
-    # length stats only: skip triple expansion through the kernel and
-    # Arrow (guide §2.3; result is identical)
+    # length stats only: skip the triple columns through Arrow (guide
+    # §2.3); the kernel still expands every document, so the ok-filter
+    # and the result are identical
     p = process_corpus(corpus_from_documents(spark, sf_dir),
                        emit_triples=False)
     cls = F.regexp_extract("path", r"/([^/]+)\.jsonld$", 1)

@@ -7,9 +7,10 @@ Design for 100 TB:
   a source-code corpus) never cross the JVM<->Python boundary and the
   filter pushes into the scan.
 * ``kg_process_batches`` is a single ``mapInArrow`` pass doing
-  parse -> encode -> decode -> verify -> expand per document: the corpus
-  content crosses Arrow exactly once, and every per-document product
-  (CBOR length, sha invariant, triples) comes back in the same batch.
+  parse -> encode + expand -> decode -> verify per document (the encoder
+  emits the triples from its own context walk): the corpus content
+  crosses Arrow exactly once, and every per-document product (CBOR
+  length, sha invariant, triples) comes back in the same batch.
   Output columns are built with ``pa.array`` directly — no pandas
   object-Series detour (measured ~8% less overhead, lower variance).
 * Triples return as **seven parallel flat arrays** rather than one
@@ -36,6 +37,14 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from cbor_ld_spark.kernel import (
+    CborLdError,
+    content_sha256,
+    decode_document,
+    parse_json_document,
+)
+from cbor_ld_spark.kernel.transform import encode_with_triples
 
 _S = StringType()
 
@@ -104,70 +113,50 @@ def jsonld_sniff(lang: Column | None = None) -> Column:
     return pred
 
 
+_NO_TRIPLES = (None,) * 7
+
+
 def _process_one(content: str, registry_id: int, emit_triples: bool):
     """Per-document kernel: returns a result tuple (never raises).
 
-    Tuple layout matches DOC_RESULT_SCHEMA from ``doc_sha`` onward.
+    Tuple layout matches DOC_RESULT_SCHEMA from ``doc_sha`` onward.  The
+    triples come from the encoder's own context walk, so every document
+    is expanded and ``ok`` covers expansion whether or not
+    ``emit_triples`` asks for the triple columns.
     """
-    from cbor_ld_spark.kernel import (
-        CborLdError,
-        content_sha256,
-        decode_document,
-        encode_document,
-        parse_json_document,
-    )
-    from cbor_ld_spark.kernel.expand import expand_to_triples
-
+    if not isinstance(content, str):
+        return (None, False, f"content is {type(content).__name__}",
+                "InvalidContent", 0, None, None, 0, *_NO_TRIPLES)
     doc_sha = None
     cbor_len = None
     roundtrip_ok = None
-    tcols = (None,) * 7
-    n_triples = 0
-    # compute once, outside try: len() in an except handler would itself
-    # raise for null/non-str content and kill the partition
-    clen = len(content) if isinstance(content, str) else 0
-    if not isinstance(content, str):
-        return (None, False, f"content is {type(content).__name__}",
-                "InvalidContent", 0, None, None, 0, *((None,) * 7))
+    clen = len(content)
     try:
         doc = parse_json_document(content)
         if not isinstance(doc, dict):
             raise CborLdError("ExpectedObject", "root is not an object")
         doc_sha = content_sha256(doc)
-        cbor = encode_document(doc, registry_id=registry_id)
+        # every blank label (minted _:bN and remapped user _:u_*) carries
+        # the doc-sha prefix: cross-document uniqueness
+        cbor, sink = encode_with_triples(doc, registry_id,
+                                         f"_:{doc_sha[:16]}_")
         cbor_len = len(cbor)
-        back = decode_document(cbor)
-        roundtrip_ok = content_sha256(back) == doc_sha
-        if emit_triples:
-            triples = expand_to_triples(doc)
-            prefix = f"_:{doc_sha[:16]}_"
-            subj, pred, obj, is_iri, dt, lang, graph = [], [], [], [], [], [], []
-            for t in triples:
-                # every blank label (minted _:bN and remapped user _:u_*)
-                # gets the doc-sha prefix: cross-document uniqueness
-                subj.append(prefix + t.subj[2:] if t.subj.startswith("_:")
-                            else t.subj)
-                pred.append(t.pred)
-                obj.append(prefix + t.obj[2:]
-                           if t.obj_is_iri and t.obj.startswith("_:")
-                           else t.obj)
-                is_iri.append(t.obj_is_iri)
-                dt.append(t.obj_datatype)
-                lang.append(t.obj_lang)
-                graph.append(prefix + t.graph[2:]
-                             if t.graph.startswith("_:") else t.graph)
-            tcols = (subj, pred, obj, is_iri, dt, lang, graph)
-            n_triples = len(triples)
+        roundtrip_ok = content_sha256(decode_document(cbor)) == doc_sha
+        if sink.error is not None:
+            raise sink.error
+        if not emit_triples:
+            return (doc_sha, True, None, None, clen, cbor_len,
+                    roundtrip_ok, 0, *_NO_TRIPLES)
         return (doc_sha, True, None, None, clen, cbor_len,
-                roundtrip_ok, n_triples, *tcols)
+                roundtrip_ok, len(sink.columns[0]), *sink.columns)
     except CborLdError as e:
         return (doc_sha, False, e.message or e.kind, e.kind, clen,
-                cbor_len, roundtrip_ok, 0, *((None,) * 7))
+                cbor_len, roundtrip_ok, 0, *_NO_TRIPLES)
     except Exception as e:  # noqa: BLE001 — quarantine is the contract:
         # no document may kill a partition (OverflowError from huge ints,
         # UnicodeError, etc. all land here as typed rows)
         return (doc_sha, False, str(e)[:500], type(e).__name__, clen,
-                cbor_len, roundtrip_ok, 0, *((None,) * 7))
+                cbor_len, roundtrip_ok, 0, *_NO_TRIPLES)
 
 
 _RESULT_FIELDS = ["doc_sha", "ok", "error", "error_kind", "json_len",

@@ -16,7 +16,7 @@ actually exercises (verified against every vendored context document):
 
 Determinism contract: processing the same (active-context fingerprint,
 context value, propagate) triple always yields the same resulting term
-set, and ``sorted_new_terms`` exposes them in the exact order the CBOR-LD
+set, and ``alloc_terms`` exposes them in the exact order the CBOR-LD
 id allocator must see (sorted over the *full* definition set — reference:
 src/transform.rs:305-317).  Results are memoized process-wide: a corpus
 re-uses a handful of context chains across billions of documents, so on a
@@ -34,6 +34,7 @@ from typing import Any, Mapping
 
 from urllib.parse import urljoin
 
+from .codecs import is_absolute_iri
 from .errors import ContextError
 from .keywords import is_keyword
 
@@ -42,6 +43,11 @@ _GEN_DELIMS = set(":/?#[]@")
 _CONTAINER_VALUES = {
     "@set", "@list", "@graph", "@language", "@index", "@id", "@type", "@none",
 }
+
+# containers keyed by data, not terms; with @list, the containers whose
+# values do not expand one by one into (subject, term, value) triples
+MAP_CONTAINERS = frozenset({"@language", "@index", "@id", "@type"})
+_STRUCTURED_CONTAINERS = MAP_CONTAINERS | {"@list"}
 
 
 class TermDefinition:
@@ -68,16 +74,13 @@ class TermDefinition:
         self.has_language = False
         self.has_direction = False
 
-    def is_keyword_alias(self, keyword: str) -> bool:
-        return self.iri == keyword
-
 
 class ActiveContext:
     """Immutable-by-convention processed context."""
 
     __slots__ = (
         "terms", "vocab", "base", "default_language", "default_direction",
-        "fingerprint", "sorted_terms", "alloc_terms",
+        "fingerprint", "alloc_terms", "aliases", "predicates",
     )
 
     def __init__(self) -> None:
@@ -87,8 +90,9 @@ class ActiveContext:
         self.default_language: str | None = None
         self.default_direction: str | None = None
         self.fingerprint: tuple = ()
-        self.sorted_terms: tuple[str, ...] = ()
         self.alloc_terms: tuple[str, ...] = ()
+        self.aliases: dict[str, str] = {}
+        self.predicates: dict[str, str] = {}
 
     def copy(self) -> "ActiveContext":
         c = ActiveContext.__new__(ActiveContext)
@@ -98,19 +102,29 @@ class ActiveContext:
         c.default_language = self.default_language
         c.default_direction = self.default_direction
         c.fingerprint = self.fingerprint
-        c.sorted_terms = self.sorted_terms
         c.alloc_terms = self.alloc_terms
+        c.aliases = self.aliases
+        c.predicates = self.predicates
         return c
 
     def get(self, term: str) -> TermDefinition | None:
         return self.terms.get(term)
 
     def seal(self) -> None:
-        self.sorted_terms = tuple(sorted(self.terms))
         # precomputed once per (cached) context: the exact allocation
         # sequence the CBOR-LD id allocator must see
-        self.alloc_terms = tuple(t for t in self.sorted_terms
+        self.alloc_terms = tuple(t for t in sorted(self.terms)
                                  if not is_keyword(t))
+        # the expansion's lookups: ``aliases.get(t, t)`` is the keyword t
+        # stands for (or t), ``predicates`` the terms whose values expand
+        # one by one under a usable predicate IRI
+        self.aliases = {t: d.iri for t, d in self.terms.items()
+                        if d.iri is not None and is_keyword(d.iri)}
+        self.predicates = {
+            t: d.iri for t, d in self.terms.items()
+            if d.iri is not None and not d.reverse
+            and not d.container & _STRUCTURED_CONTAINERS
+            and not d.iri.startswith("_:") and is_absolute_iri(d.iri)}
 
 
 EMPTY_CONTEXT = ActiveContext()

@@ -1,46 +1,23 @@
-"""JSON-LD expansion -> RDF triples (document-at-a-time kernel).
+"""JSON-LD expansion -> RDF triples, the KG pipeline's graph view.
 
-The reference stops at the CBOR tree; the KG pipeline's north rule also
-requires the *graph* view: expand each JSON-LD document against its
-(offline-resolved) contexts and emit ``(subj, pred, obj)`` triples, which
-the distributed stages then entity-link and canonicalize.
-
-This is a pragmatic subset of W3C JSON-LD 1.1 Expansion + Deserialize
-JSON-LD to RDF, tailored to the credential document shapes the reference
-tests (node objects, @id/@type aliases, type-/property-scoped contexts,
-@container @set/@list/@graph, typed literals via context @type coercion,
-language maps are out of scope).  It reuses the exact same
-ActiveContext machinery as the CBOR-LD transform so both views agree on
-term meaning.
-
-Determinism: entries are traversed in sorted term order and blank nodes
-minted from a per-document counter, so the same document always yields
-the same triple set with the same blank-node labels (``_:b{n}``; the
-pipeline later rewrites them to ``_:{doc_sha}_b{n}`` for corpus-global
-uniqueness).
+No traversal lives here: the kernel's encoder emits the triples from its
+own context walk (``transform.encode_with_triples``), and
+:func:`expand_to_triples` runs that walk in its lenient mode, which drops
+undefined terms instead of rejecting the document.  Entries go in sorted
+term order and blank nodes are ``_:b{n}`` from a per-document counter.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Any
 
-from .context import ActiveContext, EMPTY_CONTEXT, process_context
 from .errors import CborLdError
 from .loader import StaticLoader
-
-RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-RDF_FIRST = "http://www.w3.org/1999/02/22-rdf-syntax-ns#first"
-RDF_REST = "http://www.w3.org/1999/02/22-rdf-syntax-ns#rest"
-RDF_NIL = "http://www.w3.org/1999/02/22-rdf-syntax-ns#nil"
-XSD = "http://www.w3.org/2001/XMLSchema#"
-XSD_STRING = XSD + "string"
-XSD_INTEGER = XSD + "integer"
-XSD_DOUBLE = XSD + "double"
-XSD_BOOLEAN = XSD + "boolean"
-RDF_JSON = "http://www.w3.org/1999/02/22-rdf-syntax-ns#JSON"
-
-DEFAULT_GRAPH = ""
+from .rdf import (  # noqa: F401 — the RDF vocabulary, importable from here
+    DEFAULT_GRAPH, RDF_FIRST, RDF_JSON, RDF_NIL, RDF_REST, RDF_TYPE, XSD,
+    XSD_BOOLEAN, XSD_DOUBLE, XSD_INTEGER, XSD_STRING, TripleSink,
+    canonical_double as _canonical_double)
+from .transform import expand_into
 
 
 @dataclass(frozen=True)
@@ -58,375 +35,10 @@ class Triple:
                 self.obj_datatype or "", self.obj_lang or "", self.graph)
 
 
-def _canonical_double(v: float) -> str:
-    """RDF canonical xsd:double lexical form (e.g. 2.1E1).
-
-    Derived textually from ``repr`` (already the shortest round-trip
-    decimal): log10 arithmetic is off by one near powers of 10
-    (1e23 -> '10.0E22') and a %.15g mantissa collapses doubles that
-    differ in the 16th-17th significant digit.
-    """
-    if v != v:
-        return "NaN"
-    if v == float("inf"):
-        return "INF"
-    if v == float("-inf"):
-        return "-INF"
-    if v == 0:
-        import math
-
-        return "-0.0E0" if math.copysign(1.0, v) < 0 else "0.0E0"
-    sign = "-" if v < 0 else ""
-    m, _, e = repr(abs(v)).partition("e")
-    exp = int(e) if e else 0
-    int_part, _, frac = m.partition(".")
-    digits_all = int_part + frac
-    p = len(digits_all) - len(digits_all.lstrip("0"))  # first significant
-    exp += len(int_part) - 1 - p
-    d = digits_all[p:].rstrip("0") or "0"
-    return f"{sign}{d[0]}.{d[1:] or '0'}E{exp}"
-
-
-def _is_absolute_iri_or_bnode(v: str) -> bool:
-    from .codecs import is_absolute_iri
-
-    return v.startswith("_:") or is_absolute_iri(v)
-
-
-class _Expander:
-    def __init__(self, loader: StaticLoader):
-        self.loader = loader
-        self.triples: list[Triple] = []
-        self.bnode_counter = 0
-
-    def new_bnode(self) -> str:
-        b = f"_:b{self.bnode_counter}"
-        self.bnode_counter += 1
-        return b
-
-    @staticmethod
-    def remap_bnode(label: str) -> str:
-        """User-supplied blank ids go to a disjoint namespace (_:u_*),
-        so they can never collide with minted _:bN labels (the W3C toRDF
-        algorithm relabels document bnode ids for the same reason)."""
-        return "_:u_" + label[2:]
-
-    def emit(self, subj, pred, obj, is_iri, datatype, lang, graph):
-        self.triples.append(Triple(subj, pred, obj, is_iri, datatype, lang, graph))
-
-    # ---- helpers over ActiveContext ----------------------------------------
-
-    def _alias(self, active: ActiveContext, term: str, keyword: str) -> bool:
-        if term == keyword:
-            return True
-        d = active.get(term)
-        return d is not None and d.iri == keyword
-
-    def _expand_type_value(self, active: ActiveContext, value: str) -> str | None:
-        from .context import expand_iri
-
-        iri = expand_iri(active, value, vocab=True)
-        return iri
-
-    def _expand_id_value(self, active: ActiveContext, value: str) -> str | None:
-        from .context import expand_iri
-
-        iri = expand_iri(active, value, document_relative=True)
-        if iri is not None and iri.startswith("_:"):
-            iri = self.remap_bnode(iri)
-        return iri
-
-    # ---- node expansion ----------------------------------------------------
-
-    def expand_node(self, active: ActiveContext, obj: dict, graph: str) -> str | None:
-        """Expand one node object; emits triples, returns the subject id."""
-        # 1. embedded context
-        ctx = obj.get("@context")
-        if ctx is not None or "@context" in obj:
-            active = process_context(active, ctx, self.loader, propagate=True)
-
-        # 2. types (sorted), apply type-scoped contexts
-        types: list[str] = []
-        for key, value in obj.items():
-            if self._alias(active, key, "@type"):
-                vals = value if isinstance(value, list) else [value]
-                types.extend(v for v in vals if isinstance(v, str))
-        types.sort()
-        for ty in types:
-            d = active.get(ty)
-            if d is not None and d.local_context is not None:
-                active = process_context(active, d.local_context, self.loader,
-                                         base_url=d.base_url, propagate=False)
-
-        # 3. subject
-        subject: str | None = None
-        for key, value in obj.items():
-            if self._alias(active, key, "@id") and isinstance(value, str):
-                expanded = self._expand_id_value(active, value)
-                if expanded and _is_absolute_iri_or_bnode(expanded):
-                    subject = expanded
-                break
-        if subject is None:
-            subject = self.new_bnode()
-
-        # 4. rdf:type triples
-        for ty in types:
-            iri = self._expand_type_value(active, ty)
-            if iri and _is_absolute_iri_or_bnode(iri) and not iri.startswith("_:"):
-                self.emit(subject, RDF_TYPE, iri, True, None, None, graph)
-
-        # 5. properties, sorted for determinism
-        for key in sorted(k for k in obj.keys()):
-            if key == "@context":
-                continue
-            value = obj[key]
-            if self._alias(active, key, "@id") or self._alias(active, key, "@type"):
-                continue
-            if self._alias(active, key, "@graph"):
-                for item in (value if isinstance(value, list) else [value]):
-                    if isinstance(item, dict):
-                        self.expand_node(active, item, graph)
-                continue
-            if self._alias(active, key, "@included"):
-                # W3C 1.1 §4.7: included node objects expand as
-                # independent nodes in the *same* graph
-                for item in (value if isinstance(value, list) else [value]):
-                    if isinstance(item, dict):
-                        self.expand_node(active, item, graph)
-                continue
-
-            d = active.get(key)
-            if d is None or d.iri is None:
-                continue  # dropped term (expansion ignores undefined terms)
-            pred = d.iri
-            if pred.startswith("_:") or not _is_absolute_iri_or_bnode(pred):
-                continue  # blank-node predicates are dropped by toRDF
-
-            prop_active = active
-            if d.local_context is not None:
-                # property-scoped: override protected (spec expansion §13.9)
-                prop_active = process_context(active, d.local_context,
-                                              self.loader, base_url=d.base_url,
-                                              propagate=True,
-                                              override_protected=True)
-
-            values = value if isinstance(value, list) else [value]
-
-            if d.reverse:
-                # @reverse property: object nodes point back at the subject
-                for v in values:
-                    if isinstance(v, dict):
-                        child = self.expand_node(prop_active, v, graph)
-                        if child is not None:
-                            self.emit(child, pred, subject, True, None, None,
-                                      graph)
-                    elif isinstance(v, str):
-                        iri = self._expand_id_value(prop_active, v)
-                        if iri and _is_absolute_iri_or_bnode(iri):
-                            self.emit(iri, pred, subject, True, None, None,
-                                      graph)
-                continue
-
-            if "@language" in d.container and isinstance(value, dict):
-                # language map: {"en": "...", "fr": [...]}
-                for lang in sorted(value):
-                    for v in (value[lang] if isinstance(value[lang], list)
-                              else [value[lang]]):
-                        if isinstance(v, str):
-                            self.emit(subject, pred, v, False, None,
-                                      lang, graph)
-                continue
-
-            if "@index" in d.container and isinstance(value, dict):
-                # index map: keys are data indexes, dropped in RDF; the
-                # map's values expand as the property's values
-                for idx in sorted(value):
-                    for v in (value[idx] if isinstance(value[idx], list)
-                              else [value[idx]]):
-                        self._expand_property_value(prop_active, d, subject,
-                                                    pred, v, graph)
-                continue
-
-            if "@id" in d.container and isinstance(value, dict):
-                # id map: keys provide the value node's @id ("@none" ->
-                # no id, i.e. a blank node)
-                for key_id in sorted(value):
-                    for v in (value[key_id]
-                              if isinstance(value[key_id], list)
-                              else [value[key_id]]):
-                        if not isinstance(v, dict):
-                            # JSON-LD 1.1 §4.6.3: id-map values must be node
-                            # objects; dropping silently would lose data, so
-                            # quarantine the document instead.
-                            raise CborLdError(
-                                "InvalidIdMapValue",
-                                f"@id container map value for {key_id!r} "
-                                "is not a node object")
-                        node = dict(v)
-                        if key_id != "@none" and not any(
-                                self._alias(prop_active, k, "@id")
-                                for k in node):
-                            node["@id"] = key_id
-                        child = self.expand_node(prop_active, node, graph)
-                        if child is not None:
-                            self.emit(subject, pred, child, True, None,
-                                      None, graph)
-                continue
-
-            if "@type" in d.container and isinstance(value, dict):
-                # type map: keys prepend to the value node's @type
-                # ("@none" -> no type added)
-                for key_ty in sorted(value):
-                    for v in (value[key_ty]
-                              if isinstance(value[key_ty], list)
-                              else [value[key_ty]]):
-                        if not isinstance(v, dict):
-                            # Same rationale as the @id map: loud, not silent.
-                            raise CborLdError(
-                                "InvalidTypeMapValue",
-                                f"@type container map value for {key_ty!r} "
-                                "is not a node object")
-                        node = dict(v)
-                        if key_ty != "@none":
-                            tkey = next(
-                                (k for k in node
-                                 if self._alias(prop_active, k, "@type")),
-                                None)
-                            if tkey is None:
-                                node["@type"] = key_ty
-                            else:
-                                existing = node[tkey]
-                                node[tkey] = [key_ty] + (
-                                    existing if isinstance(existing, list)
-                                    else [existing])
-                        child = self.expand_node(prop_active, node, graph)
-                        if child is not None:
-                            self.emit(subject, pred, child, True, None,
-                                      None, graph)
-                continue
-
-            if "@list" in d.container:
-                head = self._expand_list(prop_active, d, values, graph)
-                self.emit(subject, pred, head, True, None, None, graph)
-                continue
-
-            for v in values:
-                self._expand_property_value(prop_active, d, subject, pred, v, graph)
-
-        return subject
-
-    def _expand_list(self, active, d, values, graph) -> str:
-        if not values:
-            return RDF_NIL
-        head = self.new_bnode()
-        node = head
-        for i, v in enumerate(values):
-            self._expand_property_value(active, d, node, RDF_FIRST, v, graph)
-            nxt = self.new_bnode() if i + 1 < len(values) else RDF_NIL
-            self.emit(node, RDF_REST, nxt, True, None, None, graph)
-            node = nxt
-        return head
-
-    def _expand_property_value(self, active, d, subject, pred, v, graph):
-        type_ = d.type_
-
-        if type_ == "@json":
-            # rdf:JSON literal: canonical JSON of the raw value
-            from .canonical import canonical_json
-
-            self.emit(subject, pred, canonical_json(v), False, RDF_JSON,
-                      None, graph)
-            return
-
-        if isinstance(v, dict):
-            value_key = None
-            for k in v:
-                if self._alias(active, k, "@value"):
-                    value_key = k
-                    break
-            if value_key is not None:
-                self._emit_value_object(active, subject, pred, v, value_key, graph)
-                return
-            if "@graph" in d.container:
-                g = self.new_bnode()
-                self.emit(subject, pred, g, True, None, None, graph)
-                # children live in the named graph g
-                inner = {k: val for k, val in v.items()}
-                self.expand_node(active, inner, g)
-                return
-            child = self.expand_node(active, v, graph)
-            if child is not None:
-                self.emit(subject, pred, child, True, None, None, graph)
-            return
-
-        if isinstance(v, list):
-            for item in v:
-                self._expand_property_value(active, d, subject, pred, item, graph)
-            return
-
-        if isinstance(v, bool):
-            self.emit(subject, pred, "true" if v else "false", False,
-                      XSD_BOOLEAN, None, graph)
-            return
-        if isinstance(v, int):
-            self.emit(subject, pred, str(v), False, XSD_INTEGER, None, graph)
-            return
-        if isinstance(v, float):
-            self.emit(subject, pred, _canonical_double(v), False, XSD_DOUBLE,
-                      None, graph)
-            return
-        if v is None:
-            return
-
-        # string leaf
-        if type_ == "@id":
-            iri = self._expand_id_value(active, v)
-            if iri and _is_absolute_iri_or_bnode(iri):
-                self.emit(subject, pred, iri, True, None, None, graph)
-            return
-        if type_ == "@vocab":
-            iri = self._expand_type_value(active, v)
-            if iri and _is_absolute_iri_or_bnode(iri) and not iri.startswith("_:"):
-                self.emit(subject, pred, iri, True, None, None, graph)
-                return
-            # fall back to plain literal when the term doesn't expand
-            self.emit(subject, pred, v, False, XSD_STRING, None, graph)
-            return
-        if type_ is not None and type_ not in ("@json", "@none"):
-            self.emit(subject, pred, v, False, type_, None, graph)
-            return
-        lang = d.language if d.has_language else None
-        self.emit(subject, pred, v, False,
-                  None if lang else XSD_STRING, lang, graph)
-
-    def _emit_value_object(self, active, subject, pred, v, value_key, graph):
-        raw = v[value_key]
-        type_ = None
-        lang = None
-        for k, val in v.items():
-            if self._alias(active, k, "@type") and isinstance(val, str):
-                type_ = self._expand_type_value(active, val)
-            elif self._alias(active, k, "@language") and isinstance(val, str):
-                lang = val
-        if isinstance(raw, bool):
-            self.emit(subject, pred, "true" if raw else "false", False,
-                      type_ or XSD_BOOLEAN, None, graph)
-        elif isinstance(raw, int):
-            self.emit(subject, pred, str(raw), False, type_ or XSD_INTEGER,
-                      None, graph)
-        elif isinstance(raw, float):
-            self.emit(subject, pred, _canonical_double(raw), False,
-                      type_ or XSD_DOUBLE, None, graph)
-        elif isinstance(raw, str):
-            self.emit(subject, pred, raw, False,
-                      type_ if type_ else (None if lang else XSD_STRING),
-                      lang, graph)
-
-
 def expand_to_triples(doc: dict, loader: StaticLoader | None = None) -> list[Triple]:
     """Expand a parsed JSON-LD document to a deterministic triple list."""
     if not isinstance(doc, dict):
         raise CborLdError("ExpectedObject", "expansion root must be an object")
-    exp = _Expander(loader or StaticLoader.default())
-    exp.expand_node(EMPTY_CONTEXT, doc, DEFAULT_GRAPH)
-    return exp.triples
+    sink = TripleSink()
+    expand_into(sink, doc, loader)
+    return [Triple(*row) for row in zip(*sink.columns)]

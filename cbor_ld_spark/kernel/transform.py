@@ -20,6 +20,11 @@ Everything is per-document and deterministic — both sides re-derive the
 identical term-id table from the context chain, so there is no shared
 state and each corpus row is independent (the invariant that lets Spark
 run this in Arrow-batched pandas UDFs with zero coordination).
+
+The same walk yields the document's RDF view: an encoder given a
+:class:`~.rdf.TripleSink` emits each node's triples while it holds the
+node's active context (one walk per document), and the lenient
+``_Expander`` instance expands what the encoder would reject.
 """
 
 from __future__ import annotations
@@ -29,7 +34,8 @@ from typing import Any
 
 from . import codecs
 from .cbor import CborMap, CborTag, cbor_key_sort_key, dumps, loads
-from .context import EMPTY_CONTEXT, ActiveContext, TermDefinition, process_context
+from .context import (EMPTY_CONTEXT, MAP_CONTAINERS, ActiveContext,
+                      TermDefinition, process_context)
 from .errors import (
     CborLdError,
     DecodeError,
@@ -42,9 +48,10 @@ from .errors import (
     undefined_term,
 )
 from .idalloc import IdAllocator
-from .keywords import is_keyword
 from .loader import StaticLoader
-from .tables import CBOR_LD_TAG_HIGH, Tables, registry_tag, tables_for_registry
+from .rdf import RDF_FIRST, RDF_NIL, RDF_REST, TripleSink
+from .tables import (CBOR_LD_TAG_HIGH, Tables, registry_tag,
+                     tables_for_registry, varint_decode)
 
 
 def _force_as_array(value: Any, plural: bool) -> list:
@@ -53,21 +60,14 @@ def _force_as_array(value: Any, plural: bool) -> list:
     return [value]
 
 
-def _is_alias(active: ActiveContext, term: str, keyword: str) -> bool:
-    if term == keyword:
-        return True
-    d = active.get(term)
-    return d is not None and d.iri == keyword
-
-
-def _is_alias_with_def(term: str, d: TermDefinition | None, keyword: str) -> bool:
-    return term == keyword or (d is not None and d.iri == keyword)
-
-
 class _TransformerBase:
     """Shared state + context machinery for both directions."""
 
     error_cls: type[CborLdError] = CborLdError
+    # strict walks output a document and reject undefined terms; the
+    # lenient one (_Expander) only emits triples, into ``sink``
+    strict = True
+    sink: TripleSink | None = None
 
     def __init__(self, loader: StaticLoader, tables: Tables):
         self.loader = loader
@@ -81,6 +81,7 @@ class _TransformerBase:
         # is a pure function of this sequence, so it can be snapshot-
         # cached process-wide and restored with two dict copies
         self._fp_seq: tuple = ()
+        self._expander: _Expander | None = None
 
     # -- context handling ----------------------------------------------------
 
@@ -114,39 +115,53 @@ class _TransformerBase:
             self._fp_seq = new_seq
         return result
 
-    def _process_context_url(self, active: ActiveContext, url: str,
-                             propagate: bool) -> ActiveContext:
-        return self._process_context_value(active, url, propagate)
-
     def process_global_context(self, active: ActiveContext, context_value,
                                propagate: bool):
         """Returns (output value for the @context entry, new active context)."""
-        if self._is_input_array(context_value):
-            out_entries = []
-            for entry in context_value:
-                out_value, active = self._process_global_context_entry(
-                    active, entry, propagate)
-                out_entries.append(out_value)
-            return out_entries, active
-        return self._process_global_context_entry(active, context_value, propagate)
-
-    def _process_global_context_entry(self, active: ActiveContext, entry,
-                                      propagate: bool):
-        url = self.context_iri_ref(entry)
-        out_value = self.context_id(entry, url)
-        active = self._process_context_url(active, url, propagate)
-        return out_value, active
+        plural = self._is_input_array(context_value)
+        out_entries = []
+        for entry in context_value if plural else [context_value]:
+            url = self.context_iri_ref(entry)
+            out_entries.append(self.context_id(entry, url))
+            active = self._process_context_value(active, url, propagate)
+        return (out_entries if plural else out_entries[0]), active
 
     # -- node transform (the shared core) ------------------------------------
+
+    @staticmethod
+    def _is_input_array(value) -> bool:
+        return isinstance(value, list)
 
     def transform(self, active: ActiveContext, value):
         obj = self._as_input_object(value)
         if obj is None:
             raise expected_object()
-        return self._wrap_object(self.transform_node(active, obj))
+        return self._wrap_object(self.transform_node(active, obj)[0])
+
+    def transform_object(self, active: ActiveContext, value):
+        if value is None or isinstance(value, (bool, str)):
+            return value
+        if isinstance(value, int):
+            return self.transform_int(value)
+        if isinstance(value, float):
+            # text input can't produce these (parse_json_document rejects
+            # NaN/Infinity) but dict input and CBOR can; passing them on
+            # would break the JSON round-trip invariant the decoder enforces
+            if value != value or value in (float("inf"), float("-inf")):
+                raise self.error_cls("NonFiniteFloat", repr(value))
+            return value
+        if isinstance(value, list):
+            return [self.transform(active, item) for item in value]
+        entries = self._as_input_object(value)
+        if entries is None:
+            raise self.error_cls("InvalidValue", repr(type(value)))
+        return self._wrap_object(self.transform_node(active, entries)[0])
 
     def transform_node(self, active: ActiveContext, entries: list):
+        """Returns (output entries, node subject if emitting else None)."""
         result = []
+        sink = self.sink
+        strict = self.strict
 
         # 1. Embedded context.
         context_value = self._get_context_entry(entries)
@@ -158,14 +173,17 @@ class _TransformerBase:
 
         # 2. Find + sort types, apply type-scoped contexts.
         types = []
+        aliases = active.aliases
         for key, value in entries:
             kt = self.key_term(key, value)
             if kt is None:
                 continue
             term, plural = kt
-            if _is_alias(active, term, "@type"):
+            if aliases.get(term, term) == "@type":
                 for ty in _force_as_array(value, plural):
-                    types.append(self.value_term(active, ty))
+                    ty = self.value_term(active, ty)
+                    if ty is not None:
+                        types.append(ty)
         types.sort()
         for ty in types:
             d = active.get(ty)
@@ -184,14 +202,18 @@ class _TransformerBase:
             out_key = self.term_key(term, self._is_input_array(value))
             sorted_entries.append((term, plural, d, out_key, value))
         sorted_entries.sort(key=lambda e: e[0])
+        subject = sink and sink.open_node(active, entries, types)
+        aliases = active.aliases
+        predicates = active.predicates
 
         # 4. Dispatch entries.
         for term, plural, d, out_key, value in sorted_entries:
-            if _is_alias_with_def(term, d, "@id"):
+            keyword = aliases.get(term, term)
+            if keyword == "@id":
                 result.append((out_key, self.transform_id(value)))
                 continue
 
-            if _is_alias_with_def(term, d, "@type"):
+            if keyword == "@type":
                 if plural:
                     if not self._is_input_array(value):
                         raise self.error_cls("InvalidTypeKind", term)
@@ -201,11 +223,11 @@ class _TransformerBase:
                 result.append((out_key, out_value))
                 continue
 
-            if d is None:
+            if d is None and strict:
                 raise undefined_term(term)
 
             property_context = active
-            if d.local_context is not None:
+            if d is not None and d.local_context is not None:
                 # property-scoped: override protected (spec expansion §13.9)
                 property_context = self._process_context_value(
                     active, d.local_context, propagate=True,
@@ -213,16 +235,95 @@ class _TransformerBase:
 
             values = _force_as_array(value, plural)
             out_values = []
-            for v in values:
-                out_v = self.transform_typed_value(active, v, d.type_)
-                if out_v is _MISSING:
-                    out_v = self.transform_object(property_context, v)
-                out_values.append(out_v)
+            if sink is None:
+                for v in values:
+                    out_v = self.transform_typed_value(active, v, d.type_)
+                    if out_v is _MISSING:
+                        out_v = self.transform_object(property_context, v)
+                    out_values.append(out_v)
+            elif (pred := predicates.get(term)) is None:
+                # not one triple per value (keyword aliases, dropped or
+                # reversed terms, lists, maps): the lenient walk reads it
+                for v in values:
+                    out_values.append(self._quiet(active, property_context,
+                                                  d, v))
+                self._lenient("_structured", active, property_context, d,
+                              term, value, values, subject)
+            else:
+                for v in values:
+                    out_values.append(self._value(active, property_context, d,
+                                                  v, subject, pred))
 
-            result.append((out_key, out_values if plural else out_values[0]))
+            if strict:
+                result.append((out_key,
+                               out_values if plural else out_values[0]))
 
-        result.sort(key=lambda e: self._out_key_sort_key(e[0]))
-        return result
+        if strict:
+            result.sort(key=lambda e: self._out_key_sort_key(e[0]))
+        return result, subject
+
+    # -- the RDF view, emitted by the walk that holds the context ------------
+
+    def _value(self, active: ActiveContext, prop_active: ActiveContext,
+               d: TermDefinition, v, subject: str, pred: str):
+        """Emit the triples of one property value; return its encoding."""
+        sink = self.sink
+        if d.type_ != "@json":
+            if isinstance(v, dict):
+                aliases = prop_active.aliases
+                vkey = next((k for k in v if aliases.get(k, k) == "@value"),
+                            None)
+                if vkey is None:
+                    # a node: its subject is the object of this property
+                    if "@graph" in d.container:
+                        # its triples go to a named graph the property names
+                        graph, g = sink.graph, sink.bnode()
+                        sink.emit(subject, pred, g, True)
+                        sink.graph = g
+                        entries, _ = self.transform_node(prop_active,
+                                                         list(v.items()))
+                        sink.graph = graph
+                    else:
+                        entries, child = self.transform_node(prop_active,
+                                                             list(v.items()))
+                        sink.emit(subject, pred, child, True)
+                    return self._wrap_object(entries)
+                sink.value_object(prop_active, subject, pred, v, vkey)
+                return self._quiet(active, prop_active, d, v)
+            if isinstance(v, list):
+                # a list in a list: items are values (encodable if nodes)
+                out = []
+                for item in v:
+                    if self.strict and not isinstance(item, dict):
+                        raise expected_object()
+                    out.append(self._value(active, prop_active, d, item,
+                                           subject, pred))
+                return out
+        sink.literal(prop_active, d, subject, pred, v)
+        return self._quiet(active, prop_active, d, v)
+
+    def _quiet(self, active: ActiveContext, prop_active: ActiveContext,
+               d: TermDefinition, v):
+        """Encode a value whose triples, if any, come from elsewhere."""
+        sink, self.sink = self.sink, None
+        out = self.transform_typed_value(active, v, d.type_)
+        if out is _MISSING:
+            out = self.transform_object(prop_active, v)
+        self.sink = sink
+        return out
+
+    def _lenient(self, step: str, *args) -> None:
+        """Run a lenient expansion step into this walk's sink.  Its first
+        error waits in ``sink.error``: encode and decode errors come first."""
+        sink = self.sink
+        if sink.error is not None:
+            return
+        if self._expander is None:
+            self._expander = _Expander(self.loader, sink)
+        try:
+            getattr(self._expander, step)(*args)
+        except Exception as e:  # noqa: BLE001 — reported after decode
+            sink.error = e
 
     # -- shared vocab term machinery (reference: src/transform.rs:541-588) ---
 
@@ -273,10 +374,6 @@ class CborLdEncoder(_TransformerBase):
 
     # input = parsed JSON (dict/list/scalars); input objects iterated as entries
     @staticmethod
-    def _is_input_array(value) -> bool:
-        return isinstance(value, list)
-
-    @staticmethod
     def _as_input_object(value):
         if isinstance(value, dict):
             return list(value.items())
@@ -288,17 +385,10 @@ class CborLdEncoder(_TransformerBase):
 
     @staticmethod
     def _get_context_entry(entries: list):
-        found = _MISSING
-        for k, v in entries:
-            if k == "@context":
-                if found is not _MISSING:
-                    raise duplicate_key(k)
-                found = v
-        return found
+        # entries come from a dict: "@context" occurs at most once
+        return next((v for k, v in entries if k == "@context"), _MISSING)
 
-    @staticmethod
-    def _out_key_sort_key(key):
-        return cbor_key_sort_key(key)
+    _out_key_sort_key = staticmethod(cbor_key_sort_key)
 
     def context_iri_ref(self, entry) -> str:
         if not isinstance(entry, str):
@@ -315,11 +405,10 @@ class CborLdEncoder(_TransformerBase):
             raise missing_id_for(term)
         return tid
 
-    def key_term(self, key: str, value) -> tuple[str, bool] | None:
+    def key_term(self, key: str, value) -> tuple[str, bool]:
         return key, isinstance(value, list)
 
-    def required_key_term(self, key: str, value) -> tuple[str, bool]:
-        return key, isinstance(value, list)
+    required_key_term = key_term
 
     def value_term(self, active: ActiveContext, value) -> str:
         if not isinstance(value, str):
@@ -353,40 +442,20 @@ class CborLdEncoder(_TransformerBase):
             return codecs.encode_xsd_date_time(value)
         return _MISSING
 
-    def transform_object(self, active: ActiveContext, value):
-        if value is None or isinstance(value, bool):
-            return value
-        if isinstance(value, int):
-            # CBOR major 0/1 holds |n| < 2^64; the reference silently
-            # degrades larger ints to lossy f64 (src/encode/mod.rs:241) —
-            # a typed error keeps the round-trip invariant honest instead
-            if not -(2 ** 64) < value < 2 ** 64:
-                raise EncodeError("IntegerOverflow", str(value))
-            return value
-        if isinstance(value, float):
-            # text input can't produce these (parse_json_document rejects
-            # NaN/Infinity) but dict input can; emitting them would break
-            # the JSON round-trip invariant the decoder enforces
-            if value != value or value in (float("inf"), float("-inf")):
-                raise EncodeError("NonFiniteFloat", repr(value))
-            return value
-        if isinstance(value, str):
-            return value
-        if isinstance(value, list):
-            return [self.transform(active, item) for item in value]
-        if isinstance(value, dict):
-            return CborMap(self.transform_node(active, list(value.items())))
-        raise EncodeError("InvalidValue", repr(type(value)))
+    @staticmethod
+    def transform_int(value: int) -> int:
+        # CBOR major 0/1 holds |n| < 2^64; the reference silently
+        # degrades larger ints to lossy f64 (src/encode/mod.rs:241) —
+        # a typed error keeps the round-trip invariant honest instead
+        if not -(2 ** 64) < value < 2 ** 64:
+            raise EncodeError("IntegerOverflow", str(value))
+        return value
 
 
 class CborLdDecoder(_TransformerBase):
     """CBOR-LD -> JSON-LD (reference: src/decode/mod.rs:89-272)."""
 
     error_cls = DecodeError
-
-    @staticmethod
-    def _is_input_array(value) -> bool:
-        return isinstance(value, list)
 
     @staticmethod
     def _as_input_object(value):
@@ -465,9 +534,7 @@ class CborLdDecoder(_TransformerBase):
         return self.decode_vocab_term_value(active, value)
 
     def transform_typed_value(self, active: ActiveContext, value, type_):
-        if isinstance(value, CborMap):
-            return _MISSING
-        if type_ is None:
+        if isinstance(value, CborMap) or type_ is None:
             return _MISSING
         if self.tables.has_type_table(type_):
             return self.tables.decode_typed(type_, value)
@@ -481,23 +548,122 @@ class CborLdDecoder(_TransformerBase):
             return codecs.decode_xsd_date_time(value)
         return _MISSING
 
-    def transform_object(self, active: ActiveContext, value):
-        if value is None or isinstance(value, bool):
-            return value
-        if isinstance(value, int):
-            return value
-        if isinstance(value, float):
-            if value != value or value in (float("inf"), float("-inf")):
-                raise DecodeError("NonFiniteFloat", repr(value))
-            return value
-        if isinstance(value, str):
-            return value
-        if isinstance(value, list):
-            return [self.transform(active, item) for item in value]
-        if isinstance(value, CborMap):
-            return self._wrap_object(
-                self.transform_node(active, list(value.entries)))
-        raise DecodeError("InvalidValue", repr(type(value)))
+    @staticmethod
+    def transform_int(value: int) -> int:
+        return value
+
+
+class _Expander(CborLdEncoder):
+    """The lenient walk: expansion to triples only (a pragmatic subset of
+    W3C JSON-LD 1.1 Expansion + Deserialize JSON-LD to RDF).  It takes
+    inline contexts, drops undefined terms, and reads the shapes the
+    encoding sees differently (``@graph``/``@included`` aliases,
+    ``@reverse``, ``@list``, data-keyed maps); it allocates no term ids."""
+
+    strict = False
+
+    def __init__(self, loader: StaticLoader, sink: TripleSink):
+        self.loader = loader
+        self.sink = sink
+
+    def _process_context_value(self, active, context_value, propagate,
+                               base_url=None, override_protected=False):
+        return process_context(active, context_value, self.loader,
+                               base_url=base_url, propagate=propagate,
+                               override_protected=override_protected)
+
+    def process_global_context(self, active, context_value, propagate):
+        return None, self._process_context_value(active, context_value,
+                                                 propagate)
+
+    def value_term(self, active, value):
+        return value if isinstance(value, str) else None
+
+    def _nothing(self, *_):
+        return None
+
+    # no output document
+    term_key = transform_id = transform_vocab = _wrap_object = _quiet = \
+        _nothing
+
+    def _lenient(self, step: str, *args) -> None:
+        getattr(self, step)(*args)
+
+    def _structured(self, active, prop_active, d, term, value, values,
+                    subject):
+        sink = self.sink
+        pred = term if d is None else d.iri
+        if pred == "@graph" or pred == "@included":
+            # W3C 1.1 §4.7: graph and included node objects expand as
+            # independent nodes in the *same* graph
+            for v in values:
+                if isinstance(v, dict):
+                    self.transform_node(active, list(v.items()))
+        elif d is None or pred is None or pred.startswith("_:") \
+                or not codecs.is_absolute_iri(pred):
+            pass  # undefined terms and blank-node predicates are dropped
+        elif d.reverse:
+            # @reverse property: object nodes point back at the subject
+            for v in values:
+                if isinstance(v, dict):
+                    child = self.transform_node(prop_active, list(v.items()))[1]
+                else:
+                    child = isinstance(v, str) and sink.node_id(prop_active, v)
+                if child:
+                    sink.emit(child, pred, subject, True)
+        elif isinstance(value, dict) and d.container & MAP_CONTAINERS:
+            self._map(prop_active, d, value, subject, pred)
+        elif "@list" in d.container:
+            head = node = sink.bnode() if values else RDF_NIL
+            for i, v in enumerate(values):
+                self._value(active, prop_active, d, v, node, RDF_FIRST)
+                nxt = sink.bnode() if i + 1 < len(values) else RDF_NIL
+                sink.emit(node, RDF_REST, nxt, True)
+                node = nxt
+            sink.emit(subject, pred, head, True)
+        else:
+            for v in values:
+                self._value(active, prop_active, d, v, subject, pred)
+
+    def _map(self, prop_active, d, value: dict, subject, pred) -> None:
+        """Language, index, id and type maps: keys are data, not terms."""
+        container = d.container
+        aliases = prop_active.aliases
+        for key in sorted(value):
+            items = value[key]
+            for v in items if isinstance(items, list) else [items]:
+                if "@language" in container:
+                    if isinstance(v, str):
+                        self.sink.emit(subject, pred, v, False, None, key)
+                    continue
+                if "@index" in container:
+                    # index keys are dropped in RDF
+                    self._value(prop_active, prop_active, d, v, subject, pred)
+                    continue
+                # the key is the value node's @id, or a type it gets
+                # ("@none": neither)
+                kw = "@id" if "@id" in container else "@type"
+                if not isinstance(v, dict):
+                    # JSON-LD 1.1 §4.6.3: map values must be node objects;
+                    # dropping them silently would lose data, so
+                    # quarantine the document instead
+                    raise CborLdError(
+                        "InvalidIdMapValue" if kw == "@id"
+                        else "InvalidTypeMapValue",
+                        f"{kw} container map value for {key!r} "
+                        "is not a node object")
+                node = dict(v)
+                if key != "@none":
+                    k = next((k for k in node if aliases.get(k, k) == kw),
+                             None)
+                    if k is None:
+                        node[kw] = key
+                    elif kw == "@type":
+                        have = node[k]
+                        node[k] = [key] + (have if isinstance(have, list)
+                                           else [have])
+                child = self.transform_node(prop_active, list(node.items()))[1]
+                self.sink.emit(subject, pred, child, True)
 
 
 # --- public per-document API ------------------------------------------------
@@ -578,9 +744,42 @@ def encode_document(doc: dict | str | bytes, registry_id: int = 1,
             raise expected_object()
     if registry_id == 0:
         return dumps(CborTag(CBOR_LD_TAG_HIGH << 8, _json_to_plain_cbor(doc)))
+    enc = CborLdEncoder(loader or StaticLoader.default(),
+                        tables_for_registry(registry_id))
+    return _envelope(registry_id, enc.transform(EMPTY_CONTEXT, doc))
+
+
+def encode_with_triples(doc: dict, registry_id: int = 1,
+                        bnode_prefix: str = "_:",
+                        loader: StaticLoader | None = None,
+                        ) -> tuple[bytes, TripleSink]:
+    """``encode_document`` of a parsed document, plus its triples emitted
+    by the same walk: ``expand_to_triples(doc)`` with ``bnode_prefix`` for
+    each blank label's ``_:``.  The first expansion error does not raise:
+    it waits in ``sink.error``, so encode and decode errors come first."""
     loader = loader or StaticLoader.default()
-    enc = CborLdEncoder(loader, tables_for_registry(registry_id))
-    inner = enc.transform(EMPTY_CONTEXT, doc)
+    sink = TripleSink(bnode_prefix)
+    if registry_id != 0:
+        enc = CborLdEncoder(loader, tables_for_registry(registry_id))
+        enc.sink = sink
+        return _envelope(registry_id, enc.transform(EMPTY_CONTEXT, doc)), sink
+    # uncompressed: there is no encoder walk to ride on
+    cbor = dumps(CborTag(CBOR_LD_TAG_HIGH << 8, _json_to_plain_cbor(doc)))
+    try:
+        expand_into(sink, doc, loader)
+    except Exception as e:  # noqa: BLE001 — reported after decode
+        sink.error = e
+    return cbor, sink
+
+
+def expand_into(sink: TripleSink, doc: dict,
+                loader: StaticLoader | None = None) -> None:
+    """Emit a parsed document's triples with the lenient walk."""
+    _Expander(loader or StaticLoader.default(), sink).transform_node(
+        EMPTY_CONTEXT, list(doc.items()))
+
+
+def _envelope(registry_id: int, inner) -> bytes:
     tag, varint_rest = registry_tag(registry_id)
     if varint_rest:
         # id >= 128: remaining varint bytes prepend as [bstr, payload]
@@ -603,8 +802,6 @@ def decode_document(data: bytes, loader: StaticLoader | None = None) -> dict:
     first = value.tag & 0xFF
     if first & 0x80:
         # varint registry id (>= 128): payload is [bstr(rest), payload]
-        from .tables import varint_decode
-
         if (not isinstance(value.value, list) or len(value.value) != 2
                 or not isinstance(value.value[0], bytes)):
             raise DecodeError("NotCborLd",

@@ -64,9 +64,15 @@ def spread_input(df: DataFrame, by: str | None = None,
 
     When ``rows`` is known (parquet footer, or a caller-side limit), the
     target is capped at ``ceil(rows / rows_per_task)``: every Python-
-    boundary task carries ~15-25 ms of scheduling + worker-roundtrip
-    overhead, so fanning 200 rows across 32 tasks is pure loss (measured
-    +2 s on a 3-Python-stage query), and even pure-JVM consumers pay
+    boundary task carries a fixed CPU cost before its first row.  On a
+    4-core box with Python 3.11.7 a ``mapInArrow`` task spends 0.12-0.23 s
+    of CPU in PySpark's ``worker_util.setup_spark_files``, whose
+    ``importlib.invalidate_caches()`` re-reads the whole central
+    directory of ``pyspark.zip`` once for each of the ~16 zipimporters
+    the worker has cached (~0.09 s for the 14 a bare pyspark import
+    creates); this package's own imports add none of them.  So fanning
+    200 rows across 32 tasks is pure loss (measured +2 s on a
+    3-Python-stage query), and even pure-JVM consumers pay
     ~0.3-0.4 s per query for 32 near-empty tasks (measured across the
     cheap dedup/corpus aggregations).  256 rows/task balances the two
     at bench scale; unbounded inputs spread to full width — the safe

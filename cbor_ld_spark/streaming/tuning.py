@@ -10,9 +10,9 @@ file I/O than on data: the windowed-parity query measured 5.4-9.7 s at
 
 The right number scales with STATE SIZE (distinct keys x bytes), not
 with the core count, so the helper derives it from the known input row
-count (~10k rows per state partition), clamped to the session's shuffle
-parallelism, and is env-overridable for production deployments
-(``SPARK_GRAFT_STREAM_STATE_PARTITIONS``).  The partition count is
+count (~10k rows per state partition, at least 4), never above the
+session's shuffle parallelism, and is env-overridable for production
+deployments (``SPARK_GRAFT_STREAM_STATE_PARTITIONS``).  The partition count is
 pinned into the query's checkpoint by Spark on first start, so restarts
 resume with the recorded value regardless of session conf.
 """
@@ -32,7 +32,8 @@ def stream_state_partitions(spark, rows: int | None) -> int:
     cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if rows is None:
         return cur
-    return max(4, min(cur, -(-rows // ROWS_PER_STATE_PARTITION)))
+    # the session value stays an upper bound, also when it is below 4
+    return min(cur, max(4, -(-rows // ROWS_PER_STATE_PARTITION)))
 
 
 @contextmanager
