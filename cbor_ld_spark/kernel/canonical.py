@@ -16,9 +16,10 @@ import json
 from typing import Any
 
 
-def canonical_json(value: Any) -> str:
-    return json.dumps(value, sort_keys=True, separators=(",", ":"),
-                      ensure_ascii=False)
+# one encoder for every call: json.dumps builds a new one per call when
+# given non-default options
+canonical_json = json.JSONEncoder(sort_keys=True, separators=(",", ":"),
+                                  ensure_ascii=False).encode
 
 
 def content_sha256(value: Any) -> str:

@@ -24,7 +24,7 @@ import struct
 from dataclasses import dataclass
 from typing import Any, Iterator, List, Tuple
 
-__all__ = ["CborTag", "CborMap", "dumps", "loads", "cbor_key_sort_key"]
+__all__ = ["CborTag", "CborMap", "dumps", "loads"]
 
 
 @dataclass
@@ -52,21 +52,6 @@ class CborMap:
 
     def __repr__(self) -> str:
         return f"CborMap({self.entries!r})"
-
-
-# Ordering used when CBOR-LD sorts map entries: integers sort before text,
-# each ascending (mirrors ciborium's `Value: PartialOrd` variant order:
-# Integer < Bytes < Float < Text < ...).
-_VARIANT_RANK = {int: 0, bytes: 1, float: 2, str: 3, bool: 4}
-
-
-def cbor_key_sort_key(key: Any):
-    if isinstance(key, bool):  # bool is an int subclass; rank it separately
-        return (4, key)
-    rank = _VARIANT_RANK.get(type(key))
-    if rank is None:
-        raise TypeError(f"unsortable CBOR key type {type(key)!r}")
-    return (rank, key)
 
 
 # --- encoding ---------------------------------------------------------------
@@ -114,46 +99,91 @@ def _encode_float(out: bytearray, v: float) -> None:
     out += struct.pack(">d", v)
 
 
-def _encode(out: bytearray, v: Any) -> None:
-    if v is None:
-        out.append(0xF6)
-    elif v is True:
-        out.append(0xF5)
-    elif v is False:
-        out.append(0xF4)
-    elif isinstance(v, int):
-        if v >= 0:
-            _head(out, 0, v)
-        else:
-            _head(out, 1, -1 - v)
-    elif isinstance(v, float):
-        _encode_float(out, v)
-    elif isinstance(v, str):
-        b = v.encode("utf-8")
-        _head(out, 3, len(b))
-        out += b
-    elif isinstance(v, (bytes, bytearray)):
-        _head(out, 2, len(v))
-        out += v
-    elif isinstance(v, list):
-        _head(out, 4, len(v))
-        for item in v:
-            _encode(out, item)
-    elif isinstance(v, CborMap):
-        _head(out, 5, len(v))
-        for k, val in v:
-            _encode(out, k)
-            _encode(out, val)
-    elif isinstance(v, CborTag):
-        _head(out, 6, v.tag)
-        _encode(out, v.value)
+# The writer dispatches on the exact type (``_WRITERS``); subclasses and
+# unsupported types take ``_encode``'s isinstance chain.  Containers call
+# their items' writers directly: one frame per nesting level, as before.
+
+def _write_int(out: bytearray, v: int) -> None:
+    if 0 <= v < 24:
+        out.append(v)
+    elif 0 <= v < 0x100:  # most term ids
+        out.append(24)
+        out.append(v)
+    elif v >= 0:
+        _head(out, 0, v)
     else:
-        raise TypeError(f"cannot CBOR-encode {type(v)!r}")
+        _head(out, 1, -1 - v)
+
+
+def _write_str(out: bytearray, v: str) -> None:
+    b = v.encode("utf-8")
+    n = len(b)
+    if n < 24:
+        out.append(0x60 | n)
+    else:
+        _head(out, 3, n)
+    out += b
+
+
+def _write_bytes(out: bytearray, v) -> None:
+    _head(out, 2, len(v))
+    out += v
+
+
+def _write_list(out: bytearray, v: list) -> None:
+    n = len(v)
+    if n < 24:
+        out.append(0x80 | n)
+    else:
+        _head(out, 4, n)
+    get = _WRITERS.get
+    for item in v:
+        get(type(item), _encode)(out, item)
+
+
+def _write_map(out: bytearray, v: "CborMap") -> None:
+    entries = v.entries
+    n = len(entries)
+    if n < 24:
+        out.append(0xA0 | n)
+    else:
+        _head(out, 5, n)
+    get = _WRITERS.get
+    for k, val in entries:
+        get(type(k), _encode)(out, k)
+        get(type(val), _encode)(out, val)
+
+
+def _write_tag(out: bytearray, v: CborTag) -> None:
+    _head(out, 6, v.tag)
+    _WRITERS.get(type(v.value), _encode)(out, v.value)
+
+
+_WRITERS = {
+    type(None): lambda out, v: out.append(0xF6),
+    bool: lambda out, v: out.append(0xF5 if v else 0xF4),
+    int: _write_int,
+    float: _encode_float,
+    str: _write_str,
+    bytes: _write_bytes,
+    bytearray: _write_bytes,
+    list: _write_list,
+    CborMap: _write_map,
+    CborTag: _write_tag,
+}
+
+
+def _encode(out: bytearray, v: Any) -> None:
+    """Write a subclass of a supported type, or reject ``v``."""
+    for cls in (int, float, str, bytes, bytearray, list, CborMap, CborTag):
+        if isinstance(v, cls):
+            return _WRITERS[cls](out, v)
+    raise TypeError(f"cannot CBOR-encode {type(v)!r}")
 
 
 def dumps(v: Any) -> bytes:
     out = bytearray()
-    _encode(out, v)
+    _WRITERS.get(type(v), _encode)(out, v)
     return bytes(out)
 
 

@@ -18,7 +18,8 @@ Determinism contract: processing the same (active-context fingerprint,
 context value, propagate) triple always yields the same resulting term
 set, and ``alloc_terms`` exposes them in the exact order the CBOR-LD
 id allocator must see (sorted over the *full* definition set — reference:
-src/transform.rs:305-317).  Results are memoized process-wide: a corpus
+src/transform.rs:305-317).  Results are memoized process-wide, keyed on
+the parent context object (which the memo itself interned): a corpus
 re-uses a handful of context chains across billions of documents, so on a
 Spark executor the cache hit rate is ~100% after the first document of
 each shape (this is the "Cow + lazy_static" of the reference, adapted to
@@ -188,8 +189,10 @@ def _loader_token(loader) -> int:
     return token
 
 
-# (loader token, parent fingerprint, context key, base_url, propagate,
-#  override_protected) -> ActiveContext
+# (parent context, loader token, context key, base_url, propagate,
+#  override_protected) -> ActiveContext.  Keyed on the parent object, not
+# its fingerprint: results are interned, so a chain's contexts recur as
+# the same objects and the key hashes by identity.
 _PROCESS_CACHE: dict[tuple, ActiveContext] = {}
 _PROCESS_CACHE_MAX = 4096
 
@@ -209,7 +212,7 @@ def process_context(
     (spec §4.1.2 step 5.1.3 analog): redefining protected terms is then
     allowed; otherwise a differing redefinition raises.
     """
-    cache_key = (_loader_token(loader), active.fingerprint,
+    cache_key = (active, _loader_token(loader),
                  _context_cache_key(local_context), base_url, propagate,
                  override_protected)
     hit = _PROCESS_CACHE.get(cache_key)

@@ -104,22 +104,19 @@ class TripleSink:
             return f"{self.prefix}u_{iri[2:]}"
         return iri if iri and is_absolute_iri(iri) else None
 
-    def open_node(self, active: ActiveContext, entries: list,
-                  types: list[str]) -> str:
-        """A node's subject (its first ``@id`` entry, else a fresh blank
-        node) and its ``rdf:type`` triples, in sorted type order."""
+    def open_node(self, active: ActiveContext, node_id,
+                  types: tuple[str, ...]) -> str:
+        """A node's subject (``node_id``, the value of its first ``@id``
+        entry, else a fresh blank node) and its ``rdf:type`` triples, in
+        sorted type order."""
         subject = None
-        aliases = active.aliases
-        for key, value in entries:
-            if aliases.get(key, key) == "@id":
-                if isinstance(value, str):
-                    # node_id, inlined: this is the walk's deepest frame
-                    iri = expand_iri(active, value, document_relative=True)
-                    if iri and iri.startswith("_:"):
-                        subject = f"{self.prefix}u_{iri[2:]}"
-                    elif iri and is_absolute_iri(iri):
-                        subject = iri
-                break
+        if isinstance(node_id, str):
+            # node_id(), inlined: this is the walk's deepest frame
+            iri = expand_iri(active, node_id, document_relative=True)
+            if iri and iri.startswith("_:"):
+                subject = f"{self.prefix}u_{iri[2:]}"
+            elif iri and is_absolute_iri(iri):
+                subject = iri
         if subject is None:
             subject = self.bnode()
         for ty in types:

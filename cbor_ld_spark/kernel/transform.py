@@ -17,9 +17,30 @@ src/decode/mod.rs:129-272):
    strings lexicographic on decode).
 
 Everything is per-document and deterministic — both sides re-derive the
-identical term-id table from the context chain, so there is no shared
-state and each corpus row is independent (the invariant that lets Spark
-run this in Arrow-batched pandas UDFs with zero coordination).
+identical term-id table from the context chain, so each corpus row is
+independent (the invariant that lets Spark run this in Arrow-batched
+pandas UDFs with zero coordination).
+
+Because of that determinism, steps 2-3 (the node's *header*) depend only
+on the allocation state, the active context, the node's keys (on encode
+also which values are lists) and its ``@type`` values.  Each walk
+(encode, decode, the lenient expansion) memoizes them as node plans:
+``_plans`` maps ``(state, active context, *keys[, *list flags])`` to a
+``_Plan``, whose ``headers`` map the flattened ``@type`` values to a
+``_Header``.  States are the interned
+trie of :mod:`.idalloc` and contexts are interned by the context memo,
+so both hash by identity; keys must be exact ``int`` on decode and type
+values exact ``str``/``int``, since ``True == 1 == 1.0``.  Loaders need
+no key of their own: a context processed through another loader is
+another object.  A plan or header is built completely and then published
+with one dict assignment, so a concurrent walk sees a miss or a whole
+entry, and a header whose building raised is never published.  Bounds:
+``_MAX_PLANS`` plans per walk (the memo is cleared when full; plans
+of a restarted state trie never hit again and wait for that) and
+``_MAX_HEADERS`` headers per plan.
+Corpora repeat node shapes (a 2k-document benchmark corpus has about 15
+among 6k nodes), so after warm-up nearly every node is a hit; a miss
+costs the header work it always did, plus one publish.
 
 The same walk yields the document's RDF view: an encoder given a
 :class:`~.rdf.TripleSink` emits each node's triples while it holds the
@@ -30,10 +51,11 @@ node's active context (one walk per document), and the lenient
 from __future__ import annotations
 
 import json
+from operator import itemgetter
 from typing import Any
 
-from . import codecs
-from .cbor import CborMap, CborTag, cbor_key_sort_key, dumps, loads
+from . import codecs, idalloc
+from .cbor import CborMap, CborTag, dumps, loads
 from .context import (EMPTY_CONTEXT, MAP_CONTAINERS, ActiveContext,
                       TermDefinition, process_context)
 from .errors import (
@@ -47,7 +69,6 @@ from .errors import (
     not_cbor_ld,
     undefined_term,
 )
-from .idalloc import IdAllocator
 from .loader import StaticLoader
 from .rdf import RDF_FIRST, RDF_NIL, RDF_REST, TripleSink
 from .tables import (CBOR_LD_TAG_HIGH, Tables, registry_tag,
@@ -60,6 +81,73 @@ def _force_as_array(value: Any, plural: bool) -> list:
     return [value]
 
 
+_MISSING = object()
+_first = itemgetter(0)
+_second = itemgetter(1)
+_is_list = list.__instancecheck__
+
+
+class _Header:
+    """A node's walk decisions that depend only on the plan key and the
+    node's ``@type`` values: its sorted types, the active context and
+    allocation state after the type-scoped contexts, the index of its
+    first ``@id`` entry, and its entries in term order as ``(index, term,
+    plural, definition, out key, keyword, predicate)``."""
+
+    __slots__ = ("types", "active", "state", "id_index", "entries",
+                 "scoped")
+
+    def __init__(self, types, active, state, id_index, entries):
+        self.types = types
+        self.active = active
+        self.state = state
+        self.id_index = id_index
+        self.entries = entries
+        # entry index -> its property-scoped context, once processed
+        self.scoped: dict[int, ActiveContext] = {}
+
+
+class _Plan:
+    """Headers of one node shape: ``type_idx`` lists the ``(index,
+    plural)`` of its ``@type`` entries, ``headers`` maps their values to
+    a :class:`_Header`."""
+
+    __slots__ = ("type_idx", "headers")
+
+    def __init__(self, type_idx, headers):
+        self.type_idx = type_idx
+        self.headers = headers
+
+
+# bounds of the plan memos: plans per walk (cleared when full) and
+# headers per plan (no more are added when full)
+_MAX_PLANS = 4096
+_MAX_HEADERS = 64
+
+
+def _type_key(vals: tuple, type_idx: tuple):
+    """The ``@type`` values, flattened, as a header key (a header depends
+    only on their sorted sequence), or None when they are not all exact
+    ``str``/``int``: ``True == 1 == 1.0`` must not share a header."""
+    key = []
+    for i, plural in type_idx:
+        v = vals[i]
+        if type(v) is list:
+            if not plural:
+                return None
+            for x in v:
+                t = type(x)
+                if t is not str and t is not int:
+                    return None
+            key += v
+        else:
+            t = type(v)
+            if t is not str and t is not int:
+                return None
+            key.append(v)
+    return tuple(key)
+
+
 class _TransformerBase:
     """Shared state + context machinery for both directions."""
 
@@ -68,19 +156,13 @@ class _TransformerBase:
     # lenient one (_Expander) only emits triples, into ``sink``
     strict = True
     sink: TripleSink | None = None
+    # each walk's node plans, (plan key) -> _Plan, set per subclass
+    _plans: dict
 
     def __init__(self, loader: StaticLoader, tables: Tables):
         self.loader = loader
         self.tables = tables
-        self.allocator = IdAllocator()
-        # context fingerprints whose allocation pass already ran for this
-        # document; re-applying (nested repeats of the same chain) is a
-        # no-op, so skip the whole term loop (~20% of kernel time)
-        self._applied: set = set()
-        # ordered sequence of first-applied fingerprints: allocator state
-        # is a pure function of this sequence, so it can be snapshot-
-        # cached process-wide and restored with two dict copies
-        self._fp_seq: tuple = ()
+        self.state = idalloc.root()
         self._expander: _Expander | None = None
 
     # -- context handling ----------------------------------------------------
@@ -93,26 +175,7 @@ class _TransformerBase:
         result = process_context(active, context_value, self.loader,
                                  base_url=base_url, propagate=propagate,
                                  override_protected=override_protected)
-        fp = result.fingerprint
-        if fp not in self._applied:
-            self._applied.add(fp)
-            new_seq = (*self._fp_seq, fp)
-            snap = _ALLOC_SNAPSHOTS.get(new_seq)
-            alloc = self.allocator
-            if snap is not None:
-                alloc.term_to_id = dict(snap[0])
-                alloc.id_to_term = dict(snap[1])
-                alloc.next_id = snap[2]
-            else:
-                allocate = alloc.allocate
-                for term in result.alloc_terms:
-                    allocate(term)
-                if len(_ALLOC_SNAPSHOTS) >= 512:
-                    _ALLOC_SNAPSHOTS.clear()
-                _ALLOC_SNAPSHOTS[new_seq] = (dict(alloc.term_to_id),
-                                             dict(alloc.id_to_term),
-                                             alloc.next_id)
-            self._fp_seq = new_seq
+        self.state = self.state.after(result)
         return result
 
     def process_global_context(self, active: ActiveContext, context_value,
@@ -152,63 +215,48 @@ class _TransformerBase:
             return value
         if isinstance(value, list):
             return [self.transform(active, item) for item in value]
-        entries = self._as_input_object(value)
-        if entries is None:
+        obj = self._as_input_object(value)
+        if obj is None:
             raise self.error_cls("InvalidValue", repr(type(value)))
-        return self._wrap_object(self.transform_node(active, entries)[0])
+        return self._wrap_object(self.transform_node(active, obj)[0])
 
-    def transform_node(self, active: ActiveContext, entries: list):
+    def transform_node(self, active: ActiveContext, obj):
         """Returns (output entries, node subject if emitting else None)."""
         result = []
         sink = self.sink
         strict = self.strict
+        keys, vals, context_value, shape = self._open(obj)
 
         # 1. Embedded context.
-        context_value = self._get_context_entry(entries)
         if context_value is not _MISSING:
             out_key = self.term_key("@context", self._is_input_array(context_value))
             out_value, active = self.process_global_context(
                 active, context_value, propagate=True)
             result.append((out_key, out_value))
 
-        # 2. Find + sort types, apply type-scoped contexts.
-        types = []
-        aliases = active.aliases
-        for key, value in entries:
-            kt = self.key_term(key, value)
-            if kt is None:
-                continue
-            term, plural = kt
-            if aliases.get(term, term) == "@type":
-                for ty in _force_as_array(value, plural):
-                    ty = self.value_term(active, ty)
-                    if ty is not None:
-                        types.append(ty)
-        types.sort()
-        for ty in types:
-            d = active.get(ty)
-            if d is not None and d.local_context is not None:
-                active = self._process_context_value(
-                    active, d.local_context, propagate=False,
-                    base_url=d.base_url)
-
-        # 3. Sort entries by term name.
-        sorted_entries = []
-        for key, value in entries:
-            term, plural = self.required_key_term(key, value)
-            if term == "@context":
-                continue
-            d = active.get(term)
-            out_key = self.term_key(term, self._is_input_array(value))
-            sorted_entries.append((term, plural, d, out_key, value))
-        sorted_entries.sort(key=lambda e: e[0])
-        subject = sink and sink.open_node(active, entries, types)
-        aliases = active.aliases
-        predicates = active.predicates
+        # 2.-3. Types, type-scoped contexts, entries in term order: the
+        # header of the node's plan.  The lookup stays in this frame with
+        # flat keys so that it nests no deeper than the work it replaces:
+        # the nesting depth at which RecursionError strikes is unchanged.
+        header = None
+        if shape is not None:
+            plan = self._plans.get((self.state, active) + shape)
+            if plan is not None:
+                header = plan.headers.get(_type_key(vals, plan.type_idx))
+        if header is None:
+            header = self._plan(active, keys, vals, shape)
+        self.state = header.state
+        active = header.active
+        if sink is not None:
+            i = header.id_index
+            subject = sink.open_node(active, None if i is None else vals[i],
+                                     header.types)
+        else:
+            subject = None
 
         # 4. Dispatch entries.
-        for term, plural, d, out_key, value in sorted_entries:
-            keyword = aliases.get(term, term)
+        for i, term, plural, d, out_key, keyword, pred in header.entries:
+            value = vals[i]
             if keyword == "@id":
                 result.append((out_key, self.transform_id(value)))
                 continue
@@ -228,12 +276,20 @@ class _TransformerBase:
 
             property_context = active
             if d is not None and d.local_context is not None:
-                # property-scoped: override protected (spec expansion §13.9)
-                property_context = self._process_context_value(
-                    active, d.local_context, propagate=True,
-                    base_url=d.base_url, override_protected=True)
+                property_context = header.scoped.get(i)
+                if property_context is None:
+                    # property-scoped: override protected (spec
+                    # expansion §13.9); a result depends only on the
+                    # header, so it is kept there once it exists
+                    property_context = self._process_context_value(
+                        active, d.local_context, propagate=True,
+                        base_url=d.base_url, override_protected=True)
+                    header.scoped[i] = property_context
+                else:
+                    self.state = self.state.after(property_context)
 
-            values = _force_as_array(value, plural)
+            values = value if plural and isinstance(value, list) \
+                else [value]
             out_values = []
             if sink is None:
                 for v in values:
@@ -241,7 +297,7 @@ class _TransformerBase:
                     if out_v is _MISSING:
                         out_v = self.transform_object(property_context, v)
                     out_values.append(out_v)
-            elif (pred := predicates.get(term)) is None:
+            elif pred is None:
                 # not one triple per value (keyword aliases, dropped or
                 # reversed terms, lists, maps): the lenient walk reads it
                 for v in values:
@@ -259,8 +315,82 @@ class _TransformerBase:
                                out_values if plural else out_values[0]))
 
         if strict:
-            result.sort(key=lambda e: self._out_key_sort_key(e[0]))
+            # out keys are all term ids (encode) or all terms (decode),
+            # so a plain key gives CBOR-LD's order
+            result.sort(key=_first)
         return result, subject
+
+    def _plan(self, active: ActiveContext, keys: tuple, vals: tuple,
+              shape) -> _Header:
+        """Build a node's header and publish it in the node's plan.
+
+        The plan key is (allocation state, active context, *``shape``):
+        the keys, and on encode which values are lists.  The header
+        inside the plan is keyed on the ``@type`` values.  Both are built
+        completely before they are published, so a concurrent walk sees a
+        miss or a whole entry, and a header whose building raised is
+        never published."""
+        # keyed on the state before the header's type-scoped contexts
+        pkey = None if shape is None else (self.state, active) + shape
+        type_idx, header = self._build_header(active, keys, vals)
+        if pkey is not None:
+            plans = self._plans
+            tkey = _type_key(vals, type_idx)
+            plan = plans.get(pkey)
+            if plan is None:
+                if len(plans) >= _MAX_PLANS:
+                    plans.clear()
+                plans[pkey] = _Plan(
+                    type_idx, {} if tkey is None else {tkey: header})
+            elif tkey is not None and len(plan.headers) < _MAX_HEADERS:
+                plan.headers[tkey] = header
+        return header
+
+    def _build_header(self, active: ActiveContext, keys: tuple, vals: tuple):
+        """Returns (the ``@type`` entries' ``(index, plural)``, header)."""
+        # 2. Find + sort types, apply type-scoped contexts.
+        types = []
+        type_idx = []
+        aliases = active.aliases
+        for i, key in enumerate(keys):
+            value = vals[i]
+            kt = self.key_term(key, value)
+            if kt is None:
+                continue
+            term, plural = kt
+            if aliases.get(term, term) == "@type":
+                type_idx.append((i, plural))
+                for ty in _force_as_array(value, plural):
+                    ty = self.value_term(active, ty)
+                    if ty is not None:
+                        types.append(ty)
+        types.sort()
+        for ty in types:
+            d = active.get(ty)
+            if d is not None and d.local_context is not None:
+                active = self._process_context_value(
+                    active, d.local_context, propagate=False,
+                    base_url=d.base_url)
+
+        # 3. Sort entries by term name.
+        sorted_entries = []
+        for i, key in enumerate(keys):
+            value = vals[i]
+            term, plural = self.required_key_term(key, value)
+            if term == "@context":
+                continue
+            d = active.get(term)
+            out_key = self.term_key(term, self._is_input_array(value))
+            sorted_entries.append((i, term, plural, d, out_key))
+        sorted_entries.sort(key=_second)
+        aliases = active.aliases
+        predicates = active.predicates
+        id_index = next((i for i, key in enumerate(keys)
+                         if aliases.get(key, key) == "@id"), None)
+        return tuple(type_idx), _Header(
+            tuple(types), active, self.state, id_index,
+            tuple((*e, aliases.get(e[1], e[1]), predicates.get(e[1]))
+                  for e in sorted_entries))
 
     # -- the RDF view, emitted by the walk that holds the context ------------
 
@@ -280,12 +410,10 @@ class _TransformerBase:
                         graph, g = sink.graph, sink.bnode()
                         sink.emit(subject, pred, g, True)
                         sink.graph = g
-                        entries, _ = self.transform_node(prop_active,
-                                                         list(v.items()))
+                        entries, _ = self.transform_node(prop_active, v)
                         sink.graph = graph
                     else:
-                        entries, child = self.transform_node(prop_active,
-                                                             list(v.items()))
+                        entries, child = self.transform_node(prop_active, v)
                         sink.emit(subject, pred, child, True)
                     return self._wrap_object(entries)
                 sink.value_object(prop_active, subject, pred, v, vkey)
@@ -328,7 +456,7 @@ class _TransformerBase:
     # -- shared vocab term machinery (reference: src/transform.rs:541-588) ---
 
     def encode_vocab_term_str(self, active: ActiveContext, value: str):
-        tid = self.allocator.encode_term(value, False)
+        tid = self.state.encode_term(value, False)
         if tid is not None:
             return tid
         expanded = value
@@ -349,7 +477,7 @@ class _TransformerBase:
         if isinstance(value, int):
             if value < 0:
                 raise DecodeError("InvalidValue", str(value))
-            decoded = self.allocator.decode_term(value)
+            decoded = self.state.decode_term(value)
             if decoded is None:
                 raise DecodeError("UndefinedCompressedTerm", str(value))
             return decoded[0]
@@ -358,37 +486,27 @@ class _TransformerBase:
         return codecs.decode_iri(value)
 
 
-_MISSING = object()
-
-# (sequence of first-applied context fingerprints) -> allocator snapshot.
-# Corpora reuse a handful of context chains, so after warmup every
-# document restores its allocation table with two dict copies instead of
-# replaying hundreds of idempotent allocations.
-_ALLOC_SNAPSHOTS: dict[tuple, tuple[dict, dict, int]] = {}
-
-
 class CborLdEncoder(_TransformerBase):
     """JSON-LD -> CBOR-LD (reference: src/encode/mod.rs:93-259)."""
 
     error_cls = EncodeError
+    _plans: dict = {}
 
-    # input = parsed JSON (dict/list/scalars); input objects iterated as entries
+    # input = parsed JSON (dict/list/scalars)
     @staticmethod
     def _as_input_object(value):
-        if isinstance(value, dict):
-            return list(value.items())
-        return None
+        return value if isinstance(value, dict) else None
 
     @staticmethod
-    def _wrap_object(entries: list):
-        return CborMap(entries)
+    def _open(obj: dict):
+        """(keys, values, @context value, plan shape) of an object."""
+        keys = tuple(obj)
+        vals = tuple(obj.values())
+        # str keys only reach a published plan (term_key rejects others)
+        return (keys, vals, obj.get("@context", _MISSING),
+                keys + tuple(map(_is_list, vals)))
 
-    @staticmethod
-    def _get_context_entry(entries: list):
-        # entries come from a dict: "@context" occurs at most once
-        return next((v for k, v in entries if k == "@context"), _MISSING)
-
-    _out_key_sort_key = staticmethod(cbor_key_sort_key)
+    _wrap_object = CborMap
 
     def context_iri_ref(self, entry) -> str:
         if not isinstance(entry, str):
@@ -400,7 +518,7 @@ class CborLdEncoder(_TransformerBase):
         return cid if cid is not None else url
 
     def term_key(self, term: str, plural: bool) -> int:
-        tid = self.allocator.encode_term(term, plural)
+        tid = self.state.encode_term(term, plural)
         if tid is None:
             raise missing_id_for(term)
         return tid
@@ -452,44 +570,52 @@ class CborLdEncoder(_TransformerBase):
         return value
 
 
+_INT_ONLY = {int}
+
+
 class CborLdDecoder(_TransformerBase):
     """CBOR-LD -> JSON-LD (reference: src/decode/mod.rs:89-272)."""
 
     error_cls = DecodeError
+    _plans: dict = {}
 
     @staticmethod
     def _as_input_object(value):
-        if isinstance(value, CborMap):
-            return list(value.entries)
-        return None
+        return value if isinstance(value, CborMap) else None
+
+    @staticmethod
+    def _open(obj: CborMap):
+        entries = obj.entries
+        if not entries:
+            return (), (), _MISSING, ()
+        keys, vals = zip(*entries)
+        found = _MISSING
+        if 0 in keys or 1 in keys:
+            # @context is id 0 (singular) or 1 (plural) (reference:
+            # src/transform.rs:133-152).
+            for k, v in entries:
+                if isinstance(k, int) and not isinstance(k, bool) \
+                        and k in (0, 1):
+                    if found is not _MISSING:
+                        raise duplicate_key(k)
+                    found = v
+        # exact ints only: True == 1.0 == 1 would share 1's plan
+        return (keys, vals, found,
+                keys if set(map(type, keys)) == _INT_ONLY else None)
 
     @staticmethod
     def _wrap_object(entries: list):
         # dict() would silently collapse duplicate decoded keys (e.g. a
         # crafted map carrying both singular id and plural id+1 of one
         # term) — reject instead of losing data
-        out = {}
-        for k, v in entries:
-            if k in out:
-                raise duplicate_key(k)
-            out[k] = v
-        return out
-
-    @staticmethod
-    def _get_context_entry(entries: list):
-        # @context is id 0 (singular) or 1 (plural) (reference:
-        # src/transform.rs:133-152).
-        found = _MISSING
-        for k, v in entries:
-            if isinstance(k, int) and not isinstance(k, bool) and k in (0, 1):
-                if found is not _MISSING:
+        out = dict(entries)
+        if len(out) != len(entries):
+            seen = set()
+            for k, _ in entries:
+                if k in seen:
                     raise duplicate_key(k)
-                found = v
-        return found
-
-    @staticmethod
-    def _out_key_sort_key(key):
-        return key  # JSON keys: plain string sort
+                seen.add(k)
+        return out
 
     def context_iri_ref(self, entry) -> str:
         if isinstance(entry, bool):
@@ -514,7 +640,7 @@ class CborLdDecoder(_TransformerBase):
             raise DecodeError("InvalidVocabTermKind", repr(key))
         if key < 0:
             raise DecodeError("UndefinedCompressedTerm", str(key))
-        return self.allocator.decode_term(key)
+        return self.state.decode_term(key)
 
     def required_key_term(self, key, value) -> tuple[str, bool]:
         kt = self.key_term(key, value)
@@ -535,6 +661,12 @@ class CborLdDecoder(_TransformerBase):
 
     def transform_typed_value(self, active: ActiveContext, value, type_):
         if isinstance(value, CborMap) or type_ is None:
+            return _MISSING
+        if isinstance(value, list) and all(isinstance(v, CborMap)
+                                           for v in value):
+            # a list in a list of values: the encoder only puts nodes
+            # and value objects there, and no compressed value (an IRI
+            # is [codec id, ...]) is a list of maps
             return _MISSING
         if self.tables.has_type_table(type_):
             return self.tables.decode_typed(type_, value)
@@ -558,19 +690,16 @@ class _Expander(CborLdEncoder):
     W3C JSON-LD 1.1 Expansion + Deserialize JSON-LD to RDF).  It takes
     inline contexts, drops undefined terms, and reads the shapes the
     encoding sees differently (``@graph``/``@included`` aliases,
-    ``@reverse``, ``@list``, data-keyed maps); it allocates no term ids."""
+    ``@reverse``, ``@list``, data-keyed maps)."""
 
     strict = False
+    _plans: dict = {}
 
     def __init__(self, loader: StaticLoader, sink: TripleSink):
         self.loader = loader
         self.sink = sink
-
-    def _process_context_value(self, active, context_value, propagate,
-                               base_url=None, override_protected=False):
-        return process_context(active, context_value, self.loader,
-                               base_url=base_url, propagate=propagate,
-                               override_protected=override_protected)
+        # its ids are unused, but the state keys this walk's plans
+        self.state = idalloc.root()
 
     def process_global_context(self, active, context_value, propagate):
         return None, self._process_context_value(active, context_value,
@@ -598,7 +727,7 @@ class _Expander(CborLdEncoder):
             # independent nodes in the *same* graph
             for v in values:
                 if isinstance(v, dict):
-                    self.transform_node(active, list(v.items()))
+                    self.transform_node(active, v)
         elif d is None or pred is None or pred.startswith("_:") \
                 or not codecs.is_absolute_iri(pred):
             pass  # undefined terms and blank-node predicates are dropped
@@ -606,7 +735,7 @@ class _Expander(CborLdEncoder):
             # @reverse property: object nodes point back at the subject
             for v in values:
                 if isinstance(v, dict):
-                    child = self.transform_node(prop_active, list(v.items()))[1]
+                    child = self.transform_node(prop_active, v)[1]
                 else:
                     child = isinstance(v, str) and sink.node_id(prop_active, v)
                 if child:
@@ -662,19 +791,21 @@ class _Expander(CborLdEncoder):
                         have = node[k]
                         node[k] = [key] + (have if isinstance(have, list)
                                            else [have])
-                child = self.transform_node(prop_active, list(node.items()))[1]
+                child = self.transform_node(prop_active, node)[1]
                 self.sink.emit(subject, pred, child, True)
 
 
 # --- public per-document API ------------------------------------------------
 
 def _reject_duplicates(pairs):
-    seen = set()
-    for k, _ in pairs:
-        if k in seen:
-            raise duplicate_key(k)
-        seen.add(k)
-    return dict(pairs)
+    out = dict(pairs)
+    if len(out) != len(pairs):
+        seen = set()
+        for k, _ in pairs:
+            if k in seen:
+                raise duplicate_key(k)
+            seen.add(k)
+    return out
 
 
 def parse_json_document(text: str | bytes) -> dict:
@@ -776,7 +907,7 @@ def expand_into(sink: TripleSink, doc: dict,
                 loader: StaticLoader | None = None) -> None:
     """Emit a parsed document's triples with the lenient walk."""
     _Expander(loader or StaticLoader.default(), sink).transform_node(
-        EMPTY_CONTEXT, list(doc.items()))
+        EMPTY_CONTEXT, doc)
 
 
 def _envelope(registry_id: int, inner) -> bytes:

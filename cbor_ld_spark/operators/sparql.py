@@ -35,6 +35,7 @@ Bare tokens end at whitespace or any of ``()/|+*?^!``.
 
 from __future__ import annotations
 
+import re as _re
 import shlex
 
 _MODS = {"+": "plus", "*": "star", "?": "opt"}
@@ -397,6 +398,9 @@ def _expand_prefixed(tok: str, prefixes: dict[str, str]) -> str:
     return "".join(out)
 
 
+_IRIREF = _re.compile(r"<[^<>\"{}|^`\\()\x00-\x20]*>")
+
+
 def _sparql_tokens(text: str) -> list[str]:
     """Tokens: '{' '}' braces, the statement '.' (whitespace- or
     brace-delimited), and WORDS — maximal non-space runs where
@@ -436,6 +440,15 @@ def _sparql_tokens(text: str) -> list[str]:
                 # mis-tokenized)
                 depth, k = 1, j + 1
                 while k < n and depth:
+                    if text[k] == "<":
+                        # an IRI is opaque too, before quotes: an
+                        # apostrophe is legal in one (<urn:o'brien>).
+                        # Parens end the match, so '<' as less-than
+                        # never changes the depth count
+                        m = _IRIREF.match(text, k)
+                        if m:
+                            k = m.end()
+                            continue
                     if text[k] in "\"'":
                         q = text.find(text[k], k + 1)
                         if q < 0:
@@ -588,9 +601,6 @@ def _parse_optional_group(toks: list[str], pos: int) -> tuple[dict, int]:
     if not g["patterns"] and not g["paths"]:
         raise ValueError("empty OPTIONAL group")
     return g, pos + 1
-
-
-import re as _re
 
 
 # SPARQL 1.1 §17 built-ins with a direct Spark SQL equivalent over
@@ -799,22 +809,36 @@ def parse_sparql(text: str) -> dict:
         prefixes[name[:-1]] = iri[1:-1]
         toks = toks[3:]
     if prefixes:
-        # FILTER/BIND/HAVING bodies are SQL expressions, not term
+        # FILTER/BIND/HAVING bodies, ORDER BY '(expr)' sort keys and
+        # SELECT '(AGG AS ?v)' items are SQL expressions, not term
         # positions: the grammar documents prefixed names there as NOT
         # expanded, and an expanded '<iri>' inside an expression body
         # would only surface later as an opaque AnalysisException — so
         # leave those tokens (and a '(...)' token right after the bare
         # keyword) untouched
         _expr_kw = ("filter", "bind", "having")
+        _sort_kw = ("desc(", "asc(")
         expanded, skip_next = [], False
+        in_select = in_order = False
         for t in toks:
             low = t.lower()
+            if low == "select":
+                in_select = True
+            elif low in ("where", "{"):
+                in_select = False
+            if in_order and low != "by" and not t.startswith(("?", "(")) \
+                    and not low.startswith(_sort_kw):
+                in_order = False
+            if low == "order":
+                in_order = True
             if skip_next and t.startswith("("):
                 expanded.append(t)
                 skip_next = False
                 continue
             skip_next = low in _expr_kw
-            if any(low.startswith(k + "(") for k in _expr_kw):
+            if any(low.startswith(k + "(") for k in _expr_kw) \
+                    or ((in_select or in_order) and t.startswith("(")) \
+                    or (in_order and low.startswith(_sort_kw)):
                 expanded.append(t)
             else:
                 expanded.append(_expand_prefixed(t, prefixes))

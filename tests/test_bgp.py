@@ -1178,6 +1178,42 @@ def test_sparql_tokens_quoted_paren():
         _sparql_tokens('FILTER(?name = x(')
 
 
+def test_sparql_tokens_iri_with_apostrophe():
+    """An IRI inside parens is opaque before quote handling: the
+    apostrophe in <urn:o'brien> is an IRI character, not a string
+    delimiter; '<' as less-than keeps the paren count."""
+    from cbor_ld_spark.operators.sparql import _sparql_tokens
+
+    assert _sparql_tokens("FILTER(?s = <urn:o'brien>) .") == [
+        "FILTER(?s = <urn:o'brien>)", "."]
+    assert _sparql_tokens("FILTER((?a<3)||?b>1)") == ["FILTER((?a<3)||?b>1)"]
+    assert _sparql_tokens("FILTER((?a < 3) || ?b > 1)") == [
+        "FILTER((?a < 3) || ?b > 1)"]
+    with pytest.raises(ValueError, match="unterminated"):
+        _sparql_tokens("FILTER(?s = 'o)")
+
+
+def test_prefixes_not_expanded_in_order_by_and_agg_bodies():
+    """ORDER BY '(expr)' / DESC(expr) sort keys and '(AGG AS ?v)' items
+    are SQL expressions like FILTER bodies: declared prefixed names in
+    them stay as written, while term positions still expand."""
+    from cbor_ld_spark.operators.sparql import parse_sparql
+
+    s = parse_sparql(
+        "PREFIX ex: <https://ex.org/> "
+        "SELECT ?s (COUNT(ex:x) AS ?n) WHERE { ?s ex:p ?o } "
+        "GROUP BY ?s ORDER BY DESC(ex:y) (ex:z) ?s LIMIT 3")
+    assert s["aggs"] == [("COUNT(ex:x)", "n")]
+    assert s["order_by"] == [("ex:y", "desc", "expr"),
+                             ("ex:z", "asc", "expr"), ("s", "asc", "var")]
+    assert s["patterns"] == [("?s", "https://ex.org/p", "?o")]
+    assert s["limit"] == 3
+    # a parenthesised property path in the WHERE group still expands
+    p = parse_sparql("PREFIX ex: <https://ex.org/> "
+                     "SELECT ?o WHERE { <urn:a> (ex:p/ex:q)+ ?o }")
+    assert "ex:" not in repr(p["path"])
+
+
 def test_path_alternation_of_groups(spark):
     """(p/q)|r — alternation whose operands are parenthesised groups
     (VERDICT r7 #2): union of the alternatives' sub-relations, each

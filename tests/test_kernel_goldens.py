@@ -97,3 +97,25 @@ def test_compression_ratio_sanity():
     src = _read("truage.jsonld")
     out = encode_document(src)
     assert len(out) <= len(src.encode()) // 2
+
+
+@pytest.mark.parametrize("issuer", [
+    [[{"id": "did:example:123"}]],
+    [[{"id": "did:example:1"}, {"id": "https://a.example/x"}],
+     [{"id": "did:example:2"}]],
+    [[]],
+])
+def test_nested_list_under_typed_term_round_trips(issuer):
+    """A list in a list under an ``@id``-typed term encodes as a list of
+    maps; the decoder must not read it as a compressed IRI."""
+    from cbor_ld_spark.kernel.cbor import loads
+
+    doc = {"@context": "https://www.w3.org/2018/credentials/v1",
+           "type": "VerifiableCredential", "issuer": issuer,
+           "issuanceDate": "2020-01-01T00:00:00Z",
+           "credentialSubject": {"id": "did:example:456"}}
+    data = encode_document(doc)
+    assert isinstance(loads(data).value.entries[-1][1][0], list)
+    back = decode_document(data)
+    assert back["issuer"] == issuer
+    assert content_sha256(back) == content_sha256(doc)
