@@ -316,13 +316,10 @@ if __name__ == "__main__":
         print(json.dumps(bench_scaling(args.low, args.high, args.rows)))
     else:
         result = bench_once()
-        # The full per-query timing dict (74+ entries) outgrew the
-        # driver's tail-capture buffer in r5 (BENCH_r05.json parsed:
-        # null).  Emit it on its own PRECEDING line (and persist it to
-        # BENCH_QUERIES.json next to this script), then print a short
-        # FINAL headline line (totals + probes + the slowest queries,
-        # ~1 KB) that the driver can always parse.
-        print(json.dumps(result))
+        # The final line carries every per-query key (~3 KB): a headline
+        # cut to the slowest queries drops any query that got faster.
+        # The dict is also persisted to BENCH_QUERIES.json next to this
+        # script.
         try:
             qpath = os.path.join(
                 os.path.dirname(os.path.abspath(__file__)),
@@ -331,10 +328,7 @@ if __name__ == "__main__":
                 json.dump(result["queries"], f, indent=1, sort_keys=True)
         except OSError:
             pass
-        slowest = dict(sorted(result["queries"].items(),
-                              key=lambda kv: -kv[1])[:15])
-        headline = {k: v for k, v in result.items() if k != "queries"}
-        headline["queries"] = slowest
+        headline = dict(result)
         headline["n_queries"] = len(result["queries"])
         headline["queries_detail"] = "BENCH_QUERIES.json"
         print(json.dumps(headline))

@@ -28,6 +28,10 @@ Design for 100 TB:
 
 from __future__ import annotations
 
+import os
+import sys
+import zipimport
+
 from pyspark.sql import Column, functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -47,13 +51,13 @@ from cbor_ld_spark.kernel import (
 from cbor_ld_spark.kernel.transform import encode_with_triples
 
 _S = StringType()
+_STRS = ArrayType(_S)
 
-# kernel output keyed by content hash (no provenance columns): the
-# dedup-first dataflow processes each distinct content once and joins
-# provenance back JVM-side
-KERNEL_RESULT_SCHEMA = StructType([
-    StructField("content_sha", _S, False),
-    StructField("doc_sha", _S, True),
+# the kernel's per-document result in ``_process_one``'s tuple order;
+# both output schemas and the Arrow types the kernel fn yields derive
+# from this one list
+_RESULT = [
+    StructField("doc_sha", _S, True),         # sha256(canonical(doc))
     StructField("ok", BooleanType(), False),
     StructField("error", _S, True),
     StructField("error_kind", _S, True),
@@ -61,40 +65,30 @@ KERNEL_RESULT_SCHEMA = StructType([
     StructField("cbor_len", IntegerType(), True),
     StructField("roundtrip_ok", BooleanType(), True),
     StructField("n_triples", IntegerType(), False),
-    StructField("t_subj", ArrayType(_S), True),
-    StructField("t_pred", ArrayType(_S), True),
-    StructField("t_obj", ArrayType(_S), True),
+    StructField("t_subj", _STRS, True),
+    StructField("t_pred", _STRS, True),
+    StructField("t_obj", _STRS, True),
     StructField("t_is_iri", ArrayType(BooleanType()), True),
-    StructField("t_dt", ArrayType(_S), True),
-    StructField("t_lang", ArrayType(_S), True),
-    StructField("t_graph", ArrayType(_S), True),
-])
+    StructField("t_dt", _STRS, True),
+    StructField("t_lang", _STRS, True),
+    StructField("t_graph", _STRS, True),
+]
+_RESULT_FIELDS = [f.name for f in _RESULT]
+
+# kernel output keyed by content hash (no provenance columns): the
+# dedup-first dataflow processes each distinct content once and joins
+# provenance back JVM-side
+KERNEL_RESULT_SCHEMA = StructType(
+    [StructField("content_sha", _S, False), *_RESULT])
 
 DOC_RESULT_SCHEMA = StructType([
     StructField("repo", _S, False),
     StructField("path", _S, False),
     StructField("commit", _S, True),
-    StructField("doc_sha", _S, True),        # sha256(canonical(doc))
+    _RESULT[0],
     StructField("content_sha", _S, True),     # sha256(raw content)
-    StructField("ok", BooleanType(), False),
-    StructField("error", _S, True),
-    StructField("error_kind", _S, True),
-    StructField("json_len", IntegerType(), False),
-    StructField("cbor_len", IntegerType(), True),
-    StructField("roundtrip_ok", BooleanType(), True),
-    StructField("n_triples", IntegerType(), False),
-    StructField("t_subj", ArrayType(_S), True),
-    StructField("t_pred", ArrayType(_S), True),
-    StructField("t_obj", ArrayType(_S), True),
-    StructField("t_is_iri", ArrayType(BooleanType()), True),
-    StructField("t_dt", ArrayType(_S), True),
-    StructField("t_lang", ArrayType(_S), True),
-    StructField("t_graph", ArrayType(_S), True),
+    *_RESULT[1:],
 ])
-
-_COLS = [f.name for f in DOC_RESULT_SCHEMA.fields]
-_TRIPLE_COLS = ["t_subj", "t_pred", "t_obj", "t_is_iri", "t_dt", "t_lang",
-                "t_graph"]
 
 
 def jsonld_sniff(lang: Column | None = None) -> Column:
@@ -159,24 +153,44 @@ def _process_one(content: str, registry_id: int, emit_triples: bool):
                 cbor_len, roundtrip_ok, 0, *_NO_TRIPLES)
 
 
-_RESULT_FIELDS = ["doc_sha", "ok", "error", "error_kind", "json_len",
-                  "cbor_len", "roundtrip_ok", "n_triples", *_TRIPLE_COLS]
+def evict_pyspark_zip_finders() -> None:
+    """Drop the cached zip finders of the Spark installation's archives.
 
-
-def _pa_result_types():
-    """Arrow types for the kernel result fields (lazy: workers only)."""
-    import pyarrow as pa
-
-    s = pa.string()
-    return {
-        "repo": s, "path": s, "commit": s, "content_sha": s, "doc_sha": s,
-        "ok": pa.bool_(), "error": s, "error_kind": s,
-        "json_len": pa.int32(), "cbor_len": pa.int32(),
-        "roundtrip_ok": pa.bool_(), "n_triples": pa.int32(),
-        "t_subj": pa.list_(s), "t_pred": pa.list_(s), "t_obj": pa.list_(s),
-        "t_is_iri": pa.list_(pa.bool_()), "t_dt": pa.list_(s),
-        "t_lang": pa.list_(s), "t_graph": pa.list_(s),
-    }
+    Call it at the top of every Python task body handed to Spark.  The
+    JVM starts each Python worker with three of its own archives on
+    ``PYTHONPATH``: ``<spark home>/python/lib/pyspark.zip``, the py4j
+    zip beside it and the jar holding Spark core, from
+    ``<spark home>/jars``.  Before each task PySpark's
+    ``worker_util.setup_spark_files`` calls
+    ``importlib.invalidate_caches()``, which makes every ``zipimporter``
+    in ``sys.path_importer_cache`` re-read its archive's whole central
+    directory: ~1.3k entries of ``pyspark.zip`` once per cached package
+    path, and ~5.4k of the core jar.  These archives do not change while
+    the worker lives, so their finders are removed from the cache
+    instead, as CPython's own ``PathFinder.invalidate_caches`` removes
+    entries: the next import that needs one rebuilds it through
+    ``sys.path_hooks`` from ``zipimport._zip_directory_cache``, without
+    reading the file.  Finders of other archives (``addPyFile`` zips)
+    keep their invalidation.  Where ``pyspark`` is not imported from a
+    zip (the driver) this does nothing.
+    """
+    pyspark_zip = getattr(getattr(sys.modules.get("pyspark"), "__loader__",
+                                  None), "archive", None)
+    if pyspark_zip is None:
+        return
+    finders = [(path, finder.archive)
+               for path, finder in list(sys.path_importer_cache.items())
+               if isinstance(finder, zipimport.zipimporter)]
+    if not finders:
+        return
+    py4j_zip = getattr(getattr(sys.modules.get("py4j"), "__loader__", None),
+                       "archive", None)
+    lib = os.path.dirname(os.path.realpath(pyspark_zip))
+    jars = os.path.join(os.path.dirname(os.path.dirname(lib)), "jars")
+    for path, archive in finders:
+        if (archive in (pyspark_zip, py4j_zip)
+                or os.path.dirname(os.path.realpath(archive)) == jars):
+            sys.path_importer_cache.pop(path, None)
 
 
 def kg_process_batches(registry_id: int = 1, emit_triples: bool = True,
@@ -194,21 +208,23 @@ def kg_process_batches(registry_id: int = 1, emit_triples: bool = True,
     (repo, path, commit) through -> DOC_RESULT_SCHEMA (per-row path).
     """
     out_schema = DOC_RESULT_SCHEMA if with_provenance else KERNEL_RESULT_SCHEMA
-    cols = [f.name for f in out_schema.fields]
     result_idx = {name: i for i, name in enumerate(_RESULT_FIELDS)}
 
     def fn(batches):
         import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
 
-        types = _pa_result_types()
-        schema = pa.schema([(n, types[n]) for n in cols])
+        evict_pyspark_zip_finders()
+        schema = pa.schema([(f.name, to_arrow_type(f.dataType))
+                            for f in out_schema.fields])
         for batch in batches:
             results = [_process_one(c, registry_id, emit_triples)
                        for c in batch.column("content").to_pylist()]
             arrays = [
-                pa.array([r[result_idx[c]] for r in results], type=types[c])
-                if c in result_idx else batch.column(c)
-                for c in cols
+                pa.array([r[result_idx[f.name]] for r in results],
+                         type=f.type)
+                if f.name in result_idx else batch.column(f.name)
+                for f in schema
             ]
             yield pa.RecordBatch.from_arrays(arrays, schema=schema)
 

@@ -36,6 +36,8 @@ import hashlib
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from ..functions.udfs import evict_pyspark_zip_finders
+
 CANON_SCHEMA = StructType([
     StructField("doc_sha", StringType(), False),
     StructField("node", StringType(), False),
@@ -155,6 +157,7 @@ def canonicalize_bnodes(triples: DataFrame,
     def fn(batches):
         import pyarrow as pa
 
+        evict_pyspark_zip_finders()
         schema = pa.schema([("doc_sha", pa.string()),
                             ("node", pa.string()),
                             ("canon", pa.string())])

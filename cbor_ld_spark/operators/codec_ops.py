@@ -24,6 +24,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions.udfs import evict_pyspark_zip_finders
+
 ENCODE_RESULT = StructType([
     StructField("cbor", BinaryType(), True),
     StructField("error_kind", StringType(), True),
@@ -42,6 +44,7 @@ def _encode_udf(registry_id: int):
     def enc(contents: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         from cbor_ld_spark.kernel import CborLdError, encode_document
 
+        evict_pyspark_zip_finders()
         for s in contents:
             cbor, err = [], []
             for c in s:
@@ -70,6 +73,7 @@ def _decode_udf():
             decode_document,
         )
 
+        evict_pyspark_zip_finders()
         for s in blobs:
             out, err = [], []
             for b in s:
@@ -118,6 +122,7 @@ def _canonical_source_udf():
     def canon(contents: Iterator[pd.Series]) -> Iterator[pd.Series]:
         from cbor_ld_spark.kernel import canonical_json, parse_json_document
 
+        evict_pyspark_zip_finders()
         for s in contents:
             out = []
             for c in s:

@@ -37,6 +37,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions.udfs import evict_pyspark_zip_finders
+
 MEDIA_SCHEMA = StructType([
     StructField("media_id", LongType(), False),
     StructField("kind", StringType(), False),      # image | audio | video
@@ -126,6 +128,7 @@ def synthesize_media(spark: SparkSession, n_rows: int) -> DataFrame:
     4-10 fps).  Every payload decodes for real.
     """
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        evict_pyspark_zip_finders()
         for pdf in batches:
             rows = [synthesize_media_row(int(i)) for i in pdf["id"]]
             yield pd.DataFrame(
@@ -200,6 +203,7 @@ def image_features(media: DataFrame, strict: bool = False,
                                 F.pmod(F.xxhash64("media_id"), F.lit(partitions)))
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        evict_pyspark_zip_finders()
         for pdf in batches:
             rows = [image_feature_row(mid, payload, strict)
                     for mid, payload in zip(pdf["media_id"], pdf["payload"])]
@@ -227,6 +231,7 @@ def resize_images(media: DataFrame, width: int, height: int,
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from .media_codecs import encode_png, resize_nearest
 
+        evict_pyspark_zip_finders()
         for pdf in batches:
             rows = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
@@ -287,6 +292,7 @@ def audio_feature_row(mid: int, payload: bytes | None) -> tuple:
 def audio_features(media: DataFrame) -> DataFrame:
     """Real WAV decode: duration, RMS, peak per audio row (quarantined)."""
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        evict_pyspark_zip_finders()
         for pdf in batches:
             rows = [audio_feature_row(mid, payload)
                     for mid, payload in zip(pdf["media_id"], pdf["payload"])]
@@ -361,6 +367,7 @@ def sample_frames(media: DataFrame, every_ms: int = 1000,
     quarantine per-row unless ``strict``.
     """
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        evict_pyspark_zip_finders()
         for pdf in batches:
             rows = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):

@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..functions.udfs import evict_pyspark_zip_finders
+
 
 def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cbor_ld_spark.plans.partitioning import parquet_rows, spread_input
@@ -167,6 +169,7 @@ def _with_lsh_buckets(df: DataFrame, dim: int, n_planes: int,
     weights = 1 << np.arange(n_planes, dtype=np.int64)
 
     def compute(batches):
+        evict_pyspark_zip_finders()
         for b in batches:
             n = b.num_rows
             if n == 0:
@@ -233,6 +236,7 @@ def ivf_topk(spark: SparkSession, sf_dir: str, n_queries: int = 5,
         dim = cmat.shape[1]
 
         def compute(batches):
+            evict_pyspark_zip_finders()
             for b in batches:
                 n = b.num_rows
                 if n == 0:
@@ -402,6 +406,7 @@ def pq_topk(spark: SparkSession, sf_dir: str, n_queries: int = 5,
         dim = sample.shape[1]
 
         def compute(batches):
+            evict_pyspark_zip_finders()
             for b in batches:
                 n = b.num_rows
                 if n == 0:

@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions.udfs import evict_pyspark_zip_finders
+
 # Tiny English stopword list for the language-ID heuristic / quality score.
 STOPWORDS = ("the", "and", "of", "to", "a", "in", "is", "it", "that", "for")
 
@@ -367,6 +369,7 @@ def winnowing_fingerprints(docs: DataFrame, k: int = 5,
         raise ValueError("winnowing needs k >= 1 and window >= 1")
 
     def compute(batches):
+        evict_pyspark_zip_finders()
         for b in batches:
             ids, counts, xors = [], [], []
             for mid, text in zip(b.column(0), b.column(1)):
@@ -570,6 +573,7 @@ def compression_ratio_signal(docs: DataFrame, level: int = 6,
     import pyarrow as pa
 
     def compute(batches):
+        evict_pyspark_zip_finders()
         for b in batches:
             ids, ulen, dlen, ratio = [], [], [], []
             for mid, text in zip(b.column(0), b.column(1)):

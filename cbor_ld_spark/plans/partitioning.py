@@ -64,19 +64,22 @@ def spread_input(df: DataFrame, by: str | None = None,
 
     When ``rows`` is known (parquet footer, or a caller-side limit), the
     target is capped at ``ceil(rows / rows_per_task)``: every Python-
-    boundary task carries a fixed CPU cost before its first row.  On a
-    4-core box with Python 3.11.7 a ``mapInArrow`` task spends 0.12-0.23 s
-    of CPU in PySpark's ``worker_util.setup_spark_files``, whose
-    ``importlib.invalidate_caches()`` re-reads the whole central
-    directory of ``pyspark.zip`` once for each of the ~16 zipimporters
-    the worker has cached (~0.09 s for the 14 a bare pyspark import
-    creates); this package's own imports add none of them.  So fanning
-    200 rows across 32 tasks is pure loss (measured +2 s on a
-    3-Python-stage query), and even pure-JVM consumers pay
-    ~0.3-0.4 s per query for 32 near-empty tasks (measured across the
-    cheap dedup/corpus aggregations).  256 rows/task balances the two
-    at bench scale; unbounded inputs spread to full width — the safe
-    direction at scale.
+    boundary task carries a fixed CPU cost before its first row.  PySpark's
+    ``worker_util.setup_spark_files`` calls ``importlib.invalidate_caches()``
+    before each task, which re-reads the central directory of every
+    cached zip finder: on a 4-core box with Python 3.11.7 that was
+    ~0.24 s of Python-worker CPU per task (a no-op ``mapInArrow`` over
+    this exchange, 4 tasks: 0.97 s per pass).  Every task body of this
+    package first calls ``functions.udfs.evict_pyspark_zip_finders``,
+    which drops the finders of Spark's own archives, so a task that
+    follows one on the same worker costs ~0.024 s (0.095 s per pass).
+    The fixed cost still counts: fanning 200 rows across 32 tasks was
+    measured at +2 s on a 3-Python-stage query before the eviction, and
+    pure-JVM consumers pay ~0.3-0.4 s per query for 32 near-empty tasks
+    (measured across the cheap dedup/corpus aggregations).  256
+    rows/task balanced the two at bench scale against the old per-task
+    cost; unbounded inputs spread to full width — the safe direction at
+    scale.
     """
     target = input_partitions(df.sparkSession)
     if rows is not None:

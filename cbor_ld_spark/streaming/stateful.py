@@ -31,6 +31,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions.udfs import evict_pyspark_zip_finders
+
 STATE_SCHEMA = StructType([
     StructField("docs", LongType(), False),
     StructField("ok_docs", LongType(), False),
@@ -49,6 +51,7 @@ def _make_update_fn(idle_timeout_ms: int | None):
     def update(key: Tuple[str],
                pdfs: Iterator[pd.DataFrame],
                state: GroupState) -> Iterator[pd.DataFrame]:
+        evict_pyspark_zip_finders()
         if state.hasTimedOut:
             # idle repo: emit final totals and drop the state row
             docs, ok_docs, triples = state.get
@@ -137,6 +140,7 @@ SESSION_OUTPUT_SCHEMA = StructType([
 def _session_update_fn(gap_secs: int):
     def update(key, pdfs: Iterator[pd.DataFrame],
                state: GroupState) -> Iterator[pd.DataFrame]:
+        evict_pyspark_zip_finders()
         if state.hasTimedOut:  # not used (NoTimeout) — defensive
             state.remove()
             return

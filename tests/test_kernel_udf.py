@@ -1,10 +1,16 @@
-"""The kernel UDF without Spark: one Arrow batch through
-``kg_process_batches``, and ``ok`` semantics that do not depend on
-whether the triple columns are asked for."""
+"""The kernel UDF: one Arrow batch through ``kg_process_batches``
+without Spark, ``ok`` semantics that do not depend on whether the triple
+columns are asked for, and the eviction of PySpark's zip finders that
+every task body runs."""
 
 import hashlib
 import json
+import os
+import subprocess
+import sys
+import zipfile
 from importlib import resources
+from pathlib import Path
 
 import pyarrow as pa
 import pytest
@@ -105,3 +111,97 @@ def test_ok_covers_expansion_with_and_without_triples(monkeypatch, prop, kind):
         with_triples[:7]
     assert (ok, error_kind) == (False, kind)
     assert cbor_len and roundtrip_ok
+
+
+_EVICTION_PROBE = """
+import importlib, json, sys, zipimport
+import pyspark.worker
+import cbor_ld_spark.functions.udfs as udfs
+import zpkg_probe.sub
+
+def archives():
+    return sorted({f.archive for f in sys.path_importer_cache.values()
+                   if isinstance(f, zipimport.zipimporter)})
+
+before = archives()
+udfs.evict_pyspark_zip_finders()
+after = archives()
+importlib.invalidate_caches()
+fresh = "pyspark.ml.linalg" not in sys.modules
+import pyspark.ml.linalg
+print(json.dumps({
+    "pyspark": sys.modules["pyspark"].__loader__.archive,
+    "py4j": sys.modules["py4j"].__loader__.archive,
+    "before": before, "after": after, "fresh": fresh,
+    "origin": pyspark.ml.linalg.__spec__.origin,
+}))
+"""
+
+
+def test_evict_pyspark_zip_finders_in_worker_layout(tmp_path):
+    """With PySpark and py4j imported from their zips and Spark's core jar
+    on the path, as in a Python worker, the helper drops exactly the
+    finders of those archives: a user zip keeps its finder, and a pyspark
+    module not yet imported still loads from the zip after
+    ``importlib.invalidate_caches()``."""
+    import pyspark
+
+    home = Path(pyspark.__file__).parent
+    spark_archives = [home / "python" / "lib" / "pyspark.zip",
+                      *sorted((home / "python" / "lib").glob("py4j-*.zip")),
+                      *sorted((home / "jars").glob("spark-core_*.jar"))]
+    if len(spark_archives) != 3 or not spark_archives[0].is_file():
+        pytest.skip("pyspark.zip, py4j zip or Spark core jar not installed")
+    user_zip = tmp_path / "user.zip"
+    with zipfile.ZipFile(user_zip, "w") as z:
+        z.writestr("zpkg_probe/__init__.py", "")
+        z.writestr("zpkg_probe/sub.py", "X = 1\n")
+    repo = Path(__file__).resolve().parent.parent
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        map(str, [*spark_archives, repo, user_zip])))
+    out = subprocess.run([sys.executable, "-c", _EVICTION_PROBE],
+                         cwd=tmp_path, env=env, capture_output=True,
+                         text=True, timeout=120, check=True)
+    r = json.loads(out.stdout.splitlines()[-1])
+    assert [r["pyspark"], r["py4j"]] == list(map(str, spark_archives[:2]))
+    assert set(map(str, [*spark_archives, user_zip])) <= set(r["before"])
+    assert r["after"] == [str(user_zip)]
+    assert r["fresh"]
+    assert r["origin"].startswith(r["pyspark"] + os.sep)
+
+
+def test_kernel_task_leaves_no_pyspark_zip_finders(spark):
+    """Every task that ran the kernel fn leaves no zip finder (this
+    session adds no zip of its own, so any left is one of Spark's) for
+    the next task's ``invalidate_caches()`` to re-read."""
+    samples = resources.files("cbor_ld_spark") / "fixtures" / "samples"
+    content = (samples / "truage.jsonld").read_text(encoding="utf-8")
+    kernel = kg_process_batches()
+
+    def probe(batches):
+        import sys
+        import zipimport
+
+        import pyarrow as pa
+
+        for _ in batches:
+            pass
+        one = pa.RecordBatch.from_arrays(
+            [pa.array(["sha"]), pa.array([content])],
+            names=["content_sha", "content"])
+        (out,) = list(kernel(iter([one])))
+        assert out.column("ok").to_pylist() == [True]
+        from_zip = hasattr(sys.modules["pyspark"].__loader__, "archive")
+        left = sum(isinstance(f, zipimport.zipimporter)
+                   for f in sys.path_importer_cache.values())
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([from_zip]), pa.array([left], pa.int64())],
+            names=["from_zip", "finders_left"])
+
+    rows = (spark.range(0, 8, numPartitions=4)
+            .mapInArrow(probe, "from_zip boolean, finders_left long")
+            .collect())
+    assert len(rows) == 4
+    if not any(r.from_zip for r in rows):
+        pytest.skip("Python workers do not import pyspark from a zip")
+    assert [r.finders_left for r in rows] == [0] * 4
