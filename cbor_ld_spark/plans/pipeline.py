@@ -84,8 +84,6 @@ def build_kg(spark: SparkSession, repos: DataFrame, out_dir: str,
     written under ``<out>/analytics/`` with their own lineage row —
     the consumption layer shipped with the graph instead of bolted on
     by every downstream user."""
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
     bucketed = _with_bucket(repos, n_buckets)
 
     # ---- resume: skip buckets already completed for this run ----
@@ -108,11 +106,11 @@ def build_kg(spark: SparkSession, repos: DataFrame, out_dir: str,
     # dynamic partition overwrite: only buckets present in this run's data
     # are replaced; an empty run touches nothing but keeps the dirs readable
     (processed.select(*DOC_COLS, "bucket")
-     .write.mode("overwrite").partitionBy("bucket")
-     .parquet(os.path.join(out_dir, "docs")))
+     .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+     .partitionBy("bucket").parquet(os.path.join(out_dir, "docs")))
     (_with_bucket(triples_table(processed), n_buckets)
-     .write.mode("overwrite").partitionBy("bucket")
-     .parquet(os.path.join(out_dir, "triples")))
+     .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+     .partitionBy("bucket").parquet(os.path.join(out_dir, "triples")))
 
     if n_todo_docs > 0:
         wall_ms = int((time.monotonic() - t0) * 1000)

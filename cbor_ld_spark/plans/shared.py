@@ -3,17 +3,16 @@
 At 100 TB the Python kernel pass (corpus -> parse/encode/verify/expand)
 is the expensive stage, and its output — the triples table — is
 materialized ONCE per corpus snapshot: ``jobs/build_kg.py`` writes it as
-a checkpointed parquet stage and ``plans/bucketed.py`` as bucketed
-tables, and every downstream graph consumer (linking, PageRank, k-hop,
-canonicalization, analytics) reads that materialization.  The same
-economics apply inside a multi-query session (bench suite, correctness
-harness, a notebook): the graph-query family shares one
-corpus->kernel->triples pass per (SparkContext, source dir) instead of
-re-deriving it per query.
+a checkpointed parquet stage, and every downstream graph consumer
+(linking, PageRank, k-hop, canonicalization, analytics) reads that
+materialization.  The same economics apply inside a multi-query session
+(bench suite, correctness harness, a notebook): the graph-query family
+shares one corpus->kernel->triples pass per (SparkContext, source dir)
+instead of re-deriving it per query.
 
-``localCheckpoint(eager=True)`` is the session-scale analogue of the
-bucketed write: one materializing job, lineage cut (no kernel re-run on
-any downstream action), blocks stored MEMORY_AND_DISK so a large tier
+``localCheckpoint(eager=True)`` is the session-scale analogue of that
+write: one materializing job, lineage cut (no kernel re-run on any
+downstream action), blocks stored MEMORY_AND_DISK so a large tier
 spills instead of OOMing, and the ContextCleaner reclaims the blocks
 once the cache entry is dropped and GC'd.  Entries of stopped
 SparkContexts are evicted on the next miss so a long-lived driver
@@ -22,9 +21,26 @@ process never pins dead-session storage.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 
-_TRIPLES_CACHE: dict[tuple[str, str], DataFrame] = {}
+# (application id, tier, source dir) -> materialized frame
+_TIERS: dict[tuple[str, str, str], DataFrame] = {}
+
+
+def _tier(spark: SparkSession, tier: str, sf_dir: str,
+          build: Callable[[], DataFrame]) -> DataFrame:
+    """The memoized ``build()`` of one tier for this (session, corpus
+    dir); a miss first evicts every entry of another SparkContext."""
+    key = (spark.sparkContext.applicationId, tier, str(sf_dir))
+    df = _TIERS.get(key)
+    if df is None:
+        for stale in [k for k in _TIERS if k[0] != key[0]]:
+            _TIERS.pop(stale, None)
+        df = build()
+        _TIERS[key] = df
+    return df
 
 
 def shared_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -37,11 +53,7 @@ def shared_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cbor_ld_spark.operators import process_corpus, triples_table
     from cbor_ld_spark.sources import corpus_from_documents
 
-    key = (spark.sparkContext.applicationId, str(sf_dir))
-    df = _TRIPLES_CACHE.get(key)
-    if df is None:
-        for stale in [k for k in _TRIPLES_CACHE if k[0] != key[0]]:
-            _TRIPLES_CACHE.pop(stale, None)
+    def build():
         t = triples_table(process_corpus(corpus_from_documents(spark, sf_dir)))
         # narrow the CHECKPOINT, not the kernel: the Python kernel stage
         # upstream runs at machine width (its own exchange), while the
@@ -50,10 +62,10 @@ def shared_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         # taxes every consumer's first stage with per-task overhead
         # (measured +0.3-0.5 s across the BGP/SPARQL family), while at
         # larger SFs the target grows with the corpus
-        df = t.coalesce(_tier_partitions(spark, sf_dir)) \
+        return t.coalesce(_tier_partitions(spark, sf_dir)) \
             .localCheckpoint(eager=True)
-        _TRIPLES_CACHE[key] = df
-    return df
+
+    return _tier(spark, "triples", sf_dir, build)
 
 
 def _tier_partitions(spark: SparkSession, sf_dir: str,
@@ -73,9 +85,6 @@ def _tier_partitions(spark: SparkSession, sf_dir: str,
     return max(1, min(cap, -(-n // rows_per_part)))
 
 
-_CANONICAL_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def shared_canonical_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialized-once ``canonical_triples`` over the shared triples
     tier — the canonicalization mapInArrow pass is the second-most
@@ -83,23 +92,14 @@ def shared_canonical_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the canonical-dedup counts consume its output."""
     from cbor_ld_spark.operators.canonicalize import canonical_triples
 
-    key = (spark.sparkContext.applicationId, str(sf_dir))
-    df = _CANONICAL_CACHE.get(key)
-    if df is None:
-        for stale in [k for k in _CANONICAL_CACHE if k[0] != key[0]]:
-            _CANONICAL_CACHE.pop(stale, None)
-        # same narrow-checkpoint rationale as shared_triples, but via a
-        # real repartition: a coalesce would collapse the (Python-heavy)
-        # canonicalization mapInArrow stage itself, while the shuffle
-        # moves only the small canonical triple rows once
-        df = (canonical_triples(shared_triples(spark, sf_dir))
-              .repartition(_tier_partitions(spark, sf_dir))
-              .localCheckpoint(eager=True))
-        _CANONICAL_CACHE[key] = df
-    return df
-
-
-_EDGES_CACHE: dict[tuple[str, str], DataFrame] = {}
+    # same narrow-checkpoint rationale as shared_triples, but via a
+    # real repartition: a coalesce would collapse the (Python-heavy)
+    # canonicalization mapInArrow stage itself, while the shuffle
+    # moves only the small canonical triple rows once
+    return _tier(spark, "canonical", sf_dir, lambda: (
+        canonical_triples(shared_triples(spark, sf_dir))
+        .repartition(_tier_partitions(spark, sf_dir))
+        .localCheckpoint(eager=True)))
 
 
 def shared_entity_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -111,19 +111,10 @@ def shared_entity_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     query.  One distinct, checkpointed, shared."""
     from cbor_ld_spark.operators.graph import entity_edges
 
-    key = (spark.sparkContext.applicationId, str(sf_dir))
-    df = _EDGES_CACHE.get(key)
-    if df is None:
-        for stale in [k for k in _EDGES_CACHE if k[0] != key[0]]:
-            _EDGES_CACHE.pop(stale, None)
-        df = entity_edges(
-            shared_triples(spark, sf_dir)).localCheckpoint(eager=True)
-        _EDGES_CACHE[key] = df
-    return df
+    return _tier(spark, "edges", sf_dir, lambda: entity_edges(
+        shared_triples(spark, sf_dir)).localCheckpoint(eager=True))
 
 
 def clear_shared_triples() -> None:
     """Drop all cache entries (tests / explicit storage release)."""
-    _TRIPLES_CACHE.clear()
-    _CANONICAL_CACHE.clear()
-    _EDGES_CACHE.clear()
+    _TIERS.clear()

@@ -64,18 +64,18 @@ def stream_kg_results(spark: SparkSession, input_dir: str, out_dir: str,
         # idempotent by batch_id: a retried micro-batch overwrites its own
         # partition instead of appending duplicates (plain append would be
         # at-least-once; two sinks cannot share one atomic commit)
-        spark = batch_df.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         from pyspark.sql import functions as F
 
         batch_df = batch_df.persist()
         (batch_df.select(*DOC_COLUMNS)
          .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").partitionBy("batch_id")
+         .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+         .partitionBy("batch_id")
          .parquet(f"{out_dir}/docs"))
         (triples_table(batch_df)
          .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").partitionBy("batch_id")
+         .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+         .partitionBy("batch_id")
          .parquet(f"{out_dir}/triples"))
         batch_df.unpersist()
 

@@ -101,10 +101,9 @@ def repo_stats_stream(processed_stream, checkpoint_dir: str, out_dir: str,
     # through foreachBatch (each batch carries the latest running totals).
     # batch_id-partitioned dynamic overwrite keeps retries idempotent.
     def write_batch(batch_df, batch_id: int):
-        batch_df.sparkSession.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic")
         (batch_df.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").partitionBy("batch_id").parquet(out_dir))
+         .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+         .partitionBy("batch_id").parquet(out_dir))
 
     from pyspark.sql import functions as F
 

@@ -2,10 +2,10 @@
 """Builder self-run: the driver-style Spark-vs-DuckDB value comparison
 over ALL registry queries at one scale factor, dumped as JSON to a file.
 
-One SF per process: several oracle builders memoize per-process keyed by
-function name (not SF), so mixing SFs in one interpreter would serve
-stale VALUES oracles.  The wrapper script/loop merges the per-SF dumps
-into CORRECTNESS_SELF_r{N}.json.
+One SF per process: the oracles read their scale from
+SPARK_GRAFT_ORACLE_SF, which must match the compared sf_dir.  The
+wrapper script/loop merges the per-SF dumps into
+CORRECTNESS_SELF_r{N}.json.
 
 Usage: python3 tests/self_verify_all.py <sf_dir> <out.json>
        (set SPARK_GRAFT_ORACLE_SF=<sf_dir> in the environment)

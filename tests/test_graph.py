@@ -570,3 +570,19 @@ def test_effective_diameter(spark):
     import pytest as _p
     with _p.raises(RuntimeError, match="still growing"):
         effective_diameter(_edges(spark, chain), max_hops=3)
+
+
+def test_pagerank_plan_no_python_no_kernel_rerun(spark):
+    """PageRank iterations run on the localCheckpoint'd edge/node frames:
+    the final plan contains no Python stages and scans checkpointed
+    RDDs, never the original lineage."""
+    from cbor_ld_spark.operators.graph import pagerank
+
+    e = spark.createDataFrame(
+        [(f"n{i}", f"n{(i * 7) % 50}") for i in range(200)],
+        "src string, dst string")
+    pr = pagerank(e, iters=3)
+    plan = pr._jdf.queryExecution().executedPlan().toString()
+    # result frame is itself a checkpoint scan: iterations already ran
+    assert "Scan ExistingRDD" in plan, plan
+    assert "BatchEvalPython" not in plan and "MapInArrow" not in plan

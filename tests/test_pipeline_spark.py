@@ -160,6 +160,24 @@ def test_build_kg_resume_idempotent(spark):
         shutil.rmtree(out, ignore_errors=True)
 
 
+def test_build_kg_leaves_session_overwrite_mode(spark):
+    """build_kg's dynamic partition overwrite is scoped to its own
+    writes: the caller's session conf reads the same afterwards."""
+    from cbor_ld_spark.plans import build_kg
+    from cbor_ld_spark.sources import synthesize_corpus
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "STATIC")
+    out = tempfile.mkdtemp(prefix="kgtest_")
+    try:
+        build_kg(spark, synthesize_corpus(spark, 60), out, run_id="r1",
+                 n_buckets=2)
+        assert spark.conf.get(key) == "STATIC"
+    finally:
+        spark.conf.unset(key)
+        shutil.rmtree(out, ignore_errors=True)
+
+
 def test_entity_linking_across_documents(spark):
     """truage and cit share the same urn:uuid @id -> one linked entity."""
     from cbor_ld_spark.operators import process_corpus, triples_table
@@ -354,3 +372,29 @@ def test_build_kg_analytics_reuse_crash_safe(spark):
         assert fp["run_id"] == "r3"
     finally:
         shutil.rmtree(out, ignore_errors=True)
+
+
+def test_dedup_first_pipeline_plan_hygiene(spark, tmp_path):
+    """The dedup-first kernel dataflow plans exactly one shuffle (the
+    content_sha dropDuplicates), exactly one Python stage (the kernel
+    mapInArrow over *distinct* contents, below the join-back), and no
+    row-at-a-time Python anywhere."""
+    from cbor_ld_spark.operators import process_corpus
+    from cbor_ld_spark.sources import corpus_from_documents
+
+    src = str(tmp_path / "repos.parquet")
+    corpus_from_documents(spark, "/root/testdata/sf0.001") \
+        .write.parquet(src)
+    repos = spark.read.parquet(src)
+    out = process_corpus(repos)
+    out.count()  # resolve AQE to the final plan
+    plan = out._jdf.queryExecution().executedPlan().toString()
+
+    assert plan.count("MapInArrow") == 1, plan
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    # the single Python stage sits BELOW the join-back (parents print
+    # first): everything after the provenance join is JVM-side
+    join_pos = max(plan.find("BroadcastHashJoin"), plan.find("SortMergeJoin"))
+    assert join_pos >= 0, plan
+    assert plan.find("MapInArrow") > join_pos, plan

@@ -42,16 +42,16 @@ def test_shared_triples_matches_direct_derivation(spark):
 
 def test_shared_triples_keyed_by_dir_and_clearable(spark):
     from cbor_ld_spark.plans import clear_shared_triples, shared_triples
-    from cbor_ld_spark.plans.shared import _TRIPLES_CACHE
+    from cbor_ld_spark.plans.shared import _TIERS
 
     clear_shared_triples()
     try:
         a = shared_triples(spark, "/root/testdata/sf0.001")
         b = shared_triples(spark, "/root/testdata/sf0.01")
         assert a is not b
-        assert len(_TRIPLES_CACHE) == 2
+        assert len(_TIERS) == 2
         clear_shared_triples()
-        assert not _TRIPLES_CACHE
+        assert not _TIERS
         c = shared_triples(spark, "/root/testdata/sf0.001")
         assert c is not a  # fresh materialization after clear
     finally:

@@ -86,3 +86,18 @@ def test_pq_train_deterministic():
     assert [list(c) for c in s1] == [list(c) for c in s2]
     # subspaces partition the dims
     assert sorted(int(x) for c in s1 for x in c) == list(range(16))
+
+
+def test_pq_topk_plan_hygiene(spark):
+    """PQ: exactly ONE Python stage (the encode+ADC-score mapInArrow);
+    candidate join-back and query join are broadcast (the corpus never
+    shuffles for the join); no row-at-a-time Python."""
+    from cbor_ld_spark.operators.similarity import pq_topk
+
+    out = pq_topk(spark, "/root/testdata/sf0.001")
+    out.count()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1, plan
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert "SortMergeJoin" not in plan, plan
+    assert plan.count("BroadcastHashJoin") >= 2, plan
