@@ -43,16 +43,10 @@ def _kg_corpus_shape(spark, sf_dir):
 
 
 def _kg_doc_results(spark, sf_dir):
-    from cbor_ld_spark.operators import process_corpus
-    from cbor_ld_spark.sources import corpus_from_documents
+    from cbor_ld_spark.plans import shared_docs
 
     return (
-        # doc-level flags only: skip the seven triple array columns
-        # through Arrow and the provenance join (guide §2.3 "shuffle
-        # fewer bytes"); the kernel still expands every document, so
-        # ``ok`` and the result are identical
-        process_corpus(corpus_from_documents(spark, sf_dir),
-                       emit_triples=False)
+        shared_docs(spark, sf_dir)
         .groupBy("ok", "error_kind")
         .agg(F.count(F.lit(1)).alias("docs"),
              F.sum(F.coalesce(F.col("roundtrip_ok").cast("long"), F.lit(0)))
@@ -74,12 +68,10 @@ def _kg_triples_by_pred(spark, sf_dir):
 
 
 def _kg_roundtrip_violations(spark, sf_dir):
-    from cbor_ld_spark.operators import process_corpus
-    from cbor_ld_spark.sources import corpus_from_documents
+    from cbor_ld_spark.plans import shared_docs
 
-    p = process_corpus(corpus_from_documents(spark, sf_dir), emit_triples=False)
-    return p.filter(F.col("ok") & ~F.col("roundtrip_ok")).select(
-        "repo", "path", "doc_sha")
+    return shared_docs(spark, sf_dir).filter(
+        F.col("ok") & ~F.col("roundtrip_ok")).select("repo", "path", "doc_sha")
 
 
 def _text_token_stats(spark, sf_dir):
@@ -273,14 +265,9 @@ def _kg_compression_stats(spark, sf_dir):
     value proposition measured corpus-wide.  Lengths are constants per
     class (the entity-UUID templating is length-preserving and the
     urn:uuid codec emits fixed-width binary), which min==max asserts."""
-    from cbor_ld_spark.operators import process_corpus
-    from cbor_ld_spark.sources import corpus_from_documents
+    from cbor_ld_spark.plans import shared_docs
 
-    # length stats only: skip the triple columns through Arrow (guide
-    # §2.3); the kernel still expands every document, so the ok-filter
-    # and the result are identical
-    p = process_corpus(corpus_from_documents(spark, sf_dir),
-                       emit_triples=False)
+    p = shared_docs(spark, sf_dir)
     cls = F.regexp_extract("path", r"/([^/]+)\.jsonld$", 1)
     return (
         p.filter(F.col("ok"))
@@ -864,7 +851,7 @@ def _kg_path_alt_groups(spark, sf_dir):
     return out.orderBy("src", "dst")
 
 
-_PATH_ISSUER_STEPS = [(_IRI_VC, "opt"), (_IRI_ISSUER, "one")]
+_PATH_ISSUER_STEPS = ((_IRI_VC, "opt"), (_IRI_ISSUER, "one"))
 
 
 def _kg_bgp_group(spark, sf_dir):
@@ -1712,7 +1699,7 @@ def _kg_entity_components(spark, sf_dir):
     from cbor_ld_spark.plans import shared_canonical_triples
 
     # both this histogram and kg_canonical_dedup consume the same
-    # canonicalization pass: shared, materialized once per session
+    # canonical tier: shared, materialized once per session
     c = shared_canonical_triples(spark, sf_dir)
     comp = link_entities(c)
     rows = (
@@ -2020,9 +2007,9 @@ def _canon_tuples(content):
     """One doc through the kernel + canonicalization: canonical
     (subj, pred, obj, is_iri, graph) tuples, or None if not ok."""
     from cbor_ld_spark.functions.udfs import _process_one
-    from cbor_ld_spark.operators.canonicalize import _canonicalize_doc
+    from cbor_ld_spark.kernel.rdf import _canonicalize_doc
 
-    r = _process_one(content, 1, True)
+    r = _process_one(content, 1)
     if not r[1] or r[7] == 0:
         return None
     trips = list(zip(r[8], r[9], r[10], r[11], r[14]))
@@ -2077,9 +2064,8 @@ def _variant_outcomes():
     for i, (_name, lang, content, _enc) in enumerate(payload_variants()):
         if not _sniff_ok(lang, content):
             continue
-        a = _process_one(content, 1, True)
-        b = _process_one(content.replace(_TEMPLATE_UUID, _PROBE_UUID),
-                         1, True)
+        a = _process_one(content, 1)
+        b = _process_one(content.replace(_TEMPLATE_UUID, _PROBE_UUID), 1)
         ok, error_kind, rt = a[1], a[3], a[6]
         assert (a[1], a[3], a[6], a[7]) == (b[1], b[3], b[6], b[7]), \
             f"variant {i}: outcome depends on entity uuid"
@@ -2399,6 +2385,15 @@ def _oracle_sf_dir() -> str:
     import os
 
     return os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
+
+
+def _per_scale(build):
+    """``build(sf_dir)`` memoized on the *resolved* scale dir:
+    ``SPARK_GRAFT_ORACLE_SF`` can change inside one process, so an entry
+    keyed on ``None`` would outlive it."""
+    memo = functools.cache(build)
+    return functools.wraps(build)(
+        lambda sf_dir=None: memo(sf_dir or _oracle_sf_dir()))
 
 
 def _ivf_topk_oracle(n_queries: int = 5, k: int = 5, n_cells: int = 16,
@@ -2891,16 +2886,31 @@ def _winnow_fingerprints_oracle(k: int = 5, window: int = 4,
               ("fp_checksum", "BIGINT")], "doc_id")
 
 
-def _media_payloads(kind: str, n_rows: int):
-    """(media_id, payload) of each synthesized media row of ``kind``:
-    the media corpus is a pure function of media_id
+@functools.cache
+def _media_rows(n_rows: int) -> tuple:
+    """The synthesized media corpus, a pure function of media_id
     (operators/multimodal.py synthesize_media_row)."""
     from cbor_ld_spark.operators.multimodal import synthesize_media_row
 
-    for i in range(n_rows):
-        mid, k, _mt, payload, _src = synthesize_media_row(i)
-        if k == kind:
-            yield mid, payload
+    return tuple(synthesize_media_row(i) for i in range(n_rows))
+
+
+def _media_payloads(kind: str, n_rows: int):
+    """(media_id, payload) of each synthesized media row of ``kind``."""
+    return [(mid, payload) for mid, k, _mt, payload, _src
+            in _media_rows(n_rows) if k == kind]
+
+
+@functools.cache
+def _video_frames(n_rows: int, every_ms: int, max_frames: int) -> tuple:
+    """The sampled frame rows (without pixels) of every synthesized
+    video: demux + decode are pure functions of the payload, shared
+    with the Spark stage (video_frame_rows)."""
+    from cbor_ld_spark.operators.multimodal import video_frame_rows
+
+    return tuple(r for mid, payload in _media_payloads("video", n_rows)
+                 for r in video_frame_rows(mid, payload, every_ms,
+                                           max_frames, with_pixels=False))
 
 
 def _multimodal_video_oracle(n_rows: int = 300,
@@ -2909,13 +2919,8 @@ def _multimodal_video_oracle(n_rows: int = 300,
     """Video-frame oracle: the media corpus AND the demux+decode are
     pure functions of media_id (synthesize_media_row / video_frame_rows
     shared with the Spark stage) — replay both driver-side."""
-    from cbor_ld_spark.operators.multimodal import video_frame_rows
-
-    rows = [r[:7] for mid, payload in _media_payloads("video", n_rows)
-            for r in video_frame_rows(mid, payload, every_ms, max_frames,
-                                      with_pixels=False)]
     return _values_oracle(
-        rows,
+        [r[:7] for r in _video_frames(n_rows, every_ms, max_frames)],
         [("media_id", "BIGINT"), ("frame_idx", "INTEGER"),
          ("ts_ms", "BIGINT"), ("ok", "VARCHAR"), ("width", "INTEGER"),
          ("height", "INTEGER"), ("phash", "VARCHAR")],
@@ -3029,7 +3034,7 @@ def _compression_stats_oracle() -> str:
     for i, (name, lang, content, _enc) in enumerate(variants):
         if not _sniff_ok(lang, content):
             continue
-        out = _process_one(content, 1, True)
+        out = _process_one(content, 1)
         if out[1]:
             rows.append(f"({i}, {_sql_str(name)}, {out[4]}, {out[5]})")
     vals = ", ".join(rows)
@@ -3075,7 +3080,7 @@ def _realized_classes(sf_dir: str) -> list[tuple[int, list[tuple]]]:
             continue
         h = hashlib.md5(f"ent:{e}".encode()).hexdigest()
         uuid = f"{h[:8]}-{h[8:12]}-{h[12:16]}-{h[16:20]}-{h[20:32]}"
-        r = _process_one(content.replace(_TEMPLATE_UUID, uuid), 1, True)
+        r = _process_one(content.replace(_TEMPLATE_UUID, uuid), 1)
         if r[1] and r[7]:
             out.append((n_docs, list(zip(*r[8:15]))))
     return out
@@ -3215,6 +3220,7 @@ def _bgp_oracle(patterns=None, optional=None,
         ", ".join(var_order))
 
 
+@_per_scale
 def _infer_oracle(sf_dir: str | None = None) -> str:
     """Python fixpoint replay of _INFER_RULES over the realized
     triples (same naive forward chaining, set semantics)."""
@@ -3240,6 +3246,7 @@ def _infer_oracle(sf_dir: str | None = None) -> str:
         "subj, pred, obj")
 
 
+@_per_scale
 def _bgp_filter_oracle(sf_dir: str | None = None) -> str:
     """Python replay of kg_bgp_filter: required BGP binds, then the
     string-compare FILTER, then drop bindings where the NOT EXISTS
@@ -3257,6 +3264,7 @@ def _bgp_filter_oracle(sf_dir: str | None = None) -> str:
         "cred, issuer, issued")
 
 
+@_per_scale
 def _bgp_group_oracle(sf_dir: str | None = None) -> str:
     """BGP replay + per-issuer distinct counts, HAVING n_creds > 1."""
     triples = _realized_triples(sf_dir or _oracle_sf_dir())
@@ -3587,6 +3595,11 @@ def _path_oracle(steps, sf_dir: str | None = None,
     return _values_oracle(
         sorted(result), [("src", "VARCHAR"), ("dst", "VARCHAR")],
         "src, dst")
+
+
+# kg_path_issuers and kg_path_alt_groups share this text
+_path_issuers_oracle = _per_scale(functools.partial(_path_oracle,
+                                                    _PATH_ISSUER_STEPS))
 
 
 def _path_closure_oracle(sf_dir: str | None = None) -> str:
@@ -4068,14 +4081,9 @@ def _multimodal_frame_dedup_oracle(n_rows: int = 300,
                                    max_frames: int = 8) -> str:
     """Frame-dedup oracle: replay the frame rows driver-side (pure
     function of media_id) and aggregate the phash groups in SQL."""
-    from cbor_ld_spark.operators.multimodal import video_frame_rows
-
-    vals = ", ".join(
-        f"({r[0]}, '{r[6]}')"
-        for mid, payload in _media_payloads("video", n_rows)
-        for r in video_frame_rows(mid, payload, every_ms, max_frames,
-                                  with_pixels=False)
-        if r[3] == "ok")
+    vals = ", ".join(f"({r[0]}, '{r[6]}')"
+                     for r in _video_frames(n_rows, every_ms, max_frames)
+                     if r[3] == "ok")
     return f"""
         WITH f(media_id, phash) AS (VALUES {vals})
         SELECT phash, count(DISTINCT media_id)::BIGINT AS n_videos,
@@ -4192,7 +4200,7 @@ def oracle_sql() -> dict[str, str]:
         # row pins text-path/programmatic-path tier equivalence
         "kg_sparql_select": _bgp_filter_oracle(),
         "kg_path_closure": _path_closure_oracle(),
-        "kg_path_issuers": _path_oracle(_PATH_ISSUER_STEPS),
+        "kg_path_issuers": _path_issuers_oracle(),
         "kg_path_truage_issuer": _path_oracle(_PATH_ISSUER_STEPS,
                                               dst=_TRUAGE_ISSUER),
         "kg_bgp_group": _bgp_group_oracle(),
@@ -4208,7 +4216,7 @@ def oracle_sql() -> dict[str, str]:
         "kg_sparql_ask": _sparql_ask_oracle(),
         # (vc/issuer)|issuer == vc?/issuer: the alternation tier shares
         # the optional-step path oracle
-        "kg_path_alt_groups": _path_oracle(_PATH_ISSUER_STEPS),
+        "kg_path_alt_groups": _path_issuers_oracle(),
         "kg_sparql_minus": _sparql_minus_oracle(),
         "kg_sparql_subquery": _sparql_subquery_oracle(),
         "kg_sparql_exists": _sparql_exists_oracle(),

@@ -175,7 +175,7 @@ def _mp_kernel_work(args):
     n = 0
     for _ in range(reps):
         for c in contents:
-            _process_one(c, 1, True)
+            _process_one(c, 1)
             n += 1
     return n
 

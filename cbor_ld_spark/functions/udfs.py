@@ -28,6 +28,8 @@ Design for 100 TB:
 
 from __future__ import annotations
 
+import functools
+import inspect
 import os
 import sys
 import zipimport
@@ -48,6 +50,7 @@ from cbor_ld_spark.kernel import (
     decode_document,
     parse_json_document,
 )
+from cbor_ld_spark.kernel.rdf import MAX_DOC_TRIPLES, _canonicalize_doc
 from cbor_ld_spark.kernel.transform import encode_with_triples
 
 _S = StringType()
@@ -72,6 +75,9 @@ _RESULT = [
     StructField("t_dt", _STRS, True),
     StructField("t_lang", _STRS, True),
     StructField("t_graph", _STRS, True),
+    # the document's blank node -> canonical label map, when asked for
+    StructField("t_bnode", _STRS, True),
+    StructField("t_canon", _STRS, True),
 ]
 _RESULT_FIELDS = [f.name for f in _RESULT]
 
@@ -107,16 +113,31 @@ def jsonld_sniff(lang: Column | None = None) -> Column:
     return pred
 
 
-_NO_TRIPLES = (None,) * 7
+_NO_TRIPLES = (None,) * 9
 
 
-def _process_one(content: str, registry_id: int, emit_triples: bool):
+def _bnode_map(columns) -> tuple[list, list]:
+    """The canonical labels of one document's blank nodes, as parallel
+    (bnode, canon) lists: ``_canonicalize_doc`` over its *distinct*
+    (subj, pred, obj, is_iri, graph) tuples, so a triple the walk emits
+    twice counts once.  A document beyond ``MAX_DOC_TRIPLES`` gets an
+    empty map and keeps its doc-scoped labels."""
+    distinct = list(dict.fromkeys(zip(*columns[:4], columns[6])))
+    if len(distinct) > MAX_DOC_TRIPLES:
+        return [], []
+    m = _canonicalize_doc(distinct)
+    return list(m), list(m.values())
+
+
+def _process_one(content: str, registry_id: int, canonical: bool = False):
     """Per-document kernel: returns a result tuple (never raises).
 
     Tuple layout matches DOC_RESULT_SCHEMA from ``doc_sha`` onward.  The
     triples come from the encoder's own context walk, so every document
-    is expanded and ``ok`` covers expansion whether or not
-    ``emit_triples`` asks for the triple columns.
+    is expanded and ``ok`` covers expansion.  ``canonical`` adds the
+    blank-node label map (``t_bnode``/``t_canon``) of a clean document;
+    it is computed after the outcome is fixed, so ``ok`` and
+    ``error_kind`` never depend on it.
     """
     if not isinstance(content, str):
         return (None, False, f"content is {type(content).__name__}",
@@ -138,11 +159,6 @@ def _process_one(content: str, registry_id: int, emit_triples: bool):
         roundtrip_ok = content_sha256(decode_document(cbor)) == doc_sha
         if sink.error is not None:
             raise sink.error
-        if not emit_triples:
-            return (doc_sha, True, None, None, clen, cbor_len,
-                    roundtrip_ok, 0, *_NO_TRIPLES)
-        return (doc_sha, True, None, None, clen, cbor_len,
-                roundtrip_ok, len(sink.columns[0]), *sink.columns)
     except CborLdError as e:
         return (doc_sha, False, e.message or e.kind, e.kind, clen,
                 cbor_len, roundtrip_ok, 0, *_NO_TRIPLES)
@@ -151,12 +167,16 @@ def _process_one(content: str, registry_id: int, emit_triples: bool):
         # UnicodeError, etc. all land here as typed rows)
         return (doc_sha, False, str(e)[:500], type(e).__name__, clen,
                 cbor_len, roundtrip_ok, 0, *_NO_TRIPLES)
+    columns = sink.columns
+    return (doc_sha, True, None, None, clen, cbor_len, roundtrip_ok,
+            len(columns[0]), *columns,
+            *(_bnode_map(columns) if canonical else (None, None)))
 
 
 def evict_pyspark_zip_finders() -> None:
     """Drop the cached zip finders of the Spark installation's archives.
 
-    Call it at the top of every Python task body handed to Spark.  The
+    ``python_task`` calls it when a task body starts and ends.  The
     JVM starts each Python worker with three of its own archives on
     ``PYTHONPATH``: ``<spark home>/python/lib/pyspark.zip``, the py4j
     zip beside it and the jar holding Spark core, from
@@ -193,7 +213,39 @@ def evict_pyspark_zip_finders() -> None:
             sys.path_importer_cache.pop(path, None)
 
 
-def kg_process_batches(registry_id: int = 1, emit_triples: bool = True,
+def python_task(body):
+    """Wrap a Python task body handed to Spark so that it calls
+    ``evict_pyspark_zip_finders`` when it starts and again when it ends.
+
+    The second call matters because importing a module the worker has
+    not imported yet walks ``sys.path`` and re-creates the finders of
+    Spark's archives: a body's lazy imports (and those of the code it
+    calls) would otherwise leave them for the next task's
+    ``invalidate_caches()`` to re-read.  A generator body is evicted
+    around its whole iteration; the wrapper keeps the body's signature,
+    which ``applyInPandas`` and ``pandas_udf`` read.
+    """
+    if inspect.isgeneratorfunction(body):
+        @functools.wraps(body)
+        def run(*args, **kwargs):
+            evict_pyspark_zip_finders()
+            try:
+                yield from body(*args, **kwargs)
+            finally:
+                evict_pyspark_zip_finders()
+    else:
+        @functools.wraps(body)
+        def run(*args, **kwargs):
+            evict_pyspark_zip_finders()
+            try:
+                return body(*args, **kwargs)
+            finally:
+                evict_pyspark_zip_finders()
+    run.__signature__ = inspect.signature(body)
+    return run
+
+
+def kg_process_batches(registry_id: int = 1, canonical: bool = False,
                        with_provenance: bool = False):
     """mapInArrow kernel fn (Arrow RecordBatch in/out, no pandas).
 
@@ -206,19 +258,20 @@ def kg_process_batches(registry_id: int = 1, emit_triples: bool = True,
     KERNEL_RESULT_SCHEMA (the dedup-first dataflow).
     ``with_provenance=True``: input additionally carries
     (repo, path, commit) through -> DOC_RESULT_SCHEMA (per-row path).
+    ``canonical`` fills each document's blank-node label map.
     """
     out_schema = DOC_RESULT_SCHEMA if with_provenance else KERNEL_RESULT_SCHEMA
     result_idx = {name: i for i, name in enumerate(_RESULT_FIELDS)}
 
+    @python_task
     def fn(batches):
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_type
 
-        evict_pyspark_zip_finders()
         schema = pa.schema([(f.name, to_arrow_type(f.dataType))
                             for f in out_schema.fields])
         for batch in batches:
-            results = [_process_one(c, registry_id, emit_triples)
+            results = [_process_one(c, registry_id, canonical)
                        for c in batch.column("content").to_pylist()]
             arrays = [
                 pa.array([r[result_idx[f.name]] for r in results],

@@ -1,10 +1,12 @@
 """The RDF view of a JSON-LD document: what the context walk in
 kernel.transform needs to emit triples, apart from the walk itself -- the
 RDF/XSD vocabulary, literal forms (a pragmatic subset of W3C "Deserialize
-JSON-LD to RDF") and the sink holding the triple columns."""
+JSON-LD to RDF"), the sink holding the triple columns and the
+per-document blank-node canonicalization."""
 
 from __future__ import annotations
 
+import hashlib
 import math
 from decimal import Decimal
 
@@ -170,3 +172,113 @@ class TripleSink:
         elif isinstance(raw, str):
             self.emit(subject, pred, raw, False,
                       type_ or (None if lang else XSD_STRING), lang)
+
+
+# --- URDNA2015-style deterministic blank-node canonicalization ---------------
+#
+# Blank node labels minted by the walk are document-scoped
+# (``_:{doc_sha[:16]}_bN``).  Canonicalization rewrites them to labels that
+# are a pure function of the blank node's *graph structure*:
+#
+#     canon id = _:g{structure_hash}#c{rank}
+#
+# where ``structure_hash`` is the hash of the document's bnode cluster after
+# colour refinement and ``rank`` is the refined colour order.  Two
+# isomorphic documents therefore produce **identical** canonical node ids --
+# cross-document blank-node deduplication falls out of labeling, with no
+# global coordination.
+#
+# Algorithm per document (simplified URDNA2015 / colour refinement, adequate
+# for credential graphs which lack automorphic bnode orbits):
+#
+# 1. initial colour = hash of the bnode's ground (non-bnode) edge signature,
+# 2. iterate colour' = hash(own colour + sorted multiset of (direction, pred,
+#    neighbour colour)) until stable,
+# 3. rank by final colour (ties by full signature), hash the relabeled triple
+#    set for the cluster id.
+#
+# Blank nodes never cross documents, so the kernel computes each document's
+# map at the end of its walk (``functions.udfs._process_one``, on request).
+
+# colour refinement is O(bnodes * edges) per doc; beyond this a document
+# is pathological and keeps doc-scoped labels (still globally unique)
+MAX_DOC_TRIPLES = 200_000
+
+
+def _canonical_labels_for_component(
+    triples: list[tuple[str, str, str, bool]],
+) -> dict[str, str]:
+    """triples: (subj, pred, obj, obj_is_iri) of one bnode cluster/doc.
+
+    Returns bnode -> local canonical label ``_:c{rank}`` (structure hash
+    is applied by the caller).
+    """
+    bnodes = {t[0] for t in triples if t[0].startswith("_:")}
+    bnodes |= {t[2] for t in triples if t[3] and t[2].startswith("_:")}
+    if not bnodes:
+        return {}
+
+    def h(s: str) -> str:
+        return hashlib.sha256(s.encode("utf-8")).hexdigest()
+
+    out_edges: dict[str, list[tuple[str, str, bool]]] = {b: [] for b in bnodes}
+    in_edges: dict[str, list[tuple[str, str, bool]]] = {b: [] for b in bnodes}
+    for s, p, o, is_iri in triples:
+        s_b, o_b = s in bnodes, (is_iri and o in bnodes)
+        if s_b:
+            out_edges[s].append((p, o if not o_b else "*", o_b))
+        if o_b:
+            in_edges[o].append((p, s if not s_b else "*", s_b))
+
+    colour = {
+        b: h("init|" + "|".join(sorted(
+            [f"o:{p}:{o}:{int(ob)}" for p, o, ob in out_edges[b]] +
+            [f"i:{p}:{s}:{int(sb)}" for p, s, sb in in_edges[b]]
+        )))
+        for b in bnodes
+    }
+
+    nbr_out: dict[str, list[tuple[str, str]]] = {b: [] for b in bnodes}
+    nbr_in: dict[str, list[tuple[str, str]]] = {b: [] for b in bnodes}
+    for s, p, o, is_iri in triples:
+        if s in bnodes and is_iri and o in bnodes:
+            nbr_out[s].append((p, o))
+            nbr_in[o].append((p, s))
+
+    for _ in range(len(bnodes)):
+        new = {}
+        for b in bnodes:
+            sig = [colour[b]]
+            sig += sorted(f"o:{p}:{colour[o]}" for p, o in nbr_out[b])
+            sig += sorted(f"i:{p}:{colour[s]}" for p, s in nbr_in[b])
+            new[b] = h("|".join(sig))
+        if new == colour:
+            break
+        colour = new
+        if len(set(colour.values())) == len(bnodes):
+            break
+
+    order = sorted(bnodes, key=lambda b: (colour[b], b))
+    return {b: f"_:c{i}" for i, b in enumerate(order)}
+
+
+def _canonicalize_doc(triples: list[tuple[str, str, str, bool, str]]):
+    """One document's triples (subj,pred,obj,is_iri,graph) -> node mapping.
+
+    Returns {bnode -> canonical id} with the structure hash baked in.
+    """
+    flat = [(s, p, o, i) for s, p, o, i, _g in triples]
+    # graph names participate as first-class nodes
+    flat += [(g, "urn:x-cbor-ld:graph", s, True)
+             for s, _p, _o, _i, g in triples if g.startswith("_:")]
+    local = _canonical_labels_for_component(flat)
+    if not local:
+        return {}
+    relabeled = sorted(
+        (local.get(s, s), p, local.get(o, o) if i else o, str(i),
+         local.get(g, g))
+        for s, p, o, i, g in triples
+    )
+    structure = hashlib.sha256(
+        "\n".join("\x1f".join(t) for t in relabeled).encode()).hexdigest()[:16]
+    return {b: f"_:g{structure}#{c[2:]}" for b, c in local.items()}

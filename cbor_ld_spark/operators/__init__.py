@@ -1,1 +1,2 @@
-from .kg import corpus_metrics, process_corpus, triples_table  # noqa: F401
+from .kg import (canonical_triples, corpus_metrics,  # noqa: F401
+                 process_corpus, triples_table)

@@ -24,7 +24,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..functions.udfs import evict_pyspark_zip_finders
+from ..functions.udfs import python_task
 
 ENCODE_RESULT = StructType([
     StructField("cbor", BinaryType(), True),
@@ -41,10 +41,10 @@ def _encode_udf(registry_id: int):
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf(ENCODE_RESULT)
+    @python_task
     def enc(contents: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         from cbor_ld_spark.kernel import CborLdError, encode_document
 
-        evict_pyspark_zip_finders()
         for s in contents:
             cbor, err = [], []
             for c in s:
@@ -66,6 +66,7 @@ def _decode_udf():
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf(DECODE_RESULT)
+    @python_task
     def dec(blobs: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         from cbor_ld_spark.kernel import (
             CborLdError,
@@ -73,7 +74,6 @@ def _decode_udf():
             decode_document,
         )
 
-        evict_pyspark_zip_finders()
         for s in blobs:
             out, err = [], []
             for b in s:
@@ -119,10 +119,10 @@ def _canonical_source_udf():
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf(StringType())
+    @python_task
     def canon(contents: Iterator[pd.Series]) -> Iterator[pd.Series]:
         from cbor_ld_spark.kernel import canonical_json, parse_json_document
 
-        evict_pyspark_zip_finders()
         for s in contents:
             out = []
             for c in s:

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..functions.udfs import evict_pyspark_zip_finders
+from ..functions.udfs import python_task
 from .text import _norm
 
 
@@ -400,8 +400,8 @@ def embedding_near_duplicates_lsh(spark: SparkSession, sf_dir: str,
 
     thr = float(threshold)
 
+    @python_task
     def rerank(batches):
-        evict_pyspark_zip_finders()
         for batch in batches:
             n = batch.num_rows
             if n == 0:
@@ -479,11 +479,11 @@ def embedding_near_duplicates_blocked(spark: SparkSession, sf_dir: str,
     both = lhs.unionByName(rhs).select(
         "blk_i", "blk_j", "side", "vec_id", "embedding")
 
+    @python_task
     def fn(pdf):
         import numpy as np
         import pandas as pd
 
-        evict_pyspark_zip_finders()
         empty = pd.DataFrame({"vec_a": [], "vec_b": [], "cosine": []})
         left = pdf[pdf["side"] == 0]
         if len(left) == 0:  # block i empty (n < n_blocks edge): no pairs

@@ -38,7 +38,7 @@ DOC_COLUMNS = [f.name for f in DOC_RESULT_SCHEMA.fields
 
 
 def process_corpus(repos: DataFrame, registry_id: int = 1,
-                   emit_triples: bool = True,
+                   canonical: bool = False,
                    dedup_content: bool = True) -> DataFrame:
     """repos(repo,path,commit,lang,content) -> per-document KG results.
 
@@ -49,7 +49,9 @@ def process_corpus(repos: DataFrame, registry_id: int = 1,
     is a partial-aggregated shuffle on the uniform hash key; the
     join-back re-attaches (repo, path, commit) JVM-side, so results are
     row-for-row identical to the per-row path (doc_sha, bnode labels and
-    triples are pure functions of content).
+    triples are pure functions of content).  ``canonical=True`` adds
+    each document's blank-node label map (``t_bnode``/``t_canon``), which
+    ``canonical_triples`` applies.
     """
     candidates = (
         repos
@@ -61,7 +63,7 @@ def process_corpus(repos: DataFrame, registry_id: int = 1,
         from cbor_ld_spark.plans.partitioning import spread_input
 
         fn = kg_process_batches(registry_id=registry_id,
-                                emit_triples=emit_triples)
+                                canonical=canonical)
         # hash-repartition on the dedup key with an EXPLICIT count, then
         # dropDuplicates: one exchange total (the aggregation reuses the
         # partitioning), and AQE's byte-based coalescer cannot fold the
@@ -74,8 +76,8 @@ def process_corpus(repos: DataFrame, registry_id: int = 1,
         results = distinct.mapInArrow(fn, schema=KERNEL_RESULT_SCHEMA)
         return candidates.drop("content").join(results, "content_sha") \
             .select(*[f.name for f in DOC_RESULT_SCHEMA.fields])
-    fn = kg_process_batches(registry_id=registry_id,
-                            emit_triples=emit_triples, with_provenance=True)
+    fn = kg_process_batches(registry_id=registry_id, canonical=canonical,
+                            with_provenance=True)
     return candidates.mapInArrow(fn, schema=DOC_RESULT_SCHEMA)
 
 
@@ -102,6 +104,40 @@ def triples_table(processed: DataFrame) -> DataFrame:
         F.col("t.t_lang").alias("obj_lang"),
         F.col("t.t_graph").alias("graph"),
         "repo", "path", "commit", "doc_sha",
+    )
+
+
+def canonical_triples(triples: DataFrame, docs: DataFrame) -> DataFrame:
+    """Rewrite blank nodes to their canonical structure-hash labels.
+
+    ``docs`` is a ``process_corpus(..., canonical=True)`` frame: each
+    document's (bnode, canon) map comes out of the kernel, so relabeling
+    is JVM-side -- one map column per ``doc_sha`` (the map depends on
+    the document only, so one row per ``doc_sha`` is exact), a left
+    equi-join on ``doc_sha`` and three codegen ``element_at`` lookups.
+    A node without an entry (an IRI, or a document beyond
+    ``MAX_DOC_TRIPLES``) keeps its label.
+    """
+    bm = (docs.filter(F.size("t_bnode") > 0)
+          .select("doc_sha", F.map_from_arrays("t_bnode", "t_canon")
+                  .alias("_m"))
+          .dropDuplicates(["doc_sha"]))
+    return (
+        triples
+        .join(bm, "doc_sha", "left")
+        .select(
+            F.coalesce(F.element_at("_m", F.col("subj")),
+                       F.col("subj")).alias("subj"),
+            "pred",
+            F.when(F.col("obj_is_iri"),
+                   F.coalesce(F.element_at("_m", F.col("obj")),
+                              F.col("obj")))
+            .otherwise(F.col("obj")).alias("obj"),
+            "obj_is_iri", "obj_datatype", "obj_lang",
+            F.coalesce(F.element_at("_m", F.col("graph")),
+                       F.col("graph")).alias("graph"),
+            "repo", "path", "commit", "doc_sha",
+        )
     )
 
 

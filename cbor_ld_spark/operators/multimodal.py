@@ -37,7 +37,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..functions.udfs import evict_pyspark_zip_finders
+from ..functions.udfs import python_task
 
 MEDIA_SCHEMA = StructType([
     StructField("media_id", LongType(), False),
@@ -127,8 +127,8 @@ def synthesize_media(spark: SparkSession, n_rows: int) -> DataFrame:
     PCM WAV (seeded sine); video is real MJPEG-in-AVI (2-8 JPEG frames,
     4-10 fps).  Every payload decodes for real.
     """
+    @python_task
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        evict_pyspark_zip_finders()
         for pdf in batches:
             rows = [synthesize_media_row(int(i)) for i in pdf["id"]]
             yield pd.DataFrame(
@@ -202,8 +202,8 @@ def image_features(media: DataFrame, strict: bool = False,
         imgs = imgs.repartition(partitions,
                                 F.pmod(F.xxhash64("media_id"), F.lit(partitions)))
 
+    @python_task
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        evict_pyspark_zip_finders()
         for pdf in batches:
             rows = [image_feature_row(mid, payload, strict)
                     for mid, payload in zip(pdf["media_id"], pdf["payload"])]
@@ -228,10 +228,10 @@ def resize_images(media: DataFrame, width: int, height: int,
     """Real resize for every image format (png/ppm/bmp/jpeg/gif):
     decode -> nearest-neighbor -> PNG re-encode.  Undecodable payloads
     quarantine per-row."""
+    @python_task
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from .media_codecs import encode_png, resize_nearest
 
-        evict_pyspark_zip_finders()
         for pdf in batches:
             rows = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
@@ -291,8 +291,8 @@ def audio_feature_row(mid: int, payload: bytes | None) -> tuple:
 
 def audio_features(media: DataFrame) -> DataFrame:
     """Real WAV decode: duration, RMS, peak per audio row (quarantined)."""
+    @python_task
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        evict_pyspark_zip_finders()
         for pdf in batches:
             rows = [audio_feature_row(mid, payload)
                     for mid, payload in zip(pdf["media_id"], pdf["payload"])]
@@ -366,8 +366,8 @@ def sample_frames(media: DataFrame, every_ms: int = 1000,
     via jpeg_codec) and re-encoded as PNG; undecodable containers
     quarantine per-row unless ``strict``.
     """
+    @python_task
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        evict_pyspark_zip_finders()
         for pdf in batches:
             rows = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):

@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..functions.udfs import evict_pyspark_zip_finders
+from ..functions.udfs import python_task
 
 
 def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -168,8 +168,8 @@ def _with_lsh_buckets(df: DataFrame, dim: int, n_planes: int,
     planes = _lsh_plane_matrix(dim, n_planes, n_tables)
     weights = 1 << np.arange(n_planes, dtype=np.int64)
 
+    @python_task
     def compute(batches):
-        evict_pyspark_zip_finders()
         for b in batches:
             n = b.num_rows
             if n == 0:
@@ -235,8 +235,8 @@ def ivf_topk(spark: SparkSession, sf_dir: str, n_queries: int = 5,
         cmat = centroids  # (n_cells, dim), closure-captured
         dim = cmat.shape[1]
 
+        @python_task
         def compute(batches):
-            evict_pyspark_zip_finders()
             for b in batches:
                 n = b.num_rows
                 if n == 0:
@@ -405,8 +405,8 @@ def pq_topk(spark: SparkSession, sf_dir: str, n_queries: int = 5,
 
         dim = sample.shape[1]
 
+        @python_task
         def compute(batches):
-            evict_pyspark_zip_finders()
             for b in batches:
                 n = b.num_rows
                 if n == 0:

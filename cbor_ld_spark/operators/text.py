@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..functions.udfs import evict_pyspark_zip_finders
+from ..functions.udfs import python_task
 
 # Tiny English stopword list for the language-ID heuristic / quality score.
 STOPWORDS = ("the", "and", "of", "to", "a", "in", "is", "it", "that", "for")
@@ -368,8 +368,8 @@ def winnowing_fingerprints(docs: DataFrame, k: int = 5,
     if k < 1 or window < 1:
         raise ValueError("winnowing needs k >= 1 and window >= 1")
 
+    @python_task
     def compute(batches):
-        evict_pyspark_zip_finders()
         for b in batches:
             ids, counts, xors = [], [], []
             for mid, text in zip(b.column(0), b.column(1)):
@@ -572,8 +572,8 @@ def compression_ratio_signal(docs: DataFrame, level: int = 6,
     """
     import pyarrow as pa
 
+    @python_task
     def compute(batches):
-        evict_pyspark_zip_finders()
         for b in batches:
             ids, ulen, dlen, ratio = [], [], [], []
             for mid, text in zip(b.column(0), b.column(1)):

@@ -12,28 +12,17 @@ Python kernel work).
 ``spread_input`` repairs that at the source: one narrow round-robin
 exchange of the freshly-scanned rows up to the session's parallelism.
 The shuffle moves only the small scanned table once; the map work after
-it scales with cores.  The target is parameterised
-(``SPARK_GRAFT_INPUT_PARTITIONS``; default = the session's
-``defaultParallelism``, i.e. total executor cores on a cluster) so
-production deployments size it to their input instead of a local
-constant.  Determinism: Spark's sort-before-repartition
+it scales with cores.  The target is the session's ``defaultParallelism``
+(total executor cores on a cluster; ``spark.default.parallelism`` sets
+it), so a deployment sizes it with Spark's own setting instead of a
+local constant.  Determinism: Spark's sort-before-repartition
 (``spark.sql.execution.sortBeforeRepartition``, on by default) makes the
 row-to-partition assignment reproducible under task retry.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, functions as F
-
-
-def input_partitions(spark) -> int:
-    """Target partition count for repaired inputs (env-parameterised)."""
-    env = os.environ.get("SPARK_GRAFT_INPUT_PARTITIONS")
-    if env:
-        return max(1, int(env))
-    return spark.sparkContext.defaultParallelism
 
 
 def parquet_rows(path: str) -> int | None:
@@ -54,8 +43,9 @@ def spread_input(df: DataFrame, by: str | None = None,
                  rows: int | None = None,
                  rows_per_task: int = 256) -> DataFrame:
     """Round-robin (or hash, with ``by``) repartition of a small scanned
-    input to the session's parallelism, so expensive map stages that
-    follow are not serialized onto the scan's single input split.
+    input to the session's ``defaultParallelism``, so expensive map
+    stages that follow are not serialized onto the scan's single input
+    split.
 
     With ``by`` the exchange is hash partitioning on that column with an
     EXPLICIT partition count — AQE leaves explicit counts alone, which
@@ -81,7 +71,7 @@ def spread_input(df: DataFrame, by: str | None = None,
     cost; unbounded inputs spread to full width — the safe direction at
     scale.
     """
-    target = input_partitions(df.sparkSession)
+    target = df.sparkSession.sparkContext.defaultParallelism
     if rows is not None:
         target = max(1, min(target, -(-rows // rows_per_task)))
     if by is not None:

@@ -3,9 +3,11 @@
 Stage map (SURVEY.md §3.4):
 
   0 scan+filter   corpus scan, sniff filter, bucket assignment
-  1-3 kernel      parse/encode/decode/verify/expand (one Arrow pass)
-  4 entity link   connected components over equivalence edges
-  5 canonicalize  per-component URDNA-style blank-node labels
+  1-3 kernel      parse/encode/decode/verify/expand, plus each
+                  document's URDNA-style blank-node label map (one
+                  Arrow pass)
+  4 canonicalize  per-document relabel from the kernel's maps (JVM)
+  5 entity link   connected components over equivalence edges
   6 materialize   nodes/edges/docs/lineage tables
 
 Checkpoint-resume contract (the 10^12-file requirement):
@@ -13,7 +15,8 @@ Checkpoint-resume contract (the 10^12-file requirement):
 * Work is keyed by ``bucket = pmod(xxhash64(repo, path), n_buckets)`` —
   path-level hashing so a mega-repo spreads across buckets (skew
   salting built into the unit of work).
-* The kernel stages write ``docs/`` and ``triples/`` partitioned BY
+* The kernel stages write ``docs/`` (with each document's blank-node
+  label map) and ``triples/`` (doc-scoped labels) partitioned BY
   bucket with dynamic partition overwrite: re-running a bucket replaces
   exactly its partition — idempotent under retry.
 * After each bucket set commits, one lineage row per bucket is appended:
@@ -21,8 +24,8 @@ Checkpoint-resume contract (the 10^12-file requirement):
 * On resume, completed buckets are skipped via ``left_anti`` join of the
   input's bucket ids against the lineage table — only missing work runs.
 * Graph-global stages (4-6) run after all buckets are present; they are
-  deterministic functions of the triples table, so re-running them is
-  idempotent by construction (full overwrite).
+  deterministic functions of the triples and docs tables, so re-running
+  them is idempotent by construction (full overwrite).
 
 On a real deployment each parquet directory is an Iceberg table
 (``writeTo(...).overwritePartitions()``); the layout below mirrors that
@@ -36,13 +39,16 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from cbor_ld_spark.operators.canonicalize import canonical_triples
-from cbor_ld_spark.operators.kg import process_corpus, triples_table
+from cbor_ld_spark.operators.kg import (
+    DOC_COLUMNS,
+    canonical_triples,
+    process_corpus,
+    triples_table,
+)
 from cbor_ld_spark.operators.linking import link_entities
 
-DOC_COLS = ["repo", "path", "commit", "doc_sha", "content_sha", "ok",
-            "error", "error_kind", "json_len", "cbor_len", "roundtrip_ok",
-            "n_triples"]
+# the doc-level columns plus each document's blank-node label map
+DOC_COLS = [*DOC_COLUMNS, "t_bnode", "t_canon"]
 
 # explicit read schemas: a run whose every row quarantines writes an
 # empty (schemaless) parquet dir; reads must still work for resume
@@ -53,7 +59,8 @@ TRIPLES_SCHEMA = ("subj string, pred string, obj string, obj_is_iri boolean, "
 DOCS_SCHEMA = ("repo string, path string, commit string, doc_sha string, "
                "content_sha string, ok boolean, error string, "
                "error_kind string, json_len int, cbor_len int, "
-               "roundtrip_ok boolean, n_triples int, bucket int")
+               "roundtrip_ok boolean, n_triples int, "
+               "t_bnode array<string>, t_canon array<string>, bucket int")
 
 
 def _with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -99,7 +106,8 @@ def build_kg(spark: SparkSession, repos: DataFrame, out_dir: str,
         skipped = False
 
     t0 = time.monotonic()
-    processed = process_corpus(todo.drop("bucket"), registry_id=registry_id)
+    processed = process_corpus(todo.drop("bucket"), registry_id=registry_id,
+                               canonical=True)
     processed = _with_bucket(processed, n_buckets).persist()
 
     n_todo_docs = processed.count()
@@ -131,10 +139,12 @@ def build_kg(spark: SparkSession, repos: DataFrame, out_dir: str,
     # ---- graph-global stages over the complete triples table ----
     all_triples = spark.read.schema(TRIPLES_SCHEMA).parquet(
         os.path.join(out_dir, "triples"))
-    # canonical labels first (per-document, skew-free), then entity
-    # linking over the canonical graph so components name canonical ids
+    docs = spark.read.schema(DOCS_SCHEMA).parquet(os.path.join(out_dir, "docs"))
+    # canonical labels first (the kernel's per-document maps), then
+    # entity linking over the canonical graph so components name
+    # canonical ids
     t1 = time.monotonic()
-    canon_cached = canonical_triples(all_triples).persist()
+    canon_cached = canonical_triples(all_triples, docs).persist()
     n_canon = canon_cached.count()
     _stage_lineage(spark, out_dir, run_id, "canonicalize", n_canon, t1)
 
@@ -145,8 +155,7 @@ def build_kg(spark: SparkSession, repos: DataFrame, out_dir: str,
     n_linked = comp_by_subj.count()
     _stage_lineage(spark, out_dir, run_id, "link", n_linked, t2)
 
-    canon = (canon_cached.drop("component")
-             .join(comp_by_subj, "subj", "left"))
+    canon = canon_cached.join(comp_by_subj, "subj", "left")
 
     t3 = time.monotonic()
     edges = edges_table(canon)
@@ -154,7 +163,6 @@ def build_kg(spark: SparkSession, repos: DataFrame, out_dir: str,
     edges.write.mode("overwrite").parquet(os.path.join(out_dir, "edges"))
     nodes.write.mode("overwrite").parquet(os.path.join(out_dir, "nodes"))
 
-    docs = spark.read.schema(DOCS_SCHEMA).parquet(os.path.join(out_dir, "docs"))
     # per-repo metrics table (monitoring/reporting product)
     (docs.groupBy("repo")
      .agg(F.count(F.lit(1)).alias("docs"),
@@ -168,14 +176,17 @@ def build_kg(spark: SparkSession, repos: DataFrame, out_dir: str,
      .withColumn("run_id", F.lit(run_id))
      .write.mode("overwrite").parquet(os.path.join(out_dir, "metrics")))
 
+    # the relabel's left joins are on keys unique per doc_sha and per
+    # node id, and edges_table is a projection: the triples, the
+    # canonical triples and the edges all have n_canon rows
     summary = {
         "run_id": run_id,
         "resumed": skipped,
         "docs_processed_this_run": n_todo_docs,
         "docs_total": docs.count(),
-        "triples_total": all_triples.count(),
+        "triples_total": n_canon,
         "nodes_total": spark.read.parquet(os.path.join(out_dir, "nodes")).count(),
-        "edges_total": spark.read.parquet(os.path.join(out_dir, "edges")).count(),
+        "edges_total": n_canon,
     }
     _stage_lineage(spark, out_dir, run_id, "materialize",
                    summary["edges_total"], t3)

@@ -1,4 +1,4 @@
-"""Session-scoped shared triples materialization.
+"""Session-scoped shared kernel, triples and graph tiers.
 
 At 100 TB the Python kernel pass (corpus -> parse/encode/verify/expand)
 is the expensive stage, and its output — the triples table — is
@@ -6,9 +6,10 @@ materialized ONCE per corpus snapshot: ``jobs/build_kg.py`` writes it as
 a checkpointed parquet stage, and every downstream graph consumer
 (linking, PageRank, k-hop, canonicalization, analytics) reads that
 materialization.  The same economics apply inside a multi-query session
-(bench suite, correctness harness, a notebook): the graph-query family
-shares one corpus->kernel->triples pass per (SparkContext, source dir)
-instead of re-deriving it per query.
+(bench suite, correctness harness, a notebook): every kernel consumer
+shares one corpus->kernel pass per (SparkContext, source dir)
+(``shared_docs``), and the graph-query family one triples tier derived
+from it, instead of re-deriving them per query.
 
 ``localCheckpoint(eager=True)`` is the session-scale analogue of that
 write: one materializing job, lineage cut (no kernel re-run on any
@@ -43,61 +44,71 @@ def _tier(spark: SparkSession, tier: str, sf_dir: str,
     return df
 
 
-def shared_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialized-once triples table for this (session, corpus dir).
-
-    Semantically identical to
-    ``triples_table(process_corpus(corpus_from_documents(spark, sf_dir)))``
-    — callers needing non-default kernel options must derive their own.
-    """
-    from cbor_ld_spark.operators import process_corpus, triples_table
+def shared_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Materialized-once kernel pass for this (session, corpus dir): the
+    per-document results of ``process_corpus(corpus_from_documents(
+    spark, sf_dir), canonical=True)``.  Every kernel consumer of the
+    session derives from it -- the doc-level queries read its flags, the
+    triples tier explodes its triple columns and the canonical tier
+    applies its blank-node maps -- so the corpus crosses the Python
+    boundary once."""
+    from cbor_ld_spark.operators import process_corpus
     from cbor_ld_spark.sources import corpus_from_documents
 
-    def build():
-        t = triples_table(process_corpus(corpus_from_documents(spark, sf_dir)))
-        # narrow the CHECKPOINT, not the kernel: the Python kernel stage
-        # upstream runs at machine width (its own exchange), while the
-        # checkpoint that ~30 downstream queries scan is coalesced to a
-        # row-scaled width — a 32-partition checkpoint of a small tier
-        # taxes every consumer's first stage with per-task overhead
-        # (measured +0.3-0.5 s across the BGP/SPARQL family), while at
-        # larger SFs the target grows with the corpus
-        return t.coalesce(_tier_partitions(spark, sf_dir)) \
-            .localCheckpoint(eager=True)
-
-    return _tier(spark, "triples", sf_dir, build)
+    # narrow the CHECKPOINT, not the kernel: the Python kernel stage
+    # upstream runs at machine width (its own exchange), while the
+    # checkpoint that the triples tier and ~30 downstream queries scan
+    # is coalesced to a row-scaled width -- a 32-partition checkpoint of
+    # a small tier taxes every consumer's first stage with per-task
+    # overhead (measured +0.3-0.5 s across the BGP/SPARQL family),
+    # while at larger SFs the target grows with the corpus
+    return _tier(spark, "docs", sf_dir, lambda: process_corpus(
+        corpus_from_documents(spark, sf_dir), canonical=True)
+        .coalesce(_tier_partitions(spark, sf_dir))
+        .localCheckpoint(eager=True))
 
 
-def _tier_partitions(spark: SparkSession, sf_dir: str,
-                     rows_per_part: int = 1024) -> int:
-    """Checkpoint width for the shared tiers: ~1k source docs per
-    partition (each doc yields ~10 triples), clamped to the session
-    parallelism; full width when the row count is unknowable."""
-    from cbor_ld_spark.plans.partitioning import (
-        input_partitions,
-        parquet_rows,
-    )
+def shared_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Materialized-once triples table for this (session, corpus dir):
+    ``triples_table`` over ``shared_docs`` (and its width), semantically
+    identical to
+    ``triples_table(process_corpus(corpus_from_documents(spark, sf_dir)))``.
+    """
+    from cbor_ld_spark.operators import triples_table
 
-    cap = input_partitions(spark)
+    return _tier(spark, "triples", sf_dir, lambda: triples_table(
+        shared_docs(spark, sf_dir)).localCheckpoint(eager=True))
+
+
+# source docs per partition of a shared tier's checkpoint (each doc
+# yields ~10 triples)
+_DOCS_PER_TIER_PARTITION = 1024
+
+
+def _tier_partitions(spark: SparkSession, sf_dir: str) -> int:
+    """Checkpoint width for the shared tiers: ``_DOCS_PER_TIER_PARTITION``
+    source docs per partition, clamped to the session parallelism; full
+    width when the row count is unknowable."""
+    from cbor_ld_spark.plans.partitioning import parquet_rows
+
+    cap = spark.sparkContext.defaultParallelism
     n = parquet_rows(f"{sf_dir}/documents.parquet")
     if n is None:
         return cap
-    return max(1, min(cap, -(-n // rows_per_part)))
+    return max(1, min(cap, -(-n // _DOCS_PER_TIER_PARTITION)))
 
 
 def shared_canonical_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialized-once ``canonical_triples`` over the shared triples
-    tier — the canonicalization mapInArrow pass is the second-most
-    expensive stage after the kernel, and both the component histogram
-    and the canonical-dedup counts consume its output."""
-    from cbor_ld_spark.operators.canonicalize import canonical_triples
+    """Materialized-once ``canonical_triples`` of the shared triples tier
+    with the maps of ``shared_docs``; both the component histogram and
+    the canonical-dedup counts consume it."""
+    from cbor_ld_spark.operators import canonical_triples
 
-    # same narrow-checkpoint rationale as shared_triples, but via a
-    # real repartition: a coalesce would collapse the (Python-heavy)
-    # canonicalization mapInArrow stage itself, while the shuffle
-    # moves only the small canonical triple rows once
+    # same narrow-checkpoint rationale as shared_triples, via a
+    # repartition of the relabeled rows
     return _tier(spark, "canonical", sf_dir, lambda: (
-        canonical_triples(shared_triples(spark, sf_dir))
+        canonical_triples(shared_triples(spark, sf_dir),
+                          shared_docs(spark, sf_dir))
         .repartition(_tier_partitions(spark, sf_dir))
         .localCheckpoint(eager=True)))
 

@@ -58,7 +58,7 @@ def stream_kg_results(spark: SparkSession, input_dir: str, out_dir: str,
     # unbounded streaming state (no watermark on content hashes); the
     # per-row kernel is stateless and exactly-once under the checkpoint
     processed = process_corpus(stream, registry_id=registry_id,
-                               emit_triples=True, dedup_content=False)
+                               dedup_content=False)
 
     def write_batch(batch_df, batch_id: int):
         # idempotent by batch_id: a retried micro-batch overwrites its own

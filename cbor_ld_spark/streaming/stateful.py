@@ -31,7 +31,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..functions.udfs import evict_pyspark_zip_finders
+from ..functions.udfs import python_task
 
 STATE_SCHEMA = StructType([
     StructField("docs", LongType(), False),
@@ -48,10 +48,10 @@ OUTPUT_SCHEMA = StructType([
 
 
 def _make_update_fn(idle_timeout_ms: int | None):
+    @python_task
     def update(key: Tuple[str],
                pdfs: Iterator[pd.DataFrame],
                state: GroupState) -> Iterator[pd.DataFrame]:
-        evict_pyspark_zip_finders()
         if state.hasTimedOut:
             # idle repo: emit final totals and drop the state row
             docs, ok_docs, triples = state.get
@@ -137,9 +137,9 @@ SESSION_OUTPUT_SCHEMA = StructType([
 
 
 def _session_update_fn(gap_secs: int):
+    @python_task
     def update(key, pdfs: Iterator[pd.DataFrame],
                state: GroupState) -> Iterator[pd.DataFrame]:
-        evict_pyspark_zip_finders()
         if state.hasTimedOut:  # not used (NoTimeout) — defensive
             state.remove()
             return

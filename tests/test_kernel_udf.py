@@ -1,7 +1,7 @@
 """The kernel UDF: one Arrow batch through ``kg_process_batches``
-without Spark, ``ok`` semantics that do not depend on whether the triple
-columns are asked for, and the eviction of PySpark's zip finders that
-every task body runs."""
+without Spark, ``ok`` semantics that do not depend on whether the
+blank-node label map is asked for, the map itself, and the eviction of
+PySpark's zip finders that every task body runs."""
 
 import hashlib
 import json
@@ -15,7 +15,11 @@ from pathlib import Path
 import pyarrow as pa
 import pytest
 
-from cbor_ld_spark.functions.udfs import _process_one, kg_process_batches
+from cbor_ld_spark.functions.udfs import (
+    _process_one,
+    kg_process_batches,
+    python_task,
+)
 from cbor_ld_spark.kernel import content_sha256, parse_json_document
 from cbor_ld_spark.kernel.expand import expand_to_triples
 from cbor_ld_spark.kernel.loader import StaticLoader
@@ -23,6 +27,7 @@ from perfbench.corpus import BAD_KINDS, generate
 
 TRIPLE_COLS = ("t_subj", "t_pred", "t_obj", "t_is_iri", "t_dt", "t_lang",
                "t_graph")
+MAP_COLS = ("t_bnode", "t_canon")
 # fixture samples the encoder quarantines
 SAMPLE_KINDS = {"uncompressible": "InvalidContextEntry",
                 "didKey": "LoadingDocumentFailed"}
@@ -88,6 +93,66 @@ def test_kg_process_batches_without_spark():
             assert r[c] == want[c], (name, c)
 
 
+@pytest.mark.parametrize("seed", [1, 2, 3])
+def test_bnode_map_depends_only_on_doc_sha(seed):
+    """A document with its keys reversed at every level and re-indented
+    keeps its doc_sha and its blank-node -> canonical label map, which
+    is what lets one map per doc_sha stand for every copy."""
+    def reverse(v):
+        if isinstance(v, dict):
+            return {k: reverse(v[k]) for k in reversed(list(v))}
+        if isinstance(v, list):
+            return [reverse(x) for x in v]
+        return v
+
+    checked = 0
+    for row in generate(seed, 400):
+        if row.kind not in ("valid", "fixture"):
+            continue
+        r = _process_one(row.content, 1, True)
+        assert r[1], (row.path, r[2])
+        if not r[15]:
+            continue
+        flipped = json.dumps(reverse(parse_json_document(row.content)),
+                             indent=3)
+        assert flipped != row.content
+        f = _process_one(flipped, 1, True)
+        assert f[0] == r[0], row.path
+        assert dict(zip(f[15], f[16])) == dict(zip(r[15], r[16])), row.path
+        checked += 1
+    assert checked > 50
+
+
+def test_canonical_map_keeps_quarantine_kinds():
+    """Asking for the label map changes no document's outcome: the bad
+    rows and a null quarantine with the same kinds, and the clean rows
+    return the same 15 leading fields with a map that names exactly the
+    blank nodes of their triples."""
+    rows = _batch_inputs()
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([None] * len(rows), pa.string()),
+         pa.array([c for _, c in rows], pa.string())],
+        names=["content_sha", "content"])
+    plain, canon = (
+        next(kg_process_batches(canonical=c)(iter([batch]))).to_pylist()
+        for c in (False, True))
+    for (name, _), p, c in zip(rows, plain, canon):
+        assert (c["ok"], c["error_kind"]) == (p["ok"], p["error_kind"]), name
+        assert p["t_bnode"] is None and p["t_canon"] is None
+        if not p["ok"]:
+            assert c["t_bnode"] is None and c["t_canon"] is None, name
+            continue
+        assert ({k: v for k, v in c.items() if k not in MAP_COLS}
+                == {k: v for k, v in p.items() if k not in MAP_COLS}), name
+        bnodes = {x for x in p["t_subj"] + p["t_graph"] if x.startswith("_:")}
+        bnodes |= {o for o, i in zip(p["t_obj"], p["t_is_iri"])
+                   if i and o.startswith("_:")}
+        assert set(c["t_bnode"]) == bnodes, name
+        assert all(x.startswith("_:g") for x in c["t_canon"]), name
+    assert {p["error_kind"] for p in plain} == {
+        None, *SAMPLE_KINDS.values(), *BAD_KINDS.values(), "InvalidContent"}
+
+
 _MAPS = StaticLoader({"https://ctx.example/maps": {"@context": {
     "name": "https://ex.org/name",
     "friends": {"@id": "https://ex.org/friends", "@container": "@id"},
@@ -95,22 +160,28 @@ _MAPS = StaticLoader({"https://ctx.example/maps": {"@context": {
 }}})
 
 
-@pytest.mark.parametrize("prop,kind", [("friends", "InvalidIdMapValue"),
-                                       ("byType", "InvalidTypeMapValue")])
-def test_ok_covers_expansion_with_and_without_triples(monkeypatch, prop, kind):
+@pytest.mark.parametrize("prop,kind,canonical", [
+    pytest.param(prop, kind, canonical,
+                 id=f"{prop}-{kind}" + ("-canonical" if canonical else ""))
+    for prop, kind in [("friends", "InvalidIdMapValue"),
+                       ("byType", "InvalidTypeMapValue")]
+    for canonical in (False, True)])
+def test_ok_covers_expansion_with_and_without_triples(monkeypatch, prop, kind,
+                                                      canonical):
     """A map container whose value maps a defined term to a string encodes
     and round-trips (the encoder reads the map as a node), but expansion
-    rejects it: the kernel must say so whether or not it returns triples."""
+    rejects it: the kernel must say so, with or without the canonical
+    label map, and return no triples."""
     monkeypatch.setattr(StaticLoader, "default", staticmethod(lambda: _MAPS))
     content = json.dumps({"@context": "https://ctx.example/maps",
                           prop: {"name": "just-a-string"}})
-    with_triples = _process_one(content, 1, True)
-    without = _process_one(content, 1, False)
-    assert with_triples == without
-    doc_sha, ok, _error, error_kind, _json_len, cbor_len, roundtrip_ok = \
-        with_triples[:7]
+    r = _process_one(content, 1, canonical)
+    doc_sha, ok, _error, error_kind, _json_len, cbor_len, roundtrip_ok, \
+        n_triples = r[:8]
     assert (ok, error_kind) == (False, kind)
-    assert cbor_len and roundtrip_ok
+    assert cbor_len and roundtrip_ok and n_triples == 0
+    assert r[8:] == (None,) * 9
+    assert r == _process_one(content, 1, not canonical)
 
 
 _EVICTION_PROBE = """
@@ -171,17 +242,19 @@ def test_evict_pyspark_zip_finders_in_worker_layout(tmp_path):
 
 
 def test_kernel_task_leaves_no_pyspark_zip_finders(spark):
-    """Every task that ran the kernel fn leaves no zip finder (this
-    session adds no zip of its own, so any left is one of Spark's) for
-    the next task's ``invalidate_caches()`` to re-read."""
+    """A task body run through ``python_task`` -- here the kernel fn,
+    then a lazy import of a module no worker has imported yet, which
+    re-creates the finders of Spark's archives -- leaves no zip finder
+    (this session adds no zip of its own, so any left is one of Spark's)
+    for the next task's ``invalidate_caches()`` to re-read: none at the
+    end of a first-pass task, and none at the start of a second-pass
+    task, whose worker ran the first pass."""
     samples = resources.files("cbor_ld_spark") / "fixtures" / "samples"
     content = (samples / "truage.jsonld").read_text(encoding="utf-8")
     kernel = kg_process_batches()
 
-    def probe(batches):
-        import sys
-        import zipimport
-
+    @python_task
+    def body(batches):
         import pyarrow as pa
 
         for _ in batches:
@@ -191,17 +264,33 @@ def test_kernel_task_leaves_no_pyspark_zip_finders(spark):
             names=["content_sha", "content"])
         (out,) = list(kernel(iter([one])))
         assert out.column("ok").to_pylist() == [True]
-        from_zip = hasattr(sys.modules["pyspark"].__loader__, "archive")
-        left = sum(isinstance(f, zipimport.zipimporter)
-                   for f in sys.path_importer_cache.values())
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([from_zip]), pa.array([left], pa.int64())],
-            names=["from_zip", "finders_left"])
+        import colorsys  # noqa: F401 -- a lazy import inside the body
+        yield out
 
-    rows = (spark.range(0, 8, numPartitions=4)
-            .mapInArrow(probe, "from_zip boolean, finders_left long")
-            .collect())
-    assert len(rows) == 4
-    if not any(r.from_zip for r in rows):
+    def probe(batches):
+        import sys
+        import zipimport
+
+        import pyarrow as pa
+
+        def finders():
+            return sum(isinstance(f, zipimport.zipimporter)
+                       for f in sys.path_importer_cache.values())
+
+        at_start = finders()
+        for _ in body(batches):
+            pass
+        from_zip = hasattr(sys.modules["pyspark"].__loader__, "archive")
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([from_zip]), pa.array([at_start], pa.int64()),
+             pa.array([finders()], pa.int64())],
+            names=["from_zip", "finders_at_start", "finders_left"])
+
+    df = spark.range(0, 8, numPartitions=4).mapInArrow(
+        probe, "from_zip boolean, finders_at_start long, finders_left long")
+    first, second = df.collect(), df.collect()
+    assert len(first) == len(second) == 4
+    if not any(r.from_zip for r in first):
         pytest.skip("Python workers do not import pyspark from a zip")
-    assert [r.finders_left for r in rows] == [0] * 4
+    assert [r.finders_left for r in first + second] == [0] * 8
+    assert [r.finders_at_start for r in second] == [0] * 4

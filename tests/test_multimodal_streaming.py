@@ -183,7 +183,7 @@ def test_stateful_repo_stats_stream(spark):
         corpus = synthesize_corpus(spark, 80)
         corpus.write.parquet(inp)
         processed = process_corpus(stream_corpus(spark, inp),
-                                   dedup_content=False, emit_triples=True)
+                                   dedup_content=False)
         q = repo_stats_stream(processed, ckpt, out)
         q.awaitTermination(120)
 

@@ -128,9 +128,7 @@ def test_connected_components_paths_agree(spark):
 
 
 def test_canonicalization_isomorphism_invariance():
-    from cbor_ld_spark.operators.canonicalize import (
-        _canonical_labels_for_component,
-    )
+    from cbor_ld_spark.kernel.rdf import _canonical_labels_for_component
 
     g1 = [("_:x", "p", "_:y", True), ("_:y", "q", "lit", False),
           ("_:x", "r", "http://a", True)]
@@ -158,6 +156,63 @@ def test_build_kg_resume_idempotent(spark):
             assert s1[k] == s2[k], k
     finally:
         shutil.rmtree(out, ignore_errors=True)
+
+
+def test_build_kg_summary_matches_written_tables(spark):
+    """The summary's totals equal recounts of the tables build_kg wrote
+    (triples and edges come from the canonical row count, not a re-read),
+    and every written docs row carries its blank-node map."""
+    from cbor_ld_spark.plans import build_kg
+    from cbor_ld_spark.sources import synthesize_corpus
+
+    out = tempfile.mkdtemp(prefix="kgtest_")
+    try:
+        s = build_kg(spark, synthesize_corpus(spark, 120), out, run_id="r1",
+                     n_buckets=4)
+
+        def n(table):
+            return spark.read.parquet(os.path.join(out, table)).count()
+
+        assert s["docs_total"] == n("docs")
+        assert s["triples_total"] == n("triples") > 0
+        assert s["edges_total"] == n("edges")
+        assert s["nodes_total"] == n("nodes")
+        docs = spark.read.parquet(os.path.join(out, "docs"))
+        assert docs.filter(F.col("ok") & F.col("t_bnode").isNull()).count() == 0
+        assert docs.filter(F.size("t_bnode") > 0).count() > 0
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
+def test_canonical_triples_plan_runs_no_python_of_its_own(spark):
+    """Canonical labels come out of the kernel: every Python node in the
+    plan of ``canonical_triples`` over a fresh canonical ``process_corpus``
+    is the kernel (it emits ``t_subj``), and over materialized inputs,
+    as the shared tier and build_kg read them, relabeling runs no
+    Python at all."""
+    import re
+
+    from cbor_ld_spark.operators import (
+        canonical_triples,
+        process_corpus,
+        triples_table,
+    )
+    from cbor_ld_spark.sources import synthesize_corpus
+
+    def plan(df):
+        df.count()  # resolve AQE to the final plan
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    docs = process_corpus(synthesize_corpus(spark, 200), canonical=True)
+    fresh = plan(canonical_triples(triples_table(docs), docs))
+    python = re.findall(r"MapInArrow[^\n]*", fresh)
+    assert python and all("t_subj" in n for n in python), python
+    assert "BatchEvalPython" not in fresh and "ArrowEvalPython" not in fresh
+
+    docs = docs.localCheckpoint()
+    materialized = plan(canonical_triples(triples_table(docs), docs))
+    assert "MapInArrow" not in materialized, materialized
+    assert "EvalPython" not in materialized, materialized
 
 
 def test_build_kg_leaves_session_overwrite_mode(spark):

@@ -49,7 +49,10 @@ def test_shared_triples_keyed_by_dir_and_clearable(spark):
         a = shared_triples(spark, "/root/testdata/sf0.001")
         b = shared_triples(spark, "/root/testdata/sf0.01")
         assert a is not b
-        assert len(_TIERS) == 2
+        # each dir's triples tier and the kernel pass it derives from
+        assert sorted(k[1] for k in _TIERS) == ["docs", "docs",
+                                                "triples", "triples"]
+        assert len({k[2] for k in _TIERS}) == 2
         clear_shared_triples()
         assert not _TIERS
         c = shared_triples(spark, "/root/testdata/sf0.001")
@@ -77,8 +80,11 @@ def test_shared_canonical_triples_single_materialization(spark):
 
 
 def test_shared_canonical_matches_direct(spark):
-    from cbor_ld_spark.operators import process_corpus, triples_table
-    from cbor_ld_spark.operators.canonicalize import canonical_triples
+    from cbor_ld_spark.operators import (
+        canonical_triples,
+        process_corpus,
+        triples_table,
+    )
     from cbor_ld_spark.plans import (
         clear_shared_triples,
         shared_canonical_triples,
@@ -88,8 +94,9 @@ def test_shared_canonical_matches_direct(spark):
     clear_shared_triples()
     try:
         shared = shared_canonical_triples(spark, "/root/testdata/sf0.001")
-        direct = canonical_triples(triples_table(process_corpus(
-            corpus_from_documents(spark, "/root/testdata/sf0.001"))))
+        docs = process_corpus(corpus_from_documents(
+            spark, "/root/testdata/sf0.001"), canonical=True)
+        direct = canonical_triples(triples_table(docs), docs)
         assert shared.columns == direct.columns
         assert (sorted(map(tuple, shared.collect()))
                 == sorted(map(tuple, direct.collect())))
