@@ -13,6 +13,7 @@ from __future__ import annotations
 import functools
 from collections import Counter, defaultdict
 from collections.abc import Callable
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -26,7 +27,7 @@ def entry(spark: SparkSession) -> DataFrame:
     from cbor_ld_spark.sources import corpus_from_documents
 
     repos = corpus_from_documents(spark, "/root/testdata/sf0.001")
-    return corpus_metrics(process_corpus(repos))
+    return corpus_metrics(process_corpus(repos)).orderBy("repo")
 
 
 # --- query registry ---------------------------------------------------------
@@ -1022,6 +1023,23 @@ _WIN_EPOCH = 1767225600  # 2026-01-01 00:00:00 UTC
 _WIN_SPAN = 4 * 3600     # event times spread over 4 hours
 
 
+@contextmanager
+def _stream_dirs(prefix):
+    """Fresh (input, output, checkpoint) dirs for one stream-parity run,
+    removed afterwards.  The checkpoint is new on every call, so each
+    stateful query records the caller's ``spark.sql.shuffle.partitions``
+    as its state width at first start."""
+    import os
+    import shutil
+    import tempfile
+
+    base = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield tuple(os.path.join(base, d) for d in ("in", "out", "ckpt"))
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
 def _stream_windowed_parity(spark, sf_dir):
     """Watermarked tumbling-window aggregation as a driver-verifiable
     query: stream the corpus (deterministic event_ts from doc_id) into
@@ -1030,10 +1048,6 @@ def _stream_windowed_parity(spark, sf_dir):
     mode finalizes them all.  The emitted windows must equal the batch
     group-by — which is SQL-expressible because the corpus and the
     sniff predicate are pure functions of doc_id."""
-    import os
-    import shutil
-    import tempfile
-
     from cbor_ld_spark.sources import corpus_from_documents
     from cbor_ld_spark.streaming import stream_windowed_health
 
@@ -1043,35 +1057,25 @@ def _stream_windowed_parity(spark, sf_dir):
         "event_ts",
         F.timestamp_seconds(
             F.lit(_WIN_EPOCH) + (doc_id * 137) % _WIN_SPAN))
-    from cbor_ld_spark.plans.partitioning import parquet_rows
-    from cbor_ld_spark.streaming.tuning import scoped_state_partitions
-
-    base = tempfile.mkdtemp(prefix="kgwinparity_")
-    inp, out, ckpt = (os.path.join(base, d) for d in ("in", "out", "ckpt"))
-    try:
+    with _stream_dirs("kgwinparity_") as (inp, out, ckpt):
         b1.write.mode("append").parquet(inp)
-        # state scales with open windows x repos, bounded by corpus
-        # rows: size the state stores to that, not to the core count
-        # (streaming/tuning.py — measured 5.4-9.7 s -> 3.0-3.5 s)
-        n_rows = parquet_rows(f"{sf_dir}/documents.parquet")
-        with scoped_state_partitions(spark, n_rows):
-            stream_windowed_health(spark, inp, out, ckpt,
-                                   window="1 hour",
-                                   watermark="2 hours").awaitTermination(600)
-            # sentinel: max event time 12h pushes the watermark to 10h,
-            # past every data window end (<= 4h); its own window never
-            # finalizes
-            spark.createDataFrame(
-                [("zz/sentinel", "p", "c", "txt", "x")],
-                "repo string, path string, commit string, lang string, "
-                "content string"
-            ).withColumn(
-                "event_ts",
-                F.timestamp_seconds(F.lit(_WIN_EPOCH + 12 * 3600))
-            ).write.mode("append").parquet(inp)
-            stream_windowed_health(spark, inp, out, ckpt,
-                                   window="1 hour",
-                                   watermark="2 hours").awaitTermination(600)
+        stream_windowed_health(spark, inp, out, ckpt,
+                               window="1 hour",
+                               watermark="2 hours").awaitTermination(600)
+        # sentinel: max event time 12h pushes the watermark to 10h,
+        # past every data window end (<= 4h); its own window never
+        # finalizes
+        spark.createDataFrame(
+            [("zz/sentinel", "p", "c", "txt", "x")],
+            "repo string, path string, commit string, lang string, "
+            "content string"
+        ).withColumn(
+            "event_ts",
+            F.timestamp_seconds(F.lit(_WIN_EPOCH + 12 * 3600))
+        ).write.mode("append").parquet(inp)
+        stream_windowed_health(spark, inp, out, ckpt,
+                               window="1 hour",
+                               watermark="2 hours").awaitTermination(600)
         rows = (spark.read.parquet(out)
                 .filter(F.col("repo") != "zz/sentinel")
                 .select(F.col("window_start").cast("long")
@@ -1082,8 +1086,6 @@ def _stream_windowed_parity(spark, sf_dir):
             rows, "window_epoch long, repo string, rows long, "
                   "jsonld_candidates long, bytes long"
         ).orderBy("window_epoch", "repo")
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 def _kg_pred_cooccurrence(spark, sf_dir):
@@ -1470,29 +1472,16 @@ def _stream_sessions_parity(spark, sf_dir):
     SQL-expressible for the oracle; the session-key join checks full
     row equality (n_events, start, duration, value_milli), not just
     counts."""
-    import os
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window
 
     from cbor_ld_spark.streaming import session_stream
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet") \
         .select("user_id", "ts", "value")
-    base = tempfile.mkdtemp(prefix="kgsessparity_")
-    inp, out, ckpt = (os.path.join(base, d) for d in ("in", "out", "ckpt"))
-    try:
-        from cbor_ld_spark.plans.partitioning import parquet_rows
-        from cbor_ld_spark.streaming.tuning import scoped_state_partitions
-
+    with _stream_dirs("kgsessparity_") as (inp, out, ckpt):
         ev.write.parquet(inp)
         stream = spark.readStream.schema(ev.schema).parquet(inp)
-        # state = one entry per user: size the state stores to the
-        # input volume, not the core count (streaming/tuning.py)
-        with scoped_state_partitions(
-                spark, parquet_rows(f"{sf_dir}/events.parquet")):
-            session_stream(stream, ckpt, out).awaitTermination(600)
+        session_stream(stream, ckpt, out).awaitTermination(600)
         closed = spark.read.parquet(out).select(
             "user_id", F.col("session_seq").alias("seq"), "n_events",
             "start_tl", "duration_secs", "value_milli")
@@ -1536,8 +1525,6 @@ def _stream_sessions_parity(spark, sf_dir):
               n_stream == n_batch == n_match)],
             "stream_closed_sessions long, batch_nonfinal_sessions long, "
             "matched_sessions long, parity boolean")
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 def _stream_dedup_parity(spark, sf_dir):
@@ -1551,32 +1538,19 @@ def _stream_dedup_parity(spark, sf_dir):
     are SQL-expressible (DuckDB md5 over the mirrored norm expression);
     NULL-text docs form one hash group (dropDuplicates treats NULL as a
     key value), mirrored via the null-presence term in the oracle."""
-    import os
-    import shutil
-    import tempfile
-
     from cbor_ld_spark.operators.text import _norm
     from cbor_ld_spark.streaming import stream_dedup_keep_first
 
     docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
             .select("doc_id", "text"))
-    base = tempfile.mkdtemp(prefix="kgdedupparity_")
-    inp, out, ckpt = (os.path.join(base, d) for d in ("in", "out", "ckpt"))
-    try:
+    with _stream_dirs("kgdedupparity_") as (inp, out, ckpt):
         (docs.filter(F.col("doc_id") % 2 == 0).coalesce(1)
          .write.mode("append").parquet(inp))
         (docs.filter(F.col("doc_id") % 2 == 1).coalesce(1)
          .write.mode("append").parquet(inp))
-        from cbor_ld_spark.plans.partitioning import parquet_rows
-        from cbor_ld_spark.streaming.tuning import scoped_state_partitions
-
         stream = (spark.readStream.schema(docs.schema)
                   .option("maxFilesPerTrigger", "1").parquet(inp))
-        # dedup state = one hash per distinct content: size the state
-        # stores to the input volume, not the core count
-        with scoped_state_partitions(
-                spark, parquet_rows(f"{sf_dir}/documents.parquet")):
-            stream_dedup_keep_first(stream, out, ckpt).awaitTermination(600)
+        stream_dedup_keep_first(stream, out, ckpt).awaitTermination(600)
         kept = spark.read.parquet(out)
         n_total = docs.count()
         n_distinct = (docs.select(F.md5(_norm(F.col("text"))).alias("h"))
@@ -1588,8 +1562,6 @@ def _stream_dedup_parity(spark, sf_dir):
             [(n_total, n_distinct, n_kept, n_kept_distinct, parity)],
             "total_docs long, distinct_hashes long, kept_docs long, "
             "kept_distinct_hashes long, parity boolean")
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 def _events_user_activity(spark, sf_dir):

@@ -27,16 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.udfs import python_task
-from .text import _norm
-
-
-def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cbor_ld_spark.plans.partitioning import parquet_rows, spread_input
-
-    # single-file scan = one input partition: spread so the shingle/
-    # hash map stages downstream run at machine width (guide §2.5)
-    p = f"{sf_dir}/documents.parquet"
-    return spread_input(spark.read.parquet(p), rows=parquet_rows(p))
+from .text import _norm, load_documents  # noqa: F401
 
 
 def exact_duplicates(docs: DataFrame) -> DataFrame:

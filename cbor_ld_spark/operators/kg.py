@@ -45,9 +45,12 @@ def process_corpus(repos: DataFrame, registry_id: int = 1,
     ``dedup_content=True`` (default) runs the Python kernel once per
     *distinct* content hash and joins provenance back — the Spark-first
     answer to duplicate files (vendored deps, forks) dominating a source
-    corpus: work scales with unique documents, not rows.  The dropDup
-    is a partial-aggregated shuffle on the uniform hash key; the
-    join-back re-attaches (repo, path, commit) JVM-side, so results are
+    corpus: work scales with unique documents, not rows.  The dedup is
+    a partial-aggregated shuffle on the uniform hash key: a ``distinct``
+    over ``(content_sha, content)``, which keeps the same rows as a
+    dedup on ``content_sha`` alone (``content`` is a function of its
+    hash) but plans as a hash aggregate with no sort.  The join-back
+    re-attaches (repo, path, commit) JVM-side, so results are
     row-for-row identical to the per-row path (doc_sha, bnode labels and
     triples are pure functions of content).  ``canonical=True`` adds
     each document's blank-node label map (``t_bnode``/``t_canon``), which
@@ -65,14 +68,14 @@ def process_corpus(repos: DataFrame, registry_id: int = 1,
         fn = kg_process_batches(registry_id=registry_id,
                                 canonical=canonical)
         # hash-repartition on the dedup key with an EXPLICIT count, then
-        # dropDuplicates: one exchange total (the aggregation reuses the
+        # distinct: one exchange total (the aggregation reuses the
         # partitioning), and AQE's byte-based coalescer cannot fold the
         # kernel stage back to one partition — a 1 MB batch of distinct
         # documents is minutes of Python work, which the coalescer's
         # sizing cannot see (guide §2.2/§4)
         distinct = (spread_input(candidates.select("content_sha", "content"),
                                  by="content_sha")
-                    .dropDuplicates(["content_sha"]))
+                    .distinct())
         results = distinct.mapInArrow(fn, schema=KERNEL_RESULT_SCHEMA)
         return candidates.drop("content").join(results, "content_sha") \
             .select(*[f.name for f in DOC_RESULT_SCHEMA.fields])
@@ -155,5 +158,4 @@ def corpus_metrics(processed: DataFrame) -> DataFrame:
             F.sum(F.coalesce(F.col("cbor_len"), F.lit(0)).cast("long")).alias("cbor_bytes"),
             F.sum(F.col("json_len").cast("long")).alias("json_bytes"),
         )
-        .orderBy("repo")
     )

@@ -31,17 +31,13 @@ from ..functions.udfs import python_task
 
 
 def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cbor_ld_spark.plans.partitioning import parquet_rows, spread_input
+    from cbor_ld_spark.plans.partitioning import spread_input
 
     # single-file scan = one input partition: spread so the vector-math
     # map stages (signature matmuls, rerank dots) downstream run in
-    # parallel (guide §2.5); these consumers are LINEAR per vector, so
-    # ~512 vectors per task amortizes the Python-task overhead — the
-    # quadratic exact tier (dedup.embedding_near_duplicates) spreads to
-    # full width in its own loader
-    p = f"{sf_dir}/embeddings.parquet"
-    return spread_input(spark.read.parquet(p), rows=parquet_rows(p),
-                        rows_per_task=512).select(
+    # parallel (guide §2.5)
+    emb = spread_input(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
+    return emb.select(
         "vec_id", "label",
         F.col("embedding").cast("array<double>").alias("v"),
     )

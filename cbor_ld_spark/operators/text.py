@@ -32,12 +32,11 @@ LANG_STOPWORDS = (
 
 
 def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cbor_ld_spark.plans.partitioning import parquet_rows, spread_input
+    from cbor_ld_spark.plans.partitioning import spread_input
 
     # single-file scan = one input partition: spread so the regex/
     # explode map stages downstream run at machine width (guide §2.5)
-    p = f"{sf_dir}/documents.parquet"
-    return spread_input(spark.read.parquet(p), rows=parquet_rows(p))
+    return spread_input(spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
 
 def _norm(col):

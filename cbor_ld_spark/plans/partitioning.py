@@ -1,4 +1,4 @@
-"""Scale-adaptive input-parallelism repair (optimization guide §2.5/§6).
+"""Input-parallelism repair for single-split scans (optimization guide §2.5/§6).
 
 The driver-generated testdata tables are single parquet files far below
 ``spark.sql.files.maxPartitionBytes``, so every scan yields ONE input
@@ -29,7 +29,7 @@ def parquet_rows(path: str) -> int | None:
     """Row count from parquet footer metadata — no Spark job (~ms).
 
     Returns None for filesystems pyarrow cannot reach (hdfs://, dbfs:/);
-    callers then fall back to full-width spreading.
+    callers then fall back to full width.
     """
     try:
         import pyarrow.dataset as ds
@@ -39,9 +39,7 @@ def parquet_rows(path: str) -> int | None:
         return None
 
 
-def spread_input(df: DataFrame, by: str | None = None,
-                 rows: int | None = None,
-                 rows_per_task: int = 256) -> DataFrame:
+def spread_input(df: DataFrame, by: str | None = None) -> DataFrame:
     """Round-robin (or hash, with ``by``) repartition of a small scanned
     input to the session's ``defaultParallelism``, so expensive map
     stages that follow are not serialized onto the scan's single input
@@ -51,29 +49,8 @@ def spread_input(df: DataFrame, by: str | None = None,
     EXPLICIT partition count — AQE leaves explicit counts alone, which
     is the point: the byte-based coalescer would fold the tiny exchange
     back to one partition and re-serialize the downstream compute.
-
-    When ``rows`` is known (parquet footer, or a caller-side limit), the
-    target is capped at ``ceil(rows / rows_per_task)``: every Python-
-    boundary task carries a fixed CPU cost before its first row.  PySpark's
-    ``worker_util.setup_spark_files`` calls ``importlib.invalidate_caches()``
-    before each task, which re-reads the central directory of every
-    cached zip finder: on a 4-core box with Python 3.11.7 that was
-    ~0.24 s of Python-worker CPU per task (a no-op ``mapInArrow`` over
-    this exchange, 4 tasks: 0.97 s per pass).  Every task body of this
-    package first calls ``functions.udfs.evict_pyspark_zip_finders``,
-    which drops the finders of Spark's own archives, so a task that
-    follows one on the same worker costs ~0.024 s (0.095 s per pass).
-    The fixed cost still counts: fanning 200 rows across 32 tasks was
-    measured at +2 s on a 3-Python-stage query before the eviction, and
-    pure-JVM consumers pay ~0.3-0.4 s per query for 32 near-empty tasks
-    (measured across the cheap dedup/corpus aggregations).  256
-    rows/task balanced the two at bench scale against the old per-task
-    cost; unbounded inputs spread to full width — the safe direction at
-    scale.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
-    if rows is not None:
-        target = max(1, min(target, -(-rows // rows_per_task)))
     if by is not None:
         return df.repartition(target, F.col(by))
     return df.repartition(target)

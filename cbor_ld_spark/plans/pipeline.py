@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from cbor_ld_spark.operators.kg import (
     DOC_COLUMNS,
     canonical_triples,
+    corpus_metrics,
     process_corpus,
     triples_table,
 )
@@ -164,15 +165,7 @@ def build_kg(spark: SparkSession, repos: DataFrame, out_dir: str,
     nodes.write.mode("overwrite").parquet(os.path.join(out_dir, "nodes"))
 
     # per-repo metrics table (monitoring/reporting product)
-    (docs.groupBy("repo")
-     .agg(F.count(F.lit(1)).alias("docs"),
-          F.sum(F.col("ok").cast("long")).alias("ok_docs"),
-          F.sum(F.coalesce(F.col("roundtrip_ok").cast("long"), F.lit(0)))
-          .alias("roundtrip_ok_docs"),
-          F.sum("n_triples").alias("triples"),
-          F.sum(F.coalesce(F.col("cbor_len"), F.lit(0)).cast("long"))
-          .alias("cbor_bytes"),
-          F.sum(F.col("json_len").cast("long")).alias("json_bytes"))
+    (corpus_metrics(docs)
      .withColumn("run_id", F.lit(run_id))
      .write.mode("overwrite").parquet(os.path.join(out_dir, "metrics")))
 

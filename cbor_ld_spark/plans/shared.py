@@ -88,7 +88,11 @@ _DOCS_PER_TIER_PARTITION = 1024
 def _tier_partitions(spark: SparkSession, sf_dir: str) -> int:
     """Checkpoint width for the shared tiers: ``_DOCS_PER_TIER_PARTITION``
     source docs per partition, clamped to the session parallelism; full
-    width when the row count is unknowable."""
+    width when the row count is unknowable.
+
+    Unlike the input spreads, this width is measured on 4 cores: an
+    un-narrowed ``shared_docs`` checkpoint raised query_mix's set-up
+    PSS from 1,693 to 1,862 MB."""
     from cbor_ld_spark.plans.partitioning import parquet_rows
 
     cap = spark.sparkContext.defaultParallelism

@@ -139,19 +139,15 @@ def corpus_from_documents(spark: SparkSession, sf_dir: str,
     function of the driver-generated testdata (same variant cycling and
     mega-repo skew as :func:`synthesize_corpus`).
     """
-    from cbor_ld_spark.plans.partitioning import parquet_rows, spread_input
+    from cbor_ld_spark.plans.partitioning import spread_input
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
     if limit_ids is not None:
         docs = docs.filter(F.col("doc_id") < limit_ids)
     # single-file input = one scan partition: spread the 8-byte ids
     # BEFORE content generation so the templating regex + sha and the
-    # downstream kernel pass run at machine width (guide §2.5); the
-    # row-aware cap keeps limit_ids-bounded probes from paying 32
-    # Python-task overheads for a few hundred rows
-    n = limit_ids if limit_ids is not None \
-        else parquet_rows(f"{sf_dir}/documents.parquet")
-    docs = spread_input(docs, rows=n)
+    # downstream kernel pass run at machine width (guide §2.5)
+    docs = spread_input(docs)
     variants = _load_payload_variants()
     names = F.array(*[F.lit(v[0]) for v in variants])
     langs = F.array(*[F.lit(v[1]) for v in variants])

@@ -431,9 +431,13 @@ def test_build_kg_analytics_reuse_crash_safe(spark):
 
 def test_dedup_first_pipeline_plan_hygiene(spark, tmp_path):
     """The dedup-first kernel dataflow plans exactly one shuffle (the
-    content_sha dropDuplicates), exactly one Python stage (the kernel
+    content_sha exchange), exactly one Python stage (the kernel
     mapInArrow over *distinct* contents, below the join-back), and no
-    row-at-a-time Python anywhere."""
+    row-at-a-time Python anywhere.  Below the kernel the dedup is a hash
+    aggregate: no SortAggregate and no Sort, which a ``first(content)``
+    aggregate would plan."""
+    import re
+
     from cbor_ld_spark.operators import process_corpus
     from cbor_ld_spark.sources import corpus_from_documents
 
@@ -453,3 +457,19 @@ def test_dedup_first_pipeline_plan_hygiene(spark, tmp_path):
     join_pos = max(plan.find("BroadcastHashJoin"), plan.find("SortMergeJoin"))
     assert join_pos >= 0, plan
     assert plan.find("MapInArrow") > join_pos, plan
+
+    # the kernel's subtree: the lines indented deeper than its node
+    lines = plan.splitlines()
+    top = next(i for i, ln in enumerate(lines) if "MapInArrow" in ln)
+    col = lines[top].index("MapInArrow")
+    names = []
+    for ln in lines[top + 1:]:
+        body = ln.lstrip(" :+-")
+        if len(ln) - len(body) <= col:
+            break
+        names.append(re.match(r"(?:\*\(\d+\) )?(\w+)", body).group(1))
+    subtree = "\n".join(lines[top:top + 1 + len(names)])
+    assert "SortAggregate" not in names and "Sort" not in names, subtree
+    assert "HashAggregate" in names, subtree
+    assert len(re.findall(r"Exchange hashpartitioning\(content_sha#\d+, ",
+                          subtree)) == 1, subtree
