@@ -360,7 +360,10 @@ def _kg_degree_distribution(spark, sf_dir):
 def _kg_pagerank(spark, sf_dir):
     """Fixed-iteration PageRank over the extracted entity graph (top 25
     by centrality).  Value-verified against a full driver-side replay of
-    corpus -> kernel -> edges -> 5 PageRank iterations."""
+    corpus -> kernel -> edges -> 5 PageRank iterations.  Graphs of at
+    most ``graph.DRIVER_GRAPH_EDGES`` edges iterate on the driver (the
+    gate ``connected_components`` shares); larger ones run the
+    distributed loop."""
     from cbor_ld_spark.operators.graph import pagerank
     from cbor_ld_spark.plans import shared_entity_edges
 
@@ -371,8 +374,9 @@ def _kg_pagerank(spark, sf_dir):
 def _kg_pagerank_dangling(spark, sf_dir):
     """PageRank with dangling-node mass redistributed each iteration
     (rank sums stay ~1.0 — the variant for comparing ranks ACROSS
-    graphs).  Same replay oracle, same plan shape plus one 1-row
-    aggregation per iteration."""
+    graphs).  Same replay oracle and the same ``graph.DRIVER_GRAPH_EDGES``
+    gate; the distributed loop adds one 1-row aggregation per
+    iteration."""
     from cbor_ld_spark.operators.graph import pagerank
     from cbor_ld_spark.plans import shared_entity_edges
 
@@ -1245,7 +1249,8 @@ def _kg_pagerank_weighted(spark, sf_dir):
     """PageRank over evidence-weighted entity edges (weight = number of
     triple instances asserting the edge): contributions are
     rank * weight / weighted_out_degree.  Verified against the same
-    driver-side replay with multiplicities."""
+    driver-side replay with multiplicities; same
+    ``graph.DRIVER_GRAPH_EDGES`` gate as ``kg_pagerank``."""
     from cbor_ld_spark.operators.graph import entity_edges_weighted, pagerank
     from cbor_ld_spark.plans import shared_triples
 
@@ -1700,28 +1705,36 @@ def _kg_canonical_dedup(spark, sf_dir):
               "canonical_subjects long")
 
 
-_SKETCH_RSD = 0.02  # approx_count_distinct relative standard deviation
+_SKETCH_RSD = 0.02  # relative standard deviation bound of the sketches
+_SKETCH_LG_K = 12  # 2^12 registers: RSE ~1.6%, inside _SKETCH_RSD
 
 
 def _kg_cardinality_sketch(spark, sf_dir):
-    """Node-cardinality sketches (approx_count_distinct; SURVEY §2B).
+    """Node-cardinality sketches (DataSketches HLL; SURVEY §2B).
 
     HLL sketches are the 10^12-scale way to size dictionaries and plan
-    bucket counts without an exact distinct shuffle.  To make the sketch
-    value-verifiable by the strict hash gate, the query also computes
-    the exact distincts (the *gate-scale verification tier* — never the
-    10^12 path) and emits, per dimension, the exact count plus a boolean
-    asserting the sketch landed within 3x its configured rsd of it; the
-    oracle hash-matches the exact counts and expects TRUE for every
-    bound (HLL is deterministic for a fixed input, so this is stable).
+    bucket counts without an exact distinct shuffle.  The sketch is
+    Spark's DataSketches HLL (``hll_sketch_agg`` at lgConfigK 12, the
+    one ``approx_neighborhood_function`` uses), which merges and
+    estimates far cheaper than HLL++ ``approx_count_distinct``.  To
+    make the sketch value-verifiable by the strict hash gate, the query
+    also computes the exact distincts (the *gate-scale verification
+    tier* — never the 10^12 path) and emits, per dimension, the exact
+    count plus a boolean asserting the sketch landed within 3x the
+    ``_SKETCH_RSD`` bound of it; the oracle hash-matches the exact
+    counts and expects TRUE for every bound (HLL is deterministic for a
+    fixed input, so this is stable).
     """
     from cbor_ld_spark.plans import shared_triples
 
+    def sketch(c):
+        return F.hll_sketch_estimate(F.hll_sketch_agg(c, _SKETCH_LG_K))
+
     t = shared_triples(spark, sf_dir)
     agg = t.agg(
-        F.approx_count_distinct("subj", _SKETCH_RSD).alias("a_subj"),
-        F.approx_count_distinct("pred", _SKETCH_RSD).alias("a_pred"),
-        F.approx_count_distinct("obj", _SKETCH_RSD).alias("a_obj"),
+        sketch("subj").alias("a_subj"),
+        sketch("pred").alias("a_pred"),
+        sketch("obj").alias("a_obj"),
         F.countDistinct("subj").alias("exact_subjects"),
         F.countDistinct("pred").alias("exact_predicates"),
         F.countDistinct("obj").alias("exact_objects"),

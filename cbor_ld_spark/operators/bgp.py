@@ -611,7 +611,12 @@ def _seeded_eval(triples: DataFrame, steps: list[tuple],
     positions.  ``reverse=True`` evaluates right-to-left (ground
     OBJECT): steps in reverse order with each leaf step's edge frame
     direction swapped — exactly the inverse path (applied recursively
-    to nested groups)."""
+    to nested groups).
+
+    Only what a BFS loop re-reads is localCheckpoint'd: the layers of
+    ``plus``/``star`` steps (inside ``_bfs_fix``), their results, and
+    their edge frames.  ``one``/``opt`` steps stay lazy and fold into
+    the next materializing job instead of paying one of their own."""
     ordered = list(reversed(steps)) if reverse else list(steps)
     for i, step in enumerate(ordered):
         preds, mod = _validate_step(step, i)
@@ -639,17 +644,16 @@ def _seeded_eval(triples: DataFrame, steps: list[tuple],
             if reverse:
                 edges = edges.select(F.col("dst").alias("src"),
                                      F.col("src").alias("dst"))
-            edges = edges.localCheckpoint()
+            if mod in ("plus", "star"):
+                edges = edges.localCheckpoint()
 
             def step_fn(fr, _e=edges):
                 return (fr.join(_e, fr.node == _e.src)
                         .select(F.col("dst").alias("node")))
         if mod == "one":
-            frontier = step_fn(frontier).distinct().localCheckpoint()
+            frontier = step_fn(frontier).distinct()
         elif mod == "opt":
-            frontier = (step_fn(frontier)
-                        .unionByName(frontier)
-                        .distinct().localCheckpoint())
+            frontier = step_fn(frontier).unionByName(frontier).distinct()
         elif mod == "plus":
             frontier = _bfs_fix(frontier, step_fn, max_layers)
         else:  # star
@@ -677,8 +681,7 @@ def _seeded_path_nodes(triples: DataFrame, steps: list[tuple],
     is only a runaway guard: BFS over a finite graph terminates within
     the node count regardless."""
     frontier = (_graph_terms(triples)
-                .filter(F.col("node") == F.lit(seed))
-                .localCheckpoint())
+                .filter(F.col("node") == F.lit(seed)))
     return _seeded_eval(triples, steps, frontier, reverse,
                         1 << (max_iters - 1))
 

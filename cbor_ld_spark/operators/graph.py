@@ -9,12 +9,17 @@ fixed-iteration dataflows so the DuckDB oracle can replay them exactly
 
 Scale shapes:
 
-* ``pagerank`` — the classic iterative join: contributions =
-  edges join ranks on src (shuffle on src, uniform after dedup),
-  summed per dst with map-side partial aggregation.  The edge frame is
-  localCheckpoint'd once and reused every iteration (lineage cut —
-  round-1 lesson: each unpersisted reuse would replay the kernel), and
-  ranks persist per iteration with the previous handle released.
+* ``pagerank`` — hybrid, like ``linking.connected_components``: at or
+  below ``DRIVER_GRAPH_EDGES`` edges the edge list is collected as
+  Arrow and iterated in numpy on the driver (the loop below runs ~9
+  Spark jobs per iteration, each paying Spark's fixed scheduling cost:
+  47 for ``kg_pagerank`` at sf0.001).  Above it, the classic iterative
+  join: contributions = edges join ranks on src (shuffle on src,
+  uniform after dedup), summed per dst with map-side partial
+  aggregation.  The edge frame is localCheckpoint'd once and reused
+  every iteration (lineage cut — round-1 lesson: each unpersisted
+  reuse would replay the kernel), and ranks persist per iteration
+  with the previous handle released.
   Fixed ``iters`` (no convergence check) keeps the job count bounded
   and the result a pure function of the input.
 * ``k_hop`` — frontier expansion: k semi-join rounds, each a join on
@@ -25,7 +30,36 @@ Scale shapes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from typing import TYPE_CHECKING
+
+from pyspark.sql import DataFrame, SparkSession, functions as F
+
+if TYPE_CHECKING:
+    import pyarrow as pa
+
+# Edge count at or below which the hybrid graph operators (pagerank,
+# personalized_pagerank, linking.connected_components) collect the edge
+# list and run on the driver; the value is connected_components' original
+# union-find gate, now shared.
+DRIVER_GRAPH_EDGES = 2_000_000
+
+
+def driver_sized(edges: DataFrame, threshold: int
+                 ) -> tuple[DataFrame, pa.Table | None]:
+    """``edges`` localCheckpoint'd once, and its rows as an Arrow table
+    if there are at most ``threshold`` of them (else ``None``): the gate
+    of every hybrid graph operator.
+
+    The checkpoint feeds whichever path runs, so the edge lineage runs
+    once.  Sizing and collecting are then one bounded job: a single task
+    reads the checkpoint until it holds ``threshold + 1`` rows and sends
+    them as Arrow.  A driver-sized graph is thus collected by the job
+    that sizes it; a larger one costs the gate those rows, never a full
+    scan (``count()`` would scan everything, in two jobs under adaptive
+    execution)."""
+    edges = edges.localCheckpoint()
+    head = edges.coalesce(1).limit(max(threshold + 1, 0)).toArrow()
+    return edges, (head if head.num_rows <= threshold else None)
 
 
 def entity_edges(triples: DataFrame) -> DataFrame:
@@ -56,7 +90,8 @@ def out_degrees(edges: DataFrame) -> DataFrame:
 
 def pagerank(edges: DataFrame, iters: int = 5,
              damping: float = 0.85, round_to: int = 6,
-             redistribute_dangling: bool = False) -> DataFrame:
+             redistribute_dangling: bool = False,
+             driver_threshold: int = DRIVER_GRAPH_EDGES) -> DataFrame:
     """Fixed-iteration PageRank over the distinct edge list.
 
     rank_0 = 1/N for the N distinct nodes (sources + destinations);
@@ -78,9 +113,21 @@ def pagerank(edges: DataFrame, iters: int = 5,
     output granularity of 1e-6 — a boundary flip needs a rank within
     ~1e-18 of a 0.5e-6 rounding edge (odds ~1e-12 per value), the
     accepted residual for an order-free distributed aggregation.
+
+    Hybrid execution (``driver_sized``): at or below
+    ``driver_threshold`` edges (default ``DRIVER_GRAPH_EDGES``, the
+    constant ``linking.connected_components`` gates on too) the
+    iterations run on the driver over the collected edge list, with the
+    same arithmetic and Spark's own rounding; above it, the distributed
+    loop below.  Both paths give the same rows.
     """
     weighted = "weight" in edges.columns
-    edges = edges.localCheckpoint()  # cut lineage once; reused 5+1 times
+    # the gate's checkpoint cuts lineage once; the loop reuses it 5+1 times
+    edges, table = driver_sized(edges, driver_threshold)
+    if table is not None:
+        return _driver_ranks(edges.sparkSession, table, iters, damping,
+                             round_to,
+                             redistribute_dangling=redistribute_dangling)
     # nodes is joined every iteration: materialize it once too, or each
     # new_ranks join would re-run the union+distinct shuffle
     nodes = (edges.select(F.col("src").alias("node"))
@@ -140,6 +187,78 @@ def pagerank(edges: DataFrame, iters: int = 5,
             .localCheckpoint())
     return ranks.select("node", F.round("rank", round_to).alias("rank")) \
         .localCheckpoint()
+
+
+def _driver_ranks(spark: SparkSession, t: pa.Table, iters: int,
+                  damping: float, round_to: int, *,
+                  redistribute_dangling: bool = False,
+                  seeds: DataFrame | None = None) -> DataFrame:
+    """The driver path of ``pagerank`` (``seeds=None``) and
+    ``personalized_pagerank``: the distributed loop's arithmetic over
+    the edge table ``t`` that ``driver_sized`` collected, in numpy.
+
+    Node ids are dictionary-encoded once; each iteration's inbound sums
+    are one ``np.bincount``, a sequential sum over the edges in
+    collected order like the oracle's replay.  Per edge the contribution
+    is ``rank * weight / out_deg`` for ``pagerank`` (weight 1.0 without a
+    ``weight`` column, and ``x * 1.0 == x``) and ``rank / out_deg`` for
+    ``personalized_pagerank``, whose loop ignores weights except in the
+    out-degree; the base term is the loop's literal ``(1-d)/n`` (plus
+    ``d * dangling / n``) or the seed teleport.  The join semantics
+    carry over too: a null node id counts as a node but neither sends
+    nor receives rank.  The ranks go back to Spark as an Arrow table,
+    which needs no Python worker, and are rounded there by ``F.round``
+    so ties round HALF_UP exactly as on the Spark path."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    weighted = "weight" in t.column_names
+    m = t.num_rows
+    ids = pc.dictionary_encode(
+        pa.concat_arrays([t.column("src").combine_chunks(),
+                          t.column("dst").combine_chunks()]),
+        null_encoding="encode")
+    nodes = ids.dictionary
+    n = len(nodes)
+    idx = ids.indices.to_numpy()
+    si, di = idx[:m], idx[m:]
+    live = pc.is_valid(nodes).to_numpy(zero_copy_only=False)
+    w = (t.column("weight").to_numpy().astype(np.float64) if weighted
+         else np.ones(m))
+    sends = live[si]
+    out_deg = np.bincount(si[sends], weights=w[sends], minlength=n)
+    dangling = live.copy()
+    dangling[si[sends]] = False
+    keep = sends & live[di]
+    cs, cd, deg = si[keep], di[keep], out_deg[si[keep]]
+    cw = w[keep] if seeds is None else 1.0
+
+    if seeds is None:
+        if n == 0:
+            return spark.createDataFrame([], "node string, rank double")
+        rank, teleport = np.full(n, 1.0 / n), None
+    else:
+        wanted = seeds.select("node").toArrow().column("node")
+        is_seed = live & pc.is_in(
+            nodes, value_set=wanted.combine_chunks().cast(nodes.type)
+        ).to_numpy(zero_copy_only=False)
+        n_seeds = int(is_seed.sum())
+        if n_seeds == 0:
+            return spark.createDataFrame([], "node string, rank double")
+        rank = np.where(is_seed, 1.0 / n_seeds, 0.0)
+        teleport = np.where(is_seed, (1.0 - damping) / n_seeds, 0.0)
+    for _ in range(iters):
+        inbound = np.bincount(cd, weights=rank[cs] * cw / deg, minlength=n)
+        if teleport is not None:
+            base = teleport
+        else:
+            base = (1.0 - damping) / n
+            if redistribute_dangling:
+                base = base + damping * float(rank[dangling].sum()) / n
+        rank = base + damping * inbound
+    return (spark.createDataFrame(pa.table({"node": nodes, "rank": rank}))
+            .select("node", F.round("rank", round_to).alias("rank")))
 
 
 def k_hop(edges: DataFrame, seeds: DataFrame, k: int = 3) -> DataFrame:
@@ -458,15 +577,21 @@ def adjacency_lsh_candidates(edges: DataFrame, num_hashes: int = 24,
 
 def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
                           iters: int = 5, damping: float = 0.85,
-                          round_to: int = 6) -> DataFrame:
+                          round_to: int = 6,
+                          driver_threshold: int = DRIVER_GRAPH_EDGES
+                          ) -> DataFrame:
     """PageRank with teleportation restricted to a seed set — "what is
     central *relative to these entities*", the KG neighborhood-ranking
     primitive.  rank_0 = 1/|S| on seeds (0 elsewhere); each iteration
     the (1-d) teleport mass returns to the seeds uniformly.  Same
-    iterative-join shape as ``pagerank``; the seed frame is broadcast
-    (seed sets are small by definition).
+    hybrid gate (``DRIVER_GRAPH_EDGES``) and driver path as
+    ``pagerank``; above the threshold, the same iterative-join shape,
+    with the seed frame broadcast (seed sets are small by definition).
     """
-    edges = edges.localCheckpoint()
+    edges, table = driver_sized(edges, driver_threshold)
+    if table is not None:
+        return _driver_ranks(edges.sparkSession, table, iters, damping,
+                             round_to, seeds=seeds)
     nodes = (edges.select(F.col("src").alias("node"))
              .unionByName(edges.select(F.col("dst").alias("node")))
              .distinct()

@@ -30,7 +30,14 @@ joins — the standard Spark-first CC formulation:
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING
+
 from pyspark.sql import DataFrame, functions as F
+
+from cbor_ld_spark.operators.graph import DRIVER_GRAPH_EDGES, driver_sized
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 SAME_AS_PREDICATES = (
     "http://www.w3.org/2002/07/owl#sameAs",
@@ -73,31 +80,25 @@ def equivalence_edges(triples: DataFrame,
     return same_as.unionByName(adjacency).unionByName(membership).distinct()
 
 
-DRIVER_CC_THRESHOLD = 2_000_000
-
-
 def connected_components(edges: DataFrame, max_iter: int = 25,
                          checkpoint_every: int = 3,
-                         driver_threshold: int = DRIVER_CC_THRESHOLD) -> DataFrame:
+                         driver_threshold: int = DRIVER_GRAPH_EDGES) -> DataFrame:
     """(src, dst) edge list -> (id, component) with component = min node id.
 
     Deterministic: labels are node-id strings, min is lexicographic.
 
-    Hybrid execution: below ``driver_threshold`` edges the graph fits the
-    driver trivially and a union-find runs in milliseconds — iterative
-    Spark jobs would pay seconds of scheduling per round for nothing.
-    Above it, the distributed label-propagation loop runs (the path that
-    holds at 10^12 scale); both paths produce identical output.
+    Hybrid execution, behind the same gate (``graph.driver_sized``) and
+    default threshold (``graph.DRIVER_GRAPH_EDGES``) as ``pagerank``: at
+    or below ``driver_threshold`` edges the graph fits the driver
+    trivially and a union-find runs in milliseconds — iterative Spark
+    jobs would pay seconds of scheduling per round for nothing.  Above
+    it, the distributed label-propagation loop runs (the path that holds
+    at 10^12 scale); both paths produce identical output.
     """
     spark = edges.sparkSession
-    # One materialization serves both the hybrid-path gate (count) and
-    # whichever path runs: without this, the union+distinct edge lineage
-    # would execute twice (once for count, once for the collect / sym
-    # build) — a full extra shuffle at scale.
-    edges = edges.localCheckpoint()
-    n_edges = edges.count()
-    if n_edges <= driver_threshold:
-        return _driver_union_find(spark, edges)
+    edges, table = driver_sized(edges, driver_threshold)
+    if table is not None:
+        return _driver_union_find(spark, table)
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
     # Symmetrize once; repartition by src so every iteration's join reuses
@@ -179,8 +180,9 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
     return result
 
 
-def _driver_union_find(spark, edges: DataFrame) -> DataFrame:
-    """Exact union-find on collected edges (small-graph fast path)."""
+def _driver_union_find(spark, edges: pa.Table) -> DataFrame:
+    """Exact union-find on the edge table ``driver_sized`` collected
+    (small-graph fast path)."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -191,10 +193,8 @@ def _driver_union_find(spark, edges: DataFrame) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    # collect, not toLocalIterator: the caller has already bounded the
-    # edge count (driver_threshold), and toLocalIterator schedules one
-    # sequential job per partition — 32 tiny jobs where one suffices
-    for src, dst in edges.select("src", "dst").collect():
+    for src, dst in zip(edges.column("src").to_pylist(),
+                        edges.column("dst").to_pylist()):
         parent.setdefault(src, src)
         parent.setdefault(dst, dst)
         rs, rd = find(src), find(dst)

@@ -22,25 +22,40 @@ process never pins dead-session storage.
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 # (application id, tier, source dir) -> materialized frame
 _TIERS: dict[tuple[str, str, str], DataFrame] = {}
+# one build lock per key; _GUARD covers both dicts' membership
+_LOCKS: dict[tuple[str, str, str], threading.Lock] = {}
+_GUARD = threading.Lock()
 
 
 def _tier(spark: SparkSession, tier: str, sf_dir: str,
           build: Callable[[], DataFrame]) -> DataFrame:
     """The memoized ``build()`` of one tier for this (session, corpus
-    dir); a miss first evicts every entry of another SparkContext."""
+    dir); a miss first evicts every entry of another SparkContext.
+
+    Concurrent callers of one key wait on that key's lock, so the tier
+    is built once; other keys build in parallel.  A build takes the
+    locks of the tiers it derives from (triples -> docs), always in
+    that one direction, so the nesting cannot deadlock."""
     key = (spark.sparkContext.applicationId, tier, str(sf_dir))
-    df = _TIERS.get(key)
-    if df is None:
-        for stale in [k for k in _TIERS if k[0] != key[0]]:
-            _TIERS.pop(stale, None)
-        df = build()
-        _TIERS[key] = df
+    with _GUARD:
+        lock = _LOCKS.setdefault(key, threading.Lock())
+    with lock:
+        df = _TIERS.get(key)
+        if df is None:
+            with _GUARD:
+                for memo in (_TIERS, _LOCKS):
+                    for stale in [k for k in memo if k[0] != key[0]]:
+                        del memo[stale]
+            df = build()
+            with _GUARD:
+                _TIERS[key] = df
     return df
 
 
@@ -132,4 +147,5 @@ def shared_entity_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def clear_shared_triples() -> None:
     """Drop all cache entries (tests / explicit storage release)."""
-    _TIERS.clear()
+    with _GUARD:
+        _TIERS.clear()

@@ -2,9 +2,20 @@
 
 from pyspark.sql import functions as F
 
+from cbor_ld_spark.operators.graph import DRIVER_GRAPH_EDGES
+
+# driver_threshold per path of the hybrid PageRank operators: the default
+# keeps these graphs on the driver, 0 sends any non-empty graph through
+# the distributed loop
+PATHS = {"driver": DRIVER_GRAPH_EDGES, "spark": 0}
+
 
 def _edges(spark, pairs):
     return spark.createDataFrame(pairs, "src string, dst string")
+
+
+def _ranks(df):
+    return {r["node"]: r["rank"] for r in df.collect()}
 
 
 def test_pagerank_star(spark):
@@ -14,14 +25,14 @@ def test_pagerank_star(spark):
     from cbor_ld_spark.operators.graph import pagerank
 
     e = _edges(spark, [("a", "c"), ("b", "c"), ("c", "a")])
-    r1 = {r["node"]: r["rank"]
-          for r in pagerank(e, iters=1, round_to=6).collect()}
-    assert r1 == {"a": round(0.05 + 0.85 / 3, 6),
-                  "b": 0.05,
-                  "c": round(0.05 + 0.85 * 2 / 3, 6)}
-    # more iterations keep the ordering and stay a distribution-ish set
-    r5 = {r["node"]: r["rank"] for r in pagerank(e, iters=5).collect()}
-    assert r5["c"] > r5["a"] > r5["b"]
+    for path, thr in PATHS.items():
+        r1 = _ranks(pagerank(e, iters=1, round_to=6, driver_threshold=thr))
+        assert r1 == {"a": round(0.05 + 0.85 / 3, 6),
+                      "b": 0.05,
+                      "c": round(0.05 + 0.85 * 2 / 3, 6)}, path
+        # more iterations keep the ordering and stay a distribution-ish set
+        r5 = _ranks(pagerank(e, iters=5, driver_threshold=thr))
+        assert r5["c"] > r5["a"] > r5["b"], path
 
 
 def test_pagerank_cycle_uniform(spark):
@@ -29,8 +40,10 @@ def test_pagerank_cycle_uniform(spark):
     from cbor_ld_spark.operators.graph import pagerank
 
     e = _edges(spark, [("a", "b"), ("b", "c"), ("c", "a")])
-    ranks = {r["rank"] for r in pagerank(e, iters=7).collect()}
-    assert ranks == {round(1 / 3, 6)}
+    for path, thr in PATHS.items():
+        ranks = set(_ranks(pagerank(e, iters=7, driver_threshold=thr))
+                    .values())
+        assert ranks == {round(1 / 3, 6)}, path
 
 
 def test_k_hop_layers_and_multi_seed(spark):
@@ -76,12 +89,15 @@ def test_pagerank_dangling_redistribution_sums_to_one(spark):
     from cbor_ld_spark.operators.graph import pagerank
 
     e = _edges(spark, [("a", "b"), ("a", "d"), ("c", "b"), ("c", "a")])
-    for iters in (1, 3, 5):
-        redis = pagerank(e, iters=iters, redistribute_dangling=True)
-        total = sum(r["rank"] for r in redis.collect())
-        assert abs(total - 1.0) < 1e-4, (iters, total)
-    dropped = sum(r["rank"] for r in pagerank(e, iters=3).collect())
-    assert dropped < 1.0 - 1e-3
+    for path, thr in PATHS.items():
+        for iters in (1, 3, 5):
+            redis = pagerank(e, iters=iters, redistribute_dangling=True,
+                             driver_threshold=thr)
+            total = sum(_ranks(redis).values())
+            assert abs(total - 1.0) < 1e-4, (path, iters, total)
+        dropped = sum(_ranks(pagerank(e, iters=3,
+                                      driver_threshold=thr)).values())
+        assert dropped < 1.0 - 1e-3, path
 
 
 def test_pagerank_dangling_matches_reference_replay(spark):
@@ -105,10 +121,11 @@ def test_pagerank_dangling_matches_reference_replay(spark):
         for s, t in edges:
             inbound[t] += ranks[s] / out_deg[s]
         ranks = {v: base + d * inbound[v] for v in nodes}
-    got = {r["node"]: r["rank"]
-           for r in pagerank(_edges(spark, edges), iters=2,
-                             redistribute_dangling=True).collect()}
-    assert got == {v: round(r, 6) for v, r in ranks.items()}
+    for path, thr in PATHS.items():
+        got = _ranks(pagerank(_edges(spark, edges), iters=2,
+                              redistribute_dangling=True,
+                              driver_threshold=thr))
+        assert got == {v: round(r, 6) for v, r in ranks.items()}, path
 
 
 def test_k_hop_plan_single_anti_join_per_hop(spark):
@@ -224,20 +241,21 @@ def test_pagerank_weighted_vs_unrolled(spark):
     w = spark.createDataFrame(
         [("a", "b", 3), ("a", "c", 1), ("b", "a", 1)],
         "src string, dst string, weight long")
-    got = {r["node"]: r["rank"] for r in pagerank(w, iters=1).collect()}
-    # rank_0 = 1/3; base = 0.05; a gets b's full 1/3, b gets 3/4 of
-    # a's 1/3, c gets 1/4 of it
-    assert got == {"a": round(0.05 + 0.85 / 3, 6),
-                   "b": round(0.05 + 0.85 * 0.75 / 3, 6),
-                   "c": round(0.05 + 0.85 * 0.25 / 3, 6)}
-    # unit weights == unweighted
     uw = spark.createDataFrame(
         [("a", "b", 1), ("b", "c", 1), ("c", "a", 1)],
         "src string, dst string, weight long")
     u = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "a")], "src string, dst string")
-    assert ({(r["node"], r["rank"]) for r in pagerank(uw, iters=4).collect()}
-            == {(r["node"], r["rank"]) for r in pagerank(u, iters=4).collect()})
+    for path, thr in PATHS.items():
+        got = _ranks(pagerank(w, iters=1, driver_threshold=thr))
+        # rank_0 = 1/3; base = 0.05; a gets b's full 1/3, b gets 3/4 of
+        # a's 1/3, c gets 1/4 of it
+        assert got == {"a": round(0.05 + 0.85 / 3, 6),
+                       "b": round(0.05 + 0.85 * 0.75 / 3, 6),
+                       "c": round(0.05 + 0.85 * 0.25 / 3, 6)}, path
+        # unit weights == unweighted
+        assert (_ranks(pagerank(uw, iters=4, driver_threshold=thr))
+                == _ranks(pagerank(u, iters=4, driver_threshold=thr))), path
 
 
 def test_personalized_pagerank_hand_checked(spark):
@@ -248,17 +266,19 @@ def test_personalized_pagerank_hand_checked(spark):
 
     e = _edges(spark, [("a", "c"), ("b", "c"), ("c", "a")])
     seeds = spark.createDataFrame([("a",)], "node string")
-    r1 = {r["node"]: r["rank"]
-          for r in personalized_pagerank(e, seeds, iters=1).collect()}
-    assert r1 == {"a": 0.15, "b": 0.0, "c": 0.85}
-    for iters in (2, 5):
-        total = sum(r["rank"] for r in
-                    personalized_pagerank(e, seeds, iters=iters).collect())
-        assert abs(total - 1.0) < 1e-4
-    # seeds outside the graph contribute nothing; empty effective seed
-    # set returns an empty frame
     ghost = spark.createDataFrame([("zz",)], "node string")
-    assert personalized_pagerank(e, ghost).count() == 0
+    for path, thr in PATHS.items():
+        r1 = _ranks(personalized_pagerank(e, seeds, iters=1,
+                                          driver_threshold=thr))
+        assert r1 == {"a": 0.15, "b": 0.0, "c": 0.85}, path
+        for iters in (2, 5):
+            total = sum(_ranks(personalized_pagerank(
+                e, seeds, iters=iters, driver_threshold=thr)).values())
+            assert abs(total - 1.0) < 1e-4, (path, iters)
+        # seeds outside the graph contribute nothing; empty effective
+        # seed set returns an empty frame
+        assert personalized_pagerank(e, ghost, driver_threshold=thr
+                                     ).count() == 0, path
 
 
 def test_hits_hand_checked_and_normalized(spark):
@@ -284,8 +304,11 @@ def test_iterative_graph_plans_stay_bounded(spark):
     from cbor_ld_spark.operators.graph import hits, pagerank
 
     e = _edges(spark, [(f"n{i}", f"n{(i * 7) % 50}") for i in range(200)])
-    p5 = len(pagerank(e, iters=5)._jdf.queryExecution().toString())
-    p10 = len(pagerank(e, iters=10)._jdf.queryExecution().toString())
+    # driver_threshold=0: the distributed loop, whose plan this bounds
+    p5 = len(pagerank(e, iters=5, driver_threshold=0)
+             ._jdf.queryExecution().toString())
+    p10 = len(pagerank(e, iters=10, driver_threshold=0)
+              ._jdf.queryExecution().toString())
     assert p10 < p5 * 2, (p5, p10)  # constant-size checkpoint scans
     h6 = hits(e, iters=6)  # would OOM before the fix
     assert h6.count() == 200
@@ -581,8 +604,87 @@ def test_pagerank_plan_no_python_no_kernel_rerun(spark):
     e = spark.createDataFrame(
         [(f"n{i}", f"n{(i * 7) % 50}") for i in range(200)],
         "src string, dst string")
-    pr = pagerank(e, iters=3)
+    pr = pagerank(e, iters=3, driver_threshold=0)  # the distributed loop
     plan = pr._jdf.queryExecution().executedPlan().toString()
     # result frame is itself a checkpoint scan: iterations already ran
     assert "Scan ExistingRDD" in plan, plan
     assert "BatchEvalPython" not in plan and "MapInArrow" not in plan
+
+
+def test_pagerank_driver_path_equals_distributed_loop(spark):
+    """On 52 seeded random graphs the driver path (default gate) and the
+    distributed loop (``driver_threshold=0``) give the same rounded
+    ranks, for plain, dangling-redistributed, weighted and personalized
+    PageRank.  The graphs hold sinks, self-loops and dst-only nodes; the
+    empty graph and null node ids are checked on both paths too."""
+    import random
+
+    from cbor_ld_spark.operators.graph import pagerank, personalized_pagerank
+
+    def both(run):
+        return (_ranks(run(DRIVER_GRAPH_EDGES)),
+                _ranks(run(PATHS["spark"])))
+
+    variants = ("plain", "dangling", "weighted", "personalized")
+    rng = random.Random(20261019)
+    for case in range(52):
+        variant = variants[case % len(variants)]
+        nodes = [f"v{i}" for i in range(rng.randint(2, 12))]
+        pairs = {(rng.choice(nodes), rng.choice(nodes))
+                 for _ in range(rng.randint(1, 30))}
+        pairs.add((nodes[0], nodes[0]))  # a self-loop
+        pairs |= {(rng.choice(nodes), f"sink{i}")  # dst-only nodes
+                  for i in range(rng.randint(0, 3))}
+        iters = rng.randint(1, 6)
+        if variant == "weighted":
+            e = spark.createDataFrame(
+                [(s, d, rng.randint(1, 5)) for s, d in sorted(pairs)],
+                "src string, dst string, weight long")
+        else:
+            e = _edges(spark, sorted(pairs))
+        if variant == "personalized":
+            seeds = spark.createDataFrame(
+                [(v,) for v in rng.sample(nodes, min(3, len(nodes)))]
+                + [("ghost",)], "node string")
+            got, want = both(lambda thr: personalized_pagerank(
+                e, seeds, iters=iters, driver_threshold=thr))
+        else:
+            got, want = both(lambda thr: pagerank(
+                e, iters=iters, redistribute_dangling=variant == "dangling",
+                driver_threshold=thr))
+        assert got == want and got, (case, variant, sorted(pairs))
+
+    # -1: even the empty graph (0 rows <= 0) must take the loop
+    empty = _edges(spark, [])
+    seeds = spark.createDataFrame([("a",)], "node string")
+    for thr in (DRIVER_GRAPH_EDGES, -1):
+        assert pagerank(empty, driver_threshold=thr).count() == 0
+        assert personalized_pagerank(empty, seeds,
+                                     driver_threshold=thr).count() == 0
+    # a null id is a node of its own that neither sends nor receives
+    nulls = _edges(spark, [("a", "b"), ("b", None), (None, "a"),
+                           ("b", "a")])
+    for dangling in (False, True):
+        got, want = both(lambda thr: pagerank(
+            nulls, redistribute_dangling=dangling, driver_threshold=thr))
+        assert got == want and len(got) == 3, (dangling, got, want)
+
+
+def test_kg_pagerank_runs_in_three_jobs(spark):
+    """``kg_pagerank`` over the warm sf0.001 entity tier runs the gate's
+    checkpoint, the Arrow collect and the top-25 collect: 3 jobs in its
+    job group, where the distributed loop ran 46."""
+    import __spark_entry__ as entry
+    from cbor_ld_spark.plans import shared_entity_edges
+
+    sf = "/root/testdata/sf0.001"
+    shared_entity_edges(spark, sf)
+    sc = spark.sparkContext
+    group = "test-kg_pagerank-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        rows = entry.queries()["kg_pagerank"](spark, sf).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 25
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3

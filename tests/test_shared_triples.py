@@ -102,3 +102,52 @@ def test_shared_canonical_matches_direct(spark):
                 == sorted(map(tuple, direct.collect())))
     finally:
         clear_shared_triples()
+
+
+def test_shared_triples_built_once_by_concurrent_callers(spark, monkeypatch):
+    """Eight threads (more than the session's four cores) of one session
+    ask for the same cold triples tier at once: the per-key build lock
+    makes them share one build, so the kernel pass (``process_corpus``
+    and its MapInArrow stage) runs exactly once and every caller gets
+    the same materialized frame."""
+    import sys
+    import threading
+
+    import cbor_ld_spark.operators as ops
+    from cbor_ld_spark.plans import clear_shared_triples, shared_triples
+
+    kernel_passes = []
+    real = ops.process_corpus
+
+    def counted(*args, **kwargs):
+        kernel_passes.append(threading.current_thread().name)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(ops, "process_corpus", counted)
+    n = 8
+    start = threading.Barrier(n, timeout=60)
+    got, errors = [], []
+
+    def call():
+        try:
+            start.wait()
+            got.append(shared_triples(spark, "/root/testdata/sf0.001"))
+        except Exception as e:  # surfaced below, not lost in the thread
+            errors.append(e)
+
+    clear_shared_triples()
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # interleave the threads' memo checks
+    try:
+        threads = [threading.Thread(target=call) for _ in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=600)
+        assert not any(t.is_alive() for t in threads)
+        assert not errors, errors
+        assert len(kernel_passes) == 1, kernel_passes
+        assert len(got) == n and all(df is got[0] for df in got)
+    finally:
+        sys.setswitchinterval(switch)
+        clear_shared_triples()
