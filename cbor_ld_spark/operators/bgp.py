@@ -613,11 +613,16 @@ def _seeded_eval(triples: DataFrame, steps: list[tuple],
     direction swapped — exactly the inverse path (applied recursively
     to nested groups).
 
-    Only what a BFS loop re-reads is localCheckpoint'd: the layers of
-    ``plus``/``star`` steps (inside ``_bfs_fix``), their results, and
-    their edge frames.  ``one``/``opt`` steps stay lazy and fold into
-    the next materializing job instead of paying one of their own."""
+    Only what is read more than once is localCheckpoint'd: the layers
+    of ``plus``/``star`` steps (inside ``_bfs_fix``), their results,
+    their edge frames, and the frontier a ``star`` step reads twice (its
+    first layer and its zero-length union) when that frontier is still
+    lazy.  ``one``/``opt`` steps stay lazy and fold into the next
+    materializing job instead of paying one of their own."""
     ordered = list(reversed(steps)) if reverse else list(steps)
+    # the incoming frontier may be a lazy frame (the seed filter, a
+    # caller's one/opt result)
+    lazy = True
     for i, step in enumerate(ordered):
         preds, mod = _validate_step(step, i)
         if _is_alt_groups(preds):
@@ -657,9 +662,12 @@ def _seeded_eval(triples: DataFrame, steps: list[tuple],
         elif mod == "plus":
             frontier = _bfs_fix(frontier, step_fn, max_layers)
         else:  # star
+            if lazy:
+                frontier = frontier.localCheckpoint()
             frontier = (_bfs_fix(frontier, step_fn, max_layers)
                         .unionByName(frontier)
                         .distinct().localCheckpoint())
+        lazy = mod in ("one", "opt")
     return frontier
 
 

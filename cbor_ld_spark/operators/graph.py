@@ -11,15 +11,15 @@ Scale shapes:
 
 * ``pagerank`` — hybrid, like ``linking.connected_components``: at or
   below ``DRIVER_GRAPH_EDGES`` edges the edge list is collected as
-  Arrow and iterated in numpy on the driver (the loop below runs ~9
-  Spark jobs per iteration, each paying Spark's fixed scheduling cost:
-  47 for ``kg_pagerank`` at sf0.001).  Above it, the classic iterative
-  join: contributions = edges join ranks on src (shuffle on src,
-  uniform after dedup), summed per dst with map-side partial
-  aggregation.  The edge frame is localCheckpoint'd once and reused
-  every iteration (lineage cut — round-1 lesson: each unpersisted
-  reuse would replay the kernel), and ranks persist per iteration
-  with the previous handle released.
+  Arrow and iterated in numpy on the driver (the distributed loop runs
+  ~9 Spark jobs per iteration, each paying Spark's fixed scheduling
+  cost: 47 for ``kg_pagerank`` at sf0.001).  Above it, the classic
+  iterative join (``_pagerank_loop``): contributions = edges join
+  ranks on src (shuffle on src, uniform after dedup), summed per dst
+  with map-side partial aggregation.  The edge frame is
+  localCheckpoint'd once and reused every iteration (lineage cut —
+  round-1 lesson: each unpersisted reuse would replay the kernel), and
+  ranks persist per iteration with the previous handle released.
   Fixed ``iters`` (no convergence check) keeps the job count bounded
   and the result a pure function of the input.
 * ``k_hop`` — frontier expansion: k semi-join rounds, each a join on
@@ -39,9 +39,13 @@ if TYPE_CHECKING:
 
 # Edge count at or below which the hybrid graph operators (pagerank,
 # personalized_pagerank, linking.connected_components) collect the edge
-# list and run on the driver; the value is connected_components' original
-# union-find gate, now shared.
-DRIVER_GRAPH_EDGES = 2_000_000
+# list and run on the driver.  Measured on random graphs with ~35-char
+# IRIs, local[4], 1g driver: at 1e5 and 5e5 edges the driver paths beat
+# the distributed loops on wall time, CPU and peak memory; at 1e6
+# PageRank's driver path still ran 2x faster but peaked ~100 MB higher;
+# at 2e6 the gate's Arrow collect failed (TaskResultLost) in 3 of 4
+# PageRank runs.
+DRIVER_GRAPH_EDGES = 500_000
 
 
 def driver_sized(edges: DataFrame, threshold: int
@@ -51,15 +55,14 @@ def driver_sized(edges: DataFrame, threshold: int
     of every hybrid graph operator.
 
     The checkpoint feeds whichever path runs, so the edge lineage runs
-    once.  Sizing and collecting are then one bounded job: a single task
-    reads the checkpoint until it holds ``threshold + 1`` rows and sends
-    them as Arrow.  A driver-sized graph is thus collected by the job
-    that sizes it; a larger one costs the gate those rows, never a full
-    scan (``count()`` would scan everything, in two jobs under adaptive
-    execution)."""
-    edges = edges.localCheckpoint()
-    head = edges.coalesce(1).limit(max(threshold + 1, 0)).toArrow()
-    return edges, (head if head.num_rows <= threshold else None)
+    once.  It is lazy, and the job that materializes it also counts it:
+    a JVM-side RDD count, which sends one number per partition to the
+    driver (``DataFrame.count()`` would add an aggregation shuffle, a
+    second job under adaptive execution).  Only a driver-sized graph is
+    then collected, in one more job; a larger one ships no rows."""
+    edges = edges.localCheckpoint(eager=False)
+    n = edges._jdf.queryExecution().toRdd().count()
+    return edges, (edges.toArrow() if n <= threshold else None)
 
 
 def entity_edges(triples: DataFrame) -> DataFrame:
@@ -90,8 +93,7 @@ def out_degrees(edges: DataFrame) -> DataFrame:
 
 def pagerank(edges: DataFrame, iters: int = 5,
              damping: float = 0.85, round_to: int = 6,
-             redistribute_dangling: bool = False,
-             driver_threshold: int = DRIVER_GRAPH_EDGES) -> DataFrame:
+             redistribute_dangling: bool = False) -> DataFrame:
     """Fixed-iteration PageRank over the distinct edge list.
 
     rank_0 = 1/N for the N distinct nodes (sources + destinations);
@@ -115,19 +117,28 @@ def pagerank(edges: DataFrame, iters: int = 5,
     accepted residual for an order-free distributed aggregation.
 
     Hybrid execution (``driver_sized``): at or below
-    ``driver_threshold`` edges (default ``DRIVER_GRAPH_EDGES``, the
-    constant ``linking.connected_components`` gates on too) the
-    iterations run on the driver over the collected edge list, with the
-    same arithmetic and Spark's own rounding; above it, the distributed
-    loop below.  Both paths give the same rows.
+    ``DRIVER_GRAPH_EDGES`` edges, the constant
+    ``linking.connected_components`` gates on too, the iterations run on
+    the driver over the collected edge list, with the same arithmetic
+    and Spark's own rounding; above it, the distributed loop
+    (``_pagerank_loop``).  Both paths give the same rows.
     """
-    weighted = "weight" in edges.columns
-    # the gate's checkpoint cuts lineage once; the loop reuses it 5+1 times
-    edges, table = driver_sized(edges, driver_threshold)
+    edges, table = driver_sized(edges, DRIVER_GRAPH_EDGES)
     if table is not None:
         return _driver_ranks(edges.sparkSession, table, iters, damping,
                              round_to,
                              redistribute_dangling=redistribute_dangling)
+    return _pagerank_loop(edges, iters, damping, round_to,
+                          redistribute_dangling)
+
+
+def _pagerank_loop(edges: DataFrame, iters: int, damping: float,
+                   round_to: int, redistribute_dangling: bool
+                   ) -> DataFrame:
+    """The distributed path of ``pagerank`` over checkpointed ``edges``
+    (the gate's checkpoint cuts lineage once; the loop reuses it 5+1
+    times)."""
+    weighted = "weight" in edges.columns
     # nodes is joined every iteration: materialize it once too, or each
     # new_ranks join would re-run the union+distinct shuffle
     nodes = (edges.select(F.col("src").alias("node"))
@@ -577,9 +588,7 @@ def adjacency_lsh_candidates(edges: DataFrame, num_hashes: int = 24,
 
 def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
                           iters: int = 5, damping: float = 0.85,
-                          round_to: int = 6,
-                          driver_threshold: int = DRIVER_GRAPH_EDGES
-                          ) -> DataFrame:
+                          round_to: int = 6) -> DataFrame:
     """PageRank with teleportation restricted to a seed set — "what is
     central *relative to these entities*", the KG neighborhood-ranking
     primitive.  rank_0 = 1/|S| on seeds (0 elsewhere); each iteration
@@ -588,10 +597,17 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
     ``pagerank``; above the threshold, the same iterative-join shape,
     with the seed frame broadcast (seed sets are small by definition).
     """
-    edges, table = driver_sized(edges, driver_threshold)
+    edges, table = driver_sized(edges, DRIVER_GRAPH_EDGES)
     if table is not None:
         return _driver_ranks(edges.sparkSession, table, iters, damping,
                              round_to, seeds=seeds)
+    return _ppr_loop(edges, seeds, iters, damping, round_to)
+
+
+def _ppr_loop(edges: DataFrame, seeds: DataFrame, iters: int,
+              damping: float, round_to: int) -> DataFrame:
+    """The distributed path of ``personalized_pagerank`` over
+    checkpointed ``edges``."""
     nodes = (edges.select(F.col("src").alias("node"))
              .unionByName(edges.select(F.col("dst").alias("node")))
              .distinct()

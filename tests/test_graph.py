@@ -2,12 +2,25 @@
 
 from pyspark.sql import functions as F
 
-from cbor_ld_spark.operators.graph import DRIVER_GRAPH_EDGES
+from cbor_ld_spark.operators.graph import (
+    _pagerank_loop, _ppr_loop, pagerank, personalized_pagerank)
 
-# driver_threshold per path of the hybrid PageRank operators: the default
-# keeps these graphs on the driver, 0 sends any non-empty graph through
-# the distributed loop
-PATHS = {"driver": DRIVER_GRAPH_EDGES, "spark": 0}
+
+def _loop_pagerank(edges, iters=5, damping=0.85, round_to=6,
+                   redistribute_dangling=False):
+    return _pagerank_loop(edges.localCheckpoint(), iters, damping, round_to,
+                          redistribute_dangling)
+
+
+def _loop_ppr(edges, seeds, iters=5, damping=0.85, round_to=6):
+    return _ppr_loop(edges.localCheckpoint(), seeds, iters, damping,
+                     round_to)
+
+
+# Both paths of the hybrid PageRank operators: the public operators keep
+# these small graphs on the driver; the loops are the distributed path.
+PAGERANK = {"driver": pagerank, "spark": _loop_pagerank}
+PPR = {"driver": personalized_pagerank, "spark": _loop_ppr}
 
 
 def _edges(spark, pairs):
@@ -22,27 +35,22 @@ def test_pagerank_star(spark):
     """Star a->c, b->c, c->a: c has two inbound, a one, b none.
     Hand-checked 1-iteration values from rank_0 = 1/3:
     a = 0.05 + 0.85*(1/3); b = 0.05; c = 0.05 + 0.85*(2/3)."""
-    from cbor_ld_spark.operators.graph import pagerank
-
     e = _edges(spark, [("a", "c"), ("b", "c"), ("c", "a")])
-    for path, thr in PATHS.items():
-        r1 = _ranks(pagerank(e, iters=1, round_to=6, driver_threshold=thr))
+    for path, pr in PAGERANK.items():
+        r1 = _ranks(pr(e, iters=1, round_to=6))
         assert r1 == {"a": round(0.05 + 0.85 / 3, 6),
                       "b": 0.05,
                       "c": round(0.05 + 0.85 * 2 / 3, 6)}, path
         # more iterations keep the ordering and stay a distribution-ish set
-        r5 = _ranks(pagerank(e, iters=5, driver_threshold=thr))
+        r5 = _ranks(pr(e, iters=5))
         assert r5["c"] > r5["a"] > r5["b"], path
 
 
 def test_pagerank_cycle_uniform(spark):
     """A pure cycle is stationary at 1/N for every damping/iters."""
-    from cbor_ld_spark.operators.graph import pagerank
-
     e = _edges(spark, [("a", "b"), ("b", "c"), ("c", "a")])
-    for path, thr in PATHS.items():
-        ranks = set(_ranks(pagerank(e, iters=7, driver_threshold=thr))
-                    .values())
+    for path, pr in PAGERANK.items():
+        ranks = set(_ranks(pr(e, iters=7)).values())
         assert ranks == {round(1 / 3, 6)}, path
 
 
@@ -86,25 +94,19 @@ def test_pagerank_dangling_redistribution_sums_to_one(spark):
     """redistribute_dangling=True conserves rank mass: sums stay ~1.0
     every iteration even with out-degree-0 nodes (b, d are dangling);
     the default variant leaks that mass (sum < 1)."""
-    from cbor_ld_spark.operators.graph import pagerank
-
     e = _edges(spark, [("a", "b"), ("a", "d"), ("c", "b"), ("c", "a")])
-    for path, thr in PATHS.items():
+    for path, pr in PAGERANK.items():
         for iters in (1, 3, 5):
-            redis = pagerank(e, iters=iters, redistribute_dangling=True,
-                             driver_threshold=thr)
+            redis = pr(e, iters=iters, redistribute_dangling=True)
             total = sum(_ranks(redis).values())
             assert abs(total - 1.0) < 1e-4, (path, iters, total)
-        dropped = sum(_ranks(pagerank(e, iters=3,
-                                      driver_threshold=thr)).values())
+        dropped = sum(_ranks(pr(e, iters=3)).values())
         assert dropped < 1.0 - 1e-3, path
 
 
 def test_pagerank_dangling_matches_reference_replay(spark):
     """Hand-replay of 2 redistributed iterations on the star graph
     (b dangling): every value matches the Spark dataflow to round-6."""
-    from cbor_ld_spark.operators.graph import pagerank
-
     edges = [("a", "c"), ("b", "c"), ("c", "a")]  # b -> c makes b non-dangling
     # replay in pure python
     nodes = sorted({x for p in edges for x in p})
@@ -121,10 +123,9 @@ def test_pagerank_dangling_matches_reference_replay(spark):
         for s, t in edges:
             inbound[t] += ranks[s] / out_deg[s]
         ranks = {v: base + d * inbound[v] for v in nodes}
-    for path, thr in PATHS.items():
-        got = _ranks(pagerank(_edges(spark, edges), iters=2,
-                              redistribute_dangling=True,
-                              driver_threshold=thr))
+    for path, pr in PAGERANK.items():
+        got = _ranks(pr(_edges(spark, edges), iters=2,
+                        redistribute_dangling=True))
         assert got == {v: round(r, 6) for v, r in ranks.items()}, path
 
 
@@ -236,8 +237,6 @@ def test_neighborhood_overlap_hand_checked(spark):
 def test_pagerank_weighted_vs_unrolled(spark):
     """Weighted PageRank on a hand graph: a->b (weight 3), a->c (1) —
     a's mass splits 3:1; unit weights must equal the unweighted path."""
-    from cbor_ld_spark.operators.graph import pagerank
-
     w = spark.createDataFrame(
         [("a", "b", 3), ("a", "c", 1), ("b", "a", 1)],
         "src string, dst string, weight long")
@@ -246,39 +245,33 @@ def test_pagerank_weighted_vs_unrolled(spark):
         "src string, dst string, weight long")
     u = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "a")], "src string, dst string")
-    for path, thr in PATHS.items():
-        got = _ranks(pagerank(w, iters=1, driver_threshold=thr))
+    for path, pr in PAGERANK.items():
+        got = _ranks(pr(w, iters=1))
         # rank_0 = 1/3; base = 0.05; a gets b's full 1/3, b gets 3/4 of
         # a's 1/3, c gets 1/4 of it
         assert got == {"a": round(0.05 + 0.85 / 3, 6),
                        "b": round(0.05 + 0.85 * 0.75 / 3, 6),
                        "c": round(0.05 + 0.85 * 0.25 / 3, 6)}, path
         # unit weights == unweighted
-        assert (_ranks(pagerank(uw, iters=4, driver_threshold=thr))
-                == _ranks(pagerank(u, iters=4, driver_threshold=thr))), path
+        assert _ranks(pr(uw, iters=4)) == _ranks(pr(u, iters=4)), path
 
 
 def test_personalized_pagerank_hand_checked(spark):
     """Seed-restricted teleport: with seed {a} on a->c, b->c, c->a,
     one iteration gives a=0.15 (teleport only), c=0.85, b=0; mass is
     conserved (sums to 1.0 every iteration)."""
-    from cbor_ld_spark.operators.graph import personalized_pagerank
-
     e = _edges(spark, [("a", "c"), ("b", "c"), ("c", "a")])
     seeds = spark.createDataFrame([("a",)], "node string")
     ghost = spark.createDataFrame([("zz",)], "node string")
-    for path, thr in PATHS.items():
-        r1 = _ranks(personalized_pagerank(e, seeds, iters=1,
-                                          driver_threshold=thr))
+    for path, ppr in PPR.items():
+        r1 = _ranks(ppr(e, seeds, iters=1))
         assert r1 == {"a": 0.15, "b": 0.0, "c": 0.85}, path
         for iters in (2, 5):
-            total = sum(_ranks(personalized_pagerank(
-                e, seeds, iters=iters, driver_threshold=thr)).values())
+            total = sum(_ranks(ppr(e, seeds, iters=iters)).values())
             assert abs(total - 1.0) < 1e-4, (path, iters)
         # seeds outside the graph contribute nothing; empty effective
         # seed set returns an empty frame
-        assert personalized_pagerank(e, ghost, driver_threshold=thr
-                                     ).count() == 0, path
+        assert ppr(e, ghost).count() == 0, path
 
 
 def test_hits_hand_checked_and_normalized(spark):
@@ -301,14 +294,12 @@ def test_iterative_graph_plans_stay_bounded(spark):
     per iteration — hits OOM'd at iters=4 on a 200-edge graph.  With
     per-iteration localCheckpoint, doubling the iteration count must
     not blow up the result plan."""
-    from cbor_ld_spark.operators.graph import hits, pagerank
+    from cbor_ld_spark.operators.graph import hits
 
     e = _edges(spark, [(f"n{i}", f"n{(i * 7) % 50}") for i in range(200)])
-    # driver_threshold=0: the distributed loop, whose plan this bounds
-    p5 = len(pagerank(e, iters=5, driver_threshold=0)
-             ._jdf.queryExecution().toString())
-    p10 = len(pagerank(e, iters=10, driver_threshold=0)
-              ._jdf.queryExecution().toString())
+    # the distributed loop, whose plan this bounds
+    p5 = len(_loop_pagerank(e, iters=5)._jdf.queryExecution().toString())
+    p10 = len(_loop_pagerank(e, iters=10)._jdf.queryExecution().toString())
     assert p10 < p5 * 2, (p5, p10)  # constant-size checkpoint scans
     h6 = hits(e, iters=6)  # would OOM before the fix
     assert h6.count() == 200
@@ -599,12 +590,10 @@ def test_pagerank_plan_no_python_no_kernel_rerun(spark):
     """PageRank iterations run on the localCheckpoint'd edge/node frames:
     the final plan contains no Python stages and scans checkpointed
     RDDs, never the original lineage."""
-    from cbor_ld_spark.operators.graph import pagerank
-
     e = spark.createDataFrame(
         [(f"n{i}", f"n{(i * 7) % 50}") for i in range(200)],
         "src string, dst string")
-    pr = pagerank(e, iters=3, driver_threshold=0)  # the distributed loop
+    pr = _loop_pagerank(e, iters=3)  # the distributed loop
     plan = pr._jdf.queryExecution().executedPlan().toString()
     # result frame is itself a checkpoint scan: iterations already ran
     assert "Scan ExistingRDD" in plan, plan
@@ -612,18 +601,17 @@ def test_pagerank_plan_no_python_no_kernel_rerun(spark):
 
 
 def test_pagerank_driver_path_equals_distributed_loop(spark):
-    """On 52 seeded random graphs the driver path (default gate) and the
-    distributed loop (``driver_threshold=0``) give the same rounded
-    ranks, for plain, dangling-redistributed, weighted and personalized
-    PageRank.  The graphs hold sinks, self-loops and dst-only nodes; the
-    empty graph and null node ids are checked on both paths too."""
+    """On 52 seeded random graphs the driver path (the public operators
+    on these small graphs) and the distributed loop give the same
+    rounded ranks, for plain, dangling-redistributed, weighted and
+    personalized PageRank.  The graphs hold sinks, self-loops and
+    dst-only nodes; the empty graph and null node ids are checked on
+    both paths too."""
     import random
 
-    from cbor_ld_spark.operators.graph import pagerank, personalized_pagerank
-
-    def both(run):
-        return (_ranks(run(DRIVER_GRAPH_EDGES)),
-                _ranks(run(PATHS["spark"])))
+    def both(ops, *args, **kw):
+        return (_ranks(ops["driver"](*args, **kw)),
+                _ranks(ops["spark"](*args, **kw)))
 
     variants = ("plain", "dangling", "weighted", "personalized")
     rng = random.Random(20261019)
@@ -646,34 +634,29 @@ def test_pagerank_driver_path_equals_distributed_loop(spark):
             seeds = spark.createDataFrame(
                 [(v,) for v in rng.sample(nodes, min(3, len(nodes)))]
                 + [("ghost",)], "node string")
-            got, want = both(lambda thr: personalized_pagerank(
-                e, seeds, iters=iters, driver_threshold=thr))
+            got, want = both(PPR, e, seeds, iters=iters)
         else:
-            got, want = both(lambda thr: pagerank(
-                e, iters=iters, redistribute_dangling=variant == "dangling",
-                driver_threshold=thr))
+            got, want = both(PAGERANK, e, iters=iters,
+                             redistribute_dangling=variant == "dangling")
         assert got == want and got, (case, variant, sorted(pairs))
 
-    # -1: even the empty graph (0 rows <= 0) must take the loop
     empty = _edges(spark, [])
     seeds = spark.createDataFrame([("a",)], "node string")
-    for thr in (DRIVER_GRAPH_EDGES, -1):
-        assert pagerank(empty, driver_threshold=thr).count() == 0
-        assert personalized_pagerank(empty, seeds,
-                                     driver_threshold=thr).count() == 0
+    for path in PAGERANK:
+        assert PAGERANK[path](empty).count() == 0, path
+        assert PPR[path](empty, seeds).count() == 0, path
     # a null id is a node of its own that neither sends nor receives
     nulls = _edges(spark, [("a", "b"), ("b", None), (None, "a"),
                            ("b", "a")])
     for dangling in (False, True):
-        got, want = both(lambda thr: pagerank(
-            nulls, redistribute_dangling=dangling, driver_threshold=thr))
+        got, want = both(PAGERANK, nulls, redistribute_dangling=dangling)
         assert got == want and len(got) == 3, (dangling, got, want)
 
 
 def test_kg_pagerank_runs_in_three_jobs(spark):
     """``kg_pagerank`` over the warm sf0.001 entity tier runs the gate's
-    checkpoint, the Arrow collect and the top-25 collect: 3 jobs in its
-    job group, where the distributed loop ran 46."""
+    checkpoint-and-count, the Arrow collect and the top-25 collect: 3
+    jobs in its job group, where the distributed loop ran 46."""
     import __spark_entry__ as entry
     from cbor_ld_spark.plans import shared_entity_edges
 
