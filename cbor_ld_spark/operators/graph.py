@@ -2,26 +2,39 @@
 
 The pipeline's end product is a node/edge graph (triples with IRI
 objects are the entity->entity edges); these operators answer the
-questions a KG consumer asks first: who is central (PageRank, degree)
-and what is reachable (k-hop neighborhoods).  Both are deterministic
-fixed-iteration dataflows so the DuckDB oracle can replay them exactly
-(unrolled CTEs), same bar as every other operator here.
+questions a KG consumer asks first: who is central (PageRank, HITS,
+degree), what is reachable (k-hop, closure, neighborhood function) and
+what belongs together (communities, cores, triangles, overlap).  All
+are deterministic dataflows so the DuckDB oracle can replay them
+exactly (unrolled CTEs), same bar as every other operator here.
+
+Graph views, each decided in one place:
+
+* node set (``_nodes``) — every distinct ``src`` and ``dst``, a null id
+  included; the directed operators (PageRank, HITS, the HLL hop loop)
+  and label propagation range over it.
+* undirected view (``_undirected``) — self-loops dropped, each edge
+  keyed as (least, greatest) once, so direction and duplicates never
+  count; ``_symmetric`` lists it in both directions.  Triangles,
+  k-core, label propagation and neighborhood overlap read it, so a
+  node whose only edges are self-loops has no undirected edge.
 
 Scale shapes:
 
-* ``pagerank`` — hybrid, like ``linking.connected_components``: at or
-  below ``DRIVER_GRAPH_EDGES`` edges the edge list is collected as
-  Arrow and iterated in numpy on the driver (the distributed loop runs
-  ~9 Spark jobs per iteration, each paying Spark's fixed scheduling
-  cost: 47 for ``kg_pagerank`` at sf0.001).  Above it, the classic
-  iterative join (``_pagerank_loop``): contributions = edges join
-  ranks on src (shuffle on src, uniform after dedup), summed per dst
-  with map-side partial aggregation.  The edge frame is
+* hybrid operators — ``pagerank``, ``personalized_pagerank`` and
+  ``linking.connected_components`` share one gate (``driver_sized``):
+  at or below ``DRIVER_GRAPH_EDGES`` edges the edge list is collected
+  as Arrow and iterated on the driver (the distributed PageRank loop
+  runs ~9 Spark jobs per iteration, each paying Spark's fixed
+  scheduling cost: 47 for ``kg_pagerank`` at sf0.001).  Above it, the
+  classic iterative join (``_pagerank_loop``): contributions = edges
+  join ranks on src (shuffle on src, uniform after dedup), summed per
+  dst with map-side partial aggregation.  The edge frame is
   localCheckpoint'd once and reused every iteration (lineage cut —
   round-1 lesson: each unpersisted reuse would replay the kernel), and
-  ranks persist per iteration with the previous handle released.
-  Fixed ``iters`` (no convergence check) keeps the job count bounded
-  and the result a pure function of the input.
+  ranks are localCheckpoint'd per iteration.  Fixed ``iters`` (no
+  convergence check) keeps the job count bounded and the result a pure
+  function of the input.
 * ``k_hop`` — frontier expansion: k semi-join rounds, each a join on
   the uniform edge key; the frontier stays (node, root) pairs so
   multiple seeds batch in ONE dataflow instead of one traversal per
@@ -30,7 +43,8 @@ Scale shapes:
 
 from __future__ import annotations
 
-from typing import TYPE_CHECKING
+from itertools import islice
+from typing import TYPE_CHECKING, Iterator
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -91,6 +105,34 @@ def out_degrees(edges: DataFrame) -> DataFrame:
     return edges.groupBy("src").agg(w.alias("out_deg"))
 
 
+def _nodes(edges: DataFrame) -> DataFrame:
+    """The node set: every distinct ``src`` and ``dst`` as ``node``,
+    localCheckpoint'd (each caller rejoins it every iteration, and an
+    unmaterialized frame would re-run the union+distinct shuffle)."""
+    return (edges.select(F.col("src").alias("node"))
+            .unionByName(edges.select(F.col("dst").alias("node")))
+            .distinct()
+            .localCheckpoint())
+
+
+def _undirected(edges: DataFrame) -> DataFrame:
+    """The undirected view: (a, b) with a < b once per edge, self-loops
+    dropped.  Lazy: each caller places its own checkpoint."""
+    return (edges.filter(F.col("src") != F.col("dst"))
+            .select(F.least("src", "dst").alias("a"),
+                    F.greatest("src", "dst").alias("b"))
+            .distinct())
+
+
+def _symmetric(edges: DataFrame) -> DataFrame:
+    """``_undirected`` in both directions as (u, v), localCheckpoint'd."""
+    und = _undirected(edges)
+    return (und.select(F.col("a").alias("u"), F.col("b").alias("v"))
+            .unionByName(und.select(F.col("b").alias("u"),
+                                    F.col("a").alias("v")))
+            .localCheckpoint())
+
+
 def pagerank(edges: DataFrame, iters: int = 5,
              damping: float = 0.85, round_to: int = 6,
              redistribute_dangling: bool = False) -> DataFrame:
@@ -123,76 +165,93 @@ def pagerank(edges: DataFrame, iters: int = 5,
     and Spark's own rounding; above it, the distributed loop
     (``_pagerank_loop``).  Both paths give the same rows.
     """
+    return _hybrid_ranks(edges, iters, damping, round_to,
+                         redistribute_dangling=redistribute_dangling)
+
+
+def _hybrid_ranks(edges: DataFrame, iters: int, damping: float,
+                  round_to: int, **variant) -> DataFrame:
+    """``pagerank`` or, given ``seeds``, ``personalized_pagerank``
+    behind the hybrid gate: ``_driver_ranks`` for a driver-sized graph,
+    else ``_pagerank_loop``, with the same ``variant`` keywords."""
     edges, table = driver_sized(edges, DRIVER_GRAPH_EDGES)
     if table is not None:
         return _driver_ranks(edges.sparkSession, table, iters, damping,
-                             round_to,
-                             redistribute_dangling=redistribute_dangling)
-    return _pagerank_loop(edges, iters, damping, round_to,
-                          redistribute_dangling)
+                             round_to, **variant)
+    return _pagerank_loop(edges, iters, damping, round_to, **variant)
 
 
 def _pagerank_loop(edges: DataFrame, iters: int, damping: float,
-                   round_to: int, redistribute_dangling: bool
-                   ) -> DataFrame:
-    """The distributed path of ``pagerank`` over checkpointed ``edges``
-    (the gate's checkpoint cuts lineage once; the loop reuses it 5+1
-    times)."""
-    weighted = "weight" in edges.columns
-    # nodes is joined every iteration: materialize it once too, or each
-    # new_ranks join would re-run the union+distinct shuffle
-    nodes = (edges.select(F.col("src").alias("node"))
-             .unionByName(edges.select(F.col("dst").alias("node")))
-             .distinct()
-             .localCheckpoint())
-    n = nodes.count()
+                   round_to: int, *, redistribute_dangling: bool = False,
+                   seeds: DataFrame | None = None) -> DataFrame:
+    """The distributed path of ``pagerank`` (``seeds=None``) and
+    ``personalized_pagerank`` over checkpointed ``edges`` (the gate's
+    checkpoint cuts lineage once; the loop reuses it 5+1 times).
+
+    The variants differ only where ``_driver_ranks`` says: the start
+    vector, the base term (``(1-d)/n``, plus ``d * dangling / n``, or
+    the seed teleport) and the contribution (``rank / out_deg``, times
+    the weight for a weighted ``pagerank``)."""
+    nodes = _nodes(edges)
+    if seeds is None:
+        n = nodes.count()
+    else:
+        seed_nodes = (seeds.select("node").distinct()
+                      .join(nodes, "node").localCheckpoint())
+        n = seed_nodes.count()
     if n == 0:
         return edges.sparkSession.createDataFrame(
             [], "node string, rank double")
     deg = out_degrees(edges)
     # (src, dst, out_deg) reused every iteration
     e = edges.join(deg, "src").localCheckpoint()
-
-    if redistribute_dangling:
+    start, init, base = nodes, F.lit(1.0 / n), F.lit((1.0 - damping) / n)
+    cw = F.col("rank") / F.col("out_deg")
+    if seeds is not None:
+        # the seed frame is broadcast: seed sets are small by definition
+        is_seed = F.broadcast(seed_nodes.withColumn("_seed", F.lit(1)))
+        seeded = F.col("_seed").isNotNull()
+        start = nodes.join(is_seed, "node", "left")
+        init = F.when(seeded, init).otherwise(F.lit(0.0))
+        base = F.when(seeded, base).otherwise(F.lit(0.0))
+    elif "weight" in edges.columns:
+        cw = F.col("rank") * F.col("weight") / F.col("out_deg")
+    if seeds is None and redistribute_dangling:
         # out-degree-0 nodes, fixed across iterations: checkpointed once
         dangling_nodes = nodes.join(
             deg.select(F.col("src").alias("node")), "node", "left_anti"
         ).localCheckpoint()
+        # dangling mass as a broadcast 1-row frame instead of a
+        # per-iteration scalar collect: the iteration stays fully lazy
+        # (ONE job — the checkpoint — instead of two), no driver sync
+        # point per round.  Same IEEE arithmetic as the literal form
+        # ((1-d)/n + d*dm/n, left-associated), so the oracle replay is
+        # unchanged.
+        base = base + F.lit(damping) * F.col("_dm") / F.lit(float(n))
 
     # Per-iteration localCheckpoint, not persist: persist keeps the full
     # logical plan, which DOUBLES per iteration (measured: 61k -> 605k
     # plan chars over 4 rounds) — exponential analysis/printing cost
     # that OOMs the driver long before the data does.  The checkpoint
     # cuts lineage each round; ContextCleaner reclaims old blocks.
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n)).localCheckpoint()
+    ranks = start.select("node", init.alias("rank")).localCheckpoint()
     for _ in range(iters):
-        cw = (F.col("rank") * F.col("weight") / F.col("out_deg")
-              if weighted else F.col("rank") / F.col("out_deg"))
         contribs = (
             e.join(ranks, e.src == ranks.node)
             .select(F.col("dst").alias("node"), cw.alias("c"))
             .groupBy("node")
             .agg(F.sum("c").alias("inbound")))
-        base_col = F.lit((1.0 - damping) / n)
-        if redistribute_dangling:
-            # dangling mass as a broadcast 1-row frame instead of a
-            # per-iteration scalar collect: the iteration stays fully
-            # lazy (ONE job — the checkpoint — instead of two), no
-            # driver sync point per round.  Same IEEE arithmetic as the
-            # literal form ((1-d)/n + d*dm/n, left-associated), so the
-            # oracle replay is unchanged.
+        new_ranks = nodes.join(contribs, "node", "left")
+        if seeds is not None:
+            new_ranks = new_ranks.join(is_seed, "node", "left")
+        elif redistribute_dangling:
             dmf = (dangling_nodes.join(ranks, "node")
                    .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm")))
-            base_col = (base_col
-                        + F.lit(damping) * F.col("_dm") / F.lit(float(n)))
-            new_ranks = (nodes.join(contribs, "node", "left")
-                         .crossJoin(F.broadcast(dmf)))
-        else:
-            new_ranks = nodes.join(contribs, "node", "left")
+            new_ranks = new_ranks.crossJoin(F.broadcast(dmf))
         ranks = (
             new_ranks
             .select("node",
-                    (base_col
+                    (base
                      + F.lit(damping) * F.coalesce("inbound", F.lit(0.0)))
                     .alias("rank"))
             .localCheckpoint())
@@ -368,11 +427,7 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     the standard global clustering coefficient (0 when the graph has
     no wedges), rounded to 6.
     """
-    und = (edges.filter(F.col("src") != F.col("dst"))
-           .select(F.least("src", "dst").alias("a"),
-                   F.greatest("src", "dst").alias("b"))
-           .distinct()
-           .localCheckpoint())
+    und = _undirected(edges).localCheckpoint()
     deg = (und.select(F.col("a").alias("node"))
            .unionByName(und.select(F.col("b").alias("node")))
            .groupBy("node")
@@ -423,7 +478,7 @@ def neighborhood_overlap(edges: DataFrame,
     In KG construction, two IRIs that connect to largely the same
     neighbors are merge candidates even when no direct edge links them
     (coreference via context).  Exact computation: a symmetric wedge
-    join — sym(c, x) |><| sym(c, y) on the center, x < y — then one
+    join — sym(u, x) |><| sym(u, y) on the center, x < y — then one
     hash aggregation counts common neighbors per pair (wedge
     multiplicity) and degrees turn counts into Jaccard.
 
@@ -448,29 +503,22 @@ def neighborhood_overlap(edges: DataFrame,
     jaccard = common / (deg_a + deg_b - common)) for pairs with
     jaccard >= threshold, node_a < node_b.
     """
-    und = (edges.filter(F.col("src") != F.col("dst"))
-           .select(F.least("src", "dst").alias("a"),
-                   F.greatest("src", "dst").alias("b"))
-           .distinct())
-    sym = (und.select(F.col("a").alias("c"), F.col("b").alias("n"))
-           .unionByName(und.select(F.col("b").alias("c"),
-                                   F.col("a").alias("n")))
-           .localCheckpoint())
-    deg = sym.groupBy(F.col("c").alias("node")) \
+    sym = _symmetric(edges)
+    deg = sym.groupBy(F.col("u").alias("node")) \
         .agg(F.count(F.lit(1)).alias("deg"))
     # attach endpoint degrees to the wedge legs so the threshold's
     # degree-ratio implication prunes INSIDE the join, before the
     # per-pair aggregation: jaccard >= t forces
     # common >= t * max(da, db) and common <= min(da, db), hence
     # min(da, db) >= t * max(da, db).
-    legs = sym.join(deg.select(F.col("node").alias("n"),
-                               F.col("deg").alias("dn")), "n")
-    e1 = legs.select("c", F.col("n").alias("x"), F.col("dn").alias("dx"))
-    e2 = legs.select("c", F.col("n").alias("y"), F.col("dn").alias("dy"))
+    legs = sym.join(deg.select(F.col("node").alias("v"),
+                               F.col("deg").alias("dv")), "v")
+    e1 = legs.select("u", F.col("v").alias("x"), F.col("dv").alias("dx"))
+    e2 = legs.select("u", F.col("v").alias("y"), F.col("dv").alias("dy"))
     # endpoint degrees ride the wedge legs and are constant per pair, so
     # first() through the aggregation replaces two whole degree joins
     # (plan: 7 exchanges instead of 11, 3 sort-merge joins instead of 5)
-    common = (e1.join(e2, "c")
+    common = (e1.join(e2, "u")
               .filter((F.col("x") < F.col("y"))
                       # 1e-6 slack: the output filter accepts ROUND-6
                       # jaccard >= threshold, so the prune must not drop
@@ -483,6 +531,13 @@ def neighborhood_overlap(edges: DataFrame,
               .agg(F.count(F.lit(1)).alias("common_neighbors"),
                    F.first("dx").alias("deg_a"),
                    F.first("dy").alias("deg_b")))
+    return _jaccard(common, threshold)
+
+
+def _jaccard(common: DataFrame, threshold: float) -> DataFrame:
+    """The finish both overlap tiers share: round-6 Jaccard from
+    (node_a, node_b, common_neighbors, deg_a, deg_b), kept at or above
+    ``threshold``."""
     return (common
             .withColumn(
                 "jaccard",
@@ -528,30 +583,24 @@ def neighborhood_overlap_lsh(edges: DataFrame, threshold: float = 0.5,
     is deterministic despite the probabilistic recall.
     """
     sym, pairs = adjacency_lsh_candidates(edges, num_hashes, bands)
-    deg = sym.groupBy(F.col("c").alias("node")) \
+    deg = sym.groupBy(F.col("u").alias("node")) \
         .agg(F.count(F.lit(1)).alias("deg"))
     # exact rerank on candidates only: fan each pair to node_a's
     # neighbors, keep rows where the neighbor is also node_b's — the
     # intermediate is deg(node_a) rows per candidate, and candidates
     # are bucket-bounded
-    pa = sym.select(F.col("c").alias("node_a"), F.col("n"))
-    pb = sym.select(F.col("c").alias("node_b"), F.col("n"))
+    pa = sym.select(F.col("u").alias("node_a"), F.col("v"))
+    pb = sym.select(F.col("u").alias("node_b"), F.col("v"))
     common = (pairs.join(pa, "node_a")
-              .join(pb, ["node_b", "n"])
+              .join(pb, ["node_b", "v"])
               .groupBy("node_a", "node_b")
               .agg(F.count(F.lit(1)).alias("common_neighbors")))
     da = deg.select(F.col("node").alias("node_a"),
                     F.col("deg").alias("deg_a"))
     db = deg.select(F.col("node").alias("node_b"),
                     F.col("deg").alias("deg_b"))
-    return (common.join(da, "node_a").join(db, "node_b")
-            .withColumn(
-                "jaccard",
-                F.round(F.col("common_neighbors")
-                        / (F.col("deg_a") + F.col("deg_b")
-                           - F.col("common_neighbors")), 6))
-            .filter(F.col("jaccard") >= threshold)
-            .select("node_a", "node_b", "common_neighbors", "jaccard"))
+    return _jaccard(common.join(da, "node_a").join(db, "node_b"),
+                    threshold)
 
 
 def adjacency_lsh_candidates(edges: DataFrame, num_hashes: int = 24,
@@ -562,20 +611,13 @@ def adjacency_lsh_candidates(edges: DataFrame, num_hashes: int = 24,
     (the mega-hub skew test asserts candidates << C(deg, 2))."""
     from cbor_ld_spark.operators.dedup import banded_signature_pairs
 
-    und = (edges.filter(F.col("src") != F.col("dst"))
-           .select(F.least("src", "dst").alias("a"),
-                   F.greatest("src", "dst").alias("b"))
-           .distinct())
-    sym = (und.select(F.col("a").alias("c"), F.col("b").alias("n"))
-           .unionByName(und.select(F.col("b").alias("c"),
-                                   F.col("a").alias("n")))
-           .localCheckpoint())
+    sym = _symmetric(edges)
     # k seeded min-hashes over the adjacency set: sym is already one
     # row per (node, neighbor), so the signature is a single hash
     # aggregation — no explode, no higher-order folds
-    aggs = [F.min(F.xxhash64("n", F.lit(i))).alias(f"mh_{i}")
+    aggs = [F.min(F.xxhash64("v", F.lit(i))).alias(f"mh_{i}")
             for i in range(num_hashes)]
-    sigs = (sym.groupBy(F.col("c").alias("node")).agg(*aggs)
+    sigs = (sym.groupBy(F.col("u").alias("node")).agg(*aggs)
             .select("node",
                     F.array(*[F.col(f"mh_{i}")
                               for i in range(num_hashes)])
@@ -597,58 +639,7 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
     ``pagerank``; above the threshold, the same iterative-join shape,
     with the seed frame broadcast (seed sets are small by definition).
     """
-    edges, table = driver_sized(edges, DRIVER_GRAPH_EDGES)
-    if table is not None:
-        return _driver_ranks(edges.sparkSession, table, iters, damping,
-                             round_to, seeds=seeds)
-    return _ppr_loop(edges, seeds, iters, damping, round_to)
-
-
-def _ppr_loop(edges: DataFrame, seeds: DataFrame, iters: int,
-              damping: float, round_to: int) -> DataFrame:
-    """The distributed path of ``personalized_pagerank`` over
-    checkpointed ``edges``."""
-    nodes = (edges.select(F.col("src").alias("node"))
-             .unionByName(edges.select(F.col("dst").alias("node")))
-             .distinct()
-             .localCheckpoint())
-    seed_nodes = (seeds.select("node").distinct()
-                  .join(nodes, "node").localCheckpoint())
-    n_seeds = seed_nodes.count()
-    if n_seeds == 0:
-        return edges.sparkSession.createDataFrame(
-            [], "node string, rank double")
-    deg = out_degrees(edges)
-    e = edges.join(deg, "src").localCheckpoint()
-    is_seed = F.broadcast(seed_nodes.withColumn("_seed", F.lit(1)))
-
-    # localCheckpoint per iteration — same exponential-plan rationale
-    # as pagerank (persist does not cut lineage)
-    ranks = (nodes.join(is_seed, "node", "left")
-             .select("node",
-                     F.when(F.col("_seed").isNotNull(),
-                            F.lit(1.0 / n_seeds)).otherwise(F.lit(0.0))
-                     .alias("rank"))
-             .localCheckpoint())
-    for _ in range(iters):
-        contribs = (
-            e.join(ranks, e.src == ranks.node)
-            .select(F.col("dst").alias("node"),
-                    (F.col("rank") / F.col("out_deg")).alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("inbound")))
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .join(is_seed, "node", "left")
-            .select("node",
-                    (F.when(F.col("_seed").isNotNull(),
-                            F.lit((1.0 - damping) / n_seeds))
-                     .otherwise(F.lit(0.0))
-                     + F.lit(damping)
-                     * F.coalesce("inbound", F.lit(0.0))).alias("rank"))
-            .localCheckpoint())
-    return ranks.select("node", F.round("rank", round_to).alias("rank")) \
-        .localCheckpoint()
+    return _hybrid_ranks(edges, iters, damping, round_to, seeds=seeds)
 
 
 def hits(edges: DataFrame, iters: int = 5,
@@ -668,56 +659,42 @@ def hits(edges: DataFrame, iters: int = 5,
         # "HITS after 0 rounds" output, so reject loudly
         raise ValueError(f"hits() requires iters >= 1, got {iters}")
     edges = edges.localCheckpoint()
-    nodes = (edges.select(F.col("src").alias("node"))
-             .unionByName(edges.select(F.col("dst").alias("node")))
-             .distinct()
-             .localCheckpoint())
+    nodes = _nodes(edges)
     n = nodes.count()
     if n == 0:
         return edges.sparkSession.createDataFrame(
             [], "node string, hub double, authority double")
-    # Two lineage cuts per iteration (un-normalized frames); the
-    # normalized frames are cheap selects over the checkpoints.  With
-    # persist instead, the two chained frames per round grow the plan
-    # 4x per iteration — OOM at iters=4 on a 200-edge graph.
+
+    def half_step(vec: DataFrame, frm: str, to: str, col: str
+                  ) -> DataFrame:
+        """``col`` per node: ``vec`` summed over the edges ``frm`` ->
+        ``to``, L2-normalized.  The norm is a broadcast 1-row frame
+        holding sqrt(sum(col^2)), with the collect-era
+        `sqrt(s or 1.0) or 1.0` null/zero handling folded in, so the
+        loop stays fully lazy (no driver sync per iteration); sqrt/div
+        are IEEE in both engines so the oracle replay arithmetic is
+        unchanged."""
+        summed = (edges.join(vec, edges[frm] == vec.node)
+                  .groupBy(F.col(to).alias("node"))
+                  .agg(F.sum(vec.columns[1]).alias(col)))
+        # the un-normalized frame is the lineage cut; with persist
+        # instead, the two chained frames per round grow the plan 4x per
+        # iteration — OOM at iters=4 on a 200-edge graph
+        raw = (nodes.join(summed, "node", "left")
+               .select("node", F.coalesce(col, F.lit(0.0)).alias(col))
+               .localCheckpoint())
+        s = F.col("_s")
+        norm = (raw.agg(F.sum(F.col(col) * F.col(col)).alias("_s"))
+                .select(F.sqrt(F.when(s.isNull() | (s == 0.0), F.lit(1.0))
+                               .otherwise(s)).alias("_norm")))
+        return (raw.crossJoin(F.broadcast(norm))
+                .select("node", (F.col(col) / F.col("_norm")).alias(col)))
+
     hv = (nodes.withColumn("hub", F.lit(1.0 / math.sqrt(n)))
           .localCheckpoint())
-    av = None
-
-    def _l2_norm_frame(frame: DataFrame, col: str, out: str) -> DataFrame:
-        """1-row frame holding sqrt(sum(col^2)), with the collect-era
-        `sqrt(s or 1.0) or 1.0` null/zero handling folded in — kept as
-        a broadcast frame so the loop stays fully lazy (no driver sync
-        per iteration); sqrt/div are IEEE in both engines so the oracle
-        replay arithmetic is unchanged."""
-        s = F.col("_s")
-        return (frame.agg(F.sum(F.col(col) * F.col(col)).alias("_s"))
-                .select(F.sqrt(F.when(s.isNull() | (s == 0.0), F.lit(1.0))
-                               .otherwise(s)).alias(out)))
-
     for _ in range(iters):
-        auth = (edges.join(hv, edges.src == hv.node)
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.sum("hub").alias("authority")))
-        av_raw = (nodes.join(auth, "node", "left")
-                  .select("node", F.coalesce("authority", F.lit(0.0))
-                          .alias("authority"))
-                  .localCheckpoint())
-        av = (av_raw
-              .crossJoin(F.broadcast(_l2_norm_frame(av_raw, "authority",
-                                                    "_na")))
-              .select("node", (F.col("authority") / F.col("_na"))
-                      .alias("authority")))
-        hub = (edges.join(av, edges.dst == av.node)
-               .groupBy(F.col("src").alias("node"))
-               .agg(F.sum("authority").alias("hub")))
-        hv_raw = (nodes.join(hub, "node", "left")
-                  .select("node",
-                          F.coalesce("hub", F.lit(0.0)).alias("hub"))
-                  .localCheckpoint())
-        hv = (hv_raw
-              .crossJoin(F.broadcast(_l2_norm_frame(hv_raw, "hub", "_nh")))
-              .select("node", (F.col("hub") / F.col("_nh")).alias("hub")))
+        av = half_step(hv, "src", "dst", "authority")
+        hv = half_step(av, "dst", "src", "hub")
     return (hv.join(av, "node")
             .select("node", F.round("hub", round_to).alias("hub"),
                     F.round("authority", round_to).alias("authority"))
@@ -755,14 +732,7 @@ def k_core_decomposition(edges: DataFrame,
     """
     from pyspark.sql import Window
 
-    und = (edges.filter(F.col("src") != F.col("dst"))
-           .select(F.least("src", "dst").alias("a"),
-                   F.greatest("src", "dst").alias("b"))
-           .distinct())
-    sym = (und.select(F.col("a").alias("u"), F.col("b").alias("v"))
-           .unionByName(und.select(F.col("b").alias("u"),
-                                   F.col("a").alias("v")))
-           .localCheckpoint())
+    sym = _symmetric(edges)
     cur = (sym.groupBy(F.col("u").alias("node"))
            .agg(F.count(F.lit(1)).alias("c"))
            .localCheckpoint())
@@ -828,32 +798,37 @@ def approx_neighborhood_function(edges: DataFrame, k: int = 4,
     lets the driver's oracle verify a sketch-based result by value
     (tolerance-bool pattern at the query layer).
     """
+    curve = list(islice(_hll_totals(edges, lg_k), k + 1))
+    return edges.sparkSession.createDataFrame(
+        list(enumerate(curve)) if curve[0] else [],
+        "hop int, est_pairs long")
+
+
+def _hll_totals(edges: DataFrame, lg_k: int) -> Iterator[int]:
+    """The floored HLL totals of hop 0, 1, 2, ...: one per ``next``,
+    with one collect per hop.  Hop 0 is the node count (singleton
+    sketches are exact by construction); an empty graph yields only
+    that 0."""
     edges = edges.localCheckpoint()
-    nodes = (edges.select(F.col("src").alias("node"))
-             .unionByName(edges.select(F.col("dst").alias("node")))
-             .distinct()
-             .localCheckpoint())
-    spark = edges.sparkSession
+    nodes = _nodes(edges)
     n = nodes.count()
+    yield n
     if n == 0:
-        return spark.createDataFrame([], "hop int, est_pairs long")
+        return
     # ball(v, 0) = {v}: one sketch per node over its own id
     r = (nodes.groupBy("node")
          .agg(F.hll_sketch_agg("node", F.lit(lg_k)).alias("sk"))
          .localCheckpoint())
-    est_rows = [(0, int(n))]  # singleton sketches are exact by construction
-    for h in range(1, k + 1):
+    while True:
         nbr = (edges.join(r, edges.dst == r.node)
                .select(edges.src.alias("node"), "sk"))
         r = (r.unionByName(nbr)
              .groupBy("node")
              .agg(F.hll_union_agg("sk").alias("sk"))
              .localCheckpoint())
-        est = r.agg(
+        yield int(r.agg(
             F.sum(F.floor(F.hll_sketch_estimate("sk")).cast("long"))
-            .alias("e")).collect()[0]["e"]
-        est_rows.append((h, int(est)))
-    return spark.createDataFrame(est_rows, "hop int, est_pairs long")
+            .alias("e")).collect()[0]["e"])
 
 
 def effective_diameter(edges: DataFrame, alpha: float = 0.9,
@@ -879,37 +854,19 @@ def effective_diameter(edges: DataFrame, alpha: float = 0.9,
     from fractions import Fraction
 
     fa = Fraction(alpha).limit_denominator(10 ** 6)
-    edges = edges.localCheckpoint()
-    nodes = (edges.select(F.col("src").alias("node"))
-             .unionByName(edges.select(F.col("dst").alias("node")))
-             .distinct()
-             .localCheckpoint())
-    n = nodes.count()
-    if n == 0:
+    totals = _hll_totals(edges, lg_k)
+    curve = [next(totals)]
+    if curve[0] == 0:
         return 0, 0, [0]
-    r = (nodes.groupBy("node")
-         .agg(F.hll_sketch_agg("node", F.lit(lg_k)).alias("sk"))
-         .localCheckpoint())
-    curve = [int(n)]
-    sat = None
-    for _h in range(1, max_hops + 1):
-        nbr = (edges.join(r, edges.dst == r.node)
-               .select(edges.src.alias("node"), "sk"))
-        r = (r.unionByName(nbr)
-             .groupBy("node")
-             .agg(F.hll_union_agg("sk").alias("sk"))
-             .localCheckpoint())
-        est = int(r.agg(
-            F.sum(F.floor(F.hll_sketch_estimate("sk")).cast("long"))
-            .alias("e")).collect()[0]["e"])
+    for est in islice(totals, max_hops):
         if est == curve[-1]:
-            sat = _h - 1  # no growth this hop: saturated at previous
-            break
+            break  # no growth this hop: saturated at the previous one
         curve.append(est)
-    if sat is None:
+    else:
         raise RuntimeError(
             f"effective_diameter: ANF total still growing after "
             f"{max_hops} hops — raise max_hops")
+    sat = len(curve) - 1
     final = curve[sat]
     eff = next(h for h in range(sat + 1)
                if curve[h] * fa.denominator >= fa.numerator * final)
@@ -917,8 +874,8 @@ def effective_diameter(edges: DataFrame, alpha: float = 0.9,
 
 
 def label_propagation(edges: DataFrame, iters: int = 5,
-                      hub_degree_threshold: int | None = 10_000,
-                      salt: int = 16) -> DataFrame:
+                      hub_degree_threshold: int | None = 10_000
+                      ) -> DataFrame:
     """Deterministic semi-synchronous label propagation communities.
 
     label_0(v) = v; each iteration every node adopts the most frequent
@@ -935,7 +892,7 @@ def label_propagation(edges: DataFrame, iters: int = 5,
     Skew: the message join keys the adjacency frame on the label
     PROVIDER ``v``, so a degree-d hub's d adjacency rows land in one
     join task.  Nodes with degree >= ``hub_degree_threshold`` take a
-    salted path: their adjacency rows spread over ``salt`` buckets and
+    salted path: their adjacency rows spread over 16 salt buckets and
     the (tiny) hot slice of the label frame is replicated per salt —
     the standard hot-key split, same machinery as
     ``operators/scoring.salted_join``.  The split is degree-based and
@@ -946,21 +903,12 @@ def label_propagation(edges: DataFrame, iters: int = 5,
     """
     from pyspark.sql import Window
 
-    sym = (edges.filter(F.col("src") != F.col("dst"))
-           .select(F.least("src", "dst").alias("a"),
-                   F.greatest("src", "dst").alias("b"))
-           .distinct())
-    sym = (sym.select(F.col("a").alias("u"), F.col("b").alias("v"))
-           .unionByName(sym.select(F.col("b").alias("u"),
-                                   F.col("a").alias("v")))
-           .localCheckpoint())
-    nodes = (edges.select(F.col("src").alias("node"))
-             .unionByName(edges.select(F.col("dst").alias("node")))
-             .distinct()
-             .localCheckpoint())
+    sym = _symmetric(edges)
+    nodes = _nodes(edges)
 
     has_hot = False
     sym_cold = sym
+    salt = 16  # buckets a hub's adjacency rows spread over
     if hub_degree_threshold is not None:
         # provider-side degree = how many adjacency rows carry each v;
         # hot set is tiny by definition (true hubs), broadcast twice

@@ -18,12 +18,9 @@ joins — the standard Spark-first CC formulation:
   key; AQE skew-join splitting handles hot keys
   (``spark.sql.adaptive.skewJoin.enabled``), and edges are pre-hash
   partitioned once and reused across iterations.
-* **Lineage control**: every ``checkpoint_every`` rounds the label frame
-  is localCheckpoint()-ed (or persisted + materialized) to cut the plan;
-  otherwise 10 iterations of self-joins produce an exponential plan.
 * Each round also pointer-jumps (component <- component's component), so
   convergence is O(log diameter) rounds, not O(diameter): a 2^25-hop
-  chain converges within max_iter=25.  Credential graphs are star-shaped
+  chain converges within 25 rounds.  Credential graphs are star-shaped
   (diameter <= 4) and converge in 2-3 rounds; non-convergence raises
   instead of silently returning partial labels.
 """
@@ -45,16 +42,13 @@ SAME_AS_PREDICATES = (
 )
 
 
-def equivalence_edges(triples: DataFrame,
-                      include_adjacency: bool = True) -> DataFrame:
+def equivalence_edges(triples: DataFrame) -> DataFrame:
     """Edge list (src, dst) for entity linking from the triples table."""
     same_as = (
         triples
         .filter(F.col("pred").isin(*SAME_AS_PREDICATES) & F.col("obj_is_iri"))
         .select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
     )
-    if not include_adjacency:
-        return same_as.distinct()
     # Adjacency only where a blank node is involved: shared *vocabulary*
     # IRIs (rdf:type classes, proofPurpose values, ...) must not merge
     # unrelated documents into one mega-component; plain IRI identity is
@@ -80,25 +74,31 @@ def equivalence_edges(triples: DataFrame,
     return same_as.unionByName(adjacency).unionByName(membership).distinct()
 
 
-def connected_components(edges: DataFrame, max_iter: int = 25,
-                         checkpoint_every: int = 3,
-                         driver_threshold: int = DRIVER_GRAPH_EDGES) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """(src, dst) edge list -> (id, component) with component = min node id.
 
-    Deterministic: labels are node-id strings, min is lexicographic.
+    Deterministic: labels are node-id strings, min is lexicographic.  A
+    null id takes the smallest component among its neighbours (null
+    itself without one) but links nothing: a join never matches it.
 
     Hybrid execution, behind the same gate (``graph.driver_sized``) and
-    default threshold (``graph.DRIVER_GRAPH_EDGES``) as ``pagerank``: at
-    or below ``driver_threshold`` edges the graph fits the driver
-    trivially and a union-find runs in milliseconds — iterative Spark
-    jobs would pay seconds of scheduling per round for nothing.  Above
-    it, the distributed label-propagation loop runs (the path that holds
-    at 10^12 scale); both paths produce identical output.
+    threshold (``graph.DRIVER_GRAPH_EDGES``) as ``pagerank``: at or
+    below it the graph fits the driver trivially and a union-find runs
+    in milliseconds — iterative Spark jobs would pay seconds of
+    scheduling per round for nothing.  Above it, the distributed
+    label-propagation loop (``_cc_loop``) runs (the path that holds at
+    10^12 scale); both paths produce identical output.
     """
-    spark = edges.sparkSession
-    edges, table = driver_sized(edges, driver_threshold)
+    edges, table = driver_sized(edges, DRIVER_GRAPH_EDGES)
     if table is not None:
-        return _driver_union_find(spark, table)
+        return _driver_union_find(edges.sparkSession, table)
+    return _cc_loop(edges, 25)
+
+
+def _cc_loop(edges: DataFrame, max_iter: int) -> DataFrame:
+    """The distributed path of ``connected_components``: at most
+    ``max_iter`` rounds of label propagation over ``edges``."""
+    spark = edges.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
     # Symmetrize once; repartition by src so every iteration's join reuses
@@ -145,7 +145,9 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
             .select("id",
                     F.coalesce("p_comp", "component").alias("component"))
         )
-        if (i + 1) % checkpoint_every == 0:
+        # every third round cuts the plan; otherwise 10 iterations of
+        # self-joins produce an exponential plan
+        if (i + 1) % 3 == 0:
             new_labels = new_labels.localCheckpoint()
         else:
             new_labels = new_labels.persist()
@@ -168,11 +170,11 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
     if changed != 0:
         # silently returning partial labels would mislabel components with
         # diameter > 2^max_iter; fail loudly instead (with pointer jumping
-        # max_iter=25 covers diameter ~2^25 — hitting this means a bug)
+        # 25 rounds cover diameter ~2^25 — hitting this means a bug)
         labels.unpersist()
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} "
-            "iterations; raise max_iter")
+            "iterations")
     # hand the caller a ContextCleaner-managed frame and release the
     # loop's pinned cache (callers can't unpersist an internal handle)
     result = labels.localCheckpoint()
@@ -182,8 +184,9 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
 
 def _driver_union_find(spark, edges: pa.Table) -> DataFrame:
     """Exact union-find on the edge table ``driver_sized`` collected
-    (small-graph fast path)."""
+    (small-graph fast path), with ``_cc_loop``'s rows for a null id."""
     parent: dict[str, str] = {}
+    null_nbrs: list[str | None] = []  # one entry per edge at a null id
 
     def find(x: str) -> str:
         root = x
@@ -195,6 +198,12 @@ def _driver_union_find(spark, edges: pa.Table) -> DataFrame:
 
     for src, dst in zip(edges.column("src").to_pylist(),
                         edges.column("dst").to_pylist()):
+        if src is None or dst is None:
+            other = dst if src is None else src
+            null_nbrs.append(other)
+            if other is not None:
+                parent.setdefault(other, other)
+            continue
         parent.setdefault(src, src)
         parent.setdefault(dst, dst)
         rs, rd = find(src), find(dst)
@@ -202,15 +211,15 @@ def _driver_union_find(spark, edges: pa.Table) -> DataFrame:
             parent[max(rs, rd)] = min(rs, rd)
 
     rows = [(node, find(node)) for node in parent]
-    if not rows:
-        return spark.createDataFrame([], "id string, component string")
+    if null_nbrs:
+        roots = [find(x) for x in null_nbrs if x is not None]
+        rows.append((None, min(roots, default=None)))
     return spark.createDataFrame(rows, "id string, component string")
 
 
-def link_entities(triples: DataFrame, max_iter: int = 25) -> DataFrame:
+def link_entities(triples: DataFrame) -> DataFrame:
     """triples -> (id, component) for every IRI/bnode node in the graph."""
-    edges = equivalence_edges(triples)
-    comp = connected_components(edges, max_iter=max_iter)
+    comp = connected_components(equivalence_edges(triples))
     # nodes that never appear in an edge are their own component
     all_nodes = (
         triples.select(F.col("subj").alias("id"))

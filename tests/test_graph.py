@@ -1,20 +1,21 @@
 """Graph analytics: PageRank + k-hop on hand-checkable graphs."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from cbor_ld_spark.operators.graph import (
-    _pagerank_loop, _ppr_loop, pagerank, personalized_pagerank)
+    _pagerank_loop, pagerank, personalized_pagerank)
 
 
 def _loop_pagerank(edges, iters=5, damping=0.85, round_to=6,
                    redistribute_dangling=False):
     return _pagerank_loop(edges.localCheckpoint(), iters, damping, round_to,
-                          redistribute_dangling)
+                          redistribute_dangling=redistribute_dangling)
 
 
 def _loop_ppr(edges, seeds, iters=5, damping=0.85, round_to=6):
-    return _ppr_loop(edges.localCheckpoint(), seeds, iters, damping,
-                     round_to)
+    return _pagerank_loop(edges.localCheckpoint(), iters, damping, round_to,
+                          seeds=seeds)
 
 
 # Both paths of the hybrid PageRank operators: the public operators keep
@@ -671,3 +672,75 @@ def test_kg_pagerank_runs_in_three_jobs(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(rows) == 25
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+
+
+def test_undirected_operators_ignore_direction_duplicates_self_loops(spark):
+    """The undirected operators share one view of the graph: adding
+    reversed, duplicated and self-loop edges between the same nodes
+    changes none of their rows."""
+    import random
+
+    from cbor_ld_spark.operators.graph import (
+        k_core_decomposition,
+        label_propagation,
+        neighborhood_overlap,
+        triangle_stats,
+    )
+
+    rng = random.Random(20261019)
+    nodes = [f"n{i:02d}" for i in range(20)]
+    pairs = sorted({tuple(rng.sample(nodes, 2)) for _ in range(45)})
+    used = sorted({x for p in pairs for x in p})
+    noisy = (pairs + [(d, s) for s, d in rng.sample(pairs, 15)]
+             + rng.sample(pairs, 10) + [(v, v) for v in rng.sample(used, 5)])
+    rng.shuffle(noisy)
+
+    def overlap(e):
+        return neighborhood_overlap(e, threshold=0.2)
+
+    for op in (triangle_stats, k_core_decomposition, label_propagation,
+               overlap):
+        clean = sorted(map(tuple, op(_edges(spark, pairs)).collect()))
+        assert clean, op.__name__
+        assert sorted(map(tuple, op(_edges(spark, noisy)).collect())) \
+            == clean, op.__name__
+
+
+# Jobs per job group of each graph query over the warm sf0.001 tiers, as
+# the distributed loops ran them when the graph views were unified.  A
+# change may lower a count, never raise it.  Adaptive execution makes
+# kg_anf (70-72), kg_anf_diameter (72-75) and kg_kcore (36-38) vary from
+# run to run; their pin is the highest count seen, and a count above it
+# gets two more runs before it fails.
+GRAPH_QUERY_JOBS = {
+    "kg_hits": 94, "kg_anf": 72, "kg_anf_diameter": 75,
+    "kg_communities": 54, "kg_kcore": 38, "kg_triangles": 22, "kg_ppr": 5,
+    "kg_neighbor_overlap": 11, "kg_neighbor_overlap_lsh": 16,
+    "kg_entity_components": 12,
+}
+
+
+@pytest.mark.parametrize("name", sorted(GRAPH_QUERY_JOBS))
+def test_graph_query_job_count_pinned(spark, name):
+    import __spark_entry__ as entry
+    from cbor_ld_spark.plans import (
+        shared_canonical_triples,
+        shared_entity_edges,
+    )
+
+    sf = "/root/testdata/sf0.001"
+    shared_entity_edges(spark, sf)
+    shared_canonical_triples(spark, sf)
+    sc = spark.sparkContext
+    counts = []
+    for attempt in range(3):
+        group = f"test-{name}-jobs-{attempt}"
+        sc.setJobGroup(group, group)
+        try:
+            entry.queries()[name](spark, sf).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        if counts[-1] <= GRAPH_QUERY_JOBS[name]:
+            break
+    assert counts[-1] <= GRAPH_QUERY_JOBS[name], (name, counts)

@@ -20,7 +20,7 @@ def test_driver_path_chain(spark):
 
 
 def test_distributed_path_matches_driver(spark):
-    from cbor_ld_spark.operators.linking import connected_components
+    from cbor_ld_spark.operators.linking import _cc_loop, connected_components
 
     pairs = _chain(60) + [("a", "b"), ("b", "c"), ("z", "z")]
     driver = {(r["id"], r["component"]) for r in
@@ -28,14 +28,12 @@ def test_distributed_path_matches_driver(spark):
     # force the distributed loop; 60-hop chain needs pointer jumping to
     # converge within 25 rounds (flooding alone would need 59)
     dist = {(r["id"], r["component"]) for r in
-            connected_components(_edges(spark, pairs),
-                                 driver_threshold=0).collect()}
+            _cc_loop(_edges(spark, pairs), 25).collect()}
     assert dist == driver
 
 
 def test_distributed_nonconvergence_raises(spark):
-    from cbor_ld_spark.operators.linking import connected_components
+    from cbor_ld_spark.operators.linking import _cc_loop
 
     with pytest.raises(RuntimeError, match="converge"):
-        connected_components(_edges(spark, _chain(40)),
-                             driver_threshold=0, max_iter=2)
+        _cc_loop(_edges(spark, _chain(40)), 2)

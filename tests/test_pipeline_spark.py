@@ -95,7 +95,7 @@ def test_triples_pr_vs_golden(spark):
 
 
 def test_connected_components_basic(spark):
-    from cbor_ld_spark.operators.linking import connected_components
+    from cbor_ld_spark.operators.linking import _cc_loop, connected_components
 
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("x", "y"), ("p", "p")],
@@ -105,26 +105,43 @@ def test_connected_components_basic(spark):
     got = {r["id"]: r["component"]
            for r in connected_components(edges).collect()}
     assert got == expected
-    # distributed label-propagation path (threshold forced to 0)
+    # distributed label-propagation path
     got_dist = {r["id"]: r["component"]
-                for r in connected_components(edges,
-                                              driver_threshold=0).collect()}
+                for r in _cc_loop(edges, 25).collect()}
     assert got_dist == expected
 
 
 def test_connected_components_paths_agree(spark):
+    """The driver union-find and the distributed loop give the same rows
+    on a random graph, and on graphs with null node ids: a null id takes
+    the smallest component among its neighbours but links nothing."""
     import random
 
-    from cbor_ld_spark.operators.linking import connected_components
+    from cbor_ld_spark.operators.linking import _cc_loop, connected_components
+
+    def both(rows):
+        edges = spark.createDataFrame(rows, "src string, dst string")
+        fast = sorted(map(tuple, connected_components(edges).collect()),
+                      key=repr)
+        return fast, sorted(map(tuple, _cc_loop(edges, 25).collect()),
+                            key=repr)
 
     rng = random.Random(7)
     rows = [(f"n{rng.randrange(200)}", f"n{rng.randrange(200)}")
             for _ in range(400)]
-    edges = spark.createDataFrame(rows, "src string, dst string")
-    fast = sorted(map(tuple, connected_components(edges).collect()))
-    dist = sorted(map(tuple, connected_components(
-        edges, driver_threshold=0).collect()))
+    fast, dist = both(rows)
     assert fast == dist
+    fast, dist = both([("a", "b"), ("b", None), (None, "a"), ("x", "y")])
+    assert fast == dist == sorted(
+        [("a", "a"), ("b", "a"), ("x", "x"), ("y", "x"), (None, "a")],
+        key=repr)
+    # a null id between two components, one on a self-loop, and one
+    # with only null neighbours
+    for nulls in ([("c", None), (None, "b"), ("b", "a")],
+                  [(None, None), ("p", "p")],
+                  [(None, "z"), (None, None), ("y", "z")]):
+        fast, dist = both(rows[:40] + nulls)
+        assert fast == dist, nulls
 
 
 def test_canonicalization_isomorphism_invariance():
