@@ -1291,7 +1291,7 @@ def _multimodal_frame_dedup(spark, sf_dir):
     (real AVI demux + JPEG decode), group by perceptual aHash, keep
     hashes seen in more than one video — finds the shared intro/title
     cards a real video corpus is full of.  Scale shape: the frame tier
-    is one mapInPandas, then a hash-groupBy on the uniform 64-bit
+    is one Arrow stage (map_rows), then a hash-groupBy on the uniform 64-bit
     phash; no pixels ever shuffle (only the 16-char hash column)."""
     from cbor_ld_spark.operators.multimodal import (
         sample_frames,

@@ -1,1 +1,1 @@
-from .udfs import DOC_RESULT_SCHEMA, jsonld_sniff, kg_process_batches  # noqa: F401
+from .udfs import jsonld_sniff, kg_process_batches, map_rows  # noqa: F401

@@ -13,6 +13,8 @@ Design for 100 TB:
   length, sha invariant, triples) comes back in the same batch.
   Output columns are built with ``pa.array`` directly — no pandas
   object-Series detour (measured ~8% less overhead, lower variance).
+* ``map_rows`` is every other per-row Python stage: a pure row function
+  under ``mapInArrow``, its output built the same way.
 * Triples return as **seven parallel flat arrays** rather than one
   array<struct>: Arrow conversion of plain list columns is several
   times cheaper than building struct children from Python tuples, and
@@ -34,7 +36,7 @@ import os
 import sys
 import zipimport
 
-from pyspark.sql import Column, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -56,10 +58,9 @@ from cbor_ld_spark.kernel.transform import encode_with_triples
 _S = StringType()
 _STRS = ArrayType(_S)
 
-# the kernel's per-document result in ``_process_one``'s tuple order;
-# both output schemas and the Arrow types the kernel fn yields derive
-# from this one list
-_RESULT = [
+# the kernel's per-document result in ``_process_one``'s tuple order: the
+# kernel stage returns its input columns but ``content``, then these
+RESULT_FIELDS = [
     StructField("doc_sha", _S, True),         # sha256(canonical(doc))
     StructField("ok", BooleanType(), False),
     StructField("error", _S, True),
@@ -79,22 +80,6 @@ _RESULT = [
     StructField("t_bnode", _STRS, True),
     StructField("t_canon", _STRS, True),
 ]
-_RESULT_FIELDS = [f.name for f in _RESULT]
-
-# kernel output keyed by content hash (no provenance columns): the
-# dedup-first dataflow processes each distinct content once and joins
-# provenance back JVM-side
-KERNEL_RESULT_SCHEMA = StructType(
-    [StructField("content_sha", _S, False), *_RESULT])
-
-DOC_RESULT_SCHEMA = StructType([
-    StructField("repo", _S, False),
-    StructField("path", _S, False),
-    StructField("commit", _S, True),
-    _RESULT[0],
-    StructField("content_sha", _S, True),     # sha256(raw content)
-    *_RESULT[1:],
-])
 
 
 def jsonld_sniff(lang: Column | None = None) -> Column:
@@ -132,12 +117,12 @@ def _bnode_map(columns) -> tuple[list, list]:
 def _process_one(content: str, registry_id: int, canonical: bool = False):
     """Per-document kernel: returns a result tuple (never raises).
 
-    Tuple layout matches DOC_RESULT_SCHEMA from ``doc_sha`` onward.  The
-    triples come from the encoder's own context walk, so every document
-    is expanded and ``ok`` covers expansion.  ``canonical`` adds the
-    blank-node label map (``t_bnode``/``t_canon``) of a clean document;
-    it is computed after the outcome is fixed, so ``ok`` and
-    ``error_kind`` never depend on it.
+    Tuple layout matches ``RESULT_FIELDS``.  The triples come from the
+    encoder's own context walk, so every document is expanded and ``ok``
+    covers expansion.  ``canonical`` adds the blank-node label map
+    (``t_bnode``/``t_canon``) of a clean document; it is computed after
+    the outcome is fixed, so ``ok`` and ``error_kind`` never depend on
+    it.
     """
     if not isinstance(content, str):
         return (None, False, f"content is {type(content).__name__}",
@@ -223,7 +208,7 @@ def python_task(body):
     calls) would otherwise leave them for the next task's
     ``invalidate_caches()`` to re-read.  A generator body is evicted
     around its whole iteration; the wrapper keeps the body's signature,
-    which ``applyInPandas`` and ``pandas_udf`` read.
+    which ``arrow_udf`` and ``applyInArrow`` read.
     """
     if inspect.isgeneratorfunction(body):
         @functools.wraps(body)
@@ -245,40 +230,63 @@ def python_task(body):
     return run
 
 
-def kg_process_batches(registry_id: int = 1, canonical: bool = False,
-                       with_provenance: bool = False):
+def kg_process_batches(registry_id: int = 1, canonical: bool = False):
     """mapInArrow kernel fn (Arrow RecordBatch in/out, no pandas).
 
-    Building output columns with ``pa.array`` directly is measurably
-    faster and lower-variance than the pandas detour (object-dtype
-    Series -> Arrow conversion), and the hot path allocates no pandas
-    structures at all.
-
-    ``with_provenance=False``: input (content_sha, content) ->
-    KERNEL_RESULT_SCHEMA (the dedup-first dataflow).
-    ``with_provenance=True``: input additionally carries
-    (repo, path, commit) through -> DOC_RESULT_SCHEMA (per-row path).
-    ``canonical`` fills each document's blank-node label map.
+    Each batch's columns other than ``content`` pass through zero-copy,
+    followed by one ``pa.array`` per ``RESULT_FIELDS`` entry built from
+    the per-document ``_process_one`` tuples: a (content_sha, content)
+    batch comes back as content_sha + the result.  The stage's Spark
+    schema is its input's fields but ``content``, then ``RESULT_FIELDS``,
+    so nullability follows the input.  ``canonical`` fills each
+    document's blank-node label map.
     """
-    out_schema = DOC_RESULT_SCHEMA if with_provenance else KERNEL_RESULT_SCHEMA
-    result_idx = {name: i for i, name in enumerate(_RESULT_FIELDS)}
+    names = [f.name for f in RESULT_FIELDS]
 
     @python_task
     def fn(batches):
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_type
 
-        schema = pa.schema([(f.name, to_arrow_type(f.dataType))
-                            for f in out_schema.fields])
+        types = [to_arrow_type(f.dataType) for f in RESULT_FIELDS]
         for batch in batches:
             results = [_process_one(c, registry_id, canonical)
                        for c in batch.column("content").to_pylist()]
-            arrays = [
-                pa.array([r[result_idx[f.name]] for r in results],
-                         type=f.type)
-                if f.name in result_idx else batch.column(f.name)
-                for f in schema
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, schema=schema)
+            keep = [n for n in batch.schema.names if n != "content"]
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(n) for n in keep]
+                + [pa.array([r[i] for r in results], type=t)
+                   for i, t in enumerate(types)],
+                names=keep + names)
 
     return fn
+
+
+def map_rows(df: DataFrame, fn, schema: StructType | str) -> DataFrame:
+    """One ``mapInArrow`` stage over a pure per-row function.
+
+    ``fn(*row)`` runs on each row of ``df``'s columns as Python values
+    and yields zero or more output tuples in ``schema``'s field order;
+    the task body builds one ``pa.array`` per field of each batch.
+    Every per-row Python stage of the package goes through here, so the
+    rows-to-Arrow step lives in one place and no stage takes a pandas
+    detour.
+    """
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+
+    @python_task
+    def body(batches):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        types = [to_arrow_type(f.dataType) for f in schema]
+        for batch in batches:
+            rows = [out for row in zip(*(c.to_pylist() for c in batch.columns))
+                    for out in fn(*row)]
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([r[i] for r in rows], type=t)
+                 for i, t in enumerate(types)],
+                names=schema.names)
+
+    return df.mapInArrow(body, schema)

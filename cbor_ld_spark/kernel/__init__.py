@@ -1,8 +1,8 @@
 """Pure-Python CBOR-LD kernel (no Spark imports here).
 
 Everything in this package is deterministic, per-document, and
-dependency-free so it can run inside Arrow-batched pandas UDFs on Spark
-executors without any cluster-side state.
+dependency-free so it can run inside Arrow-batched Python stages on
+Spark executors without any cluster-side state.
 """
 
 from .canonical import canonical_json, content_sha256, text_sha256

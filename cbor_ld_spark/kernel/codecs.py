@@ -11,7 +11,7 @@ Re-expresses the reference codec registries in Python:
   security#multibase, xsd:date, xsd:dateTime (src/codecs/mod.rs:70-88).
 
 All codecs are stateless pure functions over small strings — they run
-inside Arrow-batched pandas UDFs on executors.
+inside Arrow-batched Python stages on executors.
 """
 
 from __future__ import annotations

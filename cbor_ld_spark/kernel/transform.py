@@ -19,7 +19,7 @@ src/decode/mod.rs:129-272):
 Everything is per-document and deterministic — both sides re-derive the
 identical term-id table from the context chain, so each corpus row is
 independent (the invariant that lets Spark run this in Arrow-batched
-pandas UDFs with zero coordination).
+Python stages with zero coordination).
 
 Because of that determinism, steps 2-3 (the node's *header*) depend only
 on the allocation state, the active context, the node's keys (on encode

@@ -15,86 +15,64 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     BinaryType,
+    DataType,
     StringType,
     StructField,
     StructType,
 )
 
 from ..functions.udfs import python_task
-
-ENCODE_RESULT = StructType([
-    StructField("cbor", BinaryType(), True),
-    StructField("error_kind", StringType(), True),
-])
-
-DECODE_RESULT = StructType([
-    StructField("json", StringType(), True),
-    StructField("error_kind", StringType(), True),
-])
+from ..kernel import (
+    CborLdError,
+    canonical_json,
+    decode_document,
+    encode_document,
+    parse_json_document,
+)
 
 
-def _encode_udf(registry_id: int):
-    from pyspark.sql.functions import pandas_udf
+def _quarantined(fn, value) -> tuple:
+    """``(fn(value), None)``, or ``(None, error kind)`` when it raises:
+    a ``CborLdError``'s ``kind``, else the exception's type name."""
+    try:
+        return fn(value), None
+    except CborLdError as e:
+        return None, e.kind
+    except Exception as e:  # noqa: BLE001 — one value never kills a task
+        return None, type(e).__name__
 
-    @pandas_udf(ENCODE_RESULT)
+
+def _quarantine_udf(fn, name: str, dtype: DataType):
+    """An ``arrow_udf`` over one column: ``struct<name, error_kind>``
+    holding ``_quarantined(fn, value)`` for each value."""
+    from pyspark.sql.functions import arrow_udf
+
+    result = StructType([StructField(name, dtype, True),
+                         StructField("error_kind", StringType(), True)])
+
+    @arrow_udf(result)
     @python_task
-    def enc(contents: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        from cbor_ld_spark.kernel import CborLdError, encode_document
+    def run(arrays: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        from pyspark.sql.pandas.types import to_arrow_type
 
-        for s in contents:
-            cbor, err = [], []
-            for c in s:
-                try:
-                    cbor.append(encode_document(c, registry_id=registry_id))
-                    err.append(None)
-                except CborLdError as e:
-                    cbor.append(None)
-                    err.append(e.kind)
-                except Exception as e:
-                    cbor.append(None)
-                    err.append(type(e).__name__)
-            yield pd.DataFrame({"cbor": cbor, "error_kind": err})
+        arrow = to_arrow_type(result)
+        for a in arrays:
+            yield pa.array([_quarantined(fn, v) for v in a.to_pylist()],
+                           type=arrow)
 
-    return enc
-
-
-def _decode_udf():
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(DECODE_RESULT)
-    @python_task
-    def dec(blobs: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        from cbor_ld_spark.kernel import (
-            CborLdError,
-            canonical_json,
-            decode_document,
-        )
-
-        for s in blobs:
-            out, err = [], []
-            for b in s:
-                try:
-                    out.append(canonical_json(decode_document(bytes(b))))
-                    err.append(None)
-                except CborLdError as e:
-                    out.append(None)
-                    err.append(e.kind)
-                except Exception as e:
-                    out.append(None)
-                    err.append(type(e).__name__)
-            yield pd.DataFrame({"json": out, "error_kind": err})
-
-    return dec
+    return run
 
 
 def encode_column(df: DataFrame, content_col: str = "content",
                   registry_id: int = 1) -> DataFrame:
     """Add ``cbor`` (binary), ``cbor_hex``, ``encode_error`` columns."""
-    r = _encode_udf(registry_id)(F.col(content_col))
+    r = _quarantine_udf(
+        lambda c: encode_document(c, registry_id=registry_id),
+        "cbor", BinaryType())(F.col(content_col))
     return (
         df.withColumn("_r", r)
         .withColumn("cbor", F.col("_r.cbor"))
@@ -106,33 +84,15 @@ def encode_column(df: DataFrame, content_col: str = "content",
 
 def decode_column(df: DataFrame, cbor_col: str = "cbor") -> DataFrame:
     """Add ``json`` (canonical string) + ``decode_error`` columns."""
-    r = _decode_udf()(F.col(cbor_col))
+    r = _quarantine_udf(
+        lambda b: canonical_json(decode_document(bytes(b))),
+        "json", StringType())(F.col(cbor_col))
     return (
         df.withColumn("_r", r)
         .withColumn("json", F.col("_r.json"))
         .withColumn("decode_error", F.col("_r.error_kind"))
         .drop("_r")
     )
-
-
-def _canonical_source_udf():
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(StringType())
-    @python_task
-    def canon(contents: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        from cbor_ld_spark.kernel import canonical_json, parse_json_document
-
-        for s in contents:
-            out = []
-            for c in s:
-                try:
-                    out.append(canonical_json(parse_json_document(c)))
-                except Exception:
-                    out.append(None)
-            yield pd.Series(out)
-
-    return canon
 
 
 def hex_roundtrip_check(df: DataFrame, content_col: str = "content",
@@ -153,7 +113,10 @@ def hex_roundtrip_check(df: DataFrame, content_col: str = "content",
     # the blocks when the frame is GC'd, so callers need no unpersist.
     framed = framed.localCheckpoint(eager=False)
     dec = decode_column(framed.filter(F.col("cbor").isNotNull()), "cbor2")
-    dec = dec.withColumn("canon_src", _canonical_source_udf()(F.col(content_col)))
+    canon_src = _quarantine_udf(
+        lambda c: canonical_json(parse_json_document(c)),
+        "json", StringType())(F.col(content_col))
+    dec = dec.withColumn("canon_src", canon_src["json"])
     ok_rows = dec.withColumn(
         "hex_roundtrip_ok",
         F.col("decode_error").isNull() &

@@ -431,7 +431,7 @@ def embedding_near_duplicates_blocked(spark: SparkSession, sf_dir: str,
     """Exact cosine near-dup, distributed block-pair matmul (BLAS).
 
     Vectors hash into B = ceil(n / block_size) blocks; each of the
-    B(B+1)/2 block *pairs* is one ``applyInPandas`` group that multiplies
+    B(B+1)/2 block *pairs* is one ``applyInArrow`` group that multiplies
     its two (block_size, d) matrices with BLAS.  Nothing is collected to
     the driver and nothing is broadcast: per-task memory is two blocks,
     the shuffle key (blk_i, blk_j) is uniform by construction (modulo
@@ -471,46 +471,44 @@ def embedding_near_duplicates_blocked(spark: SparkSession, sf_dir: str,
         "blk_i", "blk_j", "side", "vec_id", "embedding")
 
     @python_task
-    def fn(pdf):
+    def fn(table):
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
-        empty = pd.DataFrame({"vec_a": [], "vec_b": [], "cosine": []})
-        left = pdf[pdf["side"] == 0]
-        if len(left) == 0:  # block i empty (n < n_blocks edge): no pairs
-            return empty
-        ids0 = left["vec_id"].to_numpy()
-        m0 = np.array(left["embedding"].tolist(), dtype=np.float64)
-        m0 /= np.linalg.norm(m0, axis=1, keepdims=True)
+        def block(side):
+            part = table.filter(pc.equal(table["side"], side))
+            m = np.array(part["embedding"].to_pylist(), dtype=np.float64)
+            if len(m):
+                m /= np.linalg.norm(m, axis=1, keepdims=True)
+            return part["vec_id"].to_numpy(), m
+
         # same-block must come from the GROUP KEY, not side counts: a
         # cross pair (i, j) whose block j is empty would otherwise be
         # misread as same-block and re-emit block i's self-pairs
-        same_block = bool(pdf["blk_i"].iloc[0] == pdf["blk_j"].iloc[0])
-        if same_block:
-            ids1, m1 = ids0, m0
-        else:
-            right = pdf[pdf["side"] == 1]
-            if len(right) == 0:  # block j empty: no cross pairs
-                return empty
-            ids1 = right["vec_id"].to_numpy()
-            m1 = np.array(right["embedding"].tolist(), dtype=np.float64)
-            m1 /= np.linalg.norm(m1, axis=1, keepdims=True)
-        sims = m0 @ m1.T
-        ri, ci = (sims >= threshold).nonzero()
-        out_a, out_b, out_c = [], [], []
-        for r, c in zip(ri, ci):
-            x, y = int(ids0[r]), int(ids1[c])
-            if x == y:
-                continue
-            out_a.append(min(x, y) if same_block else x if x < y else y)
-            out_b.append(max(x, y))
-            out_c.append(round(float(sims[r, c]), 6))
-        res = pd.DataFrame({"vec_a": out_a, "vec_b": out_b, "cosine": out_c})
-        # same-block pairs surface twice ((r,c) and (c,r)); keep one
-        return res.drop_duplicates(["vec_a", "vec_b"]) if same_block else res
+        same_block = table["blk_i"][0].as_py() == table["blk_j"][0].as_py()
+        ids0, m0 = block(0)
+        ids1, m1 = (ids0, m0) if same_block else block(1)
+        out_a, out_b, out_c, seen = [], [], [], set()
+        if len(ids0) and len(ids1):  # an empty block has no pairs
+            sims = m0 @ m1.T
+            for r, c in zip(*(sims >= threshold).nonzero()):
+                x, y = int(ids0[r]), int(ids1[c])
+                pair = (min(x, y), max(x, y))
+                # same-block pairs surface twice ((r,c) and (c,r)), and
+                # BLAS may round the two differently: keep the first
+                if x == y or same_block and pair in seen:
+                    continue
+                seen.add(pair)
+                out_a.append(pair[0])
+                out_b.append(pair[1])
+                out_c.append(round(float(sims[r, c]), 6))
+        return pa.table({"vec_a": pa.array(out_a, pa.int64()),
+                         "vec_b": pa.array(out_b, pa.int64()),
+                         "cosine": pa.array(out_c, pa.float64())})
 
     return (
         both.groupBy("blk_i", "blk_j")
-        .applyInPandas(fn, schema="vec_a long, vec_b long, cosine double")
+        .applyInArrow(fn, schema="vec_a long, vec_b long, cosine double")
         .orderBy("vec_a", "vec_b")
     )

@@ -25,16 +25,22 @@ Scale notes (the part the 100 TB design hangs on):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructType
 
 from cbor_ld_spark.functions.udfs import (
-    DOC_RESULT_SCHEMA,
-    KERNEL_RESULT_SCHEMA,
+    RESULT_FIELDS,
     jsonld_sniff,
     kg_process_batches,
 )
 
-DOC_COLUMNS = [f.name for f in DOC_RESULT_SCHEMA.fields
-               if not f.name.startswith("t_")]
+# the docs tables' column order: provenance, doc_sha, content_sha, then
+# the rest of the per-document result but its triple and label arrays
+DOC_COLUMNS = ["repo", "path", "commit", "doc_sha", "content_sha",
+               *(f.name for f in RESULT_FIELDS[1:]
+                 if not f.name.startswith("t_"))]
+# process_corpus's column order, on either path
+_OUT_COLUMNS = [*DOC_COLUMNS, *(f.name for f in RESULT_FIELDS
+                                if f.name.startswith("t_"))]
 
 
 def process_corpus(repos: DataFrame, registry_id: int = 1,
@@ -62,11 +68,10 @@ def process_corpus(repos: DataFrame, registry_id: int = 1,
         .select("repo", "path", "commit", "content")
         .withColumn("content_sha", F.sha2(F.col("content"), 256))
     )
+    fn = kg_process_batches(registry_id=registry_id, canonical=canonical)
     if dedup_content:
         from cbor_ld_spark.plans.partitioning import spread_input
 
-        fn = kg_process_batches(registry_id=registry_id,
-                                canonical=canonical)
         # hash-repartition on the dedup key with an EXPLICIT count, then
         # distinct: one exchange total (the aggregation reuses the
         # partitioning), and AQE's byte-based coalescer cannot fold the
@@ -76,12 +81,18 @@ def process_corpus(repos: DataFrame, registry_id: int = 1,
         distinct = (spread_input(candidates.select("content_sha", "content"),
                                  by="content_sha")
                     .distinct())
-        results = distinct.mapInArrow(fn, schema=KERNEL_RESULT_SCHEMA)
+        results = distinct.mapInArrow(fn, _kernel_schema(distinct))
         return candidates.drop("content").join(results, "content_sha") \
-            .select(*[f.name for f in DOC_RESULT_SCHEMA.fields])
-    fn = kg_process_batches(registry_id=registry_id, canonical=canonical,
-                            with_provenance=True)
-    return candidates.mapInArrow(fn, schema=DOC_RESULT_SCHEMA)
+            .select(*_OUT_COLUMNS)
+    return candidates.mapInArrow(fn, _kernel_schema(candidates)) \
+        .select(*_OUT_COLUMNS)
+
+
+def _kernel_schema(inputs: DataFrame) -> StructType:
+    """The kernel stage's schema: its input's fields but ``content``
+    (so their nullability follows the input), then ``RESULT_FIELDS``."""
+    return StructType([*(f for f in inputs.schema if f.name != "content"),
+                       *RESULT_FIELDS])
 
 
 def triples_table(processed: DataFrame) -> DataFrame:

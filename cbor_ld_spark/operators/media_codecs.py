@@ -8,13 +8,13 @@ Real decoders for the formats that need nothing beyond the stdlib:
 * PPM/PGM (P5/P6) — ASCII header + raw samples.
 * BMP — BITMAPINFOHEADER, uncompressed 24/32 bpp, bottom-up rows.
 * JPEG/GIF — header-only metadata (dimensions from SOF / screen
-  descriptor); pixel decode genuinely requires an external library and
-  stays behind the ``strict`` seam in operators.multimodal.
+  descriptor); their pixel decoders are operators/jpeg_codec.py and
+  operators/gif_codec.py.
 * WAV — RIFF/WAVE fmt+data walk, 16-bit PCM to numpy.
 
-Encoders for PNG (filter-0 + zlib) and PPM close the loop so resize
-stages can emit real, re-decodable payloads, and the test corpus can be
-synthesized deterministically without fixtures.
+Encoders for PNG (filter-0 + zlib) and PPM close the loop so stages can
+emit real, re-decodable payloads (video frames re-encode as PNG), and
+the test corpus can be synthesized deterministically without fixtures.
 """
 
 from __future__ import annotations

@@ -1,31 +1,27 @@
 """Multimodal columns: image/audio/video as opaque binary + typed metadata.
 
 A training-data pipeline at 100 TB carries media as ``binary`` columns
-with a typed metadata struct, processed by Arrow-batched ``mapInPandas``
-stages.  Decode tiers (operators/media_codecs.py, stdlib+numpy only):
+with a typed metadata struct.  Each Python stage is a filter, a select
+and one ``functions.udfs.map_rows`` call over a pure row function that
+the driver-side oracles share.  Decode tiers (operators/media_codecs.py,
+stdlib+numpy only):
 
 * **real pixel decode — every image format**: PNG (zlib inflate +
   unfilter), PPM/PGM, BMP, baseline JPEG (Huffman + IDCT,
   operators/jpeg_codec.py), GIF (LZW, operators/gif_codec.py) —
-  features, perceptual aHash, and resize are genuine transforms.
+  features and perceptual aHash are genuine transforms.
 * **audio**: WAV 16-bit PCM fully decoded (duration, rms, peak).
 * **video**: real MJPEG-in-AVI demux since r4 (operators/avi_codec.py
   RIFF container walk + the repo's own JPEG decoder per frame) —
   ``sample_frames`` is a genuine pixel tier end-to-end; no media stub
   remains.
 
-Scale notes: media rows are large, so the operators repartition by
-``pmod(xxhash64(media_id), n)`` before the Python stage to bound batch
-memory (maxRecordsPerBatch alone is not enough when one row is 100 MB),
-and metadata-only transforms never touch the binary column (column
-pruning keeps it out of the scan).
+Scale note: metadata-only transforms never touch the binary column
+(column pruning keeps it out of the scan).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -37,7 +33,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..functions.udfs import python_task
+from ..functions.udfs import map_rows
 
 MEDIA_SCHEMA = StructType([
     StructField("media_id", LongType(), False),
@@ -127,23 +123,15 @@ def synthesize_media(spark: SparkSession, n_rows: int) -> DataFrame:
     PCM WAV (seeded sine); video is real MJPEG-in-AVI (2-8 JPEG frames,
     4-10 fps).  Every payload decodes for real.
     """
-    @python_task
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [synthesize_media_row(int(i)) for i in pdf["id"]]
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in MEDIA_SCHEMA.fields])
-
-    return spark.range(n_rows).mapInPandas(gen, schema=MEDIA_SCHEMA)
+    return map_rows(spark.range(n_rows),
+                    lambda i: [synthesize_media_row(i)], MEDIA_SCHEMA)
 
 
-def _decode_image(payload: bytes, strict: bool):
+def _decode_image(payload: bytes):
     """Sniff + decode: (format, width, height, pixels).
 
-    Every recognized image format decodes real pixels since r3;
-    ``strict`` is retained for API stability (no media seam remains
-    anywhere since the r4 AVI demux).  Raises MediaDecodeError for
-    undecodable bytes.
+    Every recognized image format decodes real pixels.  Raises
+    MediaDecodeError for undecodable bytes.
     """
     from .media_codecs import (
         MediaDecodeError,
@@ -178,15 +166,14 @@ def _decode_image(payload: bytes, strict: bool):
     raise MediaDecodeError("unrecognized image format")
 
 
-def image_feature_row(mid: int, payload: bytes | None,
-                      strict: bool = False) -> tuple:
+def image_feature_row(mid: int, payload: bytes | None) -> tuple:
     """One image-features row — pure, shared by the Spark stage and the
     driver-side oracle generator."""
     from .media_codecs import average_hash
 
     payload = bytes(payload) if payload is not None else b""
     try:
-        fmt, w, hgt, px = _decode_image(payload, strict)
+        fmt, w, hgt, px = _decode_image(payload)
         ph = average_hash(px) if px is not None else None
         return (int(mid), "ok", fmt, w, hgt, len(payload), ph)
     except Exception as e:
@@ -194,64 +181,12 @@ def image_feature_row(mid: int, payload: bytes | None,
                 len(payload), None)
 
 
-def image_features(media: DataFrame, strict: bool = False,
-                   partitions: int | None = None) -> DataFrame:
+def image_features(media: DataFrame) -> DataFrame:
     """Decode + feature-extract image rows (Arrow-batched, quarantined)."""
-    imgs = media.filter(F.col("kind") == "image")
-    if partitions:
-        imgs = imgs.repartition(partitions,
-                                F.pmod(F.xxhash64("media_id"), F.lit(partitions)))
-
-    @python_task
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [image_feature_row(mid, payload, strict)
-                    for mid, payload in zip(pdf["media_id"], pdf["payload"])]
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in IMAGE_FEATURES_SCHEMA.fields])
-
-    return imgs.select("media_id", "payload").mapInPandas(
-        fn, schema=IMAGE_FEATURES_SCHEMA)
-
-
-RESIZE_SCHEMA = StructType([
-    StructField("media_id", LongType(), False),
-    StructField("ok", StringType(), False),
-    StructField("width", IntegerType(), False),
-    StructField("height", IntegerType(), False),
-    StructField("payload", BinaryType(), True),     # PNG re-encode
-])
-
-
-def resize_images(media: DataFrame, width: int, height: int,
-                  strict: bool = False) -> DataFrame:
-    """Real resize for every image format (png/ppm/bmp/jpeg/gif):
-    decode -> nearest-neighbor -> PNG re-encode.  Undecodable payloads
-    quarantine per-row."""
-    @python_task
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .media_codecs import encode_png, resize_nearest
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                payload = bytes(payload) if payload is not None else b""
-                try:
-                    _fmt, _w, _h, px = _decode_image(payload, strict)
-                    if px is None:
-                        raise ValueError("pixel decode unavailable "
-                                         "(metadata-tier format)")
-                    out = encode_png(resize_nearest(px, width, height))
-                    rows.append((int(mid), "ok", width, height, out))
-                except Exception as e:
-                    rows.append((int(mid), type(e).__name__, width, height,
-                                 None))
-            yield pd.DataFrame(rows,
-                               columns=[f.name for f in RESIZE_SCHEMA.fields])
-
-    return (media.filter(F.col("kind") == "image")
-            .select("media_id", "payload")
-            .mapInPandas(fn, schema=RESIZE_SCHEMA))
+    return map_rows(media.filter(F.col("kind") == "image")
+                    .select("media_id", "payload"),
+                    lambda mid, payload: [image_feature_row(mid, payload)],
+                    IMAGE_FEATURES_SCHEMA)
 
 
 AUDIO_FEATURES_SCHEMA = StructType([
@@ -291,17 +226,10 @@ def audio_feature_row(mid: int, payload: bytes | None) -> tuple:
 
 def audio_features(media: DataFrame) -> DataFrame:
     """Real WAV decode: duration, RMS, peak per audio row (quarantined)."""
-    @python_task
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [audio_feature_row(mid, payload)
-                    for mid, payload in zip(pdf["media_id"], pdf["payload"])]
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AUDIO_FEATURES_SCHEMA.fields])
-
-    return (media.filter(F.col("kind") == "audio")
-            .select("media_id", "payload")
-            .mapInPandas(fn, schema=AUDIO_FEATURES_SCHEMA))
+    return map_rows(media.filter(F.col("kind") == "audio")
+                    .select("media_id", "payload"),
+                    lambda mid, payload: [audio_feature_row(mid, payload)],
+                    AUDIO_FEATURES_SCHEMA)
 
 
 FRAME_SCHEMA = StructType([
@@ -317,8 +245,7 @@ FRAME_SCHEMA = StructType([
 
 
 def video_frame_rows(mid: int, payload: bytes | None, every_ms: int,
-                     max_frames: int, strict: bool = False,
-                     with_pixels: bool = True) -> list[tuple]:
+                     max_frames: int, with_pixels: bool = True) -> list[tuple]:
     """Sampled, decoded frames for one video row — pure function of the
     payload, shared verbatim by the Spark stage and the driver-side
     oracle generator (same contract as image_feature_row).
@@ -328,8 +255,8 @@ def video_frame_rows(mid: int, payload: bytes | None, every_ms: int,
     ``max_frames``, decode each JPEG for real, and emit (media_id,
     source_frame_idx, ts_ms, "ok", width, height, aHash, PNG bytes).
     A malformed container quarantines as one (mid, 0, 0, error-kind)
-    row; ``strict=True`` re-raises instead.  ``with_pixels=False``
-    skips the PNG re-encode (the oracle compares the metadata tier).
+    row.  ``with_pixels=False`` skips the PNG re-encode (the oracle
+    compares the metadata tier).
     """
     from .avi_codec import decode_avi_mjpeg
     from .jpeg_codec import decode_jpeg
@@ -350,32 +277,22 @@ def video_frame_rows(mid: int, payload: bytes | None, every_ms: int,
                 encode_png(px) if with_pixels else None))
         return rows
     except Exception as e:
-        if strict:
-            raise
         return [(int(mid), 0, 0, type(e).__name__,
                  None, None, None, None)]
 
 
 def sample_frames(media: DataFrame, every_ms: int = 1000,
-                  max_frames: int = 8, strict: bool = False) -> DataFrame:
+                  max_frames: int = 8) -> DataFrame:
     """Real video frame sampling: MJPEG-in-AVI demux + JPEG decode.
 
-    1 video row -> N frame rows: the fan-out happens inside mapInPandas,
-    keeping frame payloads in the same Arrow batch as their source.
+    1 video row -> N frame rows: the fan-out happens inside the Arrow
+    stage, keeping frame payloads in the same batch as their source.
     Every frame is genuinely decoded (RIFF walk via avi_codec, pixels
     via jpeg_codec) and re-encoded as PNG; undecodable containers
-    quarantine per-row unless ``strict``.
+    quarantine per-row.
     """
-    @python_task
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                rows.extend(video_frame_rows(mid, payload, every_ms,
-                                             max_frames, strict))
-            yield pd.DataFrame(rows,
-                               columns=[f.name for f in FRAME_SCHEMA.fields])
-
-    return (media.filter(F.col("kind") == "video")
-            .select("media_id", "payload")
-            .mapInPandas(fn, schema=FRAME_SCHEMA))
+    return map_rows(media.filter(F.col("kind") == "video")
+                    .select("media_id", "payload"),
+                    lambda mid, payload: video_frame_rows(
+                        mid, payload, every_ms, max_frames),
+                    FRAME_SCHEMA)

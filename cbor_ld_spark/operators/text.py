@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..functions.udfs import python_task
+from ..functions.udfs import map_rows
 
 # Tiny English stopword list for the language-ID heuristic / quality score.
 STOPWORDS = ("the", "and", "of", "to", "a", "in", "is", "it", "that", "for")
@@ -355,42 +355,26 @@ def winnowing_fingerprints(docs: DataFrame, k: int = 5,
 
     Output is the per-doc summary (count + XOR checksum of the set) —
     one row per document.  Scale shape: winnowing is a pure per-document
-    map, so the whole operator is ONE ``mapInArrow`` stage (zero
-    shuffles before the presentation sort) with the k-gram hashing
-    vectorized in numpy — the previous Column formulation spent ~80% of
-    its wall in interpreted ``zip_with`` folds building gram strings.
+    map, so the whole operator is ONE ``map_rows`` stage over the
+    non-null texts (zero shuffles before the presentation sort) with the
+    k-gram hashing vectorized in numpy — the previous Column formulation
+    spent ~80% of its wall in interpreted ``zip_with`` folds building
+    gram strings.
     ``max_chars`` caps per-document work so one pathological 100 MB row
     cannot dominate a task.
     """
-    import pyarrow as pa
-
     if k < 1 or window < 1:
         raise ValueError("winnowing needs k >= 1 and window >= 1")
 
-    @python_task
-    def compute(batches):
-        for b in batches:
-            ids, counts, xors = [], [], []
-            for mid, text in zip(b.column(0), b.column(1)):
-                if not text.is_valid:
-                    continue
-                out = _winnow_doc_summary(text.as_py(), k, window, max_chars)
-                if out is None:
-                    continue
-                ids.append(mid.as_py())
-                counts.append(out[0])
-                xors.append(int(out[1]))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, type=pa.int64()),
-                 pa.array(counts, type=pa.int64()),
-                 pa.array(xors, type=pa.int64())],
-                ["doc_id", "n_fingerprints", "fp_checksum"])
+    def summary(doc_id, text):
+        out = _winnow_doc_summary(text, k, window, max_chars)
+        if out is not None:
+            yield doc_id, out[0], int(out[1])
 
-    return (docs.select("doc_id", "text")
-            .mapInArrow(compute,
-                        "doc_id long, n_fingerprints long, "
-                        "fp_checksum long")
-            .orderBy("doc_id"))
+    return map_rows(docs.filter(F.col("text").isNotNull())
+                    .select("doc_id", "text"), summary,
+                    "doc_id long, n_fingerprints long, fp_checksum long") \
+        .orderBy("doc_id")
 
 
 def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
@@ -565,35 +549,16 @@ def compression_ratio_signal(docs: DataFrame, level: int = 6,
     natural prose, so ``ratio = deflate_len / utf8_len`` separates
     boilerplate from content cheaply — no model, no tokenizer.
 
-    Scale shape: a pure per-document map — ONE ``mapInArrow`` stage,
-    zero shuffles before the presentation sort; ``max_chars`` bounds
-    per-row work like winnowing's cap.
+    Scale shape: a pure per-document map — ONE ``map_rows`` stage over
+    the non-null texts, zero shuffles before the presentation sort;
+    ``max_chars`` bounds per-row work like winnowing's cap.
     """
-    import pyarrow as pa
-
-    @python_task
-    def compute(batches):
-        for b in batches:
-            ids, ulen, dlen, ratio = [], [], [], []
-            for mid, text in zip(b.column(0), b.column(1)):
-                if not text.is_valid:
-                    continue
-                u, d, r = _compression_row(text.as_py(), level, max_chars)
-                ids.append(mid.as_py())
-                ulen.append(u)
-                dlen.append(d)
-                ratio.append(r)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, type=pa.int64()),
-                 pa.array(ulen, type=pa.int64()),
-                 pa.array(dlen, type=pa.int64()),
-                 pa.array(ratio, type=pa.float64())],
-                ["doc_id", "utf8_len", "deflate_len", "ratio"])
-
-    out = (docs.select("doc_id", "text")
-           .mapInArrow(compute,
-                       "doc_id long, utf8_len long, deflate_len long, "
-                       "ratio double"))
+    out = map_rows(docs.filter(F.col("text").isNotNull())
+                   .select("doc_id", "text"),
+                   lambda doc_id, text: [
+                       (doc_id, *_compression_row(text, level, max_chars))],
+                   "doc_id long, utf8_len long, deflate_len long, "
+                   "ratio double")
     return (out.select("doc_id", "utf8_len", "deflate_len", "ratio",
                        (F.col("ratio") < threshold).alias("low_entropy"))
             .orderBy("doc_id"))

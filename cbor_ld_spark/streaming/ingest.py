@@ -4,7 +4,7 @@ The north rule is batch + checkpoint-resume (SURVEY.md §2B: no streaming
 semantics exist in the reference), so streaming is an *optional* ingest
 mode, not a core stage: a continuously-growing corpus directory (or a
 Kafka topic of repo pushes, in production) streams through the exact
-same kernel pass, because ``mapInPandas`` is streaming-compatible —
+same kernel pass, because ``mapInArrow`` is streaming-compatible —
 stateless per-row transforms need no watermarks.
 
 * source: file stream over repos-shaped parquet (each micro-batch = new

@@ -1,122 +1,22 @@
-"""Stateful streaming: running per-repo ingest statistics.
+"""Stateful streaming: gap sessionization of the event stream.
 
-Demonstrates the custom-stateful-operator surface
-(``applyInPandasWithState``) on the corpus stream: per repo, a running
-count of documents / ok documents / triples across micro-batches.
-The KG pipeline itself is stateless (per-document kernel), so this
-operator is the monitoring / backpressure companion: it gives per-repo
-ingest progress without re-scanning outputs.
-
-Timeout semantics: ``NoTimeout`` by default — totals are running
-forever-counters and the primary drive mode is ``availableNow`` drains.
-For continuously-running streams over a churning corpus, pass
-``idle_timeout_ms`` to expire idle repos' state (the handler emits the
-final totals on timeout and removes the state row).
-
-State is one tuple per repo — bounded by repo cardinality, partitioned
-by the group key (Spark hash-partitions state; a mega-repo is still one
-state row, so no skew concern here).
+``session_stream`` is the package's one custom stateful operator
+(``applyInPandasWithState``, the one pandas boundary left in
+``cbor_ld_spark/``): per user, the open session lives in the state
+store across micro-batches and restarts, and a session row is emitted
+the moment a later event closes it.  State is one tuple per user —
+bounded by user cardinality, partitioned by the group key.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Tuple
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import LongType, StructField, StructType
 
 from ..functions.udfs import python_task
-
-STATE_SCHEMA = StructType([
-    StructField("docs", LongType(), False),
-    StructField("ok_docs", LongType(), False),
-    StructField("triples", LongType(), False),
-])
-
-OUTPUT_SCHEMA = StructType([
-    StructField("repo", StringType(), False),
-    StructField("docs", LongType(), False),
-    StructField("ok_docs", LongType(), False),
-    StructField("triples", LongType(), False),
-])
-
-
-def _make_update_fn(idle_timeout_ms: int | None):
-    @python_task
-    def update(key: Tuple[str],
-               pdfs: Iterator[pd.DataFrame],
-               state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # idle repo: emit final totals and drop the state row
-            docs, ok_docs, triples = state.get
-            state.remove()
-            yield pd.DataFrame(
-                [(key[0], docs, ok_docs, triples)],
-                columns=["repo", "docs", "ok_docs", "triples"])
-            return
-        docs, ok_docs, triples = state.get if state.exists else (0, 0, 0)
-        for pdf in pdfs:
-            docs += len(pdf)
-            ok_docs += int(pdf["ok"].sum())
-            triples += int(pdf["n_triples"].sum())
-        state.update((docs, ok_docs, triples))
-        if idle_timeout_ms:
-            state.setTimeoutDuration(idle_timeout_ms)
-        yield pd.DataFrame(
-            [(key[0], docs, ok_docs, triples)],
-            columns=["repo", "docs", "ok_docs", "triples"])
-
-    return update
-
-
-def repo_stats_stream(processed_stream, checkpoint_dir: str, out_dir: str,
-                      available_now: bool = True,
-                      idle_timeout_ms: int | None = None):
-    """processed docs stream -> running per-repo stats (update mode).
-
-    ``processed_stream`` is the output of process_corpus over a
-    streaming corpus (streaming.ingest.stream_corpus).
-    """
-    timeout = (GroupStateTimeout.ProcessingTimeTimeout if idle_timeout_ms
-               else GroupStateTimeout.NoTimeout)
-    stats = (
-        processed_stream
-        .select("repo", "ok", "n_triples")
-        .groupBy("repo")
-        .applyInPandasWithState(
-            _make_update_fn(idle_timeout_ms),
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=timeout,
-        )
-    )
-    # file sinks only take append mode; stateful update-mode output goes
-    # through foreachBatch (each batch carries the latest running totals).
-    # batch_id-partitioned dynamic overwrite keeps retries idempotent.
-    def write_batch(batch_df, batch_id: int):
-        (batch_df.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id").parquet(out_dir))
-
-    from pyspark.sql import functions as F
-
-    writer = (
-        stats.writeStream
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
 
 SESSION_STATE_SCHEMA = StructType([
     StructField("start_tl", LongType(), False),

@@ -144,8 +144,6 @@ def test_video_frame_rows_quarantine_and_strict():
 
     rows = video_frame_rows(5, b"NOTAVIDEO", 100, 8)
     assert len(rows) == 1 and rows[0][3] == "MediaDecodeError"
-    with pytest.raises(MediaDecodeError):
-        video_frame_rows(5, b"NOTAVIDEO", 100, 8, strict=True)
 
 
 def test_video_frame_rows_stride_sampling():

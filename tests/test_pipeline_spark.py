@@ -490,3 +490,45 @@ def test_dedup_first_pipeline_plan_hygiene(spark, tmp_path):
     assert "HashAggregate" in names, subtree
     assert len(re.findall(r"Exchange hashpartitioning\(content_sha#\d+, ",
                           subtree)) == 1, subtree
+
+
+def test_process_corpus_paths_agree_on_null_provenance(spark):
+    """Both kernel paths give the same rows in the same column order
+    over null ``repo``/``path``/``commit``, null content, duplicated
+    content and hostile documents, and a null filter counts the same on
+    both.  The kernel stage's schema takes its nullability from its
+    input, so a null provenance column neither fails the per-row path
+    in the JVM's row writer nor lets the optimizer fold ``IS NULL`` to
+    an empty result."""
+    from cbor_ld_spark.operators import process_corpus
+    from cbor_ld_spark.sources.corpus import REPOS_SCHEMA
+
+    def sample(name):
+        with open(os.path.join(FIXTURES, "samples", name)) as f:
+            return f.read()
+
+    note = sample("note.jsonld")
+    # a lone surrogate escape parses, then fails to encode as UTF-8
+    surrogate = '{"@context": 5, "x": "\\ud800"}'
+    rows = [(None, "a.json", "c1", "json", note),
+            ("r", None, "c2", "json", note),
+            ("r2", "b.json", None, "json", note),
+            ("r3", "n.json", "c3", "json", None),
+            ("r4", "t.json", "c4", "json", note[:len(note) // 2]),
+            ("r5", "u.json", "c5", "json", sample("uncompressible.jsonld")),
+            ("r6", "d.json", "c6", "json", surrogate)]
+    corpus = spark.createDataFrame(rows, REPOS_SCHEMA)
+    dedup, per_row = (process_corpus(corpus, canonical=True,
+                                      dedup_content=d) for d in (True, False))
+    assert dedup.columns == per_row.columns
+    got = [sorted(map(repr, df.collect())) for df in (dedup, per_row)]
+    assert got[0] == got[1]
+    assert len(got[0]) == 6  # the sniff drops the null content
+    for cond, n in ((F.col("repo").isNull(), 1), (F.col("path").isNull(), 1),
+                    (F.col("commit").isNull(), 1), (~F.col("ok"), 3)):
+        assert dedup.filter(cond).count() == per_row.filter(cond).count() \
+            == n, cond
+    assert {r["path"]: r["error_kind"]
+            for r in per_row.filter(~F.col("ok")).collect()} == {
+        "t.json": "JSONDecodeError", "u.json": "InvalidContextEntry",
+        "d.json": "UnicodeEncodeError"}
