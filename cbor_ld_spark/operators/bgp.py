@@ -510,9 +510,14 @@ def _graph_terms(triples: DataFrame) -> DataFrame:
 
 
 def _step_edges(triples: DataFrame, alts: list[str], i: int) -> DataFrame:
-    """One path step's distinct (src, dst) edge frame: pred-pushed
-    scan; alternates = one IN filter; ``^p`` inverts that alternate;
-    all-``!`` alternates form a negated property set (forward)."""
+    """One path step's (src, dst) edge frame, NOT deduplicated:
+    pred-pushed scan; alternates = one IN filter; ``^p`` inverts that
+    alternate; all-``!`` alternates form a negated property set
+    (forward).  Callers decide where a ``distinct`` pays: the
+    unconstrained tier's relations and the edges a ``plus``/``star``
+    BFS checkpoints take one; a seeded ``one``/``opt`` step joins the
+    raw edges, since its post-join ``distinct`` aggregates partially
+    before its exchange."""
     neg = [p[1:] for p in alts if p.startswith("!")]
     if neg:
         # negated property set !(p1|p2): any edge whose predicate
@@ -523,8 +528,7 @@ def _step_edges(triples: DataFrame, alts: list[str], i: int) -> DataFrame:
                 "alternates in one property set")
         return (triples.filter(~F.col("pred").isin(neg))
                 .select(F.col("subj").alias("src"),
-                        F.col("obj").alias("dst"))
-                .distinct())
+                        F.col("obj").alias("dst")))
     fwd = [p for p in alts if not p.startswith("^")]
     inv = [p[1:] for p in alts if p.startswith("^")]
     frames = []
@@ -541,7 +545,7 @@ def _step_edges(triples: DataFrame, alts: list[str], i: int) -> DataFrame:
     edges = frames[0]
     for fr in frames[1:]:
         edges = edges.unionByName(fr)
-    return edges.distinct()
+    return edges
 
 
 def _is_group(preds) -> bool:
@@ -613,18 +617,28 @@ def _seeded_eval(triples: DataFrame, steps: list[tuple],
     direction swapped — exactly the inverse path (applied recursively
     to nested groups).
 
+    Each step plans its frontier once.  A ``one`` step is a join of
+    the frontier with the step's raw edges and one ``distinct``; an
+    atom ``opt`` step is one LEFT join that emits the frontier node,
+    plus the edge's other end where the join matched (``src IS NOT
+    NULL``, so a null node or a null ``dst`` keeps the rows of
+    ``step ∪ frontier``), and one ``distinct``.  Group and
+    alternation ``opt`` steps still union the step with the frontier.
+
     Only what is read more than once is localCheckpoint'd: the layers
     of ``plus``/``star`` steps (inside ``_bfs_fix``), their results,
-    their edge frames, and the frontier a ``star`` step reads twice (its
-    first layer and its zero-length union) when that frontier is still
-    lazy.  ``one``/``opt`` steps stay lazy and fold into the next
-    materializing job instead of paying one of their own."""
+    their deduplicated edge frames, and the frontier a ``star`` step
+    reads twice (its first layer and its zero-length union) when that
+    frontier is still lazy.  ``one``/``opt`` steps stay lazy and fold
+    into the next materializing job instead of paying one of their
+    own."""
     ordered = list(reversed(steps)) if reverse else list(steps)
     # the incoming frontier may be a lazy frame (the seed filter, a
     # caller's one/opt result)
     lazy = True
     for i, step in enumerate(ordered):
         preds, mod = _validate_step(step, i)
+        edges = None
         if _is_alt_groups(preds):
             # alternation of sub-paths: one frontier application is
             # the UNION of applying each alternative (r8)
@@ -650,13 +664,21 @@ def _seeded_eval(triples: DataFrame, steps: list[tuple],
                 edges = edges.select(F.col("dst").alias("src"),
                                      F.col("src").alias("dst"))
             if mod in ("plus", "star"):
-                edges = edges.localCheckpoint()
+                edges = edges.distinct().localCheckpoint()
 
             def step_fn(fr, _e=edges):
                 return (fr.join(_e, fr.node == _e.src)
                         .select(F.col("dst").alias("node")))
         if mod == "one":
             frontier = step_fn(frontier).distinct()
+        elif mod == "opt" and edges is not None:
+            hit = F.col("src").isNotNull()
+            frontier = (frontier
+                        .join(edges, frontier.node == edges.src, "left")
+                        .select(F.explode(
+                            F.when(hit, F.array("node", "dst"))
+                            .otherwise(F.array("node"))).alias("node"))
+                        .distinct())
         elif mod == "opt":
             frontier = step_fn(frontier).unionByName(frontier).distinct()
         elif mod == "plus":
@@ -671,12 +693,20 @@ def _seeded_eval(triples: DataFrame, steps: list[tuple],
     return frontier
 
 
+def _seed(triples: DataFrame, c: str) -> DataFrame:
+    """The seeded tiers' initial frontier: the ``node`` frame ``{c}``
+    when ``c`` is a graph term (a subject or an object), else empty —
+    one scan of ``triples``."""
+    return (triples.filter((F.col("subj") == c) | (F.col("obj") == c))
+            .select(F.lit(c).alias("node")).distinct())
+
+
 def _seeded_path_nodes(triples: DataFrame, steps: list[tuple],
                        seed: str, reverse: bool,
                        max_iters: int) -> DataFrame:
     """Seeded tier entry: final positions of the path from one ground
     endpoint.  The initial frontier is the seed INTERSECTED with the
-    graph terms, which preserves exact equivalence with the
+    graph terms (``_seed``), which preserves exact equivalence with the
     unconstrained tier (whose zero-length identity ranges over graph
     terms only): a seed that is not a graph term has no edges and no
     zero-path identity, so every result is empty either way.
@@ -688,9 +718,7 @@ def _seeded_path_nodes(triples: DataFrame, steps: list[tuple],
     can never make a query fail that succeeded unseeded.  The budget
     is only a runaway guard: BFS over a finite graph terminates within
     the node count regardless."""
-    frontier = (_graph_terms(triples)
-                .filter(F.col("node") == F.lit(seed)))
-    return _seeded_eval(triples, steps, frontier, reverse,
+    return _seeded_eval(triples, steps, _seed(triples, seed), reverse,
                         1 << (max_iters - 1))
 
 
@@ -717,6 +745,10 @@ def _bidi_pair(triples: DataFrame, steps: list[tuple], src: str,
       through the full sequence);
     * a single non-closure step just applies it once from src.
 
+    Both seeds stay lazy on the midpoint-split and single-step paths,
+    which read each of them once; only the closure loop, which reads
+    them on every layer, localCheckpoints them.
+
     Equivalence with ``seeded-then-filter`` is property-tested
     (tests/test_bgp.py)."""
     max_layers = 1 << (max_iters - 1)
@@ -727,11 +759,7 @@ def _bidi_pair(triples: DataFrame, steps: list[tuple], src: str,
         return hit.limit(1).select(F.lit(src).alias("src"),
                                    F.lit(dst).alias("dst"))
 
-    terms = _graph_terms(triples)
-    f_src = (terms.filter(F.col("node") == F.lit(src))
-             .localCheckpoint())
-    f_dst = (terms.filter(F.col("node") == F.lit(dst))
-             .localCheckpoint())
+    f_src, f_dst = _seed(triples, src), _seed(triples, dst)
     if len(steps) > 1:
         k = len(steps) // 2
         a = _seeded_eval(triples, list(steps[:k]), f_src, False,
@@ -746,6 +774,8 @@ def _bidi_pair(triples: DataFrame, steps: list[tuple], src: str,
     if mod == "star" and src == dst:
         # zero-length identity: connected iff src is a graph term
         return pair(f_src)
+    # the closure loop reads each seed more than once
+    f_src, f_dst = f_src.localCheckpoint(), f_dst.localCheckpoint()
 
     def one_step(fr: DataFrame, reverse: bool) -> DataFrame:
         return _seeded_eval(triples, [(preds, "one")], fr, reverse,
@@ -879,7 +909,7 @@ def _path_relation(triples: DataFrame, steps: list[tuple],
                                    ident)
         else:
             alts = [preds] if isinstance(preds, str) else list(preds)
-            edges = _step_edges(triples, alts, i)
+            edges = _step_edges(triples, alts, i).distinct()
         if mod == "plus":
             edges = transitive_closure(edges, max_iters=max_iters)
         elif mod in ("star", "opt"):
