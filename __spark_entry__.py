@@ -526,7 +526,7 @@ def _kg_bgp_optional_unbound(spark, sf_dir):
     birthDate) has no concealedIdToken, so the first OPTIONAL leaves
     ?tok unbound — the second OPTIONAL then joins on ?tok.  SQL NULL
     semantics would emit one all-NULL row; SPARQL 1.1 §18.5 LeftJoin
-    compatibility (match_bgp's default `unbound_compat=True`) binds
+    compatibility (match_bgp's only OPTIONAL semantics) binds
     the unbound ?tok to EVERY proofValue subject, emitted via the
     IS-NULL-OR-EQUAL join + coalesce tier in operators/bgp.py.
     Oracle: the Python replay with the same compatibility rule — this
@@ -3136,7 +3136,7 @@ def _bgp_match_one(b: dict, pat, spo, compat: bool = False):
     None (left-join NULL) never matches — SQL semantics.
     ``compat=True``: SPARQL 1.1 compatibility — an unbound (None) var
     is compatible with any value and gets BOUND by the match,
-    mirroring match_bgp's unbound_compat tier."""
+    mirroring match_bgp's OPTIONAL compatibility join."""
     m = dict(b)
     for term, val in zip(pat, spo):
         if term.startswith("?"):

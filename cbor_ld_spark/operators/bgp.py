@@ -32,6 +32,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .sparql import _EXPR, _opaque_end
+
 _POSITIONS = ("subj", "pred", "obj")
 
 
@@ -142,12 +144,14 @@ def _split_conjuncts(expr: str) -> list[str]:
     n = len(expr)
     while i < n:
         c = expr[i]
-        if c in "\"'":
-            j = expr.find(c, i + 1)
-            if j < 0:
-                break  # unterminated literal: leave it to F.expr
+        try:
+            j = _opaque_end(expr, i, _EXPR)
+        except ValueError:
+            break  # unterminated literal: leave it to F.expr
+        if j > i:
             i = j
-        elif c == "(":
+            continue
+        if c == "(":
             depth += 1
         elif c == ")":
             depth -= 1
@@ -172,7 +176,6 @@ def match_bgp(triples: DataFrame,
               filters: list[str] | None = None,
               not_exists: list[tuple[str, str, str]] | None = None,
               sources: list[DataFrame] | None = None,
-              unbound_compat: bool = True,
               paths: list[tuple] | None = None,
               binds: list[tuple[str, str]] | None = None,
               exists: list[tuple[str, str, str]] | None = None) -> DataFrame:
@@ -249,13 +252,11 @@ def match_bgp(triples: DataFrame,
     LEFT JOINs implement SPARQL's common case exactly (each OPTIONAL
     references variables bound by the required patterns).  When a
     later optional joins on a variable a PREVIOUS optional may have
-    left NULL, ``unbound_compat=True`` (default) applies SPARQL's
-    compatibility rule: the join condition for each possibly-unbound
-    shared variable becomes ``v IS NULL OR v = candidate`` and the
-    output takes ``coalesce(v, candidate)`` — an unbound variable is
-    compatible with (and gets bound by) any value, per SPARQL 1.1
-    §18.5 LeftJoin.  ``unbound_compat=False`` restores plain SQL NULL
-    semantics (NULL keys never match).  Statically, compatibility
+    left NULL, SPARQL's compatibility rule applies: the join condition
+    for each possibly-unbound shared variable becomes ``v IS NULL OR
+    v = candidate`` and the output takes ``coalesce(v, candidate)`` —
+    an unbound variable is compatible with (and gets bound by) any
+    value, per SPARQL 1.1 §18.5 LeftJoin.  Statically, compatibility
     conditions are emitted ONLY for shared variables introduced by an
     earlier OPTIONAL; variables bound by required patterns keep plain
     equi-join keys, so the common case still hash-joins — the
@@ -425,8 +426,7 @@ def match_bgp(triples: DataFrame,
                 f"optional pattern {j} shares no variable with the "
                 "preceding patterns (unconnected OPTIONAL)")
         new_vars = [c for c in fcols if c not in result.columns]
-        compat = [c for c in shared
-                  if unbound_compat and c in maybe_unbound]
+        compat = [c for c in shared if c in maybe_unbound]
         if not compat:
             result = result.join(frame, on=shared, how="left")
         else:
@@ -460,8 +460,7 @@ def match_bgp(triples: DataFrame,
 
 
 def match_union(triples: DataFrame,
-                groups: list[list[tuple[str, str, str]]],
-                distinct: bool = True) -> DataFrame:
+                groups: list[list[tuple[str, str, str]]]) -> DataFrame:
     """SPARQL UNION of BGP groups: each group matches independently,
     results are unioned over the UNION of the groups' variables
     (first-appearance order across groups) with NULL for variables a
@@ -473,7 +472,7 @@ def match_union(triples: DataFrame,
 
     Plan shape: one match_bgp plan per group (each with its own
     pushed-down scans and join order) plus a zero-shuffle unionByName;
-    the optional final distinct is the only added exchange."""
+    the final distinct is the only added exchange."""
     if not groups:
         raise ValueError("match_union requires at least one group")
     frames = []
@@ -495,7 +494,7 @@ def match_union(triples: DataFrame,
     out = padded[0]
     for fr in padded[1:]:
         out = out.unionByName(fr)
-    return out.distinct() if distinct else out
+    return out.distinct()
 
 
 _PATH_MODS = ("one", "plus", "star", "opt")

@@ -1,36 +1,110 @@
-"""Text syntax for the query layer: triple patterns and property paths.
+"""SPARQL text surface of the query layer: property paths, triple
+patterns and a SPARQL 1.1 query subset, parsed into the specs that
+``operators/bgp.match_bgp`` / ``match_union`` / ``match_path`` run.
+The CLI (``jobs/kg_query.py``) and the ``kg_sparql_*`` registry queries
+use it.  Terms match string-level against the triples table: ``<>``
+and double quotes are stripped, everything else is matched as written.
 
-A small, documented SPARQL-subset parser so the consumption layer
-(``operators/bgp.match_bgp`` / ``match_path``) is scriptable from the
-CLI (``jobs/kg_query.py``) without writing Python — the counterpart of
-the reference CLI's encode/decode surface for the graph we build.
+Lexical rules.  One function, ``_opaque_end``, decides which spans are
+opaque text.  Its context says how:
 
-Grammar (subset, stated precisely):
+* TERM, a query word (``_sparql_tokens``): ``<`` runs to the next
+  ``>``, ``"`` quotes, and ``(`` runs to its balanced ``)`` read in the
+  PAREN context, so ``<p>+/<q>`` and ``(cast(a as int) >= 50)`` each
+  stay one word;
+* PAREN, inside a ``( … )`` body: ``<`` is opaque only where it opens
+  an ``_IRIREF`` (so ``?a<3`` stays a comparison), and ``"`` and ``'``
+  both quote;
+* PATH, a path or a predicate: ``<`` runs to the next ``>`` (an https
+  IRI holds ``/``); nothing quotes;
+* NAME, prefixed-name expansion: ``<`` runs to the next ``>``, and
+  ``"`` and ``'`` both quote;
+* EXPR, an expression body (``_devar``, ``bgp._split_conjuncts``):
+  ``"`` and ``'`` quote, and ``<`` is never opaque, so
+  ``?a<?b&&?c>?d`` is two comparisons.
 
-* pattern  := term term term          (one line / one --pattern arg)
-* term     := '?'name | '<'iri'>' | bare-token | '"'literal'"'
-  — ``<>`` and quotes are stripped; everything matches string-level
-  against the triples table, same semantics as match_bgp.
-* path     := unit ('/' unit)*        (SEQUENCE)
-* unit     := operand ('|' operand)*  (ALTERNATION; r8: operands may
-  be parenthesised groups — ``(p/q)|r`` — each keeping its OWN
-  trailing modifier, evaluated as the union of the alternatives'
-  sub-relations)
-* operand  := (atom | '(' path ')') mod?
-  — a parenthesised GROUP contains a whole sub-path and may nest;
-  ``mod`` is one trailing '+', '*' or '?'.  In an ALL-ATOM
-  alternation the legacy r7 reading holds: only the LAST atom may
-  carry a modifier and it applies to the WHOLE alternation
-  (``q|r+`` == ``(q|r)+``, a documented divergence from SPARQL —
-  parenthesise, ``q|(r)+``, for the per-alternative reading).
-* atom     := '^'? '!'? ('<'iri'>' | bare-token)
-  — '^' inverts the atom, '!' on every atom of a step makes it a
-  negated property set (match_path enforces the no-mixing rule).
+Query tokens are ``{``, ``}``, the statement ``.`` (followed by
+whitespace, a brace or the end) and words.  Keywords are
+case-insensitive.
 
-IRIs inside ``<>`` may contain any character except ``>`` — in
-particular ``/``, so ``<https://...>/<https://...>`` tokenizes
-correctly (the pre-r7 string-split parser broke on https IRIs).
-Bare tokens end at whitespace or any of ``()/|+*?^!``.
+Grammar::
+
+    path      := unit ('/' unit)*                      sequence
+    unit      := operand ('|' operand)*                alternation
+    operand   := (atom | '(' path ')') ('+' | '*' | '?')?
+    atom      := '^'? '!'? ('<' iri '>' | bare)        bare ends at
+                                                       space ()/|+*?^!<
+    pattern   := term (term | path) term               parse_pattern:
+                                                       shlex words
+    term      := '?'var | '<' iri '>' | '"' literal '"' | bare | 'a'
+    query     := ('PREFIX' name ':' '<' iri '>')*
+                 (select | ask | construct | describe)
+    select    := 'SELECT' ('DISTINCT' | 'REDUCED')? ('*' | item+)
+                 'WHERE' group modifier*
+    item      := '?'var | '(' expr 'AS' '?'var ')'
+    ask       := 'ASK' 'WHERE'? group
+    construct := 'CONSTRUCT' group 'WHERE' group
+    describe  := 'DESCRIBE' term+ ('WHERE'? group)?
+    modifier  := 'GROUP' 'BY' '?'var+ | 'HAVING' '(' expr ')'
+               | 'ORDER' 'BY' (('ASC' | 'DESC')? '(' expr ')' | '?'var)+
+               | 'LIMIT' int | 'OFFSET' int
+    group     := '{' (member | '.')* '}'
+    member    := pattern | 'OPTIONAL' group | 'MINUS' group
+               | 'FILTER' '(' expr ')' | 'FILTER' 'NOT'? 'EXISTS' group
+               | 'BIND' '(' expr 'AS' '?'var ')' | 'GRAPH' term group
+               | 'VALUES' data | '{' select '}' | group ('UNION' group)+
+    data      := '?'var '{' (term | 'UNDEF')* '}'
+               | '(' '?'var+ ')' '{' ('(' (term | 'UNDEF')+ ')')* '}'
+
+``KW(…)`` and ``KW (…)`` read alike.  Which members a group admits
+depends on where it stands (``_ADMITS``): the WHERE group every
+member; an OPTIONAL group patterns, paths and FILTER; UNION branches,
+MINUS and FILTER [NOT] EXISTS groups patterns and paths; GRAPH groups
+and CONSTRUCT templates patterns only.
+
+Meaning, and where it departs from SPARQL:
+
+* Prefixed names of declared prefixes expand to ``<iri>`` where a term
+  is read: a pattern's subject, predicate or path, and object; a GRAPH
+  or DESCRIBE term; a VALUES datum; a CONSTRUCT template term.
+  Expression bodies are not term positions, so names there stay as
+  written (use full IRIs as string literals).  Undeclared colon names
+  (``urn:``, ``did:``) and quoted literals pass.  ``a`` in predicate
+  position is rdf:type.
+* A predicate with path syntax (``/ | ^ ! + * ?`` or parentheses
+  outside ``<…>``) is a property path.  A lone path runs
+  ``match_path``; mixed with other members it joins the BGP like a
+  pattern (``match_bgp paths=``); a ground endpoint runs the seeded
+  tier.  In an all-atom alternation only the last atom may carry a
+  modifier, and it applies to the whole alternation (``q|r+`` is
+  ``(q|r)+``; write ``q|(r)+`` for the per-alternative reading); with a
+  group operand each operand keeps its own modifier.
+* Expression bodies (FILTER, BIND, HAVING, ORDER BY keys, ``(expr AS
+  ?v)``) take the SPARQL 1.1 §17 subset that ``_devar`` translates
+  name-for-name to Spark SQL, so plain Spark SQL passes too.
+* Set semantics throughout: DISTINCT and REDUCED are accepted no-ops,
+  and a plain SELECT dedupes.  With aggregates, plain SELECT variables
+  must be GROUP BY keys.  ORDER BY expressions range over the projected
+  variables.  OFFSET applies before LIMIT.
+* A one-member OPTIONAL group is a plain left join; a larger or
+  filtered one is a §18.5 LeftJoin unit (the whole group binds or
+  nothing does), its FILTERs over group-local variables only.
+* FILTER EXISTS, FILTER NOT EXISTS and MINUS are the connected case
+  (one semi or anti join on the shared variables; MINUS equals NOT
+  EXISTS there); a disconnected group is rejected.
+* A subquery runs bottom-up and joins on the shared projected
+  variables; one sharing none must be a scalar aggregate.
+* BINDs apply after the required patterns and paths, in member order
+  and before the FILTERs; the variable must be fresh.  VALUES joins
+  after the whole group: bound variables are join keys (UNDEF matches
+  anything), fresh ones new bindings.
+* GRAPH patterns are quads over the named graphs; a variable binds the
+  graph label the group shares.
+* One UNION block per group.  Alone it is the base relation; beside
+  other members it joins their bindings on the shared variables, which
+  every branch must bind.
+* CONSTRUCT drops instantiations that hold a NULL.  DESCRIBE returns
+  the described nodes' outgoing triples.
 """
 
 from __future__ import annotations
@@ -40,6 +114,42 @@ import shlex
 
 _MODS = {"+": "plus", "*": "star", "?": "opt"}
 _PUNCT = "()/|+*?"
+_IRIREF = _re.compile(r"<[^<>\"{}|^`\\()\x00-\x20]*>")
+# lexical contexts (module docstring): how '<' reads, which characters
+# quote, and whether '(' opens a balanced segment
+_TERM = (">", '"', True)
+_PAREN = ("iri", "\"'", False)
+_PATH = (">", "", False)
+_NAME = (">", "\"'", False)
+_EXPR = ("", "\"'", False)
+
+
+def _opaque_end(text: str, i: int, context: tuple) -> int:
+    """Where the opaque segment opening at ``text[i]`` ends in a lexical
+    context, or ``i`` when none opens there.  Raises ValueError for a
+    segment that never closes."""
+    lt, quotes, parens = context
+    c = text[i]
+    if c == "<" and lt == "iri":
+        m = _IRIREF.match(text, i)
+        return m.end() if m else i
+    if c in quotes or (c == "<" and lt == ">"):
+        k = text.find(">" if c == "<" else c, i + 1)
+        if k < 0:
+            raise ValueError(f"unterminated {c!r} in {text!r} at {i}")
+        return k + 1
+    if c == "(" and parens:
+        depth, k = 0, i
+        while k < len(text):
+            j = _opaque_end(text, k, _PAREN)
+            if j == k:
+                depth += (text[k] == "(") - (text[k] == ")")
+                j = k + 1
+                if not depth:
+                    return j
+            k = j
+        raise ValueError(f"unbalanced '(' in {text!r} at {i}")
+    return i
 
 
 def parse_term(tok: str) -> str:
@@ -75,8 +185,7 @@ def parse_pattern(text: str) -> tuple[str, str, str]:
 
 def _tokenize_path(expr: str) -> list:
     """Tokens: single punctuation chars from ``()/|+*?`` and
-    ``('atom', value)`` pairs with the ``^``/``!`` prefix folded in.
-    ``<>``-wrapped IRIs are opaque (may contain '/', '|', parens)."""
+    ``('atom', value)`` pairs with the ``^``/``!`` prefix folded in."""
     toks: list = []
     i, n = 0, len(expr)
     while i < n:
@@ -96,14 +205,11 @@ def _tokenize_path(expr: str) -> list:
                 raise ValueError("'^' on a negated (!) atom is not "
                                  "supported in this subset")
             prefix, i = "!", i + 1
+        j = i
         if i < n and expr[i] == "<":
-            k = expr.find(">", i)
-            if k < 0:
-                raise ValueError(f"unterminated '<' in path {expr!r}")
-            atom = expr[i + 1:k]
-            i = k + 1
+            i = _opaque_end(expr, i, _PATH)
+            atom = expr[j + 1:i - 1]
         else:
-            j = i
             while i < n and expr[i] not in _PUNCT + "^!<" \
                     and not expr[i].isspace():
                 i += 1
@@ -115,21 +221,10 @@ def _tokenize_path(expr: str) -> list:
 
 
 def _parse_unit(toks: list, pos: int) -> tuple[tuple, int]:
-    """One unit: an alternation of OPERANDS — atoms or parenthesised
-    groups — each with an optional trailing modifier.
-
-    Interpretation (documented, r8 extends the r7 subset):
-
-    * all operands are bare atoms — legacy form: a modifier may follow
-      only the LAST atom and applies to the WHOLE alternation
-      (``q|r+`` == ``(q|r)+`` — a documented divergence from SPARQL's
-      per-element binding; wrap an atom in parens, ``q|(r)+``, for the
-      per-alternative reading).  A modifier on a NON-last atom is
-      rejected with that hint.
-    * any operand is a group — SPARQL form (``(p/q)|r``,
-      ``(p/q)+|(r)*``): each operand keeps its OWN modifier and the
-      unit is an alternation of sub-path ALTERNATIVES; a modifier for
-      the whole alternation needs wrapping parens (``((p/q)|r)+``)."""
+    """One unit: an alternation of operands (atoms or parenthesised
+    groups), each with an optional trailing modifier; the modifier
+    rules are in the module docstring.  A modifier on a non-last atom
+    of an all-atom alternation is rejected with the hint."""
     if pos >= len(toks) or toks[pos] in ("/", "|"):
         raise ValueError("empty step in path")
     # operands: ('atom', value, mod|None) / ('group', steps, mod|None)
@@ -142,19 +237,15 @@ def _parse_unit(toks: list, pos: int) -> tuple[tuple, int]:
             sub, pos = _parse_seq(toks, pos + 1)
             if pos >= len(toks) or toks[pos] != ")":
                 raise ValueError("unbalanced '(' in path")
-            pos += 1
-            mod = None
-            if pos < len(toks) and toks[pos] in _MODS:
-                mod, pos = _MODS[toks[pos]], pos + 1
-            operands.append(("group", sub, mod))
+            operand = ("group", sub)
         elif isinstance(t, tuple) and t[0] == "atom":
-            pos += 1
-            mod = None
-            if pos < len(toks) and toks[pos] in _MODS:
-                mod, pos = _MODS[toks[pos]], pos + 1
-            operands.append(("atom", t[1], mod))
+            operand = t
         else:
             raise ValueError(f"unexpected {t!r} in path")
+        pos += 1
+        mod = _MODS.get(toks[pos]) if pos < len(toks) else None
+        operands.append((*operand, mod))
+        pos += mod is not None
         if pos < len(toks) and toks[pos] == "|":
             pos += 1
             continue
@@ -212,140 +303,24 @@ def parse_path(expr: str) -> list[tuple]:
     return steps
 
 
-# --- SPARQL query text syntax (r7; ASK/CONSTRUCT/BIND/VALUES r8) -----------
-#
-# query    := select-q | ask-q | construct-q
-# query    := ('PREFIX' name ':' '<'iri'>')* (select-q | ask-q |
-#              construct-q | describe-q)
-#              — declared prefixed names expand token-wise to full
-#              <iri>s (patterns, paths, VALUES data; quoted literals
-#              and undeclared colon tokens like urn:/did: untouched;
-#              prefixed names inside FILTER/BIND SQL bodies are NOT
-#              expanded — use full IRIs as string literals there).
-#              'a' in predicate position is rdf:type (SPARQL §4.2.4).
-# select-q := 'SELECT' (('DISTINCT'|'REDUCED')? item+ | '*')
-#             'WHERE' group
-#             ('GROUP' 'BY' '?'var+)? ('HAVING' '(' expr ')')*
-#             ('ORDER' 'BY' sort-key+)?
-#             sort-key := '?'var | ('DESC'|'ASC') '(' expr ')' | '(' expr ')'
-#             (r8: expr may be any Spark SQL expression over the
-#              PROJECTED variables — a documented divergence from
-#              SPARQL, which sorts pre-projection)
-#             ('LIMIT' int)? ('OFFSET' int)?    (either order; OFFSET
-#                                                applies before LIMIT,
-#                                                per SPARQL slice)
-# ask-q    := 'ASK' 'WHERE'? group              (one boolean `ask` row)
-# construct-q := 'CONSTRUCT' '{' pattern+ '}' 'WHERE' group
-#             (template instantiated per binding; NULL-containing
-#              instantiations dropped, per CONSTRUCT semantics)
-# item     := '?'var | '(' agg-expr 'AS' '?'name ')'
-#             (agg-expr: a Spark SQL aggregate over ?vars, e.g.
-#              COUNT(DISTINCT ?c); plain select vars must be GROUP BY
-#              keys when aggregates are present)
-# group    := '{' member* '}'
-# member   := pattern '.'?                      (triple pattern)
-#           | 'OPTIONAL' group                  (patterns, paths and
-#                                                FILTERs inside; a
-#                                                multi-member group is
-#                                                a SPARQL §18.5
-#                                                LeftJoin UNIT — the
-#                                                whole group binds or
-#                                                nothing does; group
-#                                                FILTERs are over
-#                                                group-local vars only;
-#                                                nested OPTIONAL/UNION
-#                                                rejected)
-#           | 'FILTER' '(' sql-expr ')'         (SQL boolean expr over vars)
-#           | 'FILTER' 'NOT' 'EXISTS' group     (patterns only inside)
-#           | 'FILTER' 'EXISTS' group           (r8: the positive twin —
-#                                                keep bindings the group
-#                                                matches; one left_semi;
-#                                                same connectedness rule)
-#           | '{' select-q '}'                  (r8 SUB-SELECT, SPARQL 1.1
-#                                                §12: evaluated bottom-up,
-#                                                projected vars join the
-#                                                outer bindings on the
-#                                                shared variables; a
-#                                                subquery sharing NO var
-#                                                must be a SCALAR
-#                                                aggregate — one row,
-#                                                broadcast cross join —
-#                                                anything else is
-#                                                rejected loudly)
-#           | 'MINUS' group                     (r8: the CONNECTED case,
-#                                                where SPARQL MINUS and
-#                                                FILTER NOT EXISTS
-#                                                coincide — same
-#                                                left_anti; a MINUS
-#                                                group sharing no
-#                                                variable is rejected
-#                                                loudly, never silently
-#                                                wrong)
-#           | 'BIND' '(' sql-expr 'AS' '?'v ')' (computed column over
-#                                                the bindings; ?v must
-#                                                be FRESH; later FILTERs
-#                                                and BINDs may use it)
-#           | 'GRAPH' ('?'var|term) group       (r8, SPARQL §13.3: the
-#                                                group's patterns become
-#                                                QUADS over the NAMED
-#                                                graphs — a var binds
-#                                                the graph label shared
-#                                                across the group
-#                                                (co-location), a
-#                                                constant filters on
-#                                                it; '' = default
-#                                                graph, excluded;
-#                                                patterns-only inside)
-#           | 'VALUES' values-block
-#           | group ('UNION' group)+            (r8: composes with the
-#                                                other members — the
-#                                                union frame joins the
-#                                                BGP bindings on the
-#                                                shared vars, every
-#                                                branch must bind them;
-#                                                alone it is the base
-#                                                relation; one UNION
-#                                                block per group; each
-#                                                branch patterns-only)
-# values-block := '?'var '{' (term|'UNDEF')+ '}'
-#           | '(' '?'var+ ')' '{' row+ '}'      (row := '('
-#                                                (term|'UNDEF')+ ')')
-#             — SPARQL 1.1 inline data (§10.2): vars already bound by
-#             the group are JOIN keys (UNDEF compatible with any
-#             value); fresh vars introduce new bindings (UNDEF ->
-#             unbound/NULL).  The single-var all-bound no-UNDEF case
-#             compiles to an IN predicate pushed to the pattern scans;
-#             every other case joins a broadcast inline-data frame.
-# A pattern whose predicate uses path syntax (/ | ^ ! + * ? or
-# parens) is a PROPERTY PATH: alone it routes to match_path; mixed
-# with other top-level members it joins into the BGP like a pattern
-# (match_bgp `paths=`) — either way a ground subject/object runs the
-# SEEDED tier.  Paths are also accepted inside OPTIONAL / FILTER
-# [NOT] EXISTS / MINUS / UNION groups (r8).  Set semantics throughout
-# (match_bgp's distinct) — bag semantics is not implemented, so
-# DISTINCT and REDUCED are accepted no-ops and a plain SELECT also
-# dedupes (documented divergence).  Keywords case-insensitive; FILTER
-# / BIND / HAVING / ORDER BY / (AGG AS ?v) bodies accept the SPARQL
-# 1.1 §17 expression subset — '&&'/'||'/prefix-'!', BOUND, REGEX
-# (2-arg), STRSTARTS/STRENDS/CONTAINS, STRLEN, UCASE/LCASE, STR,
-# SUBSTR, sameTerm, GROUP_CONCAT(..; SEPARATOR=..) (deterministic
-# sorted order), SAMPLE (deterministic min) — translated name-for-name
-# to Spark SQL (see _devar), so plain Spark SQL also passes through
-# verbatim; RDF-term introspection (LANG, DATATYPE, isBLANK, ...)
-# is rejected loudly.  BINDs
-# apply after the required patterns/paths join (in member order, each
-# seeing earlier BINDs) and before FILTERs — a BIND over an
-# OPTIONAL-introduced variable is outside this subset; VALUES joins
-# apply after the whole group (SPARQL's trailing/query-level VALUES
-# position).
-
 _KEYWORDS = {"select", "where", "optional", "filter", "union",
              "distinct", "reduced", "not", "exists", "values", "bind",
              "ask", "construct", "minus", "offset", "graph"}
 _PATH_CHARS = set("/|^!+*?()")
-
-
 _RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+_PNAME = _re.compile(r"\b([A-Za-z_][\w.-]*):([A-Za-z0-9_.%-]*)")
+_AS = _re.compile(r"(.+)\s+AS\s+\?(\w+)$", _re.IGNORECASE | _re.DOTALL)
+_SORT_KEY = _re.compile(r"(desc|asc)?\((.*)\)", _re.IGNORECASE | _re.DOTALL)
+_WORD_END = _re.compile(r"[\s{}]|\.(?=[\s{}]|\Z)")
+# the member kinds a group admits, by the keyword that opens it
+_GUARD = frozenset({"pattern", "path"})
+_ADMITS = {
+    "WHERE": _GUARD | {"filter", "optional", "graph", "minus", "exists",
+                       "values", "bind", "subquery", "union"},
+    "OPTIONAL": _GUARD | {"filter"},
+    "UNION": _GUARD, "MINUS": _GUARD, "EXISTS": _GUARD,
+    "GRAPH": frozenset({"pattern"}), "CONSTRUCT": frozenset({"pattern"}),
+}
 
 
 def _pred_term(tok: str) -> str:
@@ -357,146 +332,66 @@ def _pred_term(tok: str) -> str:
 
 
 def _expand_prefixed(tok: str, prefixes: dict[str, str]) -> str:
-    """Expand DECLARED ``prefix:local`` names inside one token to
-    ``<iri+local>`` — quoted literals and <>-wrapped IRIs inside the
-    token are opaque (a path token like ``cred:a/cred:b+`` expands
-    per-name).  Only names whose prefix was declared expand, so bare
-    tokens with ':' (urn:..., did:...) pass through untouched."""
-    if tok.startswith("?") or (len(tok) >= 2 and tok[0] == '"'):
+    """Expand declared ``prefix:local`` names in one term token to
+    ``<iri+local>``, outside its <…> and quoted segments (a path token
+    like ``cred:a/cred:b+`` expands per name); after a segment that
+    never closes, the rest of the token expands as plain text."""
+    if not prefixes or tok.startswith("?") or tok[:1] == '"':
         return tok
-    out = []
-    i, n, start = 0, len(tok), 0
 
-    def _flush(seg: str) -> str:
-        return _re.sub(
-            r"\b([A-Za-z_][\w.-]*):([A-Za-z0-9_.%-]*)",
-            lambda m: (f"<{prefixes[m.group(1)]}{m.group(2)}>"
-                       if m.group(1) in prefixes else m.group(0)),
-            seg)
+    def names(seg: str) -> str:
+        return _PNAME.sub(lambda m: (
+            f"<{prefixes[m.group(1)]}{m.group(2)}>"
+            if m.group(1) in prefixes else m.group(0)), seg)
 
-    while i < n:
-        c = tok[i]
-        if c == "<":
-            j = tok.find(">", i)
-            if j < 0:
-                break
-            out.append(_flush(tok[start:i]))
-            out.append(tok[i:j + 1])
-            i = j + 1
-            start = i
-        elif c in "\"'":
-            j = tok.find(c, i + 1)
-            if j < 0:
-                break
-            out.append(_flush(tok[start:i]))
-            out.append(tok[i:j + 1])
-            i = j + 1
-            start = i
-        else:
-            i += 1
-    out.append(_flush(tok[start:]))
-    return "".join(out)
+    out, i, start = [], 0, 0
+    while i < len(tok):
+        try:
+            j = _opaque_end(tok, i, _NAME)
+        except ValueError:
+            break
+        if j > i:
+            out += [names(tok[start:i]), tok[i:j]]
+            start = j
+        i = max(j, i + 1)
+    return "".join(out) + names(tok[start:])
 
 
-_IRIREF = _re.compile(r"<[^<>\"{}|^`\\()\x00-\x20]*>")
+def _term(tok: str, prefixes: dict[str, str]) -> str:
+    return parse_term(_expand_prefixed(tok, prefixes))
 
 
 def _sparql_tokens(text: str) -> list[str]:
-    """Tokens: '{' '}' braces, the statement '.' (whitespace- or
-    brace-delimited), and WORDS — maximal non-space runs where
-    ``<...>``, ``(...)`` (balanced, spaces allowed inside) and
-    ``"..."`` are opaque segments, so ``<p>+/<q>`` and
-    ``(cast(a as int) >= 50)`` each stay one token."""
+    """Query tokens: '{' '}' braces, the statement '.' and words, each
+    a maximal run without whitespace, braces or a statement '.' outside
+    the opaque segments of the TERM context (module docstring)."""
     toks: list[str] = []
     i, n = 0, len(text)
     while i < n:
-        c = text[i]
-        if c.isspace():
-            i += 1
-            continue
-        if c in "{}":
-            toks.append(c)
-            i += 1
-            continue
-        if c == "." and (i + 1 == n or text[i + 1].isspace()
-                         or text[i + 1] in "{}"):
-            toks.append(".")
+        if text[i].isspace():
             i += 1
             continue
         j = i
-        while j < n and not text[j].isspace() and text[j] not in "{}":
-            if text[j] == "<":
-                k = text.find(">", j)
-                if k < 0:
-                    raise ValueError(
-                        f"unterminated '<' in query at {j}")
-                j = k + 1
-            elif text[j] == "(":
-                # quoted strings inside the parens are opaque — a
-                # paren INSIDE a literal (FILTER(?name = "a(b")) must
-                # not count toward the depth (ADVICE r7); BOTH quote
-                # characters, matching _quote_segments/_devar (a
-                # single-quoted SQL literal containing ')' previously
-                # mis-tokenized)
-                depth, k = 1, j + 1
-                while k < n and depth:
-                    if text[k] == "<":
-                        # an IRI is opaque too, before quotes: an
-                        # apostrophe is legal in one (<urn:o'brien>).
-                        # Parens end the match, so '<' as less-than
-                        # never changes the depth count
-                        m = _IRIREF.match(text, k)
-                        if m:
-                            k = m.end()
-                            continue
-                    if text[k] in "\"'":
-                        q = text.find(text[k], k + 1)
-                        if q < 0:
-                            raise ValueError(
-                                f"unterminated {text[k]!r} in query "
-                                f"at {k}")
-                        k = q + 1
-                        continue
-                    if text[k] == "(":
-                        depth += 1
-                    elif text[k] == ")":
-                        depth -= 1
-                    k += 1
-                if depth:
-                    raise ValueError(
-                        f"unbalanced '(' in query at {j}")
-                j = k
-            elif text[j] == '"':
-                k = text.find('"', j + 1)
-                if k < 0:
-                    raise ValueError(
-                        f"unterminated '\"' in query at {j}")
-                j = k + 1
-            elif text[j] == "." and (j + 1 == n
-                                     or text[j + 1].isspace()
-                                     or text[j + 1] in "{}"):
-                break  # statement dot terminates the word
-            else:
-                j += 1
+        while j < n and not _WORD_END.match(text, j):
+            j = max(_opaque_end(text, j, _TERM), j + 1)
+        j = max(j, i + 1)  # a brace or the statement dot stands alone
         toks.append(text[i:j])
         i = j
     return toks
 
 
 def _has_path_syntax(raw_pred: str) -> bool:
-    """Path punctuation OUTSIDE <>-wrapped IRI segments (an https IRI
-    contains '/' INSIDE the brackets — that is not a path)."""
-    i, n = 0, len(raw_pred)
-    while i < n:
-        if raw_pred[i] == "<":
-            k = raw_pred.find(">", i)
-            if k < 0:
-                return False
-            i = k + 1
-        elif raw_pred[i] in _PATH_CHARS:
+    """Path punctuation outside <…> segments (an https IRI holds '/');
+    a '<' that never closes reads as no path."""
+    i = 0
+    while i < len(raw_pred):
+        try:
+            j = _opaque_end(raw_pred, i, _PATH)
+        except ValueError:
+            return False
+        if j == i and raw_pred[i] in _PATH_CHARS:
             return True
-        else:
-            i += 1
+        i = max(j, i + 1)
     return False
 
 
@@ -507,99 +402,159 @@ def _expect(toks: list[str], pos: int, word: str) -> int:
     return pos + 1
 
 
-def _parse_plain_group(toks: list[str], pos: int,
-                       allow_paths: bool = False) -> tuple[list, int]:
-    """A '{ pattern . pattern }' group containing ONLY triple
-    patterns (used inside OPTIONAL / NOT EXISTS / UNION).  With
-    ``allow_paths`` (OPTIONAL groups, r8) a property-path predicate
-    becomes a ``("__path__", raw, subj, obj)`` entry for the caller
-    to route."""
+def _kw_body(toks: list[str], pos: int, kw: str) -> tuple[str, int]:
+    """The stripped body of ``KW(…)`` (one word) or ``KW (…)`` (two)
+    at ``toks[pos]``, and the position after it."""
+    if len(toks[pos]) > len(kw):
+        return toks[pos][len(kw) + 1:-1].strip(), pos + 1
+    if pos + 1 >= len(toks) or not toks[pos + 1].startswith("("):
+        raise ValueError(f"{kw.upper()} needs '(expr)'")
+    return toks[pos + 1][1:-1].strip(), pos + 2
+
+
+def _member_kind(toks: list[str], pos: int) -> str:
+    """The kind of the group member opening at ``toks[pos]``."""
+    low = toks[pos].lower()
+    nxt = toks[pos + 1].lower() if pos + 1 < len(toks) else ""
+    if low in ("optional", "graph", "minus", "values"):
+        return low
+    if low == "filter" and nxt in ("not", "exists"):
+        return "exists"
+    for kw in ("bind", "filter"):
+        if low == kw or low.startswith(kw + "("):
+            return kw
+    if low == "{":
+        return ("subquery" if nxt in ("select", "ask", "construct")
+                else "union")
+    return "pattern"
+
+
+def _is_path(entry: tuple) -> bool:
+    """A path entry's steps are a list; a pattern's predicate is a
+    string, even one spelled ``__path__``."""
+    return isinstance(entry[1], list)
+
+
+def _parse_group(toks: list[str], pos: int, name: str,
+                 prefixes: dict[str, str]) -> tuple[dict, int]:
+    """The ``{ member* }`` group at ``toks[pos]``, opened by keyword
+    ``name`` and admitting the member kinds ``_ADMITS[name]``: its
+    members by spec key, and the position after ``}``.  Paths parse
+    into ``("__path__", steps, subj, obj)`` entries where they are
+    read; ``_is_path`` tells them from patterns."""
+    admits = _ADMITS[name]
     pos = _expect(toks, pos, "{")
-    pats = []
+    g: dict = {"patterns": [], "optional": [], "filters": [],
+               "not_exists": [], "exists": [], "subqueries": [],
+               "union": None, "binds": [], "values": []}
     while pos < len(toks) and toks[pos] != "}":
-        # FILTER(...)/BIND(...) arrive as ONE word token ('(' is an
-        # opaque segment) — check the prefix before '(' too
-        if toks[pos].lower().split("(", 1)[0] in _KEYWORDS \
-                or toks[pos] == "{":
+        t = toks[pos]
+        if t == ".":  # a statement dot, after a member or stray
+            pos += 1
+            continue
+        kind = _member_kind(toks, pos)
+        if kind not in admits:
+            what = [w for k, w in (("pattern", "triple patterns"),
+                                   ("path", "paths"),
+                                   ("filter", "FILTER")) if k in admits]
             raise ValueError(
-                f"only triple patterns are allowed inside this group "
-                f"(got {toks[pos]!r}) — nested OPTIONAL/FILTER/UNION "
-                "are outside this subset")
-        if pos + 3 > len(toks):
-            raise ValueError("truncated triple pattern")
-        raw_pred = toks[pos + 1]
-        if not raw_pred.startswith("?") and _has_path_syntax(raw_pred):
-            if not allow_paths:
+                f"only {', '.join(what)} are allowed inside {name} (got "
+                f"{t!r}) — nested OPTIONAL/FILTER/UNION are outside "
+                "this subset")
+        if kind == "pattern":
+            if t.lower() in _KEYWORDS:
+                raise ValueError(f"unexpected keyword {t!r} in group")
+            if pos + 3 > len(toks):
+                raise ValueError("truncated triple pattern")
+            subj, obj = _term(t, prefixes), _term(toks[pos + 2], prefixes)
+            raw = _expand_prefixed(toks[pos + 1], prefixes)
+            pos += 3
+            if raw.startswith("?") or not _has_path_syntax(raw):
+                g["patterns"].append((subj, _pred_term(raw), obj))
+            elif "path" not in admits:
                 raise ValueError(
                     "a property path is not allowed here (CONSTRUCT "
                     "templates and GRAPH groups take plain triple "
                     "patterns)")
-            pats.append(("__path__", raw_pred,
-                         parse_term(toks[pos]),
-                         parse_term(toks[pos + 2])))
-        else:
-            pats.append((parse_term(toks[pos]),
-                         _pred_term(raw_pred),
-                         parse_term(toks[pos + 2])))
-        pos += 3
-        if pos < len(toks) and toks[pos] == ".":
+            else:
+                g["patterns"].append(("__path__", parse_path(raw),
+                                      subj, obj))
+        elif kind == "optional":
+            inner, pos = _parse_group(toks, pos + 1, "OPTIONAL", prefixes)
+            pats = inner["patterns"]
+            if len(pats) == 1 and not inner["filters"]:
+                # one member: the flat entry, a plain left join
+                g["optional"].append(pats[0])
+            else:
+                # a SPARQL §18.5 LeftJoin unit (match_bgp "__group__")
+                g["optional"].append(("__group__", {
+                    "patterns": [p for p in pats if not _is_path(p)],
+                    "paths": [p[1:] for p in pats if _is_path(p)],
+                    "filters": inner["filters"]}))
+        elif kind == "graph":
             pos += 1
-    if pos >= len(toks):
-        raise ValueError("unterminated '{' group")
-    if not pats:
-        raise ValueError("empty group")
-    return pats, pos + 1
-
-
-def _parse_optional_group(toks: list[str], pos: int) -> tuple[dict, int]:
-    """An OPTIONAL group body (r8): triple patterns, property paths,
-    and FILTER(...) clauses — parsed into
-    ``{"patterns": [...], "paths": [raw...], "filters": [...]}``.
-    FILTERs inside the group evaluate over the GROUP's variables
-    before the left join (SPARQL LeftJoin's embedded filter for the
-    group-local case; a filter needing OUTER variables is outside
-    this subset and match_bgp rejects it loudly)."""
-    pos = _expect(toks, pos, "{")
-    g: dict = {"patterns": [], "paths": [], "filters": []}
-    while pos < len(toks) and toks[pos] != "}":
-        t = toks[pos]
-        low = t.lower()
-        if t == ".":
-            pos += 1
-            continue
-        if low.startswith("filter(") and t.endswith(")"):
-            g["filters"].append(_devar(t[len("filter"):][1:-1].strip()))
-            pos += 1
-            continue
-        if low == "filter":
-            pos += 1
-            if pos >= len(toks) or not toks[pos].startswith("("):
+            if pos >= len(toks) or toks[pos] == "{":
                 raise ValueError(
-                    "FILTER inside OPTIONAL needs '(expr)' (EXISTS "
-                    "guards inside OPTIONAL are outside this subset)")
-            g["filters"].append(_devar(toks[pos][1:-1].strip()))
-            pos += 1
-            continue
-        if low.split("(", 1)[0] in _KEYWORDS or t == "{":
-            raise ValueError(
-                f"only triple patterns, paths and FILTER are allowed "
-                f"inside OPTIONAL (got {t!r}) — nested OPTIONAL/UNION "
-                "are outside this subset")
-        if pos + 3 > len(toks):
-            raise ValueError("truncated triple pattern")
-        raw_pred = toks[pos + 1]
-        if not raw_pred.startswith("?") and _has_path_syntax(raw_pred):
-            g["paths"].append((raw_pred, parse_term(toks[pos]),
-                               parse_term(toks[pos + 2])))
-        else:
-            g["patterns"].append((parse_term(toks[pos]),
-                                  _pred_term(raw_pred),
-                                  parse_term(toks[pos + 2])))
-        pos += 3
+                    "GRAPH needs a term (?var or <iri>) before its "
+                    "group")
+            gterm = _term(toks[pos], prefixes)
+            inner, pos = _parse_group(toks, pos + 1, "GRAPH", prefixes)
+            g["patterns"] += [(*p, gterm) for p in inner["patterns"]]
+        elif kind == "minus":
+            inner, pos = _parse_group(toks, pos + 1, "MINUS", prefixes)
+            g["not_exists"] += inner["patterns"]
+        elif kind == "exists":
+            negated = toks[pos + 1].lower() == "not"
+            pos = _expect(toks, pos + 1 + negated, "exists")
+            inner, pos = _parse_group(toks, pos, "EXISTS", prefixes)
+            g["not_exists" if negated else "exists"] += inner["patterns"]
+        elif kind == "values":
+            vars_, rows, pos = _parse_values_block(toks, pos + 1, prefixes)
+            g["values"].append((vars_, rows))
+        elif kind == "bind":
+            body, pos = _kw_body(toks, pos, "bind")
+            m = _AS.match(body)
+            if not m:
+                raise ValueError(
+                    f"BIND needs '(expr AS ?var)': got ({body})")
+            g["binds"].append((_devar(m.group(1).strip()), m.group(2)))
+        elif kind == "filter":
+            body, pos = _kw_body(toks, pos, "filter")
+            g["filters"].append(_devar(body))
+        elif kind == "subquery":
+            if toks[pos + 1].lower() != "select":
+                raise ValueError("subqueries must be SELECT queries "
+                                 "(SPARQL 1.1 §12)")
+            # the braced tokens are a whole SELECT query, its own
+            # solution modifiers included
+            depth, j = 1, pos + 1
+            while j < len(toks) and depth:
+                depth += (toks[j] == "{") - (toks[j] == "}")
+                j += 1
+            if depth:
+                raise ValueError("unterminated '{' subquery")
+            g["subqueries"].append(_parse_query(toks[pos + 1:j - 1],
+                                                prefixes))
+            pos = j
+        else:  # union
+            if g["union"] is not None:
+                raise ValueError(
+                    "only one UNION block per WHERE group in this "
+                    "subset")
+            branches = []
+            while True:
+                inner, pos = _parse_group(toks, pos, "UNION", prefixes)
+                branches.append(inner["patterns"])
+                if pos >= len(toks) or toks[pos].lower() != "union":
+                    break
+                pos += 1
+            if len(branches) < 2:
+                raise ValueError("braced group without UNION")
+            g["union"] = branches
     if pos >= len(toks):
-        raise ValueError("unterminated '{' group")
-    if not g["patterns"] and not g["paths"]:
-        raise ValueError("empty OPTIONAL group")
+        raise ValueError(f"unterminated {name} group")
+    if name != "WHERE" and not g["patterns"]:
+        raise ValueError(f"empty {name} group")
     return g, pos + 1
 
 
@@ -626,22 +581,16 @@ _SPARQL_FN_UNSUPPORTED = (
 def _quote_segments(body: str):
     """Yield (segment, is_quoted) pairs — '...'/"..." literals are
     opaque to every rewrite."""
-    i, n, start = 0, len(body), 0
-    while i < n:
-        c = body[i]
-        if c in "\"'":
-            j = body.find(c, i + 1)
-            if j < 0:
-                raise ValueError(f"unterminated {c} in expression "
-                                 f"{body!r}")
+    i = start = 0
+    while i < len(body):
+        j = _opaque_end(body, i, _EXPR)
+        if j > i:
             if start < i:
                 yield body[start:i], False
-            yield body[i:j + 1], True
-            i = j + 1
-            start = i
-        else:
-            i += 1
-    if start < n:
+            yield body[i:j], True
+            start = j
+        i = max(j, i + 1)
+    if start < len(body):
         yield body[start:], False
 
 
@@ -694,15 +643,12 @@ def _devar(body: str) -> str:
     for m in _re.finditer(r"\brlike\s*\(", sql):
         depth, commas, j = 1, 0, m.end()
         while j < len(sql) and depth:
-            if sql[j] in "\"'":
-                j = sql.index(sql[j], j + 1)  # literals are opaque
-            elif sql[j] == "(":
-                depth += 1
-            elif sql[j] == ")":
-                depth -= 1
-            elif sql[j] == "," and depth == 1:
-                commas += 1
-            j += 1
+            k = _opaque_end(sql, j, _EXPR)  # literals are opaque
+            if k == j:
+                depth += (sql[j] == "(") - (sql[j] == ")")
+                commas += sql[j] == "," and depth == 1
+                k = j + 1
+            j = k
         if commas > 1:
             raise ValueError(
                 "REGEX flags (3-argument form) are outside this "
@@ -719,7 +665,8 @@ def _parse_values_term(tok: str):
     return parse_term(tok)
 
 
-def _parse_values_block(toks: list[str], pos: int):
+def _parse_values_block(toks: list[str], pos: int,
+                        prefixes: dict[str, str]):
     """SPARQL 1.1 inline data (§10.2) after the VALUES keyword:
     ``?v { datum ... }`` or ``(?v1 ?v2 ...) { (d1 d2 ...) ... }``.
     Returns ``(vars, rows, pos)`` — rows are tuples aligned with vars,
@@ -738,7 +685,8 @@ def _parse_values_block(toks: list[str], pos: int):
                     or t2 in ("{", "."):
                 raise ValueError(
                     f"VALUES terms must be constants, got {t2!r}")
-            rows.append((_parse_values_term(t2),))
+            rows.append((_parse_values_term(
+                _expand_prefixed(t2, prefixes)),))
             pos += 1
     elif t.startswith("(") and t.endswith(")"):
         vars_ = []
@@ -759,7 +707,7 @@ def _parse_values_block(toks: list[str], pos: int):
                     f"VALUES rows must be '(d1 d2 ...)', got {rt!r}")
             # the row's interior re-tokenizes with the same opaque
             # <>/\"\" segment rules as the query text
-            terms = _sparql_tokens(rt[1:-1])
+            terms = _sparql_tokens(_expand_prefixed(rt, prefixes)[1:-1])
             if len(terms) != len(vars_):
                 raise ValueError(
                     f"VALUES row {rt!r} has {len(terms)} terms for "
@@ -777,26 +725,14 @@ def _parse_values_block(toks: list[str], pos: int):
 
 
 def parse_sparql(text: str) -> dict:
-    """Parse a SPARQL query (subset above) into an execution spec:
-    ``{"form", "select", "aggs", "template", "patterns", "optional",
-    "filters", "not_exists", "binds", "values", "union", "path",
-    "group_by", "having", "order_by", "limit"}`` — consumed by
-    ``run_sparql``.
-
-    Forms (r8): ``form`` is ``"select"``, ``"ask"`` (boolean
-    existence) or ``"construct"`` (``template`` holds the triple
-    patterns to instantiate per binding).
-
-    Aggregation (r7): SELECT items may be ``(AGG_EXPR AS ?name)``
-    (COUNT/SUM/MIN/MAX/AVG etc. — the body is a Spark SQL aggregate
-    expression with ?vars rewritten to column names), combined with
-    trailing ``GROUP BY ?v ...``, ``HAVING(expr)``, ``ORDER BY
-    ?v | DESC(?v) ...`` and ``LIMIT n`` after the WHERE group."""
+    """Parse a query of the subset in the module docstring into the
+    spec ``run_sparql`` executes: a dict of ``form``, ``describe``,
+    ``select``, ``aggs``, ``template``, the WHERE group's members
+    (``patterns``, ``optional``, ``filters``, ``not_exists``,
+    ``exists``, ``subqueries``, ``union``, ``path``, ``path_patterns``,
+    ``binds``, ``values``) and the solution modifiers (``group_by``,
+    ``having``, ``order_by``, ``limit``, ``offset``)."""
     toks = _sparql_tokens(text)
-    # PREFIX declarations (r8): consumed up front, then every
-    # declared prefixed name expands token-wise to its full <iri>
-    # (quoted literals / already-wrapped IRIs opaque — undeclared
-    # colon tokens like urn:/did: pass through)
     prefixes: dict[str, str] = {}
     while len(toks) >= 3 and toks[0].lower() == "prefix":
         name, iri = toks[1], toks[2]
@@ -808,101 +744,66 @@ def parse_sparql(text: str) -> dict:
                 f"PREFIX {name} needs a '<iri>', got {iri!r}")
         prefixes[name[:-1]] = iri[1:-1]
         toks = toks[3:]
-    if prefixes:
-        # FILTER/BIND/HAVING bodies, ORDER BY '(expr)' sort keys and
-        # SELECT '(AGG AS ?v)' items are SQL expressions, not term
-        # positions: the grammar documents prefixed names there as NOT
-        # expanded, and an expanded '<iri>' inside an expression body
-        # would only surface later as an opaque AnalysisException — so
-        # leave those tokens (and a '(...)' token right after the bare
-        # keyword) untouched
-        _expr_kw = ("filter", "bind", "having")
-        _sort_kw = ("desc(", "asc(")
-        expanded, skip_next = [], False
-        in_select = in_order = False
-        for t in toks:
-            low = t.lower()
-            if low == "select":
-                in_select = True
-            elif low in ("where", "{"):
-                in_select = False
-            if in_order and low != "by" and not t.startswith(("?", "(")) \
-                    and not low.startswith(_sort_kw):
-                in_order = False
-            if low == "order":
-                in_order = True
-            if skip_next and t.startswith("("):
-                expanded.append(t)
-                skip_next = False
-                continue
-            skip_next = low in _expr_kw
-            if any(low.startswith(k + "(") for k in _expr_kw) \
-                    or ((in_select or in_order) and t.startswith("(")) \
-                    or (in_order and low.startswith(_sort_kw)):
-                expanded.append(t)
-            else:
-                expanded.append(_expand_prefixed(t, prefixes))
-        toks = expanded
+    return _parse_query(toks, prefixes)
+
+
+def _parse_query(toks: list[str], prefixes: dict[str, str]) -> dict:
+    """The spec of one query's tokens (a subquery's too)."""
     if not toks:
         raise ValueError("empty query")
     form = toks[0].lower()
-    select: list[str] = []
-    aggs: list[tuple[str, str]] = []  # (sql_expr, alias)
-    template: list[tuple[str, str, str]] | None = None
+    spec = {"form": form, "describe": None, "select": None, "aggs": [],
+            "template": None, "patterns": [], "optional": [],
+            "filters": [], "not_exists": [], "exists": [],
+            "subqueries": [], "union": None, "path": None,
+            "path_patterns": [], "binds": [], "values": [],
+            "group_by": [], "having": [], "order_by": [], "limit": None,
+            "offset": None}
+    pos = 1
     if form == "select":
-        pos = 1
         if pos < len(toks) and toks[pos].lower() in ("distinct",
                                                      "reduced"):
-            # accepted no-ops: the engine is set-semantics throughout
-            # (a plain SELECT also dedupes — documented divergence
-            # from SPARQL bag semantics), and REDUCED merely PERMITS
-            # deduplication
-            pos += 1
+            pos += 1  # no-ops: the engine is set-semantics throughout
+        select: list[str] = []
         if pos < len(toks) and toks[pos] == "*":
             pos += 1
         else:
-            while pos < len(toks):
+            while pos < len(toks) and toks[pos].startswith(("?", "(")):
                 t = toks[pos]
                 if t.startswith("?"):
                     select.append(t[1:])
-                    pos += 1
-                elif t.startswith("("):
-                    body = t[1:-1].strip()
-                    m = _re.match(r"(.+)\s+AS\s+\?(\w+)$", body,
-                                  _re.IGNORECASE | _re.DOTALL)
+                else:
+                    m = _AS.match(t[1:-1].strip())
                     if not m:
                         raise ValueError(
                             f"SELECT expression needs "
                             f"'(expr AS ?name)': {t!r}")
-                    aggs.append((_devar(m.group(1).strip()),
-                                 m.group(2)))
+                    spec["aggs"].append((_devar(m.group(1).strip()),
+                                         m.group(2)))
                     select.append(m.group(2))
-                    pos += 1
-                else:
-                    break
+                pos += 1
             if not select:
                 raise ValueError("SELECT needs '*' or at least one "
                                  "?var")
+        spec["select"] = select or None
         pos = _expect(toks, pos, "where")
     elif form == "ask":
         # SPARQL 1.1: the WHERE keyword is optional before the group
-        pos = 2 if (len(toks) > 1
-                    and toks[1].lower() == "where") else 1
+        if pos < len(toks) and toks[pos].lower() == "where":
+            pos += 1
     elif form == "construct":
-        template, pos = _parse_plain_group(toks, 1)
+        template, pos = _parse_group(toks, pos, "CONSTRUCT", prefixes)
+        spec["template"] = template["patterns"]
         pos = _expect(toks, pos, "where")
     elif form == "describe":
-        # SPARQL §16.4 — the description form is implementation-
-        # defined; this engine emits the nodes' OUTGOING triples
-        # (subj, pred, obj), one hop, no blank-node closure
         describe: list[str] = []
-        pos = 1
         while pos < len(toks) and toks[pos].lower() != "where" \
                 and toks[pos] != "{":
-            describe.append(parse_term(toks[pos]))
+            describe.append(_term(toks[pos], prefixes))
             pos += 1
         if not describe:
             raise ValueError("DESCRIBE needs at least one term")
+        spec["describe"] = describe
         if pos >= len(toks):
             # groupless form: DESCRIBE <iri> ... — constants only
             bad = [t for t in describe if t.startswith("?")]
@@ -910,179 +811,15 @@ def parse_sparql(text: str) -> dict:
                 raise ValueError(
                     f"DESCRIBE {bad[0]} needs a WHERE group to bind "
                     "the variable")
-            return {"form": form, "describe": describe,
-                    "select": None, "aggs": [], "template": None,
-                    "patterns": [], "optional": [], "filters": [],
-                    "not_exists": [], "exists": [], "subqueries": [],
-                    "union": None, "path": None, "path_patterns": [],
-                    "binds": [], "values": [], "group_by": [],
-                    "having": [], "order_by": [], "limit": None,
-                    "offset": None}
+            return spec
         if toks[pos].lower() == "where":
             pos += 1
     else:
         raise ValueError(
             f"query must start with SELECT, ASK, CONSTRUCT or "
             f"DESCRIBE (got {toks[0]!r})")
-    pos = _expect(toks, pos, "{")
-    spec = {"form": form,
-            "describe": describe if form == "describe" else None,
-            "select": select or None, "aggs": aggs,
-            "template": template, "patterns": [],
-            "optional": [], "filters": [], "not_exists": [],
-            "exists": [], "subqueries": [],
-            "union": None, "path": None, "path_patterns": [],
-            "binds": [], "values": [], "group_by": [],
-            "having": [], "order_by": [], "limit": None,
-            "offset": None}
-    while pos < len(toks) and toks[pos] != "}":
-        t = toks[pos]
-        low = t.lower()
-        if t == ".":
-            # SPARQL tolerates a statement dot after any group member
-            pos += 1
-            continue
-        if low == "optional":
-            g, pos = _parse_optional_group(toks, pos + 1)
-            if len(g["patterns"]) + len(g["paths"]) == 1 \
-                    and not g["filters"]:
-                # single-member group: keep the flat entry (identical
-                # plan shape to pre-r8 queries)
-                if g["patterns"]:
-                    spec["optional"].extend(g["patterns"])
-                else:
-                    raw, s, o = g["paths"][0]
-                    spec["optional"].append(("__path__", raw, s, o))
-            else:
-                # multi-member / filtered group: SPARQL LeftJoin UNIT
-                # semantics — the whole group matches or the whole
-                # group is unbound (match_bgp "__group__" entries)
-                spec["optional"].append(("__group__", g))
-        elif low == "graph":
-            # SPARQL §13.3: GRAPH term { patterns } — each pattern in
-            # the group becomes a QUAD over the named graphs; a
-            # variable term binds the graph label (shared across the
-            # group's patterns, so they co-locate in one graph), a
-            # constant filters on it
-            pos += 1
-            if pos >= len(toks) or toks[pos] == "{":
-                raise ValueError(
-                    "GRAPH needs a term (?var or <iri>) before its "
-                    "group")
-            gterm = parse_term(toks[pos])
-            pats, pos = _parse_plain_group(toks, pos + 1)
-            spec["patterns"].extend((*p, gterm) for p in pats)
-        elif low == "minus":
-            # the connected case, where MINUS == FILTER NOT EXISTS
-            # (match_bgp rejects a disconnected group loudly)
-            pats, pos = _parse_plain_group(toks, pos + 1,
-                                           allow_paths=True)
-            spec["not_exists"].extend(pats)
-        elif low == "values":
-            vars_, rows, pos = _parse_values_block(toks, pos + 1)
-            spec["values"].append((vars_, rows))
-        elif low == "bind" or low.startswith("bind("):
-            # BIND(expr AS ?v) — '(' is an opaque tokenizer segment,
-            # so the whole clause may be one word token (like FILTER)
-            if low == "bind":
-                pos += 1
-                if pos >= len(toks) or not toks[pos].startswith("("):
-                    raise ValueError("BIND needs '(expr AS ?var)'")
-                body = toks[pos][1:-1].strip()
-                pos += 1
-            else:
-                body = t[len("bind"):][1:-1].strip()
-                pos += 1
-            m = _re.match(r"(.+)\s+AS\s+\?(\w+)$", body,
-                          _re.IGNORECASE | _re.DOTALL)
-            if not m:
-                raise ValueError(
-                    f"BIND needs '(expr AS ?var)': got ({body})")
-            spec["binds"].append((_devar(m.group(1).strip()),
-                                  m.group(2)))
-        elif low.startswith("filter("):
-            # no space between FILTER and '(' — one word token
-            spec["filters"].append(
-                _devar(t[len("filter"):][1:-1].strip()))
-            pos += 1
-        elif low == "filter":
-            pos += 1
-            if pos < len(toks) and toks[pos].lower() == "not":
-                pos = _expect(toks, pos + 1, "exists")
-                pats, pos = _parse_plain_group(toks, pos,
-                                               allow_paths=True)
-                spec["not_exists"].extend(pats)
-            elif pos < len(toks) and toks[pos].lower() == "exists":
-                pats, pos = _parse_plain_group(toks, pos + 1,
-                                               allow_paths=True)
-                spec["exists"].extend(pats)
-            elif pos < len(toks) and toks[pos].startswith("("):
-                spec["filters"].append(
-                    _devar(toks[pos][1:-1].strip()))
-                pos += 1
-            else:
-                raise ValueError("FILTER needs '(expr)' or NOT EXISTS")
-        elif t == "{" and pos + 1 < len(toks) \
-                and toks[pos + 1].lower() in ("select", "ask",
-                                              "construct"):
-            if toks[pos + 1].lower() != "select":
-                raise ValueError("subqueries must be SELECT queries "
-                                 "(SPARQL 1.1 §12)")
-            # SUB-SELECT (SPARQL 1.1 §12): the braced tokens are a
-            # complete SELECT query (incl. its own trailing GROUP
-            # BY/HAVING/ORDER BY/LIMIT inside the braces) — re-parse
-            # recursively.  Tokens round-trip through ' '.join because
-            # <>/(...)/"..." segments are opaque single tokens.
-            depth, j = 1, pos + 1
-            while j < len(toks) and depth:
-                if toks[j] == "{":
-                    depth += 1
-                elif toks[j] == "}":
-                    depth -= 1
-                j += 1
-            if depth:
-                raise ValueError("unterminated '{' subquery")
-            sub = parse_sparql(" ".join(toks[pos + 1:j - 1]))
-            if sub["form"] != "select":
-                raise ValueError("subqueries must be SELECT queries")
-            spec["subqueries"].append(sub)
-            pos = j
-        elif t == "{":
-            if spec["union"] is not None:
-                raise ValueError(
-                    "only one UNION block per WHERE group in this "
-                    "subset")
-            groups = []
-            pats, pos = _parse_plain_group(toks, pos,
-                                           allow_paths=True)
-            groups.append(pats)
-            while pos < len(toks) and toks[pos].lower() == "union":
-                pats, pos = _parse_plain_group(toks, pos + 1,
-                                               allow_paths=True)
-                groups.append(pats)
-            if len(groups) < 2:
-                raise ValueError("braced group without UNION")
-            spec["union"] = groups
-        elif low in _KEYWORDS:
-            raise ValueError(f"unexpected keyword {t!r} in group")
-        else:
-            if pos + 3 > len(toks):
-                raise ValueError("truncated triple pattern")
-            raw_pred = toks[pos + 1]
-            subj, obj = parse_term(toks[pos]), parse_term(toks[pos + 2])
-            pred = _pred_term(raw_pred)
-            pos += 3
-            if pos < len(toks) and toks[pos] == ".":
-                pos += 1
-            if not raw_pred.startswith("?") and \
-                    _has_path_syntax(raw_pred):
-                spec["patterns"].append(("__path__", raw_pred,
-                                         subj, obj))
-            else:
-                spec["patterns"].append((subj, pred, obj))
-    if pos >= len(toks):
-        raise ValueError("unterminated WHERE group")
-    pos += 1  # past '}'
+    where, pos = _parse_group(toks, pos, "WHERE", prefixes)
+    spec.update(where)
     if form != "select" and pos < len(toks):
         raise ValueError(
             f"solution modifiers after an {form.upper()} group are "
@@ -1097,61 +834,37 @@ def parse_sparql(text: str) -> dict:
                 pos += 1
             if not spec["group_by"]:
                 raise ValueError("GROUP BY needs at least one ?var")
-        elif low.startswith("having(") or low == "having":
-            if low == "having":
-                pos += 1
-                if pos >= len(toks) or not toks[pos].startswith("("):
-                    raise ValueError("HAVING needs '(expr)'")
-                body = toks[pos][1:-1]
-                pos += 1
-            else:
-                body = toks[pos][len("having"):][1:-1]
-                pos += 1
-            spec["having"].append(_devar(body.strip()))
+        elif low == "having" or low.startswith("having("):
+            body, pos = _kw_body(toks, pos, "having")
+            spec["having"].append(_devar(body))
         elif low == "order":
             pos = _expect(toks, pos + 1, "by")
-            got = False
-
-            def _sort_key(body: str, d: str):
-                # a plain ?var stays a column reference; anything else
-                # is a Spark SQL expression over the PROJECTED vars
-                # (r8 — documented divergence: SPARQL sorts
-                # pre-projection)
-                body = body.strip()
-                if _re.fullmatch(r"\?\w+", body):
-                    return (body[1:], d, "var")
-                return (_devar(body), d, "expr")
-
+            keys = len(spec["order_by"])
             while pos < len(toks):
-                t = toks[pos]
-                tl = t.lower()
-                if t.startswith("?"):
-                    spec["order_by"].append((t[1:], "asc", "var"))
-                elif tl.startswith("desc(") and t.endswith(")"):
-                    spec["order_by"].append(_sort_key(t[5:-1], "desc"))
-                elif tl.startswith("asc(") and t.endswith(")"):
-                    spec["order_by"].append(_sort_key(t[4:-1], "asc"))
-                elif t.startswith("(") and t.endswith(")"):
-                    spec["order_by"].append(
-                        _sort_key(t[1:-1], "asc"))
-                else:
+                m = _SORT_KEY.fullmatch(toks[pos])
+                if toks[pos].startswith("?"):
+                    spec["order_by"].append((toks[pos][1:], "asc", "var"))
+                elif not m:
                     break
-                got = True
+                else:
+                    # a plain ?var stays a column reference; anything
+                    # else is a Spark SQL expression over the projected
+                    # vars
+                    d, body = (m.group(1) or "asc").lower(), \
+                        m.group(2).strip()
+                    spec["order_by"].append(
+                        (body[1:], d, "var")
+                        if _re.fullmatch(r"\?\w+", body)
+                        else (_devar(body), d, "expr"))
                 pos += 1
-            if not got:
+            if keys == len(spec["order_by"]):
                 raise ValueError("ORDER BY needs ?var / DESC(?var) / "
                                  "ASC(?var) / (expr)")
-        elif low == "limit":
+        elif low in ("limit", "offset"):
             pos += 1
             if pos >= len(toks) or not toks[pos].isdigit():
-                raise ValueError("LIMIT needs an integer")
-            spec["limit"] = int(toks[pos])
-            pos += 1
-        elif low == "offset":
-            pos += 1
-            if pos >= len(toks) or not toks[pos].isdigit():
-                raise ValueError("OFFSET needs an integer")
-            spec["offset"] = int(toks[pos])
+                raise ValueError(f"{low.upper()} needs an integer")
+            spec[low] = int(toks[pos])
             pos += 1
         else:
             raise ValueError(
@@ -1175,49 +888,26 @@ def parse_sparql(text: str) -> dict:
         if not spec["aggs"]:
             raise ValueError("GROUP BY without aggregate SELECT "
                              "expressions")
-    # path-pattern routing: a LONE path keeps the dedicated
-    # match_path route (seeded + both-ground EXISTS shape); paths
-    # mixed with other members become match_bgp `paths=` entries (r7)
-    paths = [p for p in spec["patterns"] if p[0] == "__path__"]
+    # a LONE path keeps the dedicated match_path route (seeded and
+    # both-ground EXISTS shapes); paths mixed with other members become
+    # match_bgp `paths=` entries
+    paths = [p for p in spec["patterns"] if _is_path(p)]
     if paths:
-        plain = [p for p in spec["patterns"] if p[0] != "__path__"]
         lone = (len(spec["patterns"]) == 1 and not spec["optional"]
                 and not spec["filters"] and not spec["not_exists"]
                 and not spec["exists"] and not spec["subqueries"]
                 and not spec["union"])
+        spec["patterns"] = [p for p in spec["patterns"]
+                            if not _is_path(p)]
         if lone:
-            _tag, raw_pred, subj, obj = paths[0]
-            spec["patterns"] = []
-            spec["path"] = {
-                "steps": parse_path(raw_pred),
-                "subj": subj, "obj": obj,
-            }
+            _tag, steps, subj, obj = paths[0]
+            spec["path"] = {"steps": steps, "subj": subj, "obj": obj}
         else:
-            spec["patterns"] = plain
-            spec["path_patterns"] = [
-                (parse_path(raw), subj, obj)
-                for _tag, raw, subj, obj in paths]
+            spec["path_patterns"] = [p[1:] for p in paths]
     if spec["union"] is None and spec["path"] is None \
             and not spec["patterns"] and not spec["path_patterns"] \
             and not spec["subqueries"]:
         raise ValueError("WHERE group has no patterns")
-    # paths inside OPTIONAL / guards / UNION branches (r8): parse the
-    # raw step string here so the executors receive
-    # ("__path__", steps, subj, obj) entries
-    def _conv_path(p):
-        if p and p[0] == "__path__":
-            return ("__path__", parse_path(p[1]), p[2], p[3])
-        if p and p[0] == "__group__":
-            return ("__group__", dict(
-                p[1], paths=[(parse_path(raw), s, o)
-                             for raw, s, o in p[1]["paths"]]))
-        return p
-
-    for key in ("optional", "exists", "not_exists"):
-        spec[key] = [_conv_path(p) for p in spec[key]]
-    if spec["union"] is not None:
-        spec["union"] = [[_conv_path(p) for p in g]
-                         for g in spec["union"]]
     return spec
 
 
@@ -1288,12 +978,7 @@ def run_sparql(triples, text: str):
     subquery-projected variables apply after that join, everything
     else keeps its match_bgp placement (and pushdown).  FILTER EXISTS
     is match_bgp ``exists=`` (one left_semi per group)."""
-    from pyspark.sql import functions as F
-
-    from .bgp import match_bgp, match_path, match_union
-
-    spec = parse_sparql(text)
-    return _run_spec(triples, spec)
+    return _run_spec(triples, parse_sparql(text))
 
 
 def _describe(triples, terms: list[str], bindings):
@@ -1355,28 +1040,17 @@ def _run_spec(triples, spec: dict):
         # groupless DESCRIBE <iri> ...: constants only
         return _describe(triples, spec["describe"], None)
     sub_frames = [_run_spec(triples, s) for s in spec["subqueries"]]
-    sub_vars: set[str] = set()
-    for f in sub_frames:
-        sub_vars.update(f.columns)
-    union_var_sets: list[set[str]] = [
-        {t[1:] for pat in pats for t in pat
-         if isinstance(t, str) and t.startswith("?")}
-        for pats in (spec["union"] or [])]
-    union_vars: set[str] = set().union(*union_var_sets) \
-        if union_var_sets else set()
+    sub_vars = {c for f in sub_frames for c in f.columns}
+    union_var_sets = [set().union(*map(_entry_vars, pats))
+                      for pats in (spec["union"] or [])]
+    union_vars: set[str] = set().union(*union_var_sets)
     bgp_route = bool(spec["patterns"] or spec["path_patterns"])
     if bgp_route and (spec["subqueries"] or spec["union"]):
         # vars the OUTER group itself binds — filters over vars bound
         # only by a subquery / the UNION block must run after that
         # join, not inside match_bgp
-        outer_vars: set[str] = set()
-        for p in spec["patterns"]:
-            outer_vars.update(t[1:] for t in p
-                              if isinstance(t, str) and
-                              t.startswith("?"))
-        for _steps, s, o in spec["path_patterns"]:
-            outer_vars.update(t[1:] for t in (s, o)
-                              if t.startswith("?"))
+        outer_vars = set().union(*map(
+            _entry_vars, spec["patterns"] + spec["path_patterns"]))
         outer_vars.update(a for _e, a in spec["binds"])
         only_late = (sub_vars | union_vars) - outer_vars
 
@@ -1456,15 +1130,6 @@ def _run_spec(triples, spec: dict):
                 "OPTIONAL / EXISTS guards need at least one triple "
                 "pattern alongside the subquery")
         result = None
-    if spec["binds"] and spec["path"] is not None:
-        # lone-path route: binds are plain projections over the result
-        # (this route has no FILTERs that could reference them)
-        for expr, alias in spec["binds"]:
-            if alias in result.columns:
-                raise ValueError(
-                    f"BIND alias ?{alias} is already bound — SPARQL "
-                    "forbids rebinding (1.1 §10.1)")
-            result = result.withColumn(alias, F.expr(expr))
     for i, sub in enumerate(sub_frames):
         if result is None:
             result = sub
@@ -1509,10 +1174,10 @@ def _run_spec(triples, spec: dict):
         result = result.join(uf, on=shared)
     if result is None:
         raise ValueError("WHERE group produced no relation")
-    if not bgp_route and spec["path"] is None:
-        # UNION-base / subquery-only WHERE: binds then ALL filters
-        # apply post-join (match_bgp never ran, so nothing was
-        # applied inside it)
+    if not bgp_route:
+        # lone-path / UNION-base / subquery-only WHERE: match_bgp never
+        # ran, so binds then ALL filters apply here, post-join (a lone
+        # path has no filters)
         for expr, alias in spec["binds"]:
             if alias in result.columns:
                 raise ValueError(
@@ -1540,8 +1205,6 @@ def _run_spec(triples, spec: dict):
 
         return instantiate_template(result, spec["template"])
     if spec["aggs"]:
-        from pyspark.sql import functions as F
-
         keys = spec["group_by"]
         missing = [v for v in keys if v not in result.columns]
         if missing:
@@ -1563,8 +1226,6 @@ def _run_spec(triples, spec: dict):
         if not spec["aggs"]:
             result = result.distinct()
     if spec["order_by"]:
-        from pyspark.sql import functions as F
-
         missing = [v for v, _d, kind in spec["order_by"]
                    if kind == "var" and v not in result.columns]
         if missing:

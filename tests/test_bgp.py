@@ -687,8 +687,7 @@ def test_path_group_steps(spark):
 def test_bgp_optional_unbound_compat(spark):
     """Nested OPTIONALs where the first leaves a var unbound (r6
     VERDICT #4): SPARQL 1.1 compatibility binds the unbound var to
-    every match of the second optional; unbound_compat=False restores
-    SQL NULL-key semantics (one all-NULL extension row)."""
+    every match of the second optional."""
     from cbor_ld_spark.operators.bgp import match_bgp
 
     data = [
@@ -706,20 +705,6 @@ def test_bgp_optional_unbound_compat(spark):
     assert got == {
         ("c1", "p1", "s1", "40"),
         ("c2", "p2", "s1", "40"), ("c2", "p2", "q7", "99")}
-    # SQL tier: NULL ?s never matches
-    got_sql = {tuple(r) for r in match_bgp(
-        t, [("?c", "subject", "?p")], unbound_compat=False,
-        **args).collect()}
-    assert got_sql == {
-        ("c1", "p1", "s1", "40"), ("c2", "p2", None, None)}
-    # vars bound by REQUIRED patterns keep plain equi semantics in
-    # both tiers (the common case is unchanged)
-    same = [("?c", "subject", "?p")], dict(
-        optional=[("?p", "age", "?a")])
-    a = {tuple(r) for r in match_bgp(t, same[0], **same[1]).collect()}
-    b = {tuple(r) for r in match_bgp(
-        t, same[0], unbound_compat=False, **same[1]).collect()}
-    assert a == b
 
 
 def test_bgp_optional_unbound_compat_random(spark):
@@ -825,6 +810,18 @@ def test_parse_sparql_units():
     assert mix["patterns"] == [("?y", "urn:q", "?z")]
     assert mix["path_patterns"] == [
         ([("urn:p", "plus")], "?x", "?y")]
+
+    # one statement-dot rule in every group: a stray '.' is skipped
+    base = 'SELECT * WHERE { ?a <urn:p> ?b . %s }'
+    for group in [
+            '{ ?a <urn:q> ?c . . ?c <urn:r> ?d } UNION { ?a <urn:s> ?c }',
+            'MINUS { . ?a <urn:q> ?c }',
+            'FILTER EXISTS { . ?a <urn:q> ?c }',
+            'FILTER NOT EXISTS { . ?a <urn:q> ?c }',
+            'GRAPH ?g { . ?a <urn:q> ?c }',
+            'OPTIONAL { . ?a <urn:q> ?c . . ?c <urn:r> ?d }']:
+        assert parse_sparql(base % group) == \
+            parse_sparql(base % group.replace(" .", "")), group
 
     import pytest as _p
     for bad, msg in [
@@ -1710,6 +1707,8 @@ def test_sparql_expr_builtins(spark):
     assert _devar("GROUP_CONCAT(?c)") == \
         "array_join(sort_array(collect_list(c)), ' ')"
     assert _devar("SAMPLE(?c)") == "min(c)"
+    # '<' is never opaque in an expression, even where it spells an IRI
+    assert _devar("?a<?b&&?c>?d") == "a<b AND c>d"
     with pytest.raises(ValueError, match="REGEX flags"):
         _devar("REGEX(?s, 'p', 'i')")
     with pytest.raises(ValueError, match="LANG"):
