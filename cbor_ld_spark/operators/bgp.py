@@ -32,7 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .sparql import _EXPR, _opaque_end
+from .sparql import _EXPR, _is_path, _opaque_end
 
 _POSITIONS = ("subj", "pred", "obj")
 
@@ -337,7 +337,7 @@ def match_bgp(triples: DataFrame,
                               not_exists or [])):
         for m, pat in enumerate(pats):
             guard_vars: list[str] = []
-            if pat and pat[0] == "__path__":
+            if _is_path(pat):
                 # property path guard (r8): the path relation's
                 # endpoint columns semi/anti-join on the shared vars
                 # exactly like a pattern guard (seeded tier when an
@@ -404,7 +404,7 @@ def match_bgp(triples: DataFrame,
             for c in frame.columns:
                 if c not in var_order:
                     var_order.append(c)
-        elif pat and pat[0] == "__path__":
+        elif _is_path(pat):
             # property path inside OPTIONAL (r8): the path relation
             # left-joins like any optional pattern frame (seeded tier
             # when an endpoint is ground)
@@ -477,9 +477,8 @@ def match_union(triples: DataFrame,
         raise ValueError("match_union requires at least one group")
     frames = []
     for pats in groups:
-        plain = [p for p in pats if not (p and p[0] == "__path__")]
-        paths = [(p[1], p[2], p[3]) for p in pats
-                 if p and p[0] == "__path__"]
+        plain = [p for p in pats if not _is_path(p)]
+        paths = [p[1:] for p in pats if _is_path(p)]
         frames.append(match_bgp(triples, plain, distinct=False,
                                 paths=paths or None))
     var_order: list[str] = []

@@ -1,4 +1,5 @@
-"""Deduplication operators over the ``documents`` table.
+"""Deduplication operators over the ``documents`` and ``embeddings``
+tables.
 
 Training-data-pipeline dedup at corpus scale, four tiers:
 
@@ -10,16 +11,17 @@ Training-data-pipeline dedup at corpus scale, four tiers:
                    whose cardinality ~ corpus size / avg cluster, so the
                    candidate join never goes quadratic.  Hashes are
                    xxhash64 (JVM, whole-stage codegen) — no Python.
-* simhash        — 64-bit sign-aggregated token hashes; near-dup =
+* simhash        — 32-bit sign-aggregated token hashes; near-dup =
                    identical simhash (0-distance buckets at scale;
                    banded hamming for distance>0).
-* embedding      — cosine near-dup via exact normalized dot product over
-                   the ``embeddings`` table (self-join pruned by vec_id <
-                   vec_id2; at 10^12 scale the LSH variant in
-                   operators.similarity bounds candidates first).
+* embedding      — cosine near-dup, three ways: exact ordered folds
+                   (the oracle formulation), an exact block-pair BLAS
+                   matmul (``applyInArrow``) and hyperplane LSH with an
+                   Arrow rerank, which bounds candidates at 10^12 scale.
 
-Everything is DataFrame ops; the minhash pipeline is ~6 narrow maps +
-1 groupBy, no UDFs anywhere.
+One MinHash (``minhash``, also operators.graph's), one bucket self-join
+(``_bucket_pairs``) and one duplicate-group aggregate (``_groups``)
+serve every tier.  Only the embedding tiers run Python (Arrow bodies).
 """
 
 from __future__ import annotations
@@ -29,13 +31,18 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..functions.udfs import python_task
 from .text import _norm, load_documents  # noqa: F401
 
+NUM_HASHES = 16  # MinHash signature length
+BANDS = 4  # MinHash LSH bands of NUM_HASHES / BANDS rows
+SHINGLE_N = 3  # word n-gram shingles
+SIMHASH_BITS = 32
+EMB_LSH_PLANES, EMB_LSH_TABLES = 6, 8  # embedding_near_duplicates_lsh
 
-def exact_duplicates(docs: DataFrame) -> DataFrame:
-    """Duplicate groups by normalized-content hash (size > 1)."""
+
+def _groups(keyed: DataFrame, key: str) -> DataFrame:
+    """Groups of more than one doc sharing ``key``: size and lowest
+    doc_id."""
     return (
-        docs
-        .select("doc_id", F.md5(_norm(F.col("text"))).alias("content_hash"))
-        .groupBy("content_hash")
+        keyed.groupBy(key)
         .agg(F.count("doc_id").alias("group_size"),
              F.min("doc_id").alias("canonical_doc_id"))
         .filter(F.col("group_size") > 1)
@@ -43,10 +50,20 @@ def exact_duplicates(docs: DataFrame) -> DataFrame:
     )
 
 
+def _content_hashes(docs: DataFrame) -> DataFrame:
+    return docs.select("doc_id",
+                       F.md5(_norm(F.col("text"))).alias("content_hash"))
+
+
+def exact_duplicates(docs: DataFrame) -> DataFrame:
+    """Duplicate groups by normalized-content hash (size > 1)."""
+    return _groups(_content_hashes(docs), "content_hash")
+
+
 def dedup_keep_first(docs: DataFrame) -> DataFrame:
     """Corpus after exact dedup: keep the lowest doc_id per content hash."""
-    h = docs.select("doc_id", F.md5(_norm(F.col("text"))).alias("content_hash"))
-    keep = h.groupBy("content_hash").agg(F.min("doc_id").alias("doc_id"))
+    keep = _content_hashes(docs).groupBy("content_hash") \
+        .agg(F.min("doc_id").alias("doc_id"))
     return keep.select("doc_id", "content_hash")
 
 
@@ -68,50 +85,66 @@ def _shingles_of_tokens(toks_col, n: int = 3):
     return out
 
 
-def _with_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
+def _with_shingles(docs: DataFrame) -> DataFrame:
     """docs -> (doc_id, shingles)."""
     toks = F.split(_norm(F.col("text")), " ")
     return docs.select("doc_id",
-                       _shingles_of_tokens(toks, n).alias("shingles"))
+                       _shingles_of_tokens(toks, SHINGLE_N).alias("shingles"))
 
 
-def minhash_signatures(docs: DataFrame, num_hashes: int = 16,
-                       shingle_n: int = 3) -> DataFrame:
-    """MinHash signatures: k independent min-of-xxhash64 over shingles.
+def minhash(rows: DataFrame, key, elem: str, num_hashes: int) -> DataFrame:
+    """(key, signature) per ``key`` of ``(key, elem)`` rows: the
+    ``num_hashes`` seeded min-of-xxhash64 over its elements, as an
+    array<long>.  ``key`` is a column name or an aliased Column.
 
-    Shape: explode shingles -> k seeded xxhash64 columns -> groupBy(doc)
-    with k ``min`` aggregates.  Everything stays in whole-stage codegen
-    (higher-order array folds would be interpreted row-at-a-time, ~5x
-    slower); the shuffle key is doc_id (uniform) and partial min
-    aggregation collapses each doc's shingles map-side.
+    One groupBy with k ``min`` aggregates: everything stays in
+    whole-stage codegen (higher-order array folds would be interpreted
+    row-at-a-time, ~5x slower); the shuffle key is the id (uniform) and
+    partial min aggregation collapses each id's elements map-side.  The
+    neighbour-overlap oracle replays these hashes bit for bit.
     """
-    exploded = (
-        _with_shingles(docs, shingle_n)
-        .select("doc_id", F.explode("shingles").alias("shingle"))
-    )
-    aggs = [F.min(F.xxhash64("shingle", F.lit(i))).alias(f"mh_{i}")
+    aggs = [F.min(F.xxhash64(elem, F.lit(i))).alias(f"mh_{i}")
             for i in range(num_hashes)]
-    per_doc = exploded.groupBy("doc_id").agg(*aggs)
-    return per_doc.select(
-        "doc_id",
+    per = rows.groupBy(key).agg(*aggs)
+    return per.select(
+        per.columns[0],
         F.array(*[F.col(f"mh_{i}") for i in range(num_hashes)])
         .alias("signature"))
 
 
-def minhash_lsh_pairs(docs: DataFrame, num_hashes: int = 16, bands: int = 4,
-                      shingle_n: int = 3,
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """(doc_id, signature): MinHash over each document's shingles."""
+    exploded = _with_shingles(docs).select(
+        "doc_id", F.explode("shingles").alias("shingle"))
+    return minhash(exploded, "doc_id", "shingle", NUM_HASHES)
+
+
+def _bucket_pairs(rows: DataFrame, keys: list[str],
+                  id_col: str) -> DataFrame:
+    """``rows`` self-joined on the bucket ``keys`` as ``l`` and ``r``
+    with ``l.id < r.id``: one row per pair per shared bucket.  The
+    bucket table is localCheckpointed eagerly: it feeds both sides
+    (alias plans defeat exchange reuse) and the ContextCleaner releases
+    it, unlike a leaked persist.  Bucket keys are uniform by
+    construction, so no salting is needed even on skewed inputs."""
+    rows = rows.localCheckpoint()
+    return (rows.alias("l").join(rows.alias("r"), on=keys)
+            .filter(F.col(f"l.{id_col}") < F.col(f"r.{id_col}")))
+
+
+def minhash_lsh_pairs(docs: DataFrame,
                       signatures: DataFrame | None = None) -> DataFrame:
     """Candidate near-duplicate pairs via banded MinHash LSH.
 
-    rows_per_band = num_hashes / bands; docs sharing any band bucket are
+    rows_per_band = NUM_HASHES / BANDS; docs sharing any band bucket are
     candidates.  Shuffle key = (band, bucket hash): uniform by
     construction, so no salting needed here even on skewed corpora.
     Pass precomputed ``signatures`` to share the (dominant) signature
     cost with other consumers.
     """
     sigs = (signatures if signatures is not None
-            else minhash_signatures(docs, num_hashes, shingle_n))
-    return banded_signature_pairs(sigs, num_hashes, bands,
+            else minhash_signatures(docs))
+    return banded_signature_pairs(sigs, NUM_HASHES, BANDS,
                                   id_col="doc_id",
                                   out_a="doc_a", out_b="doc_b")
 
@@ -125,10 +158,9 @@ def banded_signature_pairs(sigs: DataFrame, num_hashes: int, bands: int,
     Shared machinery: document MinHash (``minhash_lsh_pairs``) and
     adjacency-set MinHash (``graph.neighborhood_overlap_lsh``) bucket
     identically — band bucket = xxhash64 of the comma-joined signature
-    slice; ids sharing any band bucket pair up (id_a < id_b).  Shuffle
-    key = (band, bucket): uniform by construction, so no salting needed
-    even on skewed inputs — a mega-hub only collides with genuinely
-    similar sets, never with its whole neighborhood.
+    slice; ids sharing any band bucket pair up (id_a < id_b).  A
+    mega-hub only collides with genuinely similar sets, never with its
+    whole neighborhood.
     """
     rows_per_band = num_hashes // bands
     band_rows = sigs.select(
@@ -145,28 +177,20 @@ def banded_signature_pairs(sigs: DataFrame, num_hashes: int, bands: int,
             for b in range(bands)
         ])).alias("bb"),
     ).select(id_col, "bb.band", "bb.bucket")
-    # eager localCheckpoint: the band table feeds both self-join sides
-    # (alias plans defeat exchange reuse) and its blocks are released by
-    # the ContextCleaner when unreferenced, unlike a leaked persist
-    band_rows = band_rows.localCheckpoint()
-    left = band_rows.alias("l")
-    right = band_rows.alias("r")
-    pairs = (
-        left.join(right, on=["band", "bucket"])
-        .filter(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
+    return (
+        _bucket_pairs(band_rows, ["band", "bucket"], id_col)
         .select(F.col(f"l.{id_col}").alias(out_a),
                 F.col(f"r.{id_col}").alias(out_b))
         .distinct()
     )
-    return pairs
 
 
-def minhash_jaccard_estimate(docs: DataFrame, num_hashes: int = 16,
+def minhash_jaccard_estimate(docs: DataFrame,
                              threshold: float = 0.5) -> DataFrame:
     """LSH candidates refined by signature-overlap Jaccard estimate."""
     # one signature computation shared by the LSH step and both joins
-    sigs = minhash_signatures(docs, num_hashes).localCheckpoint()
-    pairs = minhash_lsh_pairs(docs, num_hashes, signatures=sigs)
+    sigs = minhash_signatures(docs).localCheckpoint()
+    pairs = minhash_lsh_pairs(docs, signatures=sigs)
     a = sigs.select(F.col("doc_id").alias("doc_a"),
                     F.col("signature").alias("sig_a"))
     b = sigs.select(F.col("doc_id").alias("doc_b"),
@@ -178,7 +202,7 @@ def minhash_jaccard_estimate(docs: DataFrame, num_hashes: int = 16,
             (F.size(F.filter(F.zip_with("sig_a", "sig_b",
                                         lambda x, y: x == y),
                              lambda eq: eq)).cast("double")
-             / num_hashes).alias("jaccard_est"),
+             / NUM_HASHES).alias("jaccard_est"),
         )
         .filter(F.col("jaccard_est") >= threshold)
         .orderBy("doc_a", "doc_b")
@@ -186,7 +210,7 @@ def minhash_jaccard_estimate(docs: DataFrame, num_hashes: int = 16,
     return est
 
 
-def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     """SimHash over tokens (sign of per-bit weighted sums).
 
     Shape: explode tokens -> xxhash64 once -> groupBy(doc_id) with one
@@ -203,10 +227,10 @@ def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:
     ex = docs.select("doc_id", F.explode(toks).alias("tok"))
     h = F.xxhash64("tok")
     aggs = [F.sum(F.shiftright(h, b).bitwiseAND(F.lit(1))).alias(f"_o{b}")
-            for b in range(bits)]
+            for b in range(SIMHASH_BITS)]
     per = ex.groupBy("doc_id").agg(F.count(F.lit(1)).alias("_n"), *aggs)
     sim = F.lit(0).cast("long")
-    for b in range(bits):
+    for b in range(SIMHASH_BITS):
         # linear OR-chain (each step references the previous tree once;
         # a when(...).otherwise(prev) rebind would double it per step)
         sim = sim.bitwiseOR(
@@ -218,38 +242,28 @@ def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:
 
 def simhash_duplicate_groups(docs: DataFrame) -> DataFrame:
     """Groups of documents sharing an identical simhash."""
-    return (
-        simhash(docs)
-        .groupBy("simhash")
-        .agg(F.count("doc_id").alias("group_size"),
-             F.min("doc_id").alias("canonical_doc_id"))
-        .filter(F.col("group_size") > 1)
-        .orderBy("canonical_doc_id")
-    )
+    return _groups(simhash(docs), "simhash")
 
 
-def simhash_near_pairs(docs: DataFrame, bits: int = 32, bands: int = 4,
-                       max_distance: int = 3,
-                       simhashes: DataFrame | None = None) -> DataFrame:
+def simhash_near_pairs(docs: DataFrame, bands: int = 4,
+                       max_distance: int = 3) -> DataFrame:
     """Near-duplicate pairs within ``max_distance`` hamming bits.
 
-    Banded-hamming bucketing: split the ``bits``-bit simhash into
-    ``bands`` disjoint bit-bands; by pigeonhole, two hashes differing in
-    at most ``max_distance`` < ``bands`` bits agree exactly on at least
-    one band.  Bucket-join on (band, band_bits) — the only shuffle, on a
-    uniform key — then exact ``bit_count(xor)`` rerank JVM-side.  Never
-    all-pairs: candidate count ~ corpus / bucket cardinality.
+    Banded-hamming bucketing: split the ``SIMHASH_BITS``-bit simhash
+    into ``bands`` disjoint bit-bands; by pigeonhole, two hashes
+    differing in at most ``max_distance`` < ``bands`` bits agree exactly
+    on at least one band.  Bucket-join on (band, band_bits) — the only
+    shuffle, on a uniform key — then exact ``bit_count(xor)`` rerank
+    JVM-side.  Never all-pairs: candidate count ~ corpus / bucket
+    cardinality.
     """
     if max_distance >= bands:
         raise ValueError(
             f"max_distance ({max_distance}) must be < bands ({bands}) "
             "for the pigeonhole guarantee to hold")
-    band_bits = bits // bands
+    band_bits = SIMHASH_BITS // bands
     mask = (1 << band_bits) - 1
-    sims = simhashes if simhashes is not None else simhash(docs, bits)
-    # band table feeds both self-join sides; checkpoint so the simhash
-    # aggregation runs once (alias plans defeat exchange reuse)
-    band_rows = sims.select(
+    band_rows = simhash(docs).select(
         "doc_id", "simhash",
         F.explode(F.array(*[
             F.struct(
@@ -258,14 +272,11 @@ def simhash_near_pairs(docs: DataFrame, bits: int = 32, bands: int = 4,
                 .bitwiseAND(F.lit(mask)).alias("val"))
             for b in range(bands)
         ])).alias("bb"),
-    ).select("doc_id", "simhash", "bb.band", "bb.val").localCheckpoint()
-    left = band_rows.alias("l")
-    right = band_rows.alias("r")
+    ).select("doc_id", "simhash", "bb.band", "bb.val")
     dist = F.bit_count(
         F.col("l.simhash").bitwiseXOR(F.col("r.simhash")))
     return (
-        left.join(right, on=["band", "val"])
-        .filter(F.col("l.doc_id") < F.col("r.doc_id"))
+        _bucket_pairs(band_rows, ["band", "val"], "doc_id")
         .filter(dist <= max_distance)
         .select(F.col("l.doc_id").alias("doc_a"),
                 F.col("r.doc_id").alias("doc_b"),
@@ -275,10 +286,10 @@ def simhash_near_pairs(docs: DataFrame, bits: int = 32, bands: int = 4,
     )
 
 
-def ngram_jaccard_pairs(docs: DataFrame, n: int = 3,
+def ngram_jaccard_pairs(docs: DataFrame,
                         threshold: float = 0.8) -> DataFrame:
     """Exact n-gram Jaccard over LSH-pruned candidates (verification tier)."""
-    sh = _with_shingles(docs, n).select(
+    sh = _with_shingles(docs).select(
         "doc_id", F.array_distinct("shingles").alias("sh"))
     cand = minhash_lsh_pairs(docs)
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
@@ -308,9 +319,11 @@ def embedding_near_duplicates(spark: SparkSession, sf_dir: str,
     pair instead of 3 — Spark HOFs are interpreted, not codegen'd).
     For corpora beyond ~10^4 vectors use
     :func:`embedding_near_duplicates_blocked` (numpy block matmul) or
-    the LSH bucketing in operators.similarity to bound candidates.
+    :func:`embedding_near_duplicates_lsh` to bound candidates.
     """
     from cbor_ld_spark.plans.partitioning import spread_input
+
+    from .similarity import _dot, _norm2
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     if max_vectors is not None:
@@ -320,65 +333,59 @@ def embedding_near_duplicates(spark: SparkSession, sf_dir: str,
     emb = spread_input(emb)
     v = F.transform("embedding", lambda x: x.cast("double"))
     emb = emb.select(
-        "vec_id", v.alias("v"),
-        F.sqrt(F.aggregate(F.transform(v, lambda x: x * x),
-                           F.lit(0.0), lambda acc, x: acc + x)).alias("nrm"),
+        "vec_id", v.alias("v"), _norm2(v).alias("nrm"),
     ).localCheckpoint()  # ContextCleaner-released, unlike a leaked persist
     a = emb.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"),
                    F.col("nrm").alias("na"))
     b = emb.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"),
                    F.col("nrm").alias("nb"))
-    dot = F.aggregate(F.zip_with("va", "vb", lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
     return (
         a.crossJoin(b)
         .filter(F.col("vec_a") < F.col("vec_b"))
         .select("vec_a", "vec_b",
-                F.round(dot / (F.col("na") * F.col("nb")), 6).alias("cosine"))
+                F.round(_dot("va", "vb") / (F.col("na") * F.col("nb")), 6)
+                .alias("cosine"))
         .filter(F.col("cosine") >= threshold)
         .orderBy("vec_a", "vec_b")
     )
 
 
 def embedding_near_duplicates_lsh(spark: SparkSession, sf_dir: str,
-                                  threshold: float = 0.4,
-                                  n_planes: int = 6,
-                                  n_tables: int = 8) -> DataFrame:
+                                  threshold: float = 0.4) -> DataFrame:
     """Cosine near-dup via hyperplane LSH — the 100 TB scale path.
 
     The exact tiers (:func:`embedding_near_duplicates` /
     ``_blocked``) are inherently O(n^2) compute; this tier bounds
     candidates first: one ``mapInArrow`` matmul assigns every vector a
-    sign-bucket per table (operators/similarity._with_lsh_buckets —
+    sign-bucket per table (operators/similarity._lsh_buckets —
     deterministic Lehmer planes, replayed by the DuckDB oracle; the
     matmul's summation order differs from the oracle's sequential fold,
     so sign decisions could in principle diverge for projections within
     float-ulp of zero — none observed at gate scale), candidates are
     pairs sharing a bucket in *any* table
-    (recall dial ~ n_tables x collision prob^n_planes), and only
-    candidates pay the exact rerank.  The only shuffle is the bucket
-    join on the uniform (tbl, bucket) key — never all-pairs.
+    (recall dial ~ EMB_LSH_TABLES x collision prob^EMB_LSH_PLANES), and
+    only candidates pay the exact rerank.  The only shuffle is the
+    bucket join on the uniform (tbl, bucket) key — never all-pairs.
     """
-    from .similarity import _with_lsh_buckets, embedding_dim, load_embeddings
+    import numpy as np
+    import pyarrow as pa
+
+    from .similarity import (
+        _arrow_vectors, _lsh_buckets, embedding_dim, load_embeddings,
+    )
 
     emb = load_embeddings(spark, sf_dir).select("vec_id", "v")
     dim = embedding_dim(sf_dir, fallback=emb)
-    tabled = (
-        _with_lsh_buckets(emb, dim, n_planes, n_tables)
-        .select("vec_id", "v", F.posexplode("buckets").alias("tbl", "bucket"))
-        .localCheckpoint()  # feeds both self-join sides exactly once
-    )
-    a, b = tabled.alias("a"), tabled.alias("b")
+    tabled = _lsh_buckets(emb, dim, EMB_LSH_PLANES, EMB_LSH_TABLES)
     # NO dedup here: deduping candidate pairs would shuffle the vector
     # payloads (~1 KB/pair); instead rerank every bucket collision (a
-    # pair repeats at most n_tables times, and the rerank is vectorized)
-    # and distinct() the tiny (vec_a, vec_b, cosine) rows afterwards
+    # pair repeats at most EMB_LSH_TABLES times, and the rerank is
+    # vectorized) and distinct() the tiny (vec_a, vec_b, cosine) rows
     cand = (
-        a.join(b, on=["tbl", "bucket"])
-        .filter(F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(F.col("a.vec_id").alias("vec_a"),
-                F.col("b.vec_id").alias("vec_b"),
-                F.col("a.v").alias("va"), F.col("b.v").alias("vb"))
+        _bucket_pairs(tabled, ["tbl", "bucket"], "vec_id")
+        .select(F.col("l.vec_id").alias("vec_a"),
+                F.col("r.vec_id").alias("vec_b"),
+                F.col("l.v").alias("va"), F.col("r.v").alias("vb"))
     )
 
     # vectorized rerank: per-Arrow-batch row dots (an interpreted HOF
@@ -386,21 +393,11 @@ def embedding_near_duplicates_lsh(spark: SparkSession, sf_dir: str,
     # precedent as the blocked tier: BLAS vs sequential-fold summation
     # agree after round(6) at this dimensionality (verified vs the
     # fold-based DuckDB oracle at the gate scale).
-    import numpy as np
-    import pyarrow as pa
-
     thr = float(threshold)
 
     @python_task
     def rerank(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            va = np.asarray(batch.column(2).flatten(),
-                            dtype=np.float64).reshape(n, -1)
-            vb = np.asarray(batch.column(3).flatten(),
-                            dtype=np.float64).reshape(n, -1)
+        for batch, va, vb in _arrow_vectors(batches, 2, 3):
             with np.errstate(divide="ignore", invalid="ignore"):
                 cos = np.round(
                     np.einsum("ij,ij->i", va, vb)
@@ -440,21 +437,21 @@ def embedding_near_duplicates_blocked(spark: SparkSession, sf_dir: str,
 
     Exact all-pairs is inherently O(n^2) compute: this tier is for
     corpora where that is affordable (~10^7 vectors).  Beyond that,
-    bound candidates first (operators.similarity LSH/IVF) and rerank
-    exactly — the replication factor here (each vector ships to B block
-    pairs) makes larger exact runs shuffle-bound by design, not OOM.
+    bound candidates first (:func:`embedding_near_duplicates_lsh`) and
+    rerank exactly — the replication factor here (each vector ships to
+    B block pairs) makes larger exact runs shuffle-bound by design, not
+    OOM.
     """
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet") \
-        .select("vec_id", "embedding")
+    from cbor_ld_spark.plans.partitioning import parquet_rows
+
+    path = f"{sf_dir}/embeddings.parquet"
+    emb = spark.read.parquet(path).select("vec_id", "embedding")
     # size the block grid from parquet footer metadata — no Spark scan;
     # the count only bounds per-task memory, so footer-exact is plenty.
     # pyarrow can't reach every Spark-readable filesystem (hdfs://,
     # dbfs:/): degrade to the column-pruned Spark count there.
-    try:
-        import pyarrow.dataset as ds
-
-        n = ds.dataset(f"{sf_dir}/embeddings.parquet").count_rows()
-    except Exception:
+    n = parquet_rows(path)
+    if n is None:
         n = emb.select("vec_id").count()
     n_blocks = max(1, -(-n // block_size))
     pairs = spark.createDataFrame(

@@ -609,19 +609,12 @@ def adjacency_lsh_candidates(edges: DataFrame, num_hashes: int = 24,
     """(symmetric adjacency frame, candidate pairs) for the LSH overlap
     tier — split out so the candidate volume is testable on its own
     (the mega-hub skew test asserts candidates << C(deg, 2))."""
-    from cbor_ld_spark.operators.dedup import banded_signature_pairs
+    from cbor_ld_spark.operators.dedup import banded_signature_pairs, minhash
 
     sym = _symmetric(edges)
-    # k seeded min-hashes over the adjacency set: sym is already one
-    # row per (node, neighbor), so the signature is a single hash
-    # aggregation — no explode, no higher-order folds
-    aggs = [F.min(F.xxhash64("v", F.lit(i))).alias(f"mh_{i}")
-            for i in range(num_hashes)]
-    sigs = (sym.groupBy(F.col("u").alias("node")).agg(*aggs)
-            .select("node",
-                    F.array(*[F.col(f"mh_{i}")
-                              for i in range(num_hashes)])
-                    .alias("signature")))
+    # sym is already one row per (node, neighbor): the MinHash over each
+    # adjacency set needs no explode
+    sigs = minhash(sym, F.col("u").alias("node"), "v", num_hashes)
     pairs = banded_signature_pairs(sigs, num_hashes, bands,
                                    id_col="node",
                                    out_a="node_a", out_b="node_b")

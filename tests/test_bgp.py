@@ -497,6 +497,29 @@ def test_bgp_union(spark):
         match_union(t, [])
 
 
+def test_path_entries_told_apart_by_shape(spark):
+    """A pattern whose subject is the literal ``__path__`` is a pattern,
+    not a path entry: a path entry's steps are a list.  Checked in a
+    UNION branch and in an OPTIONAL member."""
+    from cbor_ld_spark.operators.bgp import match_bgp, match_union
+    from cbor_ld_spark.operators.sparql import parse_sparql
+
+    t = _triples(spark, [("__path__", "p", "o1"), ("o1", "q", "x1"),
+                         ("s1", "r", "o1")])
+    spec = parse_sparql(
+        "SELECT * WHERE { { __path__ <p> ?o } UNION { ?o <q> ?x } }")
+    out = match_union(t, spec["union"])
+    assert out.columns == ["o", "x"]
+    assert {tuple(r) for r in out.collect()} == {("o1", None),
+                                                 ("o1", "x1")}
+
+    spec = parse_sparql(
+        "SELECT * WHERE { ?s <r> ?o . OPTIONAL { __path__ <p> ?o } }")
+    assert spec["optional"] == [("__path__", "p", "?o")]
+    out = match_bgp(t, spec["patterns"], optional=spec["optional"])
+    assert {tuple(r) for r in out.collect()} == {("s1", "o1")}
+
+
 def test_path_oracle_negated_property_set(monkeypatch):
     """The pure-python oracle replay implements '!' steps with the
     same semantics as match_path (r6 ADVICE: previously a '!' atom

@@ -101,3 +101,63 @@ def test_pq_topk_plan_hygiene(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "SortMergeJoin" not in plan, plan
     assert plan.count("BroadcastHashJoin") >= 2, plan
+
+
+
+@pytest.mark.parametrize("tier, kwargs", [
+    ("lsh_topk", {"n_queries": 5, "k": 5}),
+    ("ivf_topk", {"n_queries": 5, "k": 5}),
+    ("pq_topk", {}),
+], ids=["lsh", "ivf", "pq"])
+def test_approximate_tiers_rerank_exactly(spark, tier, kwargs):
+    """Every approximate tier returns the exact cosine of each pair it
+    keeps, ranks 1..n per query, and rows sorted by query then by
+    (cosine desc, vec_id): the candidates differ, the ranking does not."""
+    from cbor_ld_spark.operators import similarity
+
+    every = {(r["query_id"], r["vec_id"]): r["cosine"] for r in
+             similarity.cosine_topk(spark, SF, n_queries=5,
+                                    k=10 ** 6).collect()}
+    rows = getattr(similarity, tier)(spark, SF, **kwargs).collect()
+    assert rows
+    for r in rows:
+        assert r["cosine"] == every[(r["query_id"], r["vec_id"])]
+    keys = [(r["query_id"], -r["cosine"], r["vec_id"]) for r in rows]
+    assert keys == sorted(keys)
+    ranks = {}
+    for r in rows:
+        ranks.setdefault(r["query_id"], []).append(r["rank"])
+    assert all(v == list(range(1, len(v) + 1)) for v in ranks.values())
+
+
+_TOPK = ["query_id", "rank", "vec_id", "cosine"]
+_PAIRS = ["vec_a", "vec_b", "cosine"]
+
+
+@pytest.mark.parametrize("module, name, columns", [
+    pytest.param(module, name, columns, id=name)
+    for module, name, columns in [
+        ("similarity", "cosine_topk", _TOPK),
+        ("similarity", "lsh_topk", _TOPK),
+        ("similarity", "ivf_topk", _TOPK),
+        ("similarity", "pq_topk", _TOPK),
+        ("dedup", "embedding_near_duplicates", _PAIRS),
+        ("dedup", "embedding_near_duplicates_blocked", _PAIRS),
+        ("dedup", "embedding_near_duplicates_lsh", _PAIRS),
+    ]])
+def test_empty_embeddings_give_empty_frames(spark, tmp_path_factory,
+                                            module, name, columns):
+    """An empty embeddings table is a corpus with no neighbours: every
+    vector operator returns no rows under its usual columns."""
+    import importlib
+
+    op = getattr(importlib.import_module(
+        f"cbor_ld_spark.operators.{module}"), name)
+    sf = tmp_path_factory.getbasetemp() / "empty_embeddings"
+    if not sf.exists():
+        spark.createDataFrame(
+            [], "vec_id long, embedding array<float>, label int"
+        ).write.parquet(str(sf / "embeddings.parquet"))
+    out = op(spark, str(sf))
+    assert out.columns == columns
+    assert out.collect() == []
