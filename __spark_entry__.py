@@ -2389,8 +2389,14 @@ def _ivf_topk_oracle(n_queries: int = 5, k: int = 5, n_cells: int = 16,
     distributed parts (cell argmax assignment, probe join, exact cosine
     rerank, ranking) in SQL.  The driver's gate runs at sf0.01, so the
     training sample is read from the same parquet the Spark side reads.
+    Centroid and query norms are the operator's ``l2_norm``, whose
+    summation order is fixed, so the literals come out the same on
+    every CPU: no BLAS reduction (whose order follows the kernel
+    OpenBLAS picks) feeds them.
     """
     import numpy as np
+
+    from cbor_ld_spark.operators.similarity import l2_norm
 
     sf_dir = sf_dir or _oracle_sf_dir()
     rows = _duck_rows(
@@ -2409,14 +2415,14 @@ def _ivf_topk_oracle(n_queries: int = 5, k: int = 5, n_cells: int = 16,
             members = normed[assign == c]
             if len(members):
                 m = members.mean(axis=0)
-                centroids[c] = m / np.linalg.norm(m)
+                centroids[c] = m / l2_norm(m)
 
     # probes: each query's n_probe nearest cells (same numpy ops as
     # operators/similarity.py ivf_topk, so tie-breaks are identical)
     probe_rows = []
     for qid, v in rows[:n_queries]:
         qv = np.array(v, dtype=np.float64)
-        qn = np.linalg.norm(qv)
+        qn = l2_norm(qv)
         qv = qv / (qn if qn else 1.0)
         for c in np.argsort(-(centroids @ qv))[:n_probe]:
             probe_rows.append((int(qid), int(c)))

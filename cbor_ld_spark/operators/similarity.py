@@ -127,13 +127,36 @@ def _top_k(scored: DataFrame, k: int) -> DataFrame:
             .orderBy("query_id", "rank"))
 
 
+def l2_norm(v) -> float:
+    """One vector's L2 norm, summed in a fixed order so that the result
+    is the same on every CPU: element ``i``'s square goes into lane
+    ``i mod 8``, the lanes combine as ``((r0+r2)+(r4+r6)) +
+    ((r1+r3)+(r5+r7))``, then the tail past the last multiple of 8 adds
+    in sequence.  ``np.linalg.norm`` of one vector is a BLAS dot whose
+    summation order follows the kernel OpenBLAS picks for the CPU, and
+    the IVF oracle writes centroids normalised by this norm into its
+    SQL text.  The order is the SSE2 dot's for 64-dim vectors, the
+    arithmetic the pinned oracle texts were made with."""
+    v = np.asarray(v, dtype=np.float64)
+    n8 = len(v) - len(v) % 8
+    r = np.zeros(8)
+    for block in v[:n8].reshape(-1, 8):
+        r += block * block
+    total = ((r[0] + r[2]) + (r[4] + r[6])) + ((r[1] + r[3]) + (r[5] + r[7]))
+    for x in v[n8:]:
+        total += x * x
+    return float(np.sqrt(total))
+
+
 def _unit(m):
     """``m`` scaled to unit L2 norm along its last axis; a zero vector
-    stays zero instead of NaN.  One vector's norm is numpy's dot, a
-    matrix's a row-wise sum; the two can differ in the last bit, and the
-    IVF oracle replays each where the operator uses it."""
-    norms = np.linalg.norm(m, axis=-1 if m.ndim > 1 else None,
-                           keepdims=True)
+    stays zero instead of NaN.  One vector's norm is ``l2_norm`` (lanes
+    ``i mod 8``, the same on every CPU), a matrix's numpy's row-wise
+    sum; the two can differ in the last bit, and the IVF oracle replays
+    each where the operator uses it."""
+    if m.ndim == 1:
+        return m / (l2_norm(m) or 1.0)
+    norms = np.linalg.norm(m, axis=-1, keepdims=True)
     norms[norms == 0] = 1.0
     return m / norms
 
@@ -245,7 +268,9 @@ def ivf_topk(spark: SparkSession, sf_dir: str, n_queries: int = 5,
 
     Train: deterministic k-means on the driver-side training sample
     (centroid seeds = the first ``n_cells`` vectors, Lloyd iterations in
-    numpy).  Index: assign every vector to its nearest centroid (one
+    numpy, each centroid the mean of its members over its ``l2_norm``,
+    so the centroids the oracle writes as literals are the same on
+    every CPU).  Index: assign every vector to its nearest centroid (one
     numpy matmul + argmax per Arrow batch against the closure-captured
     centroid matrix).  Search: each query probes its ``n_probe``
     nearest cells; the candidate scan is ~``n_probe/n_cells`` of the
@@ -265,7 +290,7 @@ def ivf_topk(spark: SparkSession, sf_dir: str, n_queries: int = 5,
             members = sample[assign == c]
             if len(members):
                 m = members.mean(axis=0)
-                centroids[c] = m / np.linalg.norm(m)
+                centroids[c] = m / l2_norm(m)
 
     # first-max tie-break, same as the oracle's ORDER BY dot DESC, cell
     # LIMIT 1; n_cells interpreted HOF dots per row were the slow path

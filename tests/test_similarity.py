@@ -1,5 +1,7 @@
 """ANN operators: brute-force baseline vs LSH and IVF approximations."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -86,6 +88,82 @@ def test_pq_train_deterministic():
     assert [list(c) for c in s1] == [list(c) for c in s2]
     # subspaces partition the dims
     assert sorted(int(x) for c in s1 for x in c) == list(range(16))
+
+
+def _lane_norm(v):
+    """``l2_norm``'s documented order in plain Python floats."""
+    import math
+
+    n8 = len(v) - len(v) % 8
+    r = [0.0] * 8
+    for i in range(n8):
+        r[i % 8] += v[i] * v[i]
+    total = ((r[0] + r[2]) + (r[4] + r[6])) + ((r[1] + r[3]) + (r[5] + r[7]))
+    for x in v[n8:]:
+        total += x * x
+    return math.sqrt(total)
+
+
+@pytest.mark.parametrize("dim", [1, 3, 8, 13, 64, 100, 777])
+def test_l2_norm_sums_in_documented_order(dim):
+    """``l2_norm`` is bit-equal to its documented lane order; a BLAS dot
+    (``np.linalg.norm``) or numpy's pairwise ``np.sum`` rounds some of
+    these vectors differently."""
+    import numpy as np
+
+    from cbor_ld_spark.operators.similarity import l2_norm
+
+    rng = np.random.default_rng(dim)
+    for v in rng.standard_normal((200, dim)) * rng.uniform(0.01, 100, dim):
+        assert l2_norm(v) == _lane_norm([float(x) for x in v]), v
+
+
+def _openblas_dynamic_x86():
+    """True for an x86-64 numpy on an OpenBLAS built with DYNAMIC_ARCH=1,
+    the only build whose dot kernel ``OPENBLAS_CORETYPE`` selects."""
+    import platform
+
+    import numpy as np
+
+    if platform.machine().lower() not in ("x86_64", "amd64"):
+        return False
+    try:
+        blas = np.show_config(mode="dicts")["Build Dependencies"]["blas"]
+    except (TypeError, KeyError):  # numpy < 1.26: no "dicts" mode
+        return False
+    return ("openblas" in str(blas.get("name", "")).lower()
+            and "DYNAMIC_ARCH=1" in str(blas.get("openblas configuration")))
+
+
+@pytest.mark.skipif(not os.path.isdir("/root/testdata/sf0.01"),
+                    reason="sf0.01 absent")
+@pytest.mark.skipif(not _openblas_dynamic_x86(),
+                    reason="numpy's BLAS is not OpenBLAS DYNAMIC_ARCH=1 "
+                           "on x86-64: its kernel cannot be chosen")
+def test_ivf_oracle_text_same_across_blas_kernels():
+    """The IVF oracle's centroid literals do not depend on the dot kernel
+    OpenBLAS picks for the CPU: the SSE2 kernel and this host's default
+    give the same text."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = ("import hashlib, __spark_entry__ as E; print(hashlib.sha256("
+            "E._ivf_topk_oracle(sf_dir='/root/testdata/sf0.01')"
+            ".encode()).hexdigest())")
+    digests = []
+    for coretype in ("Prescott", None):
+        env = {k: v for k, v in os.environ.items()
+               if k != "OPENBLAS_CORETYPE"}
+        env["PYTHONPATH"] = os.pathsep.join(
+            p for p in (root, env.get("PYTHONPATH")) if p)
+        if coretype:
+            env["OPENBLAS_CORETYPE"] = coretype
+        out = subprocess.run([sys.executable, "-c", code], cwd=root, env=env,
+                             capture_output=True, text=True, timeout=600)
+        assert out.returncode == 0, out.stderr
+        digests.append(out.stdout.split()[-1])
+    assert digests[0] == digests[1], digests
 
 
 def test_pq_topk_plan_hygiene(spark):
