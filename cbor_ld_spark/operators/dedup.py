@@ -440,9 +440,13 @@ def embedding_near_duplicates_blocked(spark: SparkSession, sf_dir: str,
     bound candidates first (:func:`embedding_near_duplicates_lsh`) and
     rerank exactly — the replication factor here (each vector ships to
     B block pairs) makes larger exact runs shuffle-bound by design, not
-    OOM.
+    OOM.  Each block decodes through ``similarity._arrow_vectors`` and
+    normalises with ``_unit``, so a zero vector scores 0 against every
+    other instead of NaN.
     """
     from cbor_ld_spark.plans.partitioning import parquet_rows
+
+    from .similarity import _arrow_vectors, _unit
 
     path = f"{sf_dir}/embeddings.parquet"
     emb = spark.read.parquet(path).select("vec_id", "embedding")
@@ -469,16 +473,15 @@ def embedding_near_duplicates_blocked(spark: SparkSession, sf_dir: str,
 
     @python_task
     def fn(table):
-        import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
 
         def block(side):
-            part = table.filter(pc.equal(table["side"], side))
-            m = np.array(part["embedding"].to_pylist(), dtype=np.float64)
-            if len(m):
-                m /= np.linalg.norm(m, axis=1, keepdims=True)
-            return part["vec_id"].to_numpy(), m
+            part = table.filter(pc.equal(table["side"], side)) \
+                .combine_chunks()
+            for _, m in _arrow_vectors(part.to_batches(), "embedding"):
+                return part["vec_id"].to_numpy(), _unit(m)
+            return part["vec_id"].to_numpy(), None
 
         # same-block must come from the GROUP KEY, not side counts: a
         # cross pair (i, j) whose block j is empty would otherwise be

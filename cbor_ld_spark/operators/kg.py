@@ -14,10 +14,12 @@ Scale notes (the part the 100 TB design hangs on):
 * The sniff filter and column projection sit *before* mapInArrow, so
   Catalyst prunes the scan to (repo, path, commit, lang, content) and
   drops non-candidates inside the scan stage.
-* ``process_corpus`` keeps partitioning intact — no shuffle at all in
-  stages 0-3; the kernel is map-only.  Skewed repos don't matter here
-  because nothing is keyed yet; skew handling lives in the downstream
-  groupBy/join stages, which salt explicitly (see operators.linking).
+* ``process_corpus`` plans one exchange: a hash repartition on
+  ``content_sha`` with an explicit count, which carries each row's
+  provenance (repo, path, commit) to its content's partition.  The
+  dedup aggregate reuses that partitioning, the provenance rides
+  through the kernel as one list per distinct content, and it explodes
+  back JVM-side: one scan, one ``sha2``, no join-back.
 * Triples explode JVM-side from the nested column; a 1-doc -> N-triples
   fan-out never materializes Python objects row-at-a-time.
 """
@@ -49,18 +51,28 @@ def process_corpus(repos: DataFrame, registry_id: int = 1,
     """repos(repo,path,commit,lang,content) -> per-document KG results.
 
     ``dedup_content=True`` (default) runs the Python kernel once per
-    *distinct* content hash and joins provenance back — the Spark-first
-    answer to duplicate files (vendored deps, forks) dominating a source
-    corpus: work scales with unique documents, not rows.  The dedup is
-    a partial-aggregated shuffle on the uniform hash key: a ``distinct``
-    over ``(content_sha, content)``, which keeps the same rows as a
-    dedup on ``content_sha`` alone (``content`` is a function of its
-    hash) but plans as a hash aggregate with no sort.  The join-back
-    re-attaches (repo, path, commit) JVM-side, so results are
-    row-for-row identical to the per-row path (doc_sha, bnode labels and
-    triples are pure functions of content).  ``canonical=True`` adds
-    each document's blank-node label map (``t_bnode``/``t_canon``), which
-    ``canonical_triples`` applies.
+    *distinct* content hash -- the Spark-first answer to duplicate files
+    (vendored deps, forks) dominating a source corpus: work scales with
+    unique documents, not rows.  It is one pipeline over one scan and one
+    ``sha2``: ``spread_input`` hash-partitions the candidates on
+    ``content_sha`` (the only exchange, carrying the provenance), a
+    group on ``(content_sha, content)`` collects each content's
+    ``(repo, path, commit)`` structs into ``_prov`` (``content`` is a
+    function of its hash, so the key adds no groups), the kernel passes
+    ``_prov`` through untouched, and ``explode`` gives every input row
+    its result back.  The rows equal the per-row path's (doc_sha, bnode
+    labels and triples are pure functions of content).
+
+    ``collect_list`` plans ``ObjectHashAggregate``; at run time it falls
+    back to sort-based aggregation past 128 keys per task
+    (``spark.sql.objectHashAggregate.sortBased.fallbackThreshold``, left
+    at Spark's default: the package sets no session conf).  One distinct
+    content's provenance is one Arrow list value, and Arrow batches use
+    32-bit offsets, so the provenance strings of one kernel batch must
+    stay under 2 GiB -- about 20M duplicate rows at ~100 B each.
+
+    ``canonical=True`` adds each document's blank-node label map
+    (``t_bnode``/``t_canon``), which ``canonical_triples`` applies.
     """
     candidates = (
         repos
@@ -72,18 +84,19 @@ def process_corpus(repos: DataFrame, registry_id: int = 1,
     if dedup_content:
         from cbor_ld_spark.plans.partitioning import spread_input
 
-        # hash-repartition on the dedup key with an EXPLICIT count, then
-        # distinct: one exchange total (the aggregation reuses the
-        # partitioning), and AQE's byte-based coalescer cannot fold the
-        # kernel stage back to one partition — a 1 MB batch of distinct
-        # documents is minutes of Python work, which the coalescer's
-        # sizing cannot see (guide §2.2/§4)
-        distinct = (spread_input(candidates.select("content_sha", "content"),
-                                 by="content_sha")
-                    .distinct())
-        results = distinct.mapInArrow(fn, _kernel_schema(distinct))
-        return candidates.drop("content").join(results, "content_sha") \
-            .select(*_OUT_COLUMNS)
+        # hash-repartition on the dedup key with an EXPLICIT count: one
+        # exchange total (the aggregation reuses the partitioning), and
+        # AQE's byte-based coalescer cannot fold the kernel stage back
+        # to one partition -- a 1 MB batch of distinct documents is
+        # minutes of Python work, which the coalescer's sizing cannot
+        # see (guide §2.2/§4)
+        grouped = (spread_input(candidates, by="content_sha")
+                   .groupBy("content_sha", "content")
+                   .agg(F.collect_list(F.struct("repo", "path", "commit"))
+                        .alias("_prov")))
+        results = grouped.mapInArrow(fn, _kernel_schema(grouped))
+        return (results.withColumn("_prov", F.explode("_prov"))
+                .select("_prov.*", "*").select(*_OUT_COLUMNS))
     return candidates.mapInArrow(fn, _kernel_schema(candidates)) \
         .select(*_OUT_COLUMNS)
 
@@ -127,15 +140,13 @@ def canonical_triples(triples: DataFrame, docs: DataFrame) -> DataFrame:
     ``docs`` is a ``process_corpus(..., canonical=True)`` frame: each
     document's (bnode, canon) map comes out of the kernel, so relabeling
     is JVM-side -- one map column per ``doc_sha`` (the map depends on
-    the document only, so one row per ``doc_sha`` is exact), a left
-    equi-join on ``doc_sha`` and three codegen ``element_at`` lookups.
+    the document only, so one row per ``doc_sha`` is exact; see
+    ``_label_maps``), a left equi-join on ``doc_sha`` and three codegen
+    ``element_at`` lookups.
     A node without an entry (an IRI, or a document beyond
     ``MAX_DOC_TRIPLES``) keeps its label.
     """
-    bm = (docs.filter(F.size("t_bnode") > 0)
-          .select("doc_sha", F.map_from_arrays("t_bnode", "t_canon")
-                  .alias("_m"))
-          .dropDuplicates(["doc_sha"]))
+    bm = _label_maps(docs)
     return (
         triples
         .join(bm, "doc_sha", "left")
@@ -153,6 +164,23 @@ def canonical_triples(triples: DataFrame, docs: DataFrame) -> DataFrame:
             "repo", "path", "commit", "doc_sha",
         )
     )
+
+
+def _label_maps(docs: DataFrame) -> DataFrame:
+    """(doc_sha, _m): one blank-node -> canonical label map per document
+    of a canonical ``process_corpus`` frame that has blank nodes.
+
+    Copies of one document (the same ``doc_sha`` under another key order
+    or whitespace, so another ``content_sha``) carry the same two arrays
+    in the same order: ``_canonicalize_doc`` orders the blank nodes by
+    (colour, label) of the document's distinct triples.  So the dedup
+    groups on the arrays themselves -- a hash aggregate, since arrays
+    can be grouping keys and a map cannot -- and builds each map once.
+    """
+    return (docs.filter(F.size("t_bnode") > 0)
+            .select("doc_sha", "t_bnode", "t_canon").distinct()
+            .select("doc_sha", F.map_from_arrays("t_bnode", "t_canon")
+                    .alias("_m")))
 
 
 def corpus_metrics(processed: DataFrame) -> DataFrame:

@@ -54,11 +54,13 @@ def main(argv=None):
         .getOrCreate()
     )
     # Size shuffles to the actual core count instead of the 200 default:
-    # the dedup-first dropDuplicates/join-back runs at this width and the
-    # Python kernel stage inherits it — measured 3-4x on the kernel+write
-    # stage at local[32] (200 undersized tasks thrash the Arrow workers
-    # and write 200-way small files).  Runtime-settable, so a cluster
-    # deployment can still override via --conf.
+    # the graph stages' shuffles and the bucketed writes run at this
+    # width — measured 3-4x on the kernel+write stage at local[32] (200
+    # undersized tasks thrash the Arrow workers and write 200-way small
+    # files).  The kernel stage's one exchange (content_sha, carrying
+    # the provenance through the kernel) takes defaultParallelism from
+    # spread_input.  Runtime-settable, so a cluster deployment can
+    # still override via --conf.
     if not spark.sparkContext._conf.contains("spark.sql.shuffle.partitions"):
         spark.conf.set("spark.sql.shuffle.partitions",
                        str(spark.sparkContext.defaultParallelism))

@@ -165,6 +165,30 @@ def test_blocked_sparse_ids_no_duplicate_pairs(spark, tmp_path):
     assert len(pairs) > 0
 
 
+def test_blocked_zero_vector_scores_zero(spark, tmp_path):
+    """A zero vector normalises to zero, not NaN: at a threshold below 0
+    it pairs with every other vector at cosine 0.0.  Blocks of 2 put the
+    vectors in several block pairs."""
+    from cbor_ld_spark.operators.dedup import (
+        embedding_near_duplicates_blocked,
+    )
+
+    rows = [(0, [0.0, 0.0, 0.0]), (1, [1.0, 0.0, 0.0]),
+            (2, [2.0, 0.0, 0.0]), (3, [0.0, 3.0, 0.0])]
+    spark.createDataFrame(rows, "vec_id long, embedding array<double>") \
+        .write.parquet(f"{tmp_path}/embeddings.parquet")
+    got = {(r["vec_a"], r["vec_b"]): r["cosine"]
+           for r in embedding_near_duplicates_blocked(
+               spark, str(tmp_path), threshold=-1.0, block_size=2)
+           .collect()}
+    assert got == {(0, 1): 0.0, (0, 2): 0.0, (0, 3): 0.0,
+                   (1, 2): 1.0, (1, 3): 0.0, (2, 3): 0.0}
+    near = embedding_near_duplicates_blocked(
+        spark, str(tmp_path), threshold=0.9, block_size=2).collect()
+    assert [(r["vec_a"], r["vec_b"], r["cosine"]) for r in near] == [
+        (1, 2, 1.0)]
+
+
 def test_lang_id_multi_predictions(spark):
     from cbor_ld_spark.operators.text import lang_id_multi
 

@@ -446,13 +446,30 @@ def test_build_kg_analytics_reuse_crash_safe(spark):
         shutil.rmtree(out, ignore_errors=True)
 
 
+def _final_plan(df):
+    """The tree string of ``df``'s final physical plan: ``collect`` runs
+    the frame's own query, so adaptive execution settles its plan."""
+    assert df.collect()
+    return df._jdf.queryExecution().executedPlan().executedPlan().toString()
+
+
+def _node_names(lines):
+    """The physical node name of each line of a plan's tree string."""
+    import re
+
+    return [re.match(r"(?:\*\(\d+\) )?(\w+)", ln.lstrip(" :+-")).group(1)
+            for ln in lines]
+
+
 def test_dedup_first_pipeline_plan_hygiene(spark, tmp_path):
-    """The dedup-first kernel dataflow plans exactly one shuffle (the
-    content_sha exchange), exactly one Python stage (the kernel
-    mapInArrow over *distinct* contents, below the join-back), and no
-    row-at-a-time Python anywhere.  Below the kernel the dedup is a hash
-    aggregate: no SortAggregate and no Sort, which a ``first(content)``
-    aggregate would plan."""
+    """The dedup-first kernel dataflow reads its input once and plans
+    exactly one shuffle (the content_sha exchange, which carries the
+    provenance), exactly one Python stage (the kernel mapInArrow over
+    *distinct* contents) and no row-at-a-time Python anywhere.  There is
+    no join: one scan and one ``sha2`` feed a hash aggregate that
+    collects each content's provenance, and a JVM-side ``explode`` above
+    the kernel hands it back.  Below the kernel there is no
+    SortAggregate and no Sort."""
     import re
 
     from cbor_ld_spark.operators import process_corpus
@@ -462,34 +479,61 @@ def test_dedup_first_pipeline_plan_hygiene(spark, tmp_path):
     corpus_from_documents(spark, "/root/testdata/sf0.001") \
         .write.parquet(src)
     repos = spark.read.parquet(src)
-    out = process_corpus(repos)
-    out.count()  # resolve AQE to the final plan
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = _final_plan(process_corpus(repos))
+    lines = plan.splitlines()
+    names = _node_names(lines)
 
     assert plan.count("MapInArrow") == 1, plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert plan.count("Exchange hashpartitioning") == 1, plan
-    # the single Python stage sits BELOW the join-back (parents print
-    # first): everything after the provenance join is JVM-side
-    join_pos = max(plan.find("BroadcastHashJoin"), plan.find("SortMergeJoin"))
-    assert join_pos >= 0, plan
-    assert plan.find("MapInArrow") > join_pos, plan
+    assert plan.count("FileScan") == 1, plan
+    assert plan.count("sha2(") == 1, plan
+    assert not any("Join" in n for n in names), plan
+    # the provenance comes back above the kernel (parents print first)
+    gen = next(i for i, ln in enumerate(lines) if "Generate explode" in ln)
+    top = names.index("MapInArrow")
+    assert gen < top and "_prov" in lines[gen], plan
 
     # the kernel's subtree: the lines indented deeper than its node
-    lines = plan.splitlines()
-    top = next(i for i, ln in enumerate(lines) if "MapInArrow" in ln)
     col = lines[top].index("MapInArrow")
-    names = []
+    below = []
     for ln in lines[top + 1:]:
-        body = ln.lstrip(" :+-")
-        if len(ln) - len(body) <= col:
+        if len(ln) - len(ln.lstrip(" :+-")) <= col:
             break
-        names.append(re.match(r"(?:\*\(\d+\) )?(\w+)", body).group(1))
-    subtree = "\n".join(lines[top:top + 1 + len(names)])
-    assert "SortAggregate" not in names and "Sort" not in names, subtree
-    assert "HashAggregate" in names, subtree
+        below.append(ln)
+    sub_names = _node_names(below)
+    subtree = "\n".join(lines[top:top + 1 + len(below)])
+    assert "SortAggregate" not in sub_names and "Sort" not in sub_names, \
+        subtree
+    assert {"HashAggregate", "ObjectHashAggregate"} & set(sub_names), subtree
     assert len(re.findall(r"Exchange hashpartitioning\(content_sha#\d+, ",
                           subtree)) == 1, subtree
+
+
+def _sample(name):
+    with open(os.path.join(FIXTURES, "samples", name)) as f:
+        return f.read()
+
+
+def _null_provenance_rows():
+    """Null repo/path/commit, null content, duplicated content and three
+    hostile documents: (repo, path, commit, lang, content) tuples."""
+    note = _sample("note.jsonld")
+    # a lone surrogate escape parses, then fails to encode as UTF-8
+    surrogate = '{"@context": 5, "x": "\\ud800"}'
+    return [(None, "a.json", "c1", "json", note),
+            ("r", None, "c2", "json", note),
+            ("r2", "b.json", None, "json", note),
+            ("r3", "n.json", "c3", "json", None),
+            ("r4", "t.json", "c4", "json", note[:len(note) // 2]),
+            ("r5", "u.json", "c5", "json", _sample("uncompressible.jsonld")),
+            ("r6", "d.json", "c6", "json", surrogate)]
+
+
+def _null_provenance_counts():
+    """(condition, rows) that hold over ``_null_provenance_rows``."""
+    return ((F.col("repo").isNull(), 1), (F.col("path").isNull(), 1),
+            (F.col("commit").isNull(), 1), (~F.col("ok"), 3))
 
 
 def test_process_corpus_paths_agree_on_null_provenance(spark):
@@ -503,20 +547,7 @@ def test_process_corpus_paths_agree_on_null_provenance(spark):
     from cbor_ld_spark.operators import process_corpus
     from cbor_ld_spark.sources.corpus import REPOS_SCHEMA
 
-    def sample(name):
-        with open(os.path.join(FIXTURES, "samples", name)) as f:
-            return f.read()
-
-    note = sample("note.jsonld")
-    # a lone surrogate escape parses, then fails to encode as UTF-8
-    surrogate = '{"@context": 5, "x": "\\ud800"}'
-    rows = [(None, "a.json", "c1", "json", note),
-            ("r", None, "c2", "json", note),
-            ("r2", "b.json", None, "json", note),
-            ("r3", "n.json", "c3", "json", None),
-            ("r4", "t.json", "c4", "json", note[:len(note) // 2]),
-            ("r5", "u.json", "c5", "json", sample("uncompressible.jsonld")),
-            ("r6", "d.json", "c6", "json", surrogate)]
+    rows = _null_provenance_rows()
     corpus = spark.createDataFrame(rows, REPOS_SCHEMA)
     dedup, per_row = (process_corpus(corpus, canonical=True,
                                       dedup_content=d) for d in (True, False))
@@ -524,11 +555,114 @@ def test_process_corpus_paths_agree_on_null_provenance(spark):
     got = [sorted(map(repr, df.collect())) for df in (dedup, per_row)]
     assert got[0] == got[1]
     assert len(got[0]) == 6  # the sniff drops the null content
-    for cond, n in ((F.col("repo").isNull(), 1), (F.col("path").isNull(), 1),
-                    (F.col("commit").isNull(), 1), (~F.col("ok"), 3)):
+    for cond, n in _null_provenance_counts():
         assert dedup.filter(cond).count() == per_row.filter(cond).count() \
             == n, cond
     assert {r["path"]: r["error_kind"]
             for r in per_row.filter(~F.col("ok")).collect()} == {
         "t.json": "JSONDecodeError", "u.json": "InvalidContextEntry",
         "d.json": "UnicodeEncodeError"}
+
+
+def _kernel_input_rows(df):
+    """Rows that went through the kernel's ``MapInArrow`` in ``df``'s
+    last run, from the node's output-row metric in the final plan (the
+    kernel returns one row per input row)."""
+    stack, found = [df._jdf.queryExecution().executedPlan()], []
+    while stack:
+        node = stack.pop()
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        elif kind.endswith("QueryStageExec"):
+            stack.append(node.plan())
+        else:
+            stack.extend(node.children().apply(i)
+                         for i in range(node.children().size()))
+        if node.nodeName() == "MapInArrow":
+            found.append(node.metrics().apply("pythonNumRowsReceived")
+                         .value())
+    assert len(found) == 1, found
+    return found[0]
+
+
+def test_process_corpus_heavy_duplicates(spark):
+    """One content in 20,000 rows, next to the null-provenance rows and
+    hostile documents: the dedup path gives the per-row path's rows, its
+    kernel sees each distinct content once, and the null-provenance
+    counts hold."""
+    from cbor_ld_spark.functions.udfs import jsonld_sniff
+    from cbor_ld_spark.operators import process_corpus
+    from cbor_ld_spark.sources.corpus import REPOS_SCHEMA
+
+    copies = spark.range(20_000).select(
+        F.concat(F.lit("v"), (F.col("id") % 7).cast("string")).alias("repo"),
+        F.concat(F.lit("vendor/"), F.col("id").cast("string"),
+                 F.lit(".json")).alias("path"),
+        F.concat(F.lit("c"), (F.col("id") % 13).cast("string"))
+        .alias("commit"),
+        F.lit("json").alias("lang"),
+        F.lit(_sample("vcb.jsonld")).alias("content"))
+    corpus = spark.createDataFrame(_null_provenance_rows(), REPOS_SCHEMA) \
+        .unionByName(copies).localCheckpoint()
+    dedup = process_corpus(corpus)
+    per_row = process_corpus(corpus, dedup_content=False).cache()
+    assert dedup.columns == per_row.columns
+
+    def fingerprint(df):
+        return tuple(df.agg(F.count(F.lit(1)),
+                            F.bit_xor(F.xxhash64(*df.columns))).first())
+
+    assert fingerprint(dedup) == fingerprint(per_row)
+    assert fingerprint(dedup)[0] == 20_006  # the sniff drops null content
+    distinct = (corpus.filter(jsonld_sniff(F.col("lang")))
+                .select("content").distinct().count())
+    dedup.collect()
+    assert _kernel_input_rows(dedup) == distinct == 5
+    for cond, n in _null_provenance_counts():
+        assert dedup.filter(cond).count() == per_row.filter(cond).count() \
+            == n, cond
+    assert dedup.filter(F.col("path").startswith("vendor/")
+                        & F.col("ok")).count() == 20_000
+
+
+def test_label_maps_plan_is_a_hash_dedup(spark):
+    """``canonical_triples``' map branch dedups the (doc_sha, t_bnode,
+    t_canon) arrays as hash-aggregate keys before building the map: no
+    SortAggregate and no Sort."""
+    from cbor_ld_spark.operators import process_corpus
+    from cbor_ld_spark.operators.kg import _label_maps
+    from cbor_ld_spark.sources import corpus_from_documents
+
+    docs = process_corpus(corpus_from_documents(spark, "/root/testdata/sf0.001"),
+                          canonical=True).localCheckpoint()
+    names = _node_names(_final_plan(_label_maps(docs)).splitlines())
+    assert "SortAggregate" not in names and "Sort" not in names, names
+    assert "HashAggregate" in names, names
+
+
+def test_label_maps_one_row_per_document(spark):
+    """Two copies of one document, one with its top-level keys reversed
+    and re-indented, share a doc_sha and give one map row, so relabeling
+    keeps one canonical triple per triple."""
+    from cbor_ld_spark.operators import (
+        canonical_triples,
+        process_corpus,
+        triples_table,
+    )
+    from cbor_ld_spark.operators.kg import _label_maps
+    from cbor_ld_spark.sources.corpus import REPOS_SCHEMA
+
+    text = _sample("truage.jsonld")
+    flipped = json.dumps(dict(reversed(json.loads(text).items())), indent=3)
+    docs = process_corpus(spark.createDataFrame(
+        [("r", "a.json", "c1", "json", text),
+         ("r", "b.json", "c1", "json", flipped)], REPOS_SCHEMA),
+        canonical=True).localCheckpoint()
+    got = docs.select("doc_sha", "content_sha", "ok").collect()
+    assert all(r["ok"] for r in got)
+    assert len({r["doc_sha"] for r in got}) == 1
+    assert len({r["content_sha"] for r in got}) == 2
+    assert _label_maps(docs).count() == 1
+    triples = triples_table(docs)
+    assert canonical_triples(triples, docs).count() == triples.count() > 0
