@@ -3519,7 +3519,10 @@ def _path_oracle(steps, sf_dir: str | None = None,
     identity over all graph terms.  ``src``/``dst`` filter the final
     pairs — the oracle replays the UNCONSTRAINED relation then
     filters, which is exactly the equivalence the seeded tier
-    property-tests against."""
+    property-tests against.  Steps are those of ``operators/algebra``,
+    dispatched on their type; nothing here comes from ``bgp.py``."""
+    from cbor_ld_spark.operators.algebra import Alt, Group, as_step
+
     triples = _realized_triples(sf_dir or _oracle_sf_dir())
     terms = sorted({s for s, _p, _o in triples}
                    | {o for _s, _p, o in triples})
@@ -3535,19 +3538,18 @@ def _path_oracle(steps, sf_dir: str | None = None,
 
     def eval_steps(steps) -> set:
         result = None
-        for preds, mod in steps:
-            if (isinstance(preds, (list, tuple)) and preds
-                    and isinstance(preds[0], list)):
-                # alternation of sub-paths (r8): union of alternatives
+        for i, step in enumerate(steps):
+            step = as_step(step, i)
+            mod = step.mod
+            if isinstance(step, Alt):
+                # alternation of sub-paths (r8): union of its options
                 edges = set()
-                for alt in preds:
-                    edges |= eval_steps(list(alt))
-            elif (isinstance(preds, (list, tuple)) and preds
-                    and isinstance(preds[0], tuple)):
-                edges = eval_steps(list(preds))  # nested group
+                for option in step.options:
+                    edges |= eval_steps([option])
+            elif isinstance(step, Group):
+                edges = eval_steps(step.steps)  # nested group
             else:
-                alts = ([preds] if isinstance(preds, str)
-                        else list(preds))
+                alts = step.preds
                 edges = set()
                 neg = [p[1:] for p in alts if p.startswith("!")]
                 if neg:

@@ -30,9 +30,14 @@ Semantics notes (documented, tested):
 
 from __future__ import annotations
 
+from dataclasses import replace
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, functions as F
 
-from .sparql import _EXPR, _is_path, _opaque_end
+from .algebra import (Atom, Group, OptionalGroup, Path, as_step,
+                      mentions, variables)
+from .sparql import _EXPR, _opaque_end
 
 _POSITIONS = ("subj", "pred", "obj")
 
@@ -106,17 +111,17 @@ def _path_var(term: str, k: int) -> str | None:
     return var
 
 
-def _path_frame(triples: DataFrame, steps: list[tuple], s: str, o: str,
-                k: int, var_order: list[str]) -> DataFrame:
+def _path_frame(triples: DataFrame, path: Path, k: int,
+                var_order: list[str]) -> DataFrame:
     """A property-path pattern used INSIDE a BGP (r7): evaluates the
     path relation via ``match_path`` — the SEEDED tier when an
     endpoint is ground — and shapes it like a pattern frame (one
     column per endpoint variable; a fully-ground path becomes a lazy
     EXISTS guard; a repeated variable an intra-row equality)."""
-    s_var, o_var = _path_var(s, k), _path_var(o, k)
-    rel = match_path(triples, steps,
-                     src=None if s_var is not None else s,
-                     dst=None if o_var is not None else o)
+    s_var, o_var = _path_var(path.subj, k), _path_var(path.obj, k)
+    rel = match_path(triples, path.steps,
+                     src=None if s_var is not None else path.subj,
+                     dst=None if o_var is not None else path.obj)
     if s_var is None and o_var is None:
         # fully-ground path: EXISTS guard, no driver action
         return rel.select(F.lit(1).alias(f"_exists_path{k}")).limit(1)
@@ -170,17 +175,19 @@ def _split_conjuncts(expr: str) -> list[str]:
 
 
 def match_bgp(triples: DataFrame,
-              patterns: list[tuple[str, str, str]],
-              optional: list[tuple[str, str, str]] | None = None,
+              patterns: list,
+              optional: list | None = None,
               distinct: bool = True,
               filters: list[str] | None = None,
-              not_exists: list[tuple[str, str, str]] | None = None,
+              not_exists: list | None = None,
               sources: list[DataFrame] | None = None,
-              paths: list[tuple] | None = None,
               binds: list[tuple[str, str]] | None = None,
-              exists: list[tuple[str, str, str]] | None = None) -> DataFrame:
+              exists: list | None = None) -> DataFrame:
     """Match a conjunctive BGP; returns one column per variable, in
-    first-appearance order (required patterns first, then optionals).
+    first-appearance order (required patterns first, then paths, then
+    optionals).  The entries are those of ``operators/algebra``:
+    pattern tuples, ``Path`` entries among the patterns, guards and
+    optionals, and ``OptionalGroup`` optionals.
 
     ``filters`` are SPARQL-FILTER-style boolean SQL expressions over
     the bound variables (e.g. ``"cast(age as int) >= 21"``) — a row
@@ -219,11 +226,11 @@ def match_bgp(triples: DataFrame,
     differ (disconnected patterns) is rejected loudly here, so the two
     coincide on everything this accepts.
 
-    ``paths`` (r7) — property-path patterns INSIDE the BGP: each entry
-    ``(steps, subj, obj)`` where steps is a ``match_path`` step list
-    and subj/obj are ``'?var'`` or ground terms.  The path relation is
-    evaluated (the SEEDED frontier tier when an endpoint is ground)
-    and joined into the bindings exactly like a pattern frame — so
+    ``Path(steps, subj, obj)`` patterns (r7) — property paths INSIDE
+    the BGP, where steps is a ``match_path`` step list and subj/obj
+    are ``'?var'`` or ground terms.  The path relation is evaluated
+    (the SEEDED frontier tier when an endpoint is ground) and joined
+    into the bindings exactly like a pattern frame — so
     ``?cred vc?/issuer ?i . ?cred rdf:type ?t`` is one query.  Paths
     join after the required patterns (their variables order after
     pattern variables); fully-ground paths act as EXISTS guards and a
@@ -241,9 +248,8 @@ def match_bgp(triples: DataFrame,
     pattern must share at least one variable with the preceding
     required/optional patterns (an unconnected OPTIONAL would be a
     cross product — rejected loudly instead of silently exploding).
-    An entry may also be ``("__path__", steps, subj, obj)`` (a path
-    relation left-joins like a pattern frame) or ``("__group__",
-    {"patterns", "paths", "filters"})`` — a SPARQL §18.5 LeftJoin
+    An entry may also be a ``Path`` (a path relation left-joins like a
+    pattern frame) or an ``OptionalGroup`` — a SPARQL §18.5 LeftJoin
     UNIT: the whole group evaluates as its own BGP plan (recursive
     match_bgp) and left-joins as one frame, so a partial match binds
     nothing; group filters are over group-local variables only.
@@ -264,8 +270,10 @@ def match_bgp(triples: DataFrame,
     required-bound, a broadcast nested-loop join over the optional's
     filtered scan) is paid only by queries that actually hit the
     nested-unbound corner."""
-    if not patterns and not paths:
+    if not patterns:
         raise ValueError("match_bgp requires at least one pattern")
+    paths = [p for p in patterns if isinstance(p, Path)]
+    patterns = [p for p in patterns if not isinstance(p, Path)]
     if sources is not None and len(sources) != len(patterns):
         raise ValueError(
             f"sources must have one frame per required pattern "
@@ -285,9 +293,8 @@ def match_bgp(triples: DataFrame,
         src = sources[i] if sources is not None else triples
         frame = _pattern_frame(src, pat, i, var_order)
         result = _join(result, frame)
-    for k, (steps, s, o) in enumerate(paths or []):
-        frame = _path_frame(triples, steps, s, o, k, var_order)
-        result = _join(result, frame)
+    for k, path in enumerate(paths):
+        result = _join(result, _path_frame(triples, path, k, var_order))
     if not var_order:
         raise ValueError("BGP has no variables — use a plain filter to "
                          "test ground triples")
@@ -311,24 +318,12 @@ def match_bgp(triples: DataFrame,
     # then B under three-valued logic), so in a mixed filter only the
     # optional-referencing conjuncts defer and the rest still push to
     # the pattern scans.
-    import re as _re
-
-    opt_vars: set[str] = set()
-    for pat in optional or []:
-        if pat and pat[0] == "__group__":
-            g = pat[1]
-            terms = [t for pp in g["patterns"] for t in pp] + \
-                    [t for _s, s, o in g["paths"] for t in (s, o)]
-        else:
-            terms = list(pat)
-        opt_vars.update(t[1:] for t in terms
-                        if isinstance(t, str) and t.startswith("?")
-                        and t[1:] not in var_order)
+    opt_vars = set().union(*map(variables, optional or [])) \
+        - set(var_order)
     deferred_filters: list[str] = []
     for expr in filters or []:
         for part in (_split_conjuncts(expr) if opt_vars else [expr]):
-            if any(_re.search(rf"\b{_re.escape(v)}\b", part)
-                   for v in opt_vars):
+            if mentions(part, opt_vars):
                 deferred_filters.append(part)
             else:
                 result = result.filter(F.expr(part))
@@ -337,13 +332,12 @@ def match_bgp(triples: DataFrame,
                               not_exists or [])):
         for m, pat in enumerate(pats):
             guard_vars: list[str] = []
-            if _is_path(pat):
+            if isinstance(pat, Path):
                 # property path guard (r8): the path relation's
                 # endpoint columns semi/anti-join on the shared vars
                 # exactly like a pattern guard (seeded tier when an
                 # endpoint is ground; fresh endpoints existential)
-                guard = _path_frame(triples, pat[1], pat[2], pat[3],
-                                    2000 + m, guard_vars)
+                guard = _path_frame(triples, pat, 2000 + m, guard_vars)
             else:
                 guard = _pattern_frame(triples, pat, -(m + 1),
                                        guard_vars)
@@ -375,7 +369,7 @@ def match_bgp(triples: DataFrame,
                                  on=shared, how=how)
     maybe_unbound: set[str] = set()
     for j, pat in enumerate(optional or []):
-        if pat and pat[0] == "__group__":
+        if isinstance(pat, OptionalGroup):
             # OPTIONAL group UNIT (r8, SPARQL §18.5 LeftJoin): the
             # whole group evaluates as its own BGP plan — patterns,
             # paths, group-local FILTERs — and left-joins as one
@@ -383,39 +377,31 @@ def match_bgp(triples: DataFrame,
             # must be over the group's own variables; one that names
             # an outer-only column would evaluate against the wrong
             # scope, so reject it loudly here.
-            g = pat[1]
-            g_vars = {t[1:] for pp in g["patterns"] for t in pp
-                      if isinstance(t, str) and t.startswith("?")}
-            g_vars.update(t[1:] for _st, s, o in g["paths"]
-                          for t in (s, o) if t.startswith("?"))
-            import re as _re2
-            for f in g["filters"]:
-                outer = [c for c in result.columns
-                         if c not in g_vars and not c.startswith("_")
-                         and _re2.search(rf"\b{_re2.escape(c)}\b", f)]
+            g_vars = variables(pat)
+            outside = [c for c in result.columns
+                       if c not in g_vars and not c.startswith("_")]
+            for f in pat.filters:
+                outer = mentions(f, outside)
                 if outer:
                     raise ValueError(
                         f"FILTER inside OPTIONAL references outer "
                         f"variable(s) {outer} — only group-local "
                         "variables are supported in this subset")
-            frame = match_bgp(triples, g["patterns"],
-                              paths=g["paths"] or None,
-                              filters=g["filters"] or None)
+            frame = match_bgp(triples, [*pat.patterns, *pat.paths],
+                              filters=list(pat.filters) or None)
             for c in frame.columns:
                 if c not in var_order:
                     var_order.append(c)
-        elif _is_path(pat):
+        elif isinstance(pat, Path):
             # property path inside OPTIONAL (r8): the path relation
             # left-joins like any optional pattern frame (seeded tier
             # when an endpoint is ground)
-            _tag, steps, p_s, p_o = pat
-            if not p_s.startswith("?") and not p_o.startswith("?"):
+            if not pat.subj.startswith("?") and not pat.obj.startswith("?"):
                 raise ValueError(
                     "a fully-ground property path inside OPTIONAL is "
                     "outside this subset (it binds nothing — use a "
                     "required pattern or FILTER EXISTS)")
-            frame = _path_frame(triples, steps, p_s, p_o,
-                                1000 + j, var_order)
+            frame = _path_frame(triples, pat, 1000 + j, var_order)
         else:
             frame = _pattern_frame(triples, pat, len(patterns) + j,
                                    var_order)
@@ -466,21 +452,15 @@ def match_union(triples: DataFrame,
     (first-appearance order across groups) with NULL for variables a
     group does not bind — SPARQL's unbound-variable semantics.
 
-    A branch may mix plain patterns with ``("__path__", steps, subj,
-    obj)`` property-path entries (r8) — each branch routes them to its
-    match_bgp plan's ``paths=``.
+    A branch may mix plain patterns with ``Path`` entries (r8), as
+    ``match_bgp`` takes them.
 
     Plan shape: one match_bgp plan per group (each with its own
     pushed-down scans and join order) plus a zero-shuffle unionByName;
     the final distinct is the only added exchange."""
     if not groups:
         raise ValueError("match_union requires at least one group")
-    frames = []
-    for pats in groups:
-        plain = [p for p in pats if not _is_path(p)]
-        paths = [p[1:] for p in pats if _is_path(p)]
-        frames.append(match_bgp(triples, plain, distinct=False,
-                                paths=paths or None))
+    frames = [match_bgp(triples, pats, distinct=False) for pats in groups]
     var_order: list[str] = []
     for fr in frames:
         for c in fr.columns:
@@ -496,7 +476,13 @@ def match_union(triples: DataFrame,
     return out.distinct()
 
 
-_PATH_MODS = ("one", "plus", "star", "opt")
+# the doubling closure's round budget, covering diameter
+# 2**(_MAX_ITERS - 1); the frontier tiers get that diameter as a linear
+# layer budget, so a ground endpoint never fails a path the closure
+# tier answers.  A runaway guard only: BFS over a finite graph ends
+# within its node count.
+_MAX_ITERS = 20
+_MAX_LAYERS = 1 << (_MAX_ITERS - 1)
 
 
 def _graph_terms(triples: DataFrame) -> DataFrame:
@@ -546,49 +532,82 @@ def _step_edges(triples: DataFrame, alts: list[str], i: int) -> DataFrame:
     return edges
 
 
-def _is_group(preds) -> bool:
-    """A GROUP step's preds is a nested list of steps — ``(p/q)+``
-    parses to ``([(p, 'one'), (q, 'one')], 'plus')`` — versus an
-    alternation, which is a list of predicate strings."""
-    return (isinstance(preds, (list, tuple)) and bool(preds)
-            and isinstance(preds[0], tuple))
+class _Step(NamedTuple):
+    """A compiled path step: its modifier, its relation (an atom's
+    ``edges``, or ``subs``, the compiled step lists of a group's one
+    sub-path or of an alternation's options) and whether the frontier
+    it reads drops its nulls first."""
+    mod: str
+    edges: DataFrame | None
+    subs: list | None
+    drop_nulls: bool
 
 
-def _is_alt_groups(preds) -> bool:
-    """An ALTERNATION-OF-GROUPS step's preds (r8, ``(p/q)|r``) is a
-    list of ALTERNATIVES, each itself a steps-list — evaluated as the
-    union of the alternatives' sub-relations."""
-    return (isinstance(preds, (list, tuple)) and bool(preds)
-            and isinstance(preds[0], list))
+def _compile(triples: DataFrame, steps, reverse: bool = False,
+             seeded: bool = True) -> list[_Step]:
+    """The step compiler: the closure tier (``_path_relation``), the
+    frontier tier (``_seeded_eval``) and the meet-in-the-middle tier
+    (``_bidi_pair``) all apply its result.  It decides once per step:
+
+    * the kind: an atom compiles to its (src, dst) edge frame, not
+      deduplicated; a group to its sub-path and an alternation to its
+      options, compiled the same way;
+    * the direction: ``reverse`` compiles the inverse path, for
+      evaluation from a ground object: the steps in reverse order and
+      each atom's edges swapped, at every depth;
+    * the null rule: a null may end a path but never continues one.  A
+      step that joins its frontier drops a null by itself; a
+      zero-length step (``opt``, ``star``) would carry it on, so it
+      reads its frontier without nulls unless that frontier is the
+      seed (``seeded`` and the first step).  The closure tier composes
+      steps by equi-join, which already holds the rule."""
+    out = []
+    for i, step in enumerate(reversed(steps) if reverse else steps):
+        step = as_step(step, i)
+        clean = seeded and i == 0
+        drop = step.mod in ("opt", "star") and not clean
+        if isinstance(step, Atom):
+            edges = _step_edges(triples, step.preds, i)
+            if reverse:
+                edges = edges.select(F.col("dst").alias("src"),
+                                     F.col("src").alias("dst"))
+            out.append(_Step(step.mod, edges, None, drop))
+            continue
+        subs = ([step.steps] if isinstance(step, Group)
+                else [(o,) for o in step.options])
+        # a sub-path reads a null-free frontier when this step reads
+        # one and applies the sub-path to it once
+        inner = (clean or drop) and step.mod in ("one", "opt")
+        out.append(_Step(step.mod, None,
+                         [_compile(triples, sub, reverse, inner)
+                          for sub in subs], drop))
+    return out
 
 
-def _validate_step(step, i: int):
-    """Shared step validation -> (preds, mod)."""
-    if len(step) != 2:
-        raise ValueError(f"step {i} must be (preds, mod): {step!r}")
-    preds, mod = step
-    if mod not in _PATH_MODS:
-        raise ValueError(f"step {i}: unknown modifier {mod!r} "
-                         f"(expected one of {_PATH_MODS})")
-    if not isinstance(preds, str) and not preds:
-        raise ValueError(f"step {i}: empty alternation")
-    return preds, mod
+def _advance(step: _Step, fr: DataFrame) -> DataFrame:
+    """The nodes one application of a compiled step away from the
+    ``node`` frame ``fr``: an edge join, or the sub-paths' frontiers
+    (the union of an alternation's options)."""
+    if step.edges is not None:
+        return (fr.join(step.edges, fr.node == step.edges.src)
+                .select(F.col("dst").alias("node")))
+    out = None
+    for sub in step.subs:
+        nxt = _seeded_eval(sub, fr)
+        out = nxt if out is None else out.unionByName(nxt)
+    return out.distinct() if len(step.subs) > 1 else out
 
 
-def _bfs_fix(frontier: DataFrame, step_fn, max_layers: int) -> DataFrame:
-    """Nodes with a path of >= 1 applications of ``step_fn`` from
+def _bfs_fix(frontier: DataFrame, step: _Step) -> DataFrame:
+    """Nodes with a path of >= 1 applications of ``step`` from
     ``frontier`` — plain BFS, one anti-join + localCheckpoint per
     layer (k_hop's layer machinery).  Rounds = eccentricity of the
     frontier, but each round touches only the frontier's out-edges —
-    never the whole relation's closure.  ``step_fn`` maps a ``node``
-    frame to the nodes one step away (an edge join for atom steps, a
-    recursive sub-path evaluation for group steps).  ``max_layers``
-    is the LINEAR layer budget (``2**(max_iters-1)`` from the caller's
-    doubling-tier ``max_iters`` — same covered diameter)."""
+    never the whole relation's closure."""
     reached: DataFrame | None = None
     layer = frontier
-    for _ in range(max_layers):
-        nxt = step_fn(layer).distinct()
+    for _ in range(_MAX_LAYERS):
+        nxt = _advance(step, layer).distinct()
         if reached is not None:
             nxt = nxt.join(reached, on="node", how="left_anti")
         nxt = nxt.localCheckpoint()
@@ -599,29 +618,25 @@ def _bfs_fix(frontier: DataFrame, step_fn, max_layers: int) -> DataFrame:
         layer = nxt
     else:
         raise RuntimeError(
-            f"seeded path expansion did not converge in {max_layers} "
-            "layers (diameter bound; raise max_iters)")
+            f"seeded path expansion did not converge in {_MAX_LAYERS} "
+            "layers (the diameter bound _MAX_LAYERS)")
     if reached is None:
         return frontier.limit(0)
     return reached
 
 
-def _seeded_eval(triples: DataFrame, steps: list[tuple],
-                 frontier: DataFrame, reverse: bool,
-                 max_layers: int) -> DataFrame:
-    """Frontier evaluation of a path over a ``node`` frame of current
-    positions.  ``reverse=True`` evaluates right-to-left (ground
-    OBJECT): steps in reverse order with each leaf step's edge frame
-    direction swapped — exactly the inverse path (applied recursively
-    to nested groups).
+def _seeded_eval(steps: list[_Step],
+                 frontier: DataFrame) -> DataFrame:
+    """Frontier tier: the final positions of a compiled path applied to
+    a ``node`` frame of current positions.
 
     Each step plans its frontier once.  A ``one`` step is a join of
     the frontier with the step's raw edges and one ``distinct``; an
     atom ``opt`` step is one LEFT join that emits the frontier node,
     plus the edge's other end where the join matched (``src IS NOT
-    NULL``, so a null node or a null ``dst`` keeps the rows of
-    ``step ∪ frontier``), and one ``distinct``.  Group and
-    alternation ``opt`` steps still union the step with the frontier.
+    NULL``, so a null ``dst`` keeps the rows of ``step ∪ frontier``),
+    and one ``distinct``.  Group and alternation ``opt`` steps union
+    the step with the frontier.
 
     Only what is read more than once is localCheckpoint'd: the layers
     of ``plus``/``star`` steps (inside ``_bfs_fix``), their results,
@@ -630,98 +645,52 @@ def _seeded_eval(triples: DataFrame, steps: list[tuple],
     frontier is still lazy.  ``one``/``opt`` steps stay lazy and fold
     into the next materializing job instead of paying one of their
     own."""
-    ordered = list(reversed(steps)) if reverse else list(steps)
     # the incoming frontier may be a lazy frame (the seed filter, a
     # caller's one/opt result)
     lazy = True
-    for i, step in enumerate(ordered):
-        preds, mod = _validate_step(step, i)
-        edges = None
-        if _is_alt_groups(preds):
-            # alternation of sub-paths: one frontier application is
-            # the UNION of applying each alternative (r8)
-            alts_steps = [list(a) for a in preds]
-
-            def step_fn(fr, _alts=alts_steps):
-                out = None
-                for sub in _alts:
-                    nxt = _seeded_eval(triples, sub, fr, reverse,
-                                       max_layers)
-                    out = nxt if out is None else out.unionByName(nxt)
-                return out.distinct()
-        elif _is_group(preds):
-            sub = list(preds)
-
-            def step_fn(fr, _sub=sub):
-                return _seeded_eval(triples, _sub, fr, reverse,
-                                    max_layers)
-        else:
-            alts = [preds] if isinstance(preds, str) else list(preds)
-            edges = _step_edges(triples, alts, i)
-            if reverse:
-                edges = edges.select(F.col("dst").alias("src"),
-                                     F.col("src").alias("dst"))
-            if mod in ("plus", "star"):
-                edges = edges.distinct().localCheckpoint()
-
-            def step_fn(fr, _e=edges):
-                return (fr.join(_e, fr.node == _e.src)
-                        .select(F.col("dst").alias("node")))
-        if mod == "one":
-            frontier = step_fn(frontier).distinct()
-        elif mod == "opt" and edges is not None:
-            hit = F.col("src").isNotNull()
+    for step in steps:
+        if step.drop_nulls:
+            frontier = frontier.filter(F.col("node").isNotNull())
+        if step.edges is not None and step.mod in ("plus", "star"):
+            step = step._replace(
+                edges=step.edges.distinct().localCheckpoint())
+        if step.mod == "one":
+            frontier = _advance(step, frontier).distinct()
+        elif step.mod == "opt" and step.edges is not None:
+            edges, hit = step.edges, F.col("src").isNotNull()
             frontier = (frontier
                         .join(edges, frontier.node == edges.src, "left")
                         .select(F.explode(
                             F.when(hit, F.array("node", "dst"))
                             .otherwise(F.array("node"))).alias("node"))
                         .distinct())
-        elif mod == "opt":
-            frontier = step_fn(frontier).unionByName(frontier).distinct()
-        elif mod == "plus":
-            frontier = _bfs_fix(frontier, step_fn, max_layers)
+        elif step.mod == "opt":
+            frontier = (_advance(step, frontier).unionByName(frontier)
+                        .distinct())
+        elif step.mod == "plus":
+            frontier = _bfs_fix(frontier, step)
         else:  # star
             if lazy:
                 frontier = frontier.localCheckpoint()
-            frontier = (_bfs_fix(frontier, step_fn, max_layers)
+            frontier = (_bfs_fix(frontier, step)
                         .unionByName(frontier)
                         .distinct().localCheckpoint())
-        lazy = mod in ("one", "opt")
+        lazy = step.mod in ("one", "opt")
     return frontier
 
 
 def _seed(triples: DataFrame, c: str) -> DataFrame:
     """The seeded tiers' initial frontier: the ``node`` frame ``{c}``
     when ``c`` is a graph term (a subject or an object), else empty —
-    one scan of ``triples``."""
+    one scan of ``triples``.  Intersecting the seed with the graph
+    terms keeps the seeded tiers equal to the closure tier, whose
+    zero-length identity ranges over graph terms only."""
     return (triples.filter((F.col("subj") == c) | (F.col("obj") == c))
             .select(F.lit(c).alias("node")).distinct())
 
 
-def _seeded_path_nodes(triples: DataFrame, steps: list[tuple],
-                       seed: str, reverse: bool,
-                       max_iters: int) -> DataFrame:
-    """Seeded tier entry: final positions of the path from one ground
-    endpoint.  The initial frontier is the seed INTERSECTED with the
-    graph terms (``_seed``), which preserves exact equivalence with the
-    unconstrained tier (whose zero-length identity ranges over graph
-    terms only): a seed that is not a graph term has no edges and no
-    zero-path identity, so every result is empty either way.
-
-    Depth parity (ADVICE r7): the unconstrained tier's doubling
-    closure covers diameter ``2**(max_iters-1)`` while the seeded
-    tier's BFS is LINEAR in layers — so the same ``max_iters`` is
-    converted to that layer budget here, and adding a ground endpoint
-    can never make a query fail that succeeded unseeded.  The budget
-    is only a runaway guard: BFS over a finite graph terminates within
-    the node count regardless."""
-    return _seeded_eval(triples, steps, _seed(triples, seed), reverse,
-                        1 << (max_iters - 1))
-
-
-def _bidi_pair(triples: DataFrame, steps: list[tuple], src: str,
-               dst: str, max_iters: int) -> DataFrame:
+def _bidi_pair(triples: DataFrame, steps, src: str,
+               dst: str) -> DataFrame:
     """BOTH endpoints ground (r8, VERDICT r7 #6): is (src, dst) in the
     path relation?  Returns the one-row (src, dst) frame if connected,
     else empty — exactly the seeded tier's filtered answer, but never
@@ -749,7 +718,6 @@ def _bidi_pair(triples: DataFrame, steps: list[tuple], src: str,
 
     Equivalence with ``seeded-then-filter`` is property-tested
     (tests/test_bgp.py)."""
-    max_layers = 1 << (max_iters - 1)
     empty = (triples.limit(0)
              .select(F.lit(src).alias("src"), F.lit(dst).alias("dst")))
 
@@ -760,31 +728,30 @@ def _bidi_pair(triples: DataFrame, steps: list[tuple], src: str,
     f_src, f_dst = _seed(triples, src), _seed(triples, dst)
     if len(steps) > 1:
         k = len(steps) // 2
-        a = _seeded_eval(triples, list(steps[:k]), f_src, False,
-                         max_layers)
-        b = _seeded_eval(triples, list(steps[k:]), f_dst, True,
-                         max_layers)
+        a = _seeded_eval(_compile(triples, steps[:k]), f_src)
+        b = _seeded_eval(_compile(triples, steps[k:], reverse=True),
+                         f_dst)
         return pair(a.join(b, "node"))
-    preds, mod = _validate_step(steps[0], 0)
-    if mod not in ("plus", "star"):
-        nodes = _seeded_eval(triples, steps, f_src, False, max_layers)
+    step = as_step(steps[0], 0)
+    if step.mod not in ("plus", "star"):
+        nodes = _seeded_eval(_compile(triples, [step]), f_src)
         return pair(nodes.filter(F.col("node") == F.lit(dst)))
-    if mod == "star" and src == dst:
+    if step.mod == "star" and src == dst:
         # zero-length identity: connected iff src is a graph term
         return pair(f_src)
-    # the closure loop reads each seed more than once
+    # the closure loop reads each seed more than once, and its later
+    # frontiers are no seeds
     f_src, f_dst = f_src.localCheckpoint(), f_dst.localCheckpoint()
-
-    def one_step(fr: DataFrame, reverse: bool) -> DataFrame:
-        return _seeded_eval(triples, [(preds, "one")], fr, reverse,
-                            max_layers)
+    one = replace(step, mod="one")
+    fwd = _compile(triples, [one], seeded=False)
+    bwd = _compile(triples, [one], reverse=True, seeded=False)
 
     fwd_all, bwd_all = f_src, f_dst
     fwd_frontier, bwd_frontier = f_src, f_dst
     n_f, n_b = fwd_frontier.count(), bwd_frontier.count()
     if n_f == 0 or n_b == 0:
         return empty
-    for _ in range(2 * max_layers):
+    for _ in range(2 * _MAX_LAYERS):
         if n_f == 0 and n_b == 0:
             # both reaches complete, no intersection ever fired
             return empty
@@ -794,7 +761,7 @@ def _bidi_pair(triples: DataFrame, steps: list[tuple], src: str,
             # other side BEFORE pruning visited nodes — a revisited
             # node (e.g. the seed itself, closing a cycle) is a valid
             # witness even though it is not frontier-new
-            reached = one_step(fwd_frontier, False).localCheckpoint()
+            reached = _seeded_eval(fwd, fwd_frontier).localCheckpoint()
             if not reached.join(bwd_all, on="node").isEmpty():
                 return pair(f_src)
             new = (reached.join(fwd_all, on="node", how="left_anti")
@@ -804,7 +771,7 @@ def _bidi_pair(triples: DataFrame, steps: list[tuple], src: str,
                 fwd_all = fwd_all.unionByName(new).localCheckpoint()
                 fwd_frontier = new
         else:
-            reached = one_step(bwd_frontier, True).localCheckpoint()
+            reached = _seeded_eval(bwd, bwd_frontier).localCheckpoint()
             if not reached.join(fwd_all, on="node").isEmpty():
                 return pair(f_src)
             new = (reached.join(bwd_all, on="node", how="left_anti")
@@ -815,104 +782,95 @@ def _bidi_pair(triples: DataFrame, steps: list[tuple], src: str,
                 bwd_frontier = new
     raise RuntimeError(
         f"bidirectional path search did not converge in "
-        f"{2 * max_layers} layers (diameter bound; raise max_iters)")
+        f"{2 * _MAX_LAYERS} layers (the diameter bound _MAX_LAYERS)")
 
 
-def match_path(triples: DataFrame,
-               steps: list[tuple],
-               max_iters: int = 20,
+def match_path(triples: DataFrame, steps: list,
                src: str | None = None,
                dst: str | None = None) -> DataFrame:
     """SPARQL 1.1 property-path evaluation over the triples table,
     returning the distinct (src, dst) pairs the path connects.
 
-    ``steps`` is the parsed path: a SEQUENCE (``p1/p2``) of steps, each
-    ``(preds, mod)`` where ``preds`` is one predicate IRI or a list of
+    ``steps`` is the parsed path, a SEQUENCE (``p1/p2``) of the steps
+    of ``operators/algebra``: ``Atom(preds, mod)``, also written
+    ``(preds, mod)`` with ``preds`` one predicate IRI or a list of
     ALTERNATES (``p1|p2``) — a leading ``^`` on a predicate inverts
     that alternate (``^p``), and a leading ``!`` on EVERY alternate
     makes the step a NEGATED property set (``!(p1|p2)``: any edge via
-    a predicate not in the set, forward direction, SPARQL 1.1 §9.1) —
-    and ``mod`` is ``"one"``, ``"plus"`` (``p+``), ``"star"``
-    (``p*``) or ``"opt"`` (``p?``).  ``preds`` may also be a nested
-    list of steps — a parenthesised GROUP, ``(p/q)+`` =
-    ``([(p, 'one'), (q, 'one')], 'plus')`` — evaluated as the closure
-    (or option) of the composed sub-relation; groups nest.  A list of
-    LISTS is an ALTERNATION OF SUB-PATHS (r8, ``(p/q)|r`` =
-    ``([[([(p,'one'),(q,'one')], 'one')], [('r','one')]], 'one')``):
-    the union of the alternatives' relations, each alternative a full
-    steps-list carrying its own modifiers.
+    a predicate not in the set, forward direction, SPARQL 1.1 §9.1);
+    ``Group(steps, mod)``, a parenthesised sub-path (``(p/q)+``),
+    evaluated as the closure (or option) of the composed
+    sub-relation; and ``Alt(options, mod)`` (``(p/q)|r``), the union
+    of its options' relations, each option carrying its own
+    modifier.  ``mod`` is ``"one"``, ``"plus"`` (``+``), ``"star"``
+    (``*``) or ``"opt"`` (``?``).  ``_compile`` compiles the path once
+    for whichever tier runs it.
 
-    Spark-first compilation: each step is a pred-pushed-down scan
-    (alternates become one IN filter, inverses a column swap) reduced
-    to a distinct (src, dst) edge frame; ``plus`` runs the
-    log2(diameter)-round doubling closure (``graph.transitive_closure``);
-    ``star``/``opt`` union the zero-length identity over ALL graph
-    terms (the SPARQL zero-path domain — subjects ∪ objects);
-    sequences are equi-joins step.dst == next.src, ordered by
-    Catalyst/AQE.  Deterministic, fully distributed, no driver rows.
+    Closure tier (no ground endpoint): each step is a
+    pred-pushed-down scan (alternates become one IN filter, inverses
+    a column swap) reduced to a distinct (src, dst) edge frame;
+    ``plus`` runs the log2(diameter)-round doubling closure
+    (``graph.transitive_closure``); ``star``/``opt`` union the
+    zero-length identity over ALL graph terms (the SPARQL zero-path
+    domain — subjects ∪ objects); sequences are equi-joins step.dst ==
+    next.src, ordered by Catalyst/AQE.  Deterministic, fully
+    distributed, no driver rows.
 
     ``src`` / ``dst`` (ground endpoints — r6 VERDICT #2): when the
-    query binds an endpoint to a constant (CLI ``<c> p+ ?x`` /
+    query binds an endpoint to a constant (``<c> p+ ?x`` /
     ``?s p+ <c>``), the scale-right plan is NOT "close the whole
     relation, then filter": closure output is quadratic in component
     size while the seeded answer is one node set.  With ``src`` set,
     evaluation switches to frontier expansion from the constant
     (k_hop's layer machinery — one join per BFS layer, cost tracks the
-    frontier's out-edges); with only ``dst`` set, the path is
-    evaluated right-to-left over direction-swapped edges; with BOTH
-    set, the result is the (src, dst) pair if connected, else empty —
-    evaluated MEET-IN-THE-MIDDLE (r8, ``_bidi_pair``): alternating
-    smaller-frontier-first bidirectional BFS for a single closure
-    step, midpoint split for sequences, so work is bounded by the
-    smaller side's reach instead of src's full eccentricity.
-    Exact-equivalence with the unconstrained tier is property-tested
-    (including the zero-length-identity graph-terms domain)."""
+    frontier's out-edges); with only ``dst`` set, the inverse path is
+    evaluated from it; with BOTH set, the result is the (src, dst)
+    pair if connected, else empty — evaluated MEET-IN-THE-MIDDLE (r8,
+    ``_bidi_pair``): alternating smaller-frontier-first bidirectional
+    BFS for a single closure step, midpoint split for sequences, so
+    work is bounded by the smaller side's reach instead of src's full
+    eccentricity.  Exact-equivalence with the closure tier is
+    property-tested (including the zero-length-identity graph-terms
+    domain and null objects)."""
     if not steps:
         raise ValueError("match_path requires at least one step")
     if src is not None and dst is not None:
-        return _bidi_pair(triples, steps, src, dst, max_iters)
+        return _bidi_pair(triples, steps, src, dst)
     if src is not None:
-        nodes = _seeded_path_nodes(triples, steps, src, False, max_iters)
+        nodes = _seeded_eval(_compile(triples, steps),
+                             _seed(triples, src))
         return nodes.select(F.lit(src).alias("src"),
                             F.col("node").alias("dst"))
     if dst is not None:
-        nodes = _seeded_path_nodes(triples, steps, dst, True, max_iters)
+        nodes = _seeded_eval(_compile(triples, steps, reverse=True),
+                             _seed(triples, dst))
         return nodes.select(F.col("node").alias("src"),
                             F.lit(dst).alias("dst"))
-    return _path_relation(triples, steps, max_iters, [None])
+    return _path_relation(triples, _compile(triples, steps), [None])
 
 
-def _path_relation(triples: DataFrame, steps: list[tuple],
-                   max_iters: int, ident: list) -> DataFrame:
-    """Unconstrained tier: the full (src, dst) relation of a step
+def _path_relation(triples: DataFrame, steps: list[_Step],
+              ident: list) -> DataFrame:
+    """Closure tier: the full (src, dst) relation of a compiled step
     sequence.  Group steps recurse (closure over the composed
     sub-relation); ``ident`` is a one-slot holder so the zero-length
     identity frame is computed once across the whole (nested) path."""
     from .graph import transitive_closure
 
     result: DataFrame | None = None
-    for i, step in enumerate(steps):
-        preds, mod = _validate_step(step, i)
-        if _is_alt_groups(preds):
-            # union of the alternatives' sub-relations (r8): each
-            # alternative is a full steps-list with its own mods
-            edges = None
-            for alt in preds:
-                rel = _path_relation(triples, list(alt), max_iters,
-                                     ident)
-                edges = rel if edges is None else edges.unionByName(rel)
-            edges = edges.distinct()
-        elif _is_group(preds):
-            edges = _path_relation(triples, list(preds), max_iters,
-                                   ident)
+    for step in steps:
+        if step.edges is not None:
+            edges = step.edges.distinct()
         else:
-            alts = [preds] if isinstance(preds, str) else list(preds)
-            edges = _step_edges(triples, alts, i).distinct()
-        if mod == "plus":
-            edges = transitive_closure(edges, max_iters=max_iters)
-        elif mod in ("star", "opt"):
-            if mod == "star":
-                edges = transitive_closure(edges, max_iters=max_iters)
+            edges = None
+            for sub in step.subs:
+                rel = _path_relation(triples, sub, ident)
+                edges = rel if edges is None else edges.unionByName(rel)
+            if len(step.subs) > 1:
+                edges = edges.distinct()
+        if step.mod in ("plus", "star"):
+            edges = transitive_closure(edges, max_iters=_MAX_ITERS)
+        if step.mod in ("star", "opt"):
             if ident[0] is None:
                 ident[0] = (_graph_terms(triples)
                             .select(F.col("node").alias("src"),

@@ -1,9 +1,12 @@
-"""SPARQL text surface of the query layer: property paths, triple
-patterns and a SPARQL 1.1 query subset, parsed into the specs that
+"""SPARQL text surface of the query layer: property paths and a
+SPARQL 1.1 query subset, parsed into the specs that
 ``operators/bgp.match_bgp`` / ``match_union`` / ``match_path`` run.
-The CLI (``jobs/kg_query.py``) and the ``kg_sparql_*`` registry queries
-use it.  Terms match string-level against the triples table: ``<>``
-and double quotes are stripped, everything else is matched as written.
+A spec's group members are the entries of ``operators/algebra``:
+pattern tuples, ``Path`` and ``OptionalGroup``.  The CLI
+(``jobs/kg_query.py --sparql``) and the ``kg_sparql_*`` registry
+queries use it.  Terms match string-level against the triples table:
+``<>`` and double quotes are stripped, everything else is matched as
+written.
 
 Lexical rules.  One function, ``_opaque_end``, decides which spans are
 opaque text.  Its context says how:
@@ -34,8 +37,10 @@ Grammar::
     operand   := (atom | '(' path ')') ('+' | '*' | '?')?
     atom      := '^'? '!'? ('<' iri '>' | bare)        bare ends at
                                                        space ()/|+*?^!<
-    pattern   := term (term | path) term               parse_pattern:
-                                                       shlex words
+    pattern   := term (term | path) term               no term is '.',
+                                                       '{', '}' or a
+                                                       keyword, KW(…)
+                                                       included
     term      := '?'var | '<' iri '>' | '"' literal '"' | bare | 'a'
     query     := ('PREFIX' name ':' '<' iri '>')*
                  (select | ask | construct | describe)
@@ -72,9 +77,9 @@ Meaning, and where it departs from SPARQL:
   (``urn:``, ``did:``) and quoted literals pass.  ``a`` in predicate
   position is rdf:type.
 * A predicate with path syntax (``/ | ^ ! + * ?`` or parentheses
-  outside ``<…>``) is a property path.  A lone path runs
-  ``match_path``; mixed with other members it joins the BGP like a
-  pattern (``match_bgp paths=``); a ground endpoint runs the seeded
+  outside ``<…>``) is a property path, a ``Path`` entry among the
+  patterns.  A lone path runs ``match_path``; beside other members it
+  joins the BGP like a pattern; a ground endpoint runs the seeded
   tier.  In an all-atom alternation only the last atom may carry a
   modifier, and it applies to the whole alternation (``q|r+`` is
   ``(q|r)+``; write ``q|(r)+`` for the per-alternative reading); with a
@@ -110,7 +115,9 @@ Meaning, and where it departs from SPARQL:
 from __future__ import annotations
 
 import re as _re
-import shlex
+
+from .algebra import (Alt, Atom, Group, OptionalGroup, Path, mentions,
+                      variables)
 
 _MODS = {"+": "plus", "*": "star", "?": "opt"}
 _PUNCT = "()/|+*?"
@@ -168,19 +175,6 @@ def parse_term(tok: str) -> str:
         # (shlex-sourced CLI terms arrive pre-stripped)
         return tok[1:-1]
     return tok
-
-
-def parse_pattern(text: str) -> tuple[str, str, str]:
-    """One 'subj pred obj' line -> a match_bgp pattern triple.
-    Quoted literals may contain spaces (shlex rules); a trailing '.'
-    token (SPARQL statement dot) is tolerated."""
-    toks = shlex.split(text)
-    if toks and toks[-1] == ".":
-        toks = toks[:-1]
-    if len(toks) != 3:
-        raise ValueError(
-            f"pattern must have exactly 3 terms: {text!r}")
-    return tuple(parse_term(t) for t in toks)  # type: ignore[return-value]
 
 
 def _tokenize_path(expr: str) -> list:
@@ -251,7 +245,7 @@ def _parse_unit(toks: list, pos: int) -> tuple[tuple, int]:
             continue
         break
     if all(kind == "atom" for kind, _v, _m in operands):
-        # legacy atom alternation: mod allowed on the last atom only,
+        # an all-atom alternation: a modifier on the last atom only,
         # applying to the whole alternation
         for kind, _v, mod in operands[:-1]:
             if mod is not None:
@@ -259,23 +253,16 @@ def _parse_unit(toks: list, pos: int) -> tuple[tuple, int]:
                     "a modifier on a non-last atom of an alternation "
                     "is ambiguous in this subset — parenthesise the "
                     "atom for a per-alternative modifier: (q)+|r")
-        alts = [v for _k, v, _m in operands]
-        mod = operands[-1][2] or "one"
-        return ((alts if len(alts) > 1 else alts[0]), mod), pos
-    if len(operands) == 1:
-        # a single parenthesised group: legacy nested-group step
-        _kind, sub, mod = operands[0]
-        return (sub, mod or "one"), pos
-    # alternation with >=1 group operand: SPARQL per-alternative mods;
-    # each alternative normalizes to a one-step steps-list whose step
-    # is the operand (a nested group's steps-list, or an atom) with
-    # its own modifier — evaluated as the UNION of the alternatives'
-    # sub-relations (match_path `_is_alt_groups`)
-    alternatives = [[(val, mod or "one")] for _k, val, mod in operands]
-    return (alternatives, "one"), pos
+        return Atom(tuple(v for _k, v, _m in operands),
+                    operands[-1][2] or "one"), pos
+    steps = [Group(val, mod or "one") if kind == "group"
+             else Atom((val,), mod or "one") for kind, val, mod in operands]
+    # one parenthesised group is a group step; an alternation with a
+    # group operand keeps each operand's own modifier
+    return (steps[0] if len(steps) == 1 else Alt(tuple(steps))), pos
 
 
-def _parse_seq(toks: list, pos: int) -> tuple[list[tuple], int]:
+def _parse_seq(toks: list, pos: int) -> tuple[tuple, int]:
     steps = []
     while True:
         step, pos = _parse_unit(toks, pos)
@@ -283,16 +270,17 @@ def _parse_seq(toks: list, pos: int) -> tuple[list[tuple], int]:
         if pos < len(toks) and toks[pos] == "/":
             pos += 1
             continue
-        return steps, pos
+        return tuple(steps), pos
 
 
-def parse_path(expr: str) -> list[tuple]:
-    """A path expression -> match_path steps.
+def parse_path(expr: str) -> list:
+    """A path expression -> match_path steps (``operators/algebra``).
 
     ``"<p>/<q>|<r>+/^<s>"`` parses to
-    ``[(p, 'one'), ([q, r], 'plus'), ('^' + s, 'one')]``;
-    ``"(<p>/<q>)+"`` parses to the nested group step
-    ``([(p, 'one'), (q, 'one')], 'plus')`` (groups nest)."""
+    ``[Atom((p,), 'one'), Atom((q, r), 'plus'), Atom(('^' + s,), 'one')]``;
+    ``"(<p>/<q>)+"`` to the group step
+    ``Group((Atom((p,)), Atom((q,))), 'plus')`` (groups nest), and
+    ``"(<p>/<q>)|<r>"`` to ``Alt((Group(…), Atom((r,))))``."""
     toks = _tokenize_path(expr)
     if not toks:
         raise ValueError("empty path expression")
@@ -300,7 +288,7 @@ def parse_path(expr: str) -> list[tuple]:
     if pos != len(toks):
         raise ValueError(f"trailing {toks[pos]!r} in path {expr!r} "
                          "(unbalanced ')'?)")
-    return steps
+    return list(steps)
 
 
 _KEYWORDS = {"select", "where", "optional", "filter", "union",
@@ -357,8 +345,16 @@ def _expand_prefixed(tok: str, prefixes: dict[str, str]) -> str:
     return "".join(out) + names(tok[start:])
 
 
+def _word(tok: str) -> str:
+    """A query word read as a term: never ``.``, a brace or a keyword,
+    ``KW(…)`` included."""
+    if tok in (".", "{", "}") or tok.lower().partition("(")[0] in _KEYWORDS:
+        raise ValueError(f"unexpected {tok!r} where a term belongs")
+    return tok
+
+
 def _term(tok: str, prefixes: dict[str, str]) -> str:
-    return parse_term(_expand_prefixed(tok, prefixes))
+    return parse_term(_expand_prefixed(_word(tok), prefixes))
 
 
 def _sparql_tokens(text: str) -> list[str]:
@@ -429,19 +425,13 @@ def _member_kind(toks: list[str], pos: int) -> str:
     return "pattern"
 
 
-def _is_path(entry: tuple) -> bool:
-    """A path entry's steps are a list; a pattern's predicate is a
-    string, even one spelled ``__path__``."""
-    return isinstance(entry[1], list)
-
-
 def _parse_group(toks: list[str], pos: int, name: str,
                  prefixes: dict[str, str]) -> tuple[dict, int]:
     """The ``{ member* }`` group at ``toks[pos]``, opened by keyword
     ``name`` and admitting the member kinds ``_ADMITS[name]``: its
-    members by spec key, and the position after ``}``.  Paths parse
-    into ``("__path__", steps, subj, obj)`` entries where they are
-    read; ``_is_path`` tells them from patterns."""
+    members by spec key, and the position after ``}``.  A path is a
+    ``Path`` entry among the patterns, a larger or filtered OPTIONAL
+    group an ``OptionalGroup`` (``operators/algebra``)."""
     admits = _ADMITS[name]
     pos = _expect(toks, pos, "{")
     g: dict = {"patterns": [], "optional": [], "filters": [],
@@ -462,12 +452,10 @@ def _parse_group(toks: list[str], pos: int, name: str,
                 f"{t!r}) — nested OPTIONAL/FILTER/UNION are outside "
                 "this subset")
         if kind == "pattern":
-            if t.lower() in _KEYWORDS:
-                raise ValueError(f"unexpected keyword {t!r} in group")
             if pos + 3 > len(toks):
                 raise ValueError("truncated triple pattern")
             subj, obj = _term(t, prefixes), _term(toks[pos + 2], prefixes)
-            raw = _expand_prefixed(toks[pos + 1], prefixes)
+            raw = _expand_prefixed(_word(toks[pos + 1]), prefixes)
             pos += 3
             if raw.startswith("?") or not _has_path_syntax(raw):
                 g["patterns"].append((subj, _pred_term(raw), obj))
@@ -477,20 +465,19 @@ def _parse_group(toks: list[str], pos: int, name: str,
                     "templates and GRAPH groups take plain triple "
                     "patterns)")
             else:
-                g["patterns"].append(("__path__", parse_path(raw),
-                                      subj, obj))
+                g["patterns"].append(Path(tuple(parse_path(raw)), subj,
+                                          obj))
         elif kind == "optional":
             inner, pos = _parse_group(toks, pos + 1, "OPTIONAL", prefixes)
             pats = inner["patterns"]
             if len(pats) == 1 and not inner["filters"]:
-                # one member: the flat entry, a plain left join
+                # one member: the member itself, a plain left join
                 g["optional"].append(pats[0])
             else:
-                # a SPARQL §18.5 LeftJoin unit (match_bgp "__group__")
-                g["optional"].append(("__group__", {
-                    "patterns": [p for p in pats if not _is_path(p)],
-                    "paths": [p[1:] for p in pats if _is_path(p)],
-                    "filters": inner["filters"]}))
+                g["optional"].append(OptionalGroup(
+                    tuple(p for p in pats if not isinstance(p, Path)),
+                    tuple(p for p in pats if isinstance(p, Path)),
+                    tuple(inner["filters"])))
         elif kind == "graph":
             pos += 1
             if pos >= len(toks) or toks[pos] == "{":
@@ -729,9 +716,9 @@ def parse_sparql(text: str) -> dict:
     spec ``run_sparql`` executes: a dict of ``form``, ``describe``,
     ``select``, ``aggs``, ``template``, the WHERE group's members
     (``patterns``, ``optional``, ``filters``, ``not_exists``,
-    ``exists``, ``subqueries``, ``union``, ``path``, ``path_patterns``,
-    ``binds``, ``values``) and the solution modifiers (``group_by``,
-    ``having``, ``order_by``, ``limit``, ``offset``)."""
+    ``exists``, ``subqueries``, ``union``, ``binds``, ``values``) and
+    the solution modifiers (``group_by``, ``having``, ``order_by``,
+    ``limit``, ``offset``)."""
     toks = _sparql_tokens(text)
     prefixes: dict[str, str] = {}
     while len(toks) >= 3 and toks[0].lower() == "prefix":
@@ -755,8 +742,7 @@ def _parse_query(toks: list[str], prefixes: dict[str, str]) -> dict:
     spec = {"form": form, "describe": None, "select": None, "aggs": [],
             "template": None, "patterns": [], "optional": [],
             "filters": [], "not_exists": [], "exists": [],
-            "subqueries": [], "union": None, "path": None,
-            "path_patterns": [], "binds": [], "values": [],
+            "subqueries": [], "union": None, "binds": [], "values": [],
             "group_by": [], "having": [], "order_by": [], "limit": None,
             "offset": None}
     pos = 1
@@ -888,24 +874,7 @@ def _parse_query(toks: list[str], prefixes: dict[str, str]) -> dict:
         if not spec["aggs"]:
             raise ValueError("GROUP BY without aggregate SELECT "
                              "expressions")
-    # a LONE path keeps the dedicated match_path route (seeded and
-    # both-ground EXISTS shapes); paths mixed with other members become
-    # match_bgp `paths=` entries
-    paths = [p for p in spec["patterns"] if _is_path(p)]
-    if paths:
-        lone = (len(spec["patterns"]) == 1 and not spec["optional"]
-                and not spec["filters"] and not spec["not_exists"]
-                and not spec["exists"] and not spec["subqueries"]
-                and not spec["union"])
-        spec["patterns"] = [p for p in spec["patterns"]
-                            if not _is_path(p)]
-        if lone:
-            _tag, steps, subj, obj = paths[0]
-            spec["path"] = {"steps": steps, "subj": subj, "obj": obj}
-        else:
-            spec["path_patterns"] = [p[1:] for p in paths]
-    if spec["union"] is None and spec["path"] is None \
-            and not spec["patterns"] and not spec["path_patterns"] \
+    if spec["union"] is None and not spec["patterns"] \
             and not spec["subqueries"]:
         raise ValueError("WHERE group has no patterns")
     return spec
@@ -1010,58 +979,43 @@ def _describe(triples, terms: list[str], bindings):
             .select("subj", "pred", "obj").distinct())
 
 
-def _entry_vars(pat) -> set[str]:
-    """Variable names a group-member entry binds/references — plain
-    patterns and quads, ("__path__", steps, s, o) entries, and
-    ("__group__", {...}) OPTIONAL groups."""
-    if pat and pat[0] == "__group__":
-        out: set[str] = set()
-        for pp in pat[1]["patterns"]:
-            out.update(t[1:] for t in pp
-                       if isinstance(t, str) and t.startswith("?"))
-        for _steps, s, o in pat[1]["paths"]:
-            out.update(t[1:] for t in (s, o) if t.startswith("?"))
-        return out
-    return {t[1:] for t in pat
-            if isinstance(t, str) and t.startswith("?")}
-
-
 def _run_spec(triples, spec: dict):
     """Execute a parsed spec (recursive entry point for subqueries)."""
     from pyspark.sql import functions as F
 
     from .bgp import match_bgp, match_path, match_union
 
-    # SUB-SELECTs evaluate bottom-up (SPARQL 1.1 §12) — each becomes a
-    # frame whose projected vars join the outer bindings
     if spec["form"] == "describe" and not spec["patterns"] \
-            and not spec["path_patterns"] and spec["union"] is None \
-            and spec["path"] is None and not spec["subqueries"]:
+            and spec["union"] is None and not spec["subqueries"]:
         # groupless DESCRIBE <iri> ...: constants only
         return _describe(triples, spec["describe"], None)
+    # a LONE path keeps the dedicated match_path route (seeded and
+    # both-ground EXISTS shapes); beside other members a path joins
+    # the BGP like a pattern
+    lone = (len(spec["patterns"]) == 1
+            and isinstance(spec["patterns"][0], Path)
+            and not spec["optional"] and not spec["filters"]
+            and not spec["not_exists"] and not spec["exists"]
+            and not spec["subqueries"] and not spec["union"])
+    # SUB-SELECTs evaluate bottom-up (SPARQL 1.1 §12) — each becomes a
+    # frame whose projected vars join the outer bindings
     sub_frames = [_run_spec(triples, s) for s in spec["subqueries"]]
     sub_vars = {c for f in sub_frames for c in f.columns}
-    union_var_sets = [set().union(*map(_entry_vars, pats))
+    union_var_sets = [set().union(*map(variables, pats))
                       for pats in (spec["union"] or [])]
     union_vars: set[str] = set().union(*union_var_sets)
-    bgp_route = bool(spec["patterns"] or spec["path_patterns"])
+    bgp_route = bool(spec["patterns"]) and not lone
     if bgp_route and (spec["subqueries"] or spec["union"]):
         # vars the OUTER group itself binds — filters over vars bound
         # only by a subquery / the UNION block must run after that
         # join, not inside match_bgp
-        outer_vars = set().union(*map(
-            _entry_vars, spec["patterns"] + spec["path_patterns"]))
+        outer_vars = set().union(*map(variables, spec["patterns"]))
         outer_vars.update(a for _e, a in spec["binds"])
         only_late = (sub_vars | union_vars) - outer_vars
-
-        def _refs_late(body: str) -> bool:
-            return any(_re.search(rf"\b{_re.escape(v)}\b", body)
-                       for v in only_late)
-
         # binds run INSIDE match_bgp, before the subquery / UNION
         # join, so a late-var reference cannot resolve
         for expr, alias in spec["binds"]:
-            if _refs_late(expr):
+            if mentions(expr, only_late):
                 raise ValueError(
                     f"BIND ({expr} AS ?{alias}) references a "
                     "variable bound only by a subquery / UNION "
@@ -1076,25 +1030,24 @@ def _run_spec(triples, spec: dict):
                              ("FILTER NOT EXISTS / MINUS",
                               spec["not_exists"])):
             for pat in group:
-                hit = [v for v in _entry_vars(pat) if v in only_late]
+                hit = [v for v in variables(pat) if v in only_late]
                 if hit:
                     raise ValueError(
                         f"{label} pattern references variable(s) "
                         f"{hit} bound only by a subquery / UNION "
                         "block — outside this subset")
         inner_filters = [f for f in spec["filters"]
-                         if not _refs_late(f)]
-        deferred = [f for f in spec["filters"] if _refs_late(f)]
+                         if not mentions(f, only_late)]
+        deferred = [f for f in spec["filters"] if mentions(f, only_late)]
     else:
         inner_filters, deferred = spec["filters"], []
-    if spec["path"] is not None:
-        p = spec["path"]
-        s_var = p["subj"][1:] if p["subj"].startswith("?") else None
-        o_var = p["obj"][1:] if p["obj"].startswith("?") else None
-        out = match_path(
-            triples, p["steps"],
-            src=None if s_var is not None else p["subj"],
-            dst=None if o_var is not None else p["obj"])
+    if lone:
+        p = spec["patterns"][0]
+        s_var = p.subj[1:] if p.subj.startswith("?") else None
+        o_var = p.obj[1:] if p.obj.startswith("?") else None
+        out = match_path(triples, p.steps,
+                         src=None if s_var is not None else p.subj,
+                         dst=None if o_var is not None else p.obj)
         cols = []
         if s_var is not None:
             cols.append(out["src"].alias(s_var))
@@ -1110,7 +1063,6 @@ def _run_spec(triples, spec: dict):
             filters=inner_filters or None,
             not_exists=spec["not_exists"] or None,
             exists=spec["exists"] or None,
-            paths=spec["path_patterns"] or None,
             binds=spec["binds"] or None)
     elif spec["union"] is not None:
         # UNION as the base relation (no triple patterns alongside):

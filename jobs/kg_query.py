@@ -1,41 +1,43 @@
 #!/usr/bin/env python3
 """spark-submit entrypoint: query a built knowledge graph.
 
-The consumption-side CLI over ``build_kg.py``'s output — BGP and
-property-path queries against the ``<kg>/triples`` table without
-writing Python:
+The consumption-side CLI over ``build_kg.py``'s output — one SPARQL
+query (the subset in ``operators/sparql.py``) against the
+``<kg>/triples`` table without writing Python:
 
-    # BGP with FILTER / OPTIONAL / NOT EXISTS
+    # BGP with FILTER, OPTIONAL and FILTER NOT EXISTS
     spark-submit jobs/kg_query.py --triples /data/kg/triples \
-        --pattern '?cred <https://www.w3.org/2018/credentials#issuer> ?i' \
-        --pattern '?cred <https://www.w3.org/2018/credentials#credentialSubject> ?p' \
-        --filter "i like 'did:%'" \
+        --sparql 'SELECT ?cred ?i ?p WHERE {
+                    ?cred <https://www.w3.org/2018/credentials#issuer> ?i .
+                    OPTIONAL { ?cred <...#credentialSubject> ?p }
+                    FILTER(STRSTARTS(?i, "did:"))
+                    FILTER NOT EXISTS { ?cred <...#type> <...#Revoked> } }' \
         --out /data/answers
 
-    # SPARQL property path (sequence / alternation / ^ / ! / + * ? /
-    # parenthesised groups); a ground endpoint switches to the seeded
-    # frontier tier (no full closure)
+    # property path (sequence / alternation / ^ / ! / + * ? /
+    # parenthesised groups); a ground endpoint runs the seeded frontier
+    # tier (no full closure), two ground endpoints the
+    # meet-in-the-middle tier
     spark-submit jobs/kg_query.py --triples /data/kg/triples \
-        --path '<...#verifiableCredential>?/<...#issuer>' \
-        --dst '<did:key:...>' --limit 20
+        --sparql 'SELECT ?doc WHERE {
+                    ?doc <...#verifiableCredential>?/<...#issuer>
+                         <did:key:...> }' \
+        --limit 20
 
-    # UNION groups (';'-separated patterns per group) + GROUP BY
+    # UNION groups
     spark-submit jobs/kg_query.py --triples /data/kg/triples \
-        --union '?c <...#issuer> ?i' \
-        --union '?c <...#holder> ?i' \
-        --group-by i --agg 'count(distinct c) AS n' --having 'n > 1'
+        --sparql 'SELECT * WHERE {
+                    { ?c <...#issuer> ?i } UNION { ?c <...#holder> ?i } }'
 
-    # or a whole SPARQL string — SELECT, ASK or CONSTRUCT, with BIND
-    # and VALUES inline data (subset in operators/sparql.py)
+    # GROUP BY with an aggregate and HAVING
     spark-submit jobs/kg_query.py --triples /data/kg/triples \
-        --sparql 'SELECT ?c ?i WHERE { ?c <...#issuer> ?i .
-                  FILTER NOT EXISTS { ?c <...#type> <...#Revoked> } }'
-    spark-submit jobs/kg_query.py --triples /data/kg/triples \
-        --sparql 'ASK { <...#cred1> <...#issuer>/<...#memberOf>* ?o }'
+        --sparql 'SELECT ?i (COUNT(DISTINCT ?c) AS ?n) WHERE {
+                    ?c <...#issuer> ?i } GROUP BY ?i HAVING(?n > 1)'
 
-Without --out, prints up to --limit rows as TSV to stdout (small
-results only — the point of --out is that answers stay distributed).
-Syntax subset is documented in ``operators/sparql.py``.
+ASK, CONSTRUCT and DESCRIBE, BIND, VALUES, MINUS, GRAPH and
+subqueries are in the subset too.  Without --out, prints up to --limit
+rows as TSV to stdout (small results only — the point of --out is that
+answers stay distributed).
 """
 
 from __future__ import annotations
@@ -48,81 +50,24 @@ def main(argv=None):
     ap = argparse.ArgumentParser()
     ap.add_argument("--triples", required=True,
                     help="parquet dir with (subj, pred, obj, ...) rows")
-    ap.add_argument("--pattern", action="append", default=[],
-                    help="required BGP pattern 'subj pred obj' "
-                         "(repeatable)")
-    ap.add_argument("--optional", action="append", default=[],
-                    help="OPTIONAL pattern (repeatable)")
-    ap.add_argument("--filter", action="append", default=[],
-                    help="FILTER boolean SQL expression over the "
-                         "bound variables (repeatable)")
-    ap.add_argument("--not-exists", action="append", default=[],
-                    help="FILTER NOT EXISTS pattern (repeatable)")
-    ap.add_argument("--path", default=None,
-                    help="property-path expression (mutually exclusive "
-                         "with --pattern)")
-    ap.add_argument("--src", default=None,
-                    help="ground SUBJECT endpoint for --path: seeded "
-                         "frontier evaluation instead of full closure")
-    ap.add_argument("--dst", default=None,
-                    help="ground OBJECT endpoint for --path (seeded, "
-                         "evaluated right-to-left)")
-    ap.add_argument("--union", action="append", default=[],
-                    help="one UNION group: its patterns separated by "
-                         "';' (repeatable; mutually exclusive with "
-                         "--pattern/--path)")
-    ap.add_argument("--sparql", default=None,
-                    help="a whole SPARQL query string — SELECT, ASK, "
+    ap.add_argument("--sparql", required=True,
+                    help="a SPARQL query string — SELECT, ASK, "
                          "CONSTRUCT or DESCRIBE (subset: patterns, "
-                         "OPTIONAL groups (unit semantics, local "
-                         "FILTERs), GRAPH groups, "
-                         "FILTER with the SPARQL 1.1 expression "
-                         "built-ins (BOUND/REGEX/STRSTARTS/&&/||/!) "
-                         "or plain Spark SQL, EXISTS/NOT EXISTS, "
-                         "MINUS, BIND, VALUES inline data, UNION "
-                         "composing with other members, { SELECT } "
-                         "subqueries, property paths everywhere incl. "
-                         "OPTIONAL/guard/UNION groups, GROUP_CONCAT/"
-                         "SAMPLE aggregates, ORDER BY expr, "
+                         "property paths, OPTIONAL groups, GRAPH "
+                         "groups, FILTER, EXISTS/NOT EXISTS, MINUS, "
+                         "BIND, VALUES, UNION, { SELECT } subqueries, "
+                         "GROUP BY/HAVING aggregates, ORDER BY, "
                          "LIMIT/OFFSET; see operators/sparql.py)")
-    ap.add_argument("--group-by", default=None,
-                    help="comma-separated binding variables to GROUP "
-                         "BY (requires --agg)")
-    ap.add_argument("--agg", action="append", default=[],
-                    help="aggregate SQL expression over the bindings, "
-                         "e.g. 'count(distinct cred) AS n_creds' "
-                         "(repeatable)")
-    ap.add_argument("--having", action="append", default=[],
-                    help="HAVING boolean SQL expression over the "
-                         "aggregated columns (repeatable)")
     ap.add_argument("--out", default=None,
                     help="write the full answer set as parquet here")
     ap.add_argument("--limit", type=int, default=50,
                     help="stdout row cap when --out is not given")
     ap.add_argument("--master", default=None)
     args = ap.parse_args(argv)
-    n_modes = sum([bool(args.path), bool(args.pattern),
-                   bool(args.union), bool(args.sparql)])
-    if n_modes != 1:
-        ap.error("provide exactly one of --sparql, --path, "
-                 "--pattern (>=1) or --union (>=1)")
-    if args.path and (args.optional or args.filter or args.not_exists):
-        ap.error("--optional/--filter/--not-exists apply to --pattern "
-                 "queries only")
-    if (args.src or args.dst) and not args.path:
-        ap.error("--src/--dst apply to --path queries only")
-    if bool(args.group_by) != bool(args.agg):
-        ap.error("--group-by and --agg go together")
-    if args.having and not args.agg:
-        ap.error("--having requires --agg")
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import SparkSession
 
-    from cbor_ld_spark.operators.bgp import (match_bgp, match_path,
-                                             match_union)
-    from cbor_ld_spark.operators.sparql import (parse_path,
-                                                parse_pattern,
-                                                parse_term)
+    from cbor_ld_spark.operators.sparql import run_sparql
 
     existing = SparkSession.getActiveSession()
     b = SparkSession.builder.appName("kg_query")
@@ -130,45 +75,7 @@ def main(argv=None):
         b = b.master(args.master)
     spark = b.getOrCreate()
     try:
-        triples = spark.read.parquet(args.triples)
-        if args.sparql:
-            from cbor_ld_spark.operators.sparql import run_sparql
-
-            result = run_sparql(triples, args.sparql)
-        elif args.path:
-            # --src/--dst are GROUND endpoints: a '?var' here would
-            # seed the literal string '?x' and silently match nothing
-            # (ADVICE r7) — reject loudly instead
-            for flag, val in (("--src", args.src), ("--dst", args.dst)):
-                if val is not None and parse_term(val).startswith("?"):
-                    ap.error(f"{flag} must be a ground term, not a "
-                             f"variable: {val!r}")
-            result = match_path(
-                triples, parse_path(args.path),
-                src=parse_term(args.src) if args.src else None,
-                dst=parse_term(args.dst) if args.dst else None)
-        elif args.union:
-            groups = [[parse_pattern(p) for p in g.split(";")
-                       if p.strip()] for g in args.union]
-            if any(not g for g in groups):
-                ap.error("each --union group needs >=1 pattern")
-            result = match_union(triples, groups)
-        else:
-            result = match_bgp(
-                triples,
-                [parse_pattern(p) for p in args.pattern],
-                optional=[parse_pattern(p) for p in args.optional]
-                or None,
-                filters=args.filter or None,
-                not_exists=[parse_pattern(p) for p in args.not_exists]
-                or None)
-        if args.group_by:
-            keys = [k.strip() for k in args.group_by.split(",")
-                    if k.strip()]
-            result = result.groupBy(*keys).agg(
-                *[F.expr(a) for a in args.agg])
-            for h in args.having:
-                result = result.filter(F.expr(h))
+        result = run_sparql(spark.read.parquet(args.triples), args.sparql)
         if args.out:
             result.write.mode("overwrite").parquet(args.out)
             print(f"wrote {spark.read.parquet(args.out).count()} rows "

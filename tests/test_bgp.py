@@ -366,113 +366,36 @@ def test_path_negated_property_set(spark):
 
 
 def test_sparql_parsers():
-    from cbor_ld_spark.operators.sparql import parse_path, parse_pattern
+    from cbor_ld_spark.operators.algebra import Alt, Atom, Group
+    from cbor_ld_spark.operators.sparql import parse_path
 
-    assert parse_pattern("?c <urn:p> ?x .") == ("?c", "urn:p", "?x")
-    assert parse_pattern('?c <urn:p> "two words"') == \
-        ("?c", "urn:p", "two words")
-    with pytest.raises(ValueError, match="exactly 3"):
-        parse_pattern("?a ?b")
-    with pytest.raises(ValueError, match="bare '\\?'"):
-        parse_pattern("? <urn:p> ?x")
-
-    assert parse_path("<urn:p>") == [("urn:p", "one")]
+    assert parse_path("<urn:p>") == [Atom(("urn:p",), "one")]
     assert parse_path("<urn:p>/<urn:q>|<urn:r>+/^<urn:s>") == [
-        ("urn:p", "one"), (["urn:q", "urn:r"], "plus"),
-        ("^urn:s", "one")]
+        Atom(("urn:p",), "one"), Atom(("urn:q", "urn:r"), "plus"),
+        Atom(("^urn:s",), "one")]
     assert parse_path("!<urn:p>|!<urn:q>*") == [
-        (["!urn:p", "!urn:q"], "star")]
+        Atom(("!urn:p", "!urn:q"), "star")]
     with pytest.raises(ValueError, match="empty step"):
         parse_path("<urn:p>//<urn:q>")
     # r7: https IRIs tokenize correctly (the old split('/') parser
     # broke on any scheme://); parenthesised groups parse and nest
     assert parse_path("<https://w.org/x>/<https://w.org/y>+") == [
-        ("https://w.org/x", "one"), ("https://w.org/y", "plus")]
+        Atom(("https://w.org/x",), "one"),
+        Atom(("https://w.org/y",), "plus")]
     assert parse_path("(<urn:p>/<urn:q>)+") == [
-        ([("urn:p", "one"), ("urn:q", "one")], "plus")]
+        Group((Atom(("urn:p",)), Atom(("urn:q",))), "plus")]
     assert parse_path("(<urn:p>/(<urn:q>|<urn:r>)*)+") == [
-        ([("urn:p", "one"),
-          ([(["urn:q", "urn:r"], "one")], "star")], "plus")]
+        Group((Atom(("urn:p",)),
+               Group((Atom(("urn:q", "urn:r")),), "star")), "plus")]
     # r8: alternation of parenthesised groups is IN the subset now
     assert parse_path("(<urn:p>)|<urn:q>") == [
-        ([[([("urn:p", "one")], "one")], [("urn:q", "one")]], "one")]
+        Alt((Group((Atom(("urn:p",)),)), Atom(("urn:q",))))]
     for bad, msg in [("(<urn:p>", "unbalanced"),
                      ("<urn:p>)", "trailing"),
                      ("<urn:p>|", "dangling"),
                      ("", "empty path")]:
         with pytest.raises(ValueError, match=msg):
             parse_path(bad)
-
-
-def test_kg_query_cli_end_to_end(spark, tmp_path):
-    """The CLI surface over a parquet triples table: BGP with FILTER +
-    NOT EXISTS, then a property path, both against the same tiny KG."""
-    import io
-    import sys as _sys
-
-    t = _triples(spark, _DATA)
-    tdir = str(tmp_path / "triples")
-    t.write.parquet(tdir)
-
-    import importlib.util
-    import os
-    spec = importlib.util.spec_from_file_location(
-        "kg_query", os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "jobs", "kg_query.py"))
-    kg_query = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(kg_query)
-
-    def run(argv):
-        buf = io.StringIO()
-        old = _sys.stdout
-        _sys.stdout = buf
-        try:
-            rc = kg_query.main(argv)
-        finally:
-            _sys.stdout = old
-        assert rc == 0
-        return buf.getvalue().strip().splitlines()
-
-    lines = run(["--triples", tdir,
-                 "--pattern", "?c <subject> ?p",
-                 "--pattern", "?p <age> ?a",
-                 "--filter", "cast(a as int) >= 50"])
-    assert lines[0] == "c\tp\ta" and lines[1:] == ["c2\tp2\t65"]
-
-    lines = run(["--triples", tdir,
-                 "--pattern", "?c <issuer> ?i",
-                 "--not-exists", "?c <subject> ?s"])
-    assert lines[1:] == ["c3\torg1"]
-
-    lines = run(["--triples", tdir, "--path", "^<issuer>/<subject>"])
-    assert lines[0] == "src\tdst"
-    assert set(lines[1:]) == {"org1\tp1", "org2\tp2"}
-
-    # r7: ground endpoint -> seeded tier from the shell
-    lines = run(["--triples", tdir, "--path", "^<issuer>/<subject>",
-                 "--src", "<org1>"])
-    assert set(lines[1:]) == {"org1\tp1"}
-    lines = run(["--triples", tdir, "--path", "^<issuer>/<subject>",
-                 "--dst", "p2"])
-    assert set(lines[1:]) == {"org2\tp2"}
-
-    # r7: UNION groups + GROUP BY/HAVING from the shell — the
-    # kg_bgp_group shape end-to-end (r6 VERDICT #5)
-    lines = run(["--triples", tdir,
-                 "--union", "?c <issuer> ?i",
-                 "--union", "?c <subject> ?i ; ?i <age> ?a"])
-    assert lines[0] == "c\ti\ta"
-    # NULL prints as "" (the buffer strip drops a trailing tab on the
-    # last line) — compare rstripped
-    assert {l.rstrip("\t") for l in lines[1:]} == {
-        "c1\torg1", "c2\torg2", "c3\torg1",
-        "c1\tp1\t21", "c2\tp2\t65"}
-    lines = run(["--triples", tdir,
-                 "--pattern", "?c <issuer> ?i",
-                 "--group-by", "i",
-                 "--agg", "count(distinct c) AS n_creds",
-                 "--having", "n_creds > 1"])
-    assert lines[0] == "i\tn_creds" and lines[1:] == ["org1\t2"]
 
 
 def test_bgp_union(spark):
@@ -544,6 +467,7 @@ def test_path_seeded_equivalence_random(spark):
     alternates, for src-bound, dst-bound and both-bound calls."""
     import random
 
+    from cbor_ld_spark.operators.algebra import Group
     from cbor_ld_spark.operators.bgp import match_path
 
     rng = random.Random(20260817)
@@ -566,9 +490,9 @@ def test_path_seeded_equivalence_random(spark):
         for _ in range(rng.randint(1, 3)):
             mod = rng.choice(["one", "plus", "star", "opt"])
             if rng.random() < 0.25:  # parenthesised group step
-                steps.append(([(rand_atom(), "one")
-                               for _ in range(rng.randint(1, 2))],
-                              mod))
+                steps.append(Group(tuple(
+                    (rand_atom(), "one")
+                    for _ in range(rng.randint(1, 2))), mod))
             else:
                 steps.append((rand_atom(), mod))
         full = {tuple(r) for r in match_path(t, steps).collect()}
@@ -654,7 +578,7 @@ def test_path_seeded_skips_offpath_component(spark):
     clique = [(f"k{i}", "p", f"k{j}")
               for i in range(40) for j in range(40) if i != j]
     t = _triples(spark, chain + clique)
-    out = match_path(t, [("p", "plus")], src="c0", max_iters=8)
+    out = match_path(t, [("p", "plus")], src="c0")
     got = {tuple(r) for r in out.collect()}
     assert got == {("c0", f"c{i}") for i in range(1, 6)}
     # the unconstrained closure of the same graph is quadratic in the
@@ -800,6 +724,7 @@ def test_bgp_optional_unbound_compat_random(spark):
 def test_parse_sparql_units():
     """Tokenizer + parser: opaque <>/()/\" segments, FILTER forms,
     UNION blocks, path routing, loud rejections."""
+    from cbor_ld_spark.operators.algebra import Atom, Path
     from cbor_ld_spark.operators.sparql import parse_sparql
 
     s = parse_sparql(
@@ -819,20 +744,19 @@ def test_parse_sparql_units():
 
     # an https IRI predicate is NOT a path (/ inside <>)
     p = parse_sparql('SELECT * WHERE { ?s <https://w.org/p> ?o }')
-    assert p["path"] is None
-    # a real path routes, keeps ground endpoints
+    assert p["patterns"] == [("?s", "https://w.org/p", "?o")]
+    # a real path is a Path entry, keeps ground endpoints
     p2 = parse_sparql('SELECT ?x WHERE { <urn:c> <urn:p>+/<urn:q> ?x }')
-    assert p2["path"]["subj"] == "urn:c"
-    assert p2["path"]["steps"] == [("urn:p", "plus"), ("urn:q", "one")]
+    assert p2["patterns"] == [Path(
+        (Atom(("urn:p",), "plus"), Atom(("urn:q",), "one")), "urn:c", "?x")]
 
-    # r7 late: a path MIXED with other patterns becomes a match_bgp
-    # paths= entry instead of an error
+    # r7 late: a path MIXED with other patterns is a Path entry among
+    # them instead of an error
     mix = parse_sparql(
         'SELECT ?x WHERE { ?x <urn:p>+ ?y . ?y <urn:q> ?z }')
-    assert mix["path"] is None
-    assert mix["patterns"] == [("?y", "urn:q", "?z")]
-    assert mix["path_patterns"] == [
-        ([("urn:p", "plus")], "?x", "?y")]
+    assert mix["patterns"] == [
+        Path((Atom(("urn:p",), "plus"),), "?x", "?y"),
+        ("?y", "urn:q", "?z")]
 
     # one statement-dot rule in every group: a stray '.' is skipped
     base = 'SELECT * WHERE { ?a <urn:p> ?b . %s }'
@@ -971,6 +895,7 @@ def test_bgp_path_patterns(spark):
     """Property paths INSIDE a BGP (r7): the path relation joins like
     a pattern frame — var endpoints, ground endpoints (seeded tier),
     fully-ground EXISTS guards, repeated endpoint vars."""
+    from cbor_ld_spark.operators.algebra import Path
     from cbor_ld_spark.operators.bgp import match_bgp
     from cbor_ld_spark.operators.sparql import run_sparql
 
@@ -980,26 +905,26 @@ def test_bgp_path_patterns(spark):
     t = _triples(spark, rows)
     steps = [("vc", "opt"), ("issuer", "one")]
 
-    out = match_bgp(t, [("?cred", "type", "?ty")],
-                    paths=[(steps, "?cred", "?i")])
+    out = match_bgp(t, [("?cred", "type", "?ty"),
+                        Path(steps, "?cred", "?i")])
     assert {tuple(r) for r in out.collect()} == {
         ("c1", "T1", "org1"), ("c2", "T2", "org2")}
 
     # ground object endpoint -> seeded tier inside the BGP
-    out = match_bgp(t, [("?cred", "type", "?ty")],
-                    paths=[(steps, "?cred", "org1")])
+    out = match_bgp(t, [("?cred", "type", "?ty"),
+                        Path(steps, "?cred", "org1")])
     assert {tuple(r) for r in out.collect()} == {("c1", "T1")}
 
     # fully-ground path = EXISTS guard
-    present = match_bgp(t, [("?x", "type", "?ty")],
-                        paths=[([("p", "plus")], "a", "c")])
+    present = match_bgp(t, [("?x", "type", "?ty"),
+                            Path([("p", "plus")], "a", "c")])
     assert present.count() == 2
-    absent = match_bgp(t, [("?x", "type", "?ty")],
-                       paths=[([("p", "plus")], "a", "zzz")])
+    absent = match_bgp(t, [("?x", "type", "?ty"),
+                           Path([("p", "plus")], "a", "zzz")])
     assert absent.count() == 0
 
     # repeated endpoint var: p+ cycles only (none here)
-    none = match_bgp(t, [], paths=[([("p", "plus")], "?x", "?x")])
+    none = match_bgp(t, [Path([("p", "plus")], "?x", "?x")])
     assert none.count() == 0
 
     # text surface end-to-end, mixed with FILTER
@@ -1010,7 +935,7 @@ def test_bgp_path_patterns(spark):
 
     # loud rejections
     with pytest.raises(ValueError, match="may not start with '_'"):
-        match_bgp(t, [], paths=[([("p", "one")], "?_x", "?y")])
+        match_bgp(t, [Path([("p", "one")], "?_x", "?y")])
     # paths inside OPTIONAL are supported since r8 (left-join path
     # relation) — the rejection moved to guard/UNION groups only
     out = run_sparql(t, "SELECT ?x ?y WHERE { ?x <type> ?t . "
@@ -1284,7 +1209,7 @@ def test_prefixes_not_expanded_in_order_by_and_agg_bodies():
     # a parenthesised property path in the WHERE group still expands
     p = parse_sparql("PREFIX ex: <https://ex.org/> "
                      "SELECT ?o WHERE { <urn:a> (ex:p/ex:q)+ ?o }")
-    assert "ex:" not in repr(p["path"])
+    assert "ex:" not in repr(p["patterns"])
 
 
 def test_path_alternation_of_groups(spark):
@@ -1293,6 +1218,7 @@ def test_path_alternation_of_groups(spark):
     alternative keeping its OWN modifier; seeded tiers agree; the
     all-atom legacy reading is unchanged and a non-last atom modifier
     stays a loud error."""
+    from cbor_ld_spark.operators.algebra import Atom
     from cbor_ld_spark.operators.bgp import match_path
     from cbor_ld_spark.operators.sparql import parse_path
 
@@ -1326,7 +1252,7 @@ def test_path_alternation_of_groups(spark):
 
     # legacy all-atom alternation reading unchanged: q|r+ == (q|r)+
     legacy = parse_path("<q>|<r>+")
-    assert legacy == [(["q", "r"], "plus")]
+    assert legacy == [Atom(("q", "r"), "plus")]
     with pytest.raises(ValueError, match="parenthesise"):
         parse_path("<q>+|<r>")
 
@@ -1337,6 +1263,7 @@ def test_path_alternation_python_replay(spark):
     closures)."""
     import random
 
+    from cbor_ld_spark.operators.algebra import Alt, Group
     from cbor_ld_spark.operators.bgp import match_path
 
     rng = random.Random(20260818)
@@ -1361,19 +1288,17 @@ def test_path_alternation_python_replay(spark):
 
         def eval_steps(steps):
             result = None
-            for pr, mod in steps:
-                if isinstance(pr, list) and pr and \
-                        isinstance(pr[0], list):
+            for st in steps:
+                if isinstance(st, Alt):
                     edges = set()
-                    for alt in pr:
-                        edges |= eval_steps(alt)
-                elif isinstance(pr, list) and pr and \
-                        isinstance(pr[0], tuple):
-                    edges = eval_steps(pr)
+                    for option in st.options:
+                        edges |= eval_steps([option])
+                    mod = st.mod
+                elif isinstance(st, Group):
+                    edges, mod = eval_steps(st.steps), st.mod
                 else:
-                    alts = [pr] if isinstance(pr, str) else pr
-                    edges = {(s, o) for s, pp, o in triples
-                             if pp in alts}
+                    pr, mod = st
+                    edges = {(s, o) for s, pp, o in triples if pp == pr}
                 if mod == "plus":
                     edges = closure(edges)
                 elif mod in ("star", "opt"):
@@ -1386,13 +1311,13 @@ def test_path_alternation_python_replay(spark):
             return result
 
         def rand_alt():
-            # one alternative: a steps-list of 1-2 atom steps
-            return [(rng.choice(preds),
-                     rng.choice(["one", "plus", "opt"]))
-                    for _ in range(rng.randint(1, 2))]
+            # one alternative: a group of 1-2 atom steps
+            return Group(tuple((rng.choice(preds),
+                                rng.choice(["one", "plus", "opt"]))
+                               for _ in range(rng.randint(1, 2))))
 
-        steps = [([rand_alt() for _ in range(2)],
-                  rng.choice(["one", "plus"]))
+        steps = [Alt(tuple(rand_alt() for _ in range(2)),
+                     rng.choice(["one", "plus"]))
                  for _ in range(rng.randint(1, 2))]
         got = {tuple(r) for r in match_path(t, steps).collect()}
         assert got == eval_steps(steps), (case, steps)
@@ -1405,7 +1330,7 @@ def test_path_alternation_python_replay(spark):
 
 def test_seeded_path_depth_parity(spark):
     """ADVICE r7: the seeded tier's linear BFS budget scales to the
-    doubling tier's covered diameter (2^(max_iters-1)) — adding a
+    doubling tier's covered diameter (2^(_MAX_ITERS-1)) — adding a
     ground endpoint to a long-chain query must not make it fail."""
     from cbor_ld_spark.operators.bgp import match_path
 
@@ -1480,8 +1405,9 @@ def test_seeded_path_query_job_count_pinned(spark, name):
 
 
 def test_kg_query_rejects_variable_endpoints(spark, tmp_path):
-    """--src/--dst must be ground terms: a '?var' would silently seed
-    the literal string and return nothing (ADVICE r7)."""
+    """kg_query takes no --path/--src/--dst: an endpoint is ground or a
+    variable by its SPARQL spelling, so a '?var' can never seed the
+    literal string (ADVICE r7); the old flags are a usage error."""
     import importlib.util
     import os
 

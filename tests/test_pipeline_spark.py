@@ -216,18 +216,14 @@ def test_canonical_triples_plan_runs_no_python_of_its_own(spark):
     )
     from cbor_ld_spark.sources import synthesize_corpus
 
-    def plan(df):
-        df.count()  # resolve AQE to the final plan
-        return df._jdf.queryExecution().executedPlan().toString()
-
     docs = process_corpus(synthesize_corpus(spark, 200), canonical=True)
-    fresh = plan(canonical_triples(triples_table(docs), docs))
+    fresh = _final_plan(canonical_triples(triples_table(docs), docs))
     python = re.findall(r"MapInArrow[^\n]*", fresh)
     assert python and all("t_subj" in n for n in python), python
     assert "BatchEvalPython" not in fresh and "ArrowEvalPython" not in fresh
 
     docs = docs.localCheckpoint()
-    materialized = plan(canonical_triples(triples_table(docs), docs))
+    materialized = _final_plan(canonical_triples(triples_table(docs), docs))
     assert "MapInArrow" not in materialized, materialized
     assert "EvalPython" not in materialized, materialized
 
